@@ -1,0 +1,62 @@
+"""Small driver-loop state runs on the driver.
+
+The iterative operators (connected components, k-core, PageRank, BPE)
+loop on the driver, and each distributed round costs a join, an
+aggregate and a blocking job of fixed overhead. When the loop's input
+state is small, none of that is needed: the state is checkpointed
+once, sized by an ``Observation`` riding that same job, collected
+through Arrow, iterated exactly on the driver, and handed back with
+``createDataFrame``. Above the gate the caller keeps the checkpoint and
+runs its distributed loop unchanged.
+
+The gate is compared with the observed row count, never set by a conf
+or env var, so a query's plan depends only on its input. A gate of 0
+disables the driver path entirely (tests use it to force the
+distributed loop, empty inputs included).
+"""
+
+from __future__ import annotations
+
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
+
+# Driver-loop state rows (edges for the graph loops) up to which the
+# loop runs on the driver. Edge lists of this size are a few tens of MB
+# in Arrow and numpy; each distributed round costs more in fixed job
+# overhead than a driver pass over them.
+DRIVER_STATE_MAX_ROWS = 2_000_000
+
+
+def checkpoint_sized(df: DataFrame, max_rows: int | None = None):
+    """Checkpoint ``df`` once (eager) with its row count observed on the
+    same job. Returns ``(checkpointed, rows, table)``: ``table`` is the
+    checkpoint's rows as a ``pyarrow.Table`` when ``0 < max_rows`` and
+    ``rows <= max_rows``, else None. ``max_rows=None`` reads
+    ``DRIVER_STATE_MAX_ROWS`` at call time."""
+    if max_rows is None:
+        max_rows = DRIVER_STATE_MAX_ROWS
+    obs = Observation()
+    ck = df.observe(obs, F.count(F.lit(1)).alias("rows")).localCheckpoint(eager=True)
+    rows = obs.get["rows"]
+    if max_rows <= 0 or rows > max_rows:
+        return ck, rows, None
+    return ck, rows, ck.toArrow()
+
+
+def dense_nodes(edges, a: str, b: str):
+    """Node ids of an Arrow edge table as dense indices: returns
+    ``(ids, ia, ib)`` with ``ids`` the sorted distinct ids of columns
+    ``a`` and ``b`` and ``ia``/``ib`` each edge's endpoint positions in
+    ``ids``."""
+    import numpy as np
+
+    ids, idx = np.unique(
+        np.concatenate(
+            [
+                edges.column(a).to_numpy(zero_copy_only=False),
+                edges.column(b).to_numpy(zero_copy_only=False),
+            ]
+        ),
+        return_inverse=True,
+    )
+    return ids, idx[: edges.num_rows], idx[edges.num_rows :]

@@ -10,6 +10,8 @@ round is one join + one aggregate, all JVM-side; the driver only
 checks the (scalar) changed-count per round. Near-dup graphs are
 shallow (diameter is small), so rounds stay in single digits at any
 corpus size; hot components behave like any skewed agg key (AQE/salt).
+Small edge lists skip the rounds: see ``functions/driverstate.py``,
+whose gate also routes k-core and PageRank to exact driver loops.
 
 Oracle: a DuckDB recursive CTE computing min reachable id per node —
 an independent formulation of the same fixpoint.
@@ -20,23 +22,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from porcupine_spark.functions import driverstate
 from porcupine_spark.operators.dedup import SQL_HOT_DF_CUTOFF, SQL_SHINGLES
 from porcupine_spark.plans.registry import query
 
 MAX_ROUNDS = 50  # backstop far above any real near-dup graph diameter
 
-# Near-dup edge lists are the OUTPUT of LSH/threshold pruning, orders of
-# magnitude smaller than the corpus: even a 100 TB corpus rarely yields
-# more than a few million surviving pairs. Below this count a single
-# driver-side union-find pass (exact, O(E α(E))) beats any number of
-# distributed rounds — each round costs a join + agg + action of fixed
-# overhead. Above it, the label-propagation loop takes over unchanged.
-UNION_FIND_MAX_EDGES = 2_000_000
 
-
-def _union_find_components(edges: DataFrame) -> DataFrame:
-    """Exact driver-side components for small edge sets (two bigint cols
-    ``s``/``d``): collect, union-find with path halving, re-distribute."""
+def _union_find_components(spark: SparkSession, edges, node_type: str) -> DataFrame:
+    """Exact driver-side components of an Arrow edge table (columns
+    ``s``/``d``): union-find with path halving, re-distributed."""
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -45,10 +40,7 @@ def _union_find_components(edges: DataFrame) -> DataFrame:
             x = parent[x]
         return x
 
-    # collect(), not toLocalIterator(): one round-trip instead of one
-    # per partition (this path is only taken when edges are small)
-    for row in edges.collect():
-        a, b = row.s, row.d
+    for a, b in zip(edges.column("s").to_pylist(), edges.column("d").to_pylist()):
         parent.setdefault(a, a)
         parent.setdefault(b, b)
         ra, rb = find(a), find(b)
@@ -63,13 +55,11 @@ def _union_find_components(edges: DataFrame) -> DataFrame:
     import pandas as pd
 
     pdf = pd.DataFrame(
-        ((node, root_min[find(node)]) for node in parent), columns=["node", "component"]
+        [(node, root_min[find(node)]) for node in parent], columns=["node", "component"]
     )
-    spark = edges.sparkSession
-    t = edges.schema["s"].dataType.simpleString()
     # Arrow path (pandas in, explicit schema) — the tuple-list path costs
     # seconds in per-row pickling + 32-task parallelize for tiny data
-    return spark.createDataFrame(pdf, schema=f"node {t}, component {t}")
+    return spark.createDataFrame(pdf, schema=f"node {node_type}, component {node_type}")
 
 
 def connected_components(
@@ -82,6 +72,13 @@ def connected_components(
     """(src, dst) undirected edges -> (node, component) where component
     is the minimum node id in the connected component.
 
+    Near-dup edge lists are the OUTPUT of LSH/threshold pruning, orders
+    of magnitude smaller than the corpus. Up to ``union_find_max_edges``
+    (default ``driverstate.DRIVER_STATE_MAX_ROWS``) edges the components
+    come from one exact driver-side union-find pass (O(E α(E))) over
+    the collected edges; above it, the distributed min-label
+    propagation loop runs.
+
     Raises ``RuntimeError`` if the label-propagation loop exhausts
     ``max_rounds`` before the fixpoint: a silent return there would hand
     back WRONG components (labels still moving), and near-dup graphs
@@ -92,17 +89,18 @@ def connected_components(
     # tests can monkeypatch the gates
     if max_rounds is None:
         max_rounds = MAX_ROUNDS
-    if union_find_max_edges is None:
-        union_find_max_edges = UNION_FIND_MAX_EDGES
     # materialize the (possibly expensive) edge lineage ONCE — the loop
     # below joins against sym every round and must not recompute it
-    edges = edges.select(F.col(src).alias("s"), F.col(dst).alias("d")).localCheckpoint(eager=True)
+    edges, n_edges, table = driverstate.checkpoint_sized(
+        edges.select(F.col(src).alias("s"), F.col(dst).alias("d")),
+        union_find_max_edges,
+    )
+    if table is not None:
+        node_type = edges.schema["s"].dataType.simpleString()
+        return _union_find_components(edges.sparkSession, table, node_type)
     # size the loop's partitioning to the GRAPH, not the session: the
     # label frontier is usually orders of magnitude smaller than the
     # corpus, and per-round fixed cost scales with partition count
-    n_edges = edges.count()
-    if n_edges <= union_find_max_edges:
-        return _union_find_components(edges)
     n_parts = max(2, min(32, n_edges // 50_000 + 2))
     nodes = (
         edges.select(F.col("s").alias("node"))
@@ -198,9 +196,12 @@ def connected_components(
     """,
     tags=("dedup", "graph", "iterative"),
     doc="Near-dup cluster assignment: word-3-gram Jaccard>=0.05 pairs "
-    "as edges, connected components via min-label propagation "
-    "(iterative joins, lineage-checkpointed, converges in <=diameter "
-    "rounds). Oracle = recursive-CTE transitive closure, an "
+    f"as edges, connected components. Up to "
+    f"{driverstate.DRIVER_STATE_MAX_ROWS:,} edges the edge list is "
+    "checkpointed once, collected through Arrow and clustered by an "
+    "exact driver-side union-find; above that gate by min-label "
+    "propagation (iterative joins, lineage-checkpointed, converges in "
+    "<=diameter rounds). Oracle = recursive-CTE transitive closure, an "
     "independent fixpoint formulation.",
 )
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -267,10 +268,9 @@ PR_DAMP_NUM, PR_DAMP_DEN = 85, 100  # damping 0.85 as an exact ratio
 
 # Broadcasting the |nodes|-sized (rank div degree) table into the edge
 # scan is the right plan while that table is broadcast-sized; at true
-# 100 TB node counts it is driver-fatal. Above this node count the loop
-# switches to the standard Pregel layout instead: edges hash-partitioned
-# on src once, each round shuffling only the |nodes|-sized rank table to
-# meet them (same arithmetic, identical exact-decimal result). Default
+# 100 TB node counts it is driver-fatal. Above this node count each
+# round's rank->edge attach is a plain shuffled join instead (same
+# arithmetic, identical exact-decimal result). Default
 # ~10M nodes ≈ a 250 MB framed broadcast — the guide's §3.1 comfort
 # ceiling; override per deployment via the env var.
 PREGEL_BROADCAST_MAX_NODES = 10_000_000
@@ -289,10 +289,42 @@ def _pregel_broadcast_max_nodes() -> int:
 
 def _pregel_contrib(edges: DataFrame, rd: DataFrame, broadcast_ranks: bool) -> DataFrame:
     """One PageRank round's rank→edge attach: broadcast the per-node
-    contribution table below the node-count gate, plain (co-partitioned)
-    join above it. Factored out so tests can pin BOTH plan shapes."""
+    contribution table below the node-count gate, plain shuffled join
+    above it. Factored out so tests can pin BOTH plan shapes."""
     rd = F.broadcast(rd) if broadcast_ranks else rd
     return edges.join(rd, "src").select("dst", "c")
+
+
+def _pagerank_local(spark: SparkSession, edges, node_type: str, iters: int) -> DataFrame:
+    """``pagerank_scaled`` on the driver over an Arrow ``(src, dst)``
+    table: the same update rule in exact int64 with the same truncating
+    divisions. Every rank sum stays <= PR_SCALE (r0 * n <= PR_SCALE,
+    and a round hands out at most the previous ranks' mass), so int64
+    cannot overflow; the guard below fails loudly should that ever stop
+    holding. Inflow sums use ``np.add.reduceat`` over dst-sorted edges,
+    never ``bincount`` weights (float64, inexact past 2^53)."""
+    import numpy as np
+    import pandas as pd
+
+    ids, src, dst = driverstate.dense_nodes(edges, "src", "dst")
+    n = len(ids)
+    schema = f"node {node_type}, rank_scaled bigint"
+    if n == 0:
+        return spark.createDataFrame(pd.DataFrame({"node": ids, "rank_scaled": []}), schema)
+    deg = np.bincount(src, minlength=n)
+    order = np.argsort(dst, kind="stable")
+    src_by_dst, dst_sorted = src[order], dst[order]
+    starts = np.flatnonzero(np.r_[True, dst_sorted[1:] != dst_sorted[:-1]])
+    targets = dst_sorted[starts]
+    teleport = (PR_SCALE * (PR_DAMP_DEN - PR_DAMP_NUM) // PR_DAMP_DEN) // n
+    r = np.full(n, PR_SCALE // n, dtype=np.int64)
+    for _ in range(iters):
+        inflow = np.zeros(n, dtype=np.int64)
+        inflow[targets] = np.add.reduceat(r[src_by_dst] // deg[src_by_dst], starts)
+        if int(inflow.max()) * PR_DAMP_NUM + teleport >= 2**63:
+            raise OverflowError("pagerank_scaled: rank state exceeds int64")
+        r = teleport + PR_DAMP_NUM * inflow // PR_DAMP_DEN
+    return spark.createDataFrame(pd.DataFrame({"node": ids, "rank_scaled": r}), schema)
 
 
 def pagerank_scaled(
@@ -306,11 +338,17 @@ def pagerank_scaled(
     integer-ratio recipe, so every iterate is bit-identical across
     engines; ordinary float PageRank can't be exact-oracled because
     the inflow sum order differs). ``edges`` is (src, dst) directed;
-    callers symmetrize if needed so no node dangles. Each iteration is
-    one join + one aggregate (the standard distributed PR shape: at
-    100 TB this is the same shuffle pattern GraphX/Pregel uses, with
-    rank state co-partitioned on node); the driver sees one scalar
-    (the node count) once."""
+    callers symmetrize if needed so no node dangles. Empty edges give
+    an empty result.
+
+    Up to ``driverstate.DRIVER_STATE_MAX_ROWS`` edges the iterations
+    run on the driver in exact int64 (``_pagerank_local``). Above it,
+    each iteration is one join + one aggregate (the standard
+    distributed PR shape: at 100 TB this is the same shuffle pattern
+    GraphX/Pregel uses); the driver sees one scalar (the node count)
+    once."""
+    from porcupine_spark.functions.concurrent import run_concurrently
+
     edges = edges.select("src", "dst")
     if not edges_distinct:  # callers that pre-dedup skip this shuffle
         edges = edges.distinct()
@@ -318,7 +356,10 @@ def pagerank_scaled(
     # this every iteration re-reads and re-distincts the base tables
     # (measured 4x the whole query); degree and node tables then derive
     # from the checkpointed rows so the base is never recomputed
-    edges = edges.localCheckpoint(eager=True)
+    edges, _, table = driverstate.checkpoint_sized(edges)
+    node_type = edges.schema["src"].dataType.simpleString()
+    if table is not None:
+        return _pagerank_local(spark, table, node_type, iters)
     # degree table is |nodes| rows — materialize it small instead of
     # attaching it to a second |edges|-sized checkpoint; each round
     # joins it to the rank state (|nodes| x |nodes|, tiny) and
@@ -327,8 +368,6 @@ def pagerank_scaled(
     # independent of each other — materialize them concurrently
     # (optimization r8, guide §2.6) instead of as two sequential
     # blocking jobs
-    from porcupine_spark.functions.concurrent import run_concurrently
-
     outdeg, nodes = run_concurrently(
         lambda: edges.groupBy("src")
         .agg(F.count(F.lit(1)).alias("d"))
@@ -339,29 +378,27 @@ def pagerank_scaled(
         .localCheckpoint(eager=True),  # reused every round + for n
     )
     n = nodes.count()  # one scalar to the driver (like components' guard)
+    if n == 0:
+        return spark.createDataFrame([], f"node {node_type}, rank_scaled bigint")
     # Size gate (optimization r8): broadcast the per-round |nodes|-sized
-    # tables only while they are broadcast-sized; above the gate, lay
-    # edges out hash-partitioned on src ONCE (the checkpoint preserves
-    # the partitioning) so each round's attach shuffles only the rank
-    # table — the standard Pregel co-partitioning, now code instead of
-    # a comment. n is already on the driver, so the gate is free.
+    # tables only while they are broadcast-sized; above the gate each
+    # round's attach is a plain shuffled join. The edges are NOT
+    # pre-partitioned on src: a local checkpoint does not keep its
+    # input's hash partitioning (the planner shuffles a checkpointed
+    # repartition(src) frame again), so the edge side is shuffled every
+    # round either way. n is already on the driver, so the gate is free.
     broadcast_ranks = n <= _pregel_broadcast_max_nodes()
-    if not broadcast_ranks:
-        edges = edges.repartition(F.col("src")).localCheckpoint(eager=True)
     r0 = PR_SCALE // n
     teleport = (PR_SCALE * (PR_DAMP_DEN - PR_DAMP_NUM) // PR_DAMP_DEN) // n
     r = nodes.withColumn("r", F.lit(r0).cast("decimal(38,0)"))
     for _ in range(iters):
         # rank state is |nodes| rows — pre-divide by degree in a tiny
         # nodes-sized join, then broadcast so the edge table is never
-        # shuffled per round (at cluster scale, swap the broadcast for
-        # rank/edge co-partitioning on src: same plan shape,
-        # hash-partitioned instead — the standard Pregel layout)
+        # shuffled per round
         # outdeg is |nodes|-sized like the rd broadcast below — hinting
         # it skips a per-round Exchange pair on two tiny tables that
         # AQE would otherwise shuffle first (optimization r7,
-        # interleaved A/B 4.96 -> 4.28 s; same cluster-scale caveat as
-        # rd: swap broadcasts for co-partitioning there)
+        # interleaved A/B 4.96 -> 4.28 s)
         deg = F.broadcast(outdeg) if broadcast_ranks else outdeg
         rd = r.withColumnRenamed("node", "src").join(deg, "src").select(
             "src", F.expr("r div d").alias("c")
@@ -382,12 +419,12 @@ def pagerank_scaled(
                 .cast("decimal(38,0)")
                 .alias("r"),
             )
-            # LAZY checkpoint (optimization r8): the plan is truncated at
-            # definition either way, but materialization folds into the
-            # consumer job — the rank state is referenced exactly once
-            # per iteration (the next round's rd join), so the 6 eager
-            # per-iteration blocking jobs collapse into the final action
-            # (4/5 interleaved pairs in favor, means 3.25 -> 3.08 s).
+            # LAZY checkpoint (optimization r8): truncates the lineage so
+            # round R never replans rounds 1..R-1. It is not free at
+            # definition: under AQE the round's shuffle stages still run
+            # as jobs when the checkpoint is defined; only the final
+            # result stage waits for the consumer (means 3.25 -> 3.08 s
+            # against the eager form).
             .localCheckpoint(eager=False)
         )
     return r.select("node", F.col("r").cast("long").alias("rank_scaled"))
@@ -449,10 +486,12 @@ def _pr_oracle_sql() -> str:
     f"1e12 - truncating-division arithmetic makes every iterate "
     f"bit-identical across engines, so an ITERATIVE GRAPH ALGORITHM "
     f"gets a full hash oracle (unrolled-CTE formulation) instead of "
-    f"the usual rows-only check. Per iteration: one co-partitioned "
-    f"join + one aggregate (the Pregel shuffle shape); lineage "
-    f"truncated per round via localCheckpoint like "
-    f"connected_components.",
+    f"the usual rows-only check. Up to {driverstate.DRIVER_STATE_MAX_ROWS:,} edges "
+    f"the edge list is checkpointed once, collected through Arrow and "
+    f"iterated on the driver in exact int64 (the same truncating "
+    f"divisions); above that gate each iteration is one join + one "
+    f"aggregate (the Pregel shuffle shape), lineage truncated per round "
+    f"via localCheckpoint.",
 )
 def pagerank_supplier_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     from porcupine_spark.tables import load_table
@@ -771,12 +810,40 @@ KCORE_K = 3
 KCORE_ROUNDS = 6  # fixed on BOTH engines — the op is "R-round k-peel"
 
 
+def _kcore_local(spark: SparkSession, edges, node_type: str, k: int, rounds: int) -> DataFrame:
+    """``kcore_peel`` on the driver over an Arrow ``(u, v)`` table: per
+    round a ``bincount`` degree over the live edges, victims are the
+    present nodes with degree < k, and their edges die; the same sweep
+    as the distributed path assigns ``rounds`` to nodes whose last edge
+    died with a neighbour."""
+    import numpy as np
+    import pandas as pd
+
+    ids, u, v = driverstate.dense_nodes(edges, "u", "v")
+    n = len(ids)
+    removed = np.zeros(n, dtype=np.int32)
+    live = np.ones(len(u), dtype=bool)
+    for rnd in range(1, rounds + 1):
+        deg = np.bincount(u[live], minlength=n) + np.bincount(v[live], minlength=n)
+        victim = (deg > 0) & (deg < k)
+        removed[victim] = rnd
+        live &= ~(victim[u] | victim[v])
+    survivor = np.zeros(n, dtype=bool)
+    survivor[u[live]] = True
+    survivor[v[live]] = True
+    removed[(removed == 0) & ~survivor] = rounds
+    return spark.createDataFrame(
+        pd.DataFrame({"node": ids, "removed_round": removed, "in_core": removed == 0}),
+        f"node {node_type}, removed_round int, in_core boolean",
+    )
+
+
 def kcore_peel(edges: DataFrame, k: int = KCORE_K, rounds: int = KCORE_ROUNDS) -> DataFrame:
     """Fixed-round k-core peeling of an undirected simple graph given
     as distinct canonical edges ``(u, v)``: round i removes every node
     whose degree in the surviving subgraph is < k. Returns one row per
     node: ``(node, removed_round, in_core)`` with removed_round = 0
-    for survivors.
+    for survivors; empty edges give an empty result.
 
     The classic graph-curation primitive (web-spam farms and
     link-rings dissolve under peeling; the k-core is the "load-bearing"
@@ -786,12 +853,17 @@ def kcore_peel(edges: DataFrame, k: int = KCORE_K, rounds: int = KCORE_ROUNDS) -
     CONVERGES well inside the budget on real inputs (a converged
     R-round peel IS the true k-core).
 
-    Scale: each round is one degree agg + one semi-join filter over
-    the surviving edges, lineage truncated per round; survivors shrink
+    Up to ``driverstate.DRIVER_STATE_MAX_ROWS`` edges the peel runs on
+    the driver (``_kcore_local``, numpy ``bincount`` degrees). Above
+    it, each round is one degree agg + one semi-join filter over the
+    surviving edges, lineage truncated per round; survivors shrink
     monotonically so rounds get cheaper, and the driver sees no data
     at all (no convergence scalar needed — the budget is fixed).
     """
-    edges = edges.select("u", "v").localCheckpoint(eager=True)
+    edges, _, table = driverstate.checkpoint_sized(edges.select("u", "v"))
+    if table is not None:
+        node_type = edges.schema["u"].dataType.simpleString()
+        return _kcore_local(edges.sparkSession, table, node_type, k, rounds)
     # all_nodes is consumed exactly ONCE, in the final assembly join —
     # an eager checkpoint here was a pure extra blocking job on the
     # critical path (optimization r8): leave it lazy; the distinct runs
@@ -932,9 +1004,12 @@ def _kcore_oracle_sql(k: int = KCORE_K, rounds: int = KCORE_ROUNDS) -> str:
     f"survivors are the {KCORE_K}-core. Fixed round budget on both "
     f"engines makes an ITERATIVE fixpoint exact-hash-oracled (the "
     f"pagerank recipe); tests assert convergence inside the budget so "
-    f"the result IS the true k-core on real inputs. Per round: one "
-    f"degree agg + two anti-join filters on the shrinking edge set, "
-    f"lineage truncated per round.",
+    f"the result IS the true k-core on real inputs. Up to "
+    f"{driverstate.DRIVER_STATE_MAX_ROWS:,} edges the edge list is "
+    f"checkpointed once, collected through Arrow and peeled on the "
+    f"driver (numpy bincount degrees); above that gate each round is "
+    f"one degree agg + two anti-join filters on the shrinking edge "
+    f"set, lineage truncated per round.",
 )
 def kcore_peel_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kcore_peel(_copurchase_edges(spark, sf_dir)).withColumnRenamed(

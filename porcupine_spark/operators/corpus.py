@@ -947,6 +947,16 @@ def bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 BPE_TRAIN_ROUNDS = 8  # fixed merge budget (real trainers run to |vocab|)
+# Distinct words up to which the merge chain runs on the driver. Its
+# kernel is pure Python, serial and linear in total symbols x rounds
+# (about 30 us per word for the 8 rounds), so it has its own gate
+# instead of the graph loops' DRIVER_STATE_MAX_ROWS. Measured on 4 CPUs
+# (random 2-12 letter words, build call, driver vs distributed):
+# 10k words 1.3 vs 7.6 s, 50k 2.5 vs 18.6 s, 150k 4.3 vs 25.4 s, 400k
+# 13.7 vs 54.9 s, 1M 32-37 vs 91-121 s. The driver won at every size
+# measured; the gate sits at the largest one, where its serial cost is
+# still half a minute and a cluster's distributed rounds start to pay.
+BPE_DRIVER_MAX_WORDS = 1_000_000
 
 # Symbol sequences travel as SPACE-WRAPPED strings — every symbol is
 # surrounded by its own pair of spaces (" a  b  c " for [a,b,c]), so a
@@ -1028,9 +1038,12 @@ def _bpe_train_oracle_sql(rounds: int = BPE_TRAIN_ROUNDS) -> str:
     f"frequency table (the Zipf-head collapse that makes corpus-scale "
     f"BPE feasible); re-segmentation is one builtin string replace on "
     f"a space-wrapped symbol encoding (greedy left-to-right non-"
-    f"overlapping — exactly BPE's merge-application order); per round "
-    f"the driver sees ONE row (the argmax pair — the pagerank "
-    f"convergence-scalar discipline) and lineage is truncated with a "
+    f"overlapping — exactly BPE's merge-application order). Up to "
+    f"{BPE_DRIVER_MAX_WORDS:,} distinct words the word table is "
+    f"checkpointed once, collected through Arrow and merged on the "
+    f"driver (same trim/split, argmax order and replace); above that "
+    f"gate each round is a distributed pair count whose argmax is the "
+    f"one row the driver sees, lineage truncated with a "
     f"localCheckpoint so round R never replays rounds 1..R-1. Fixed "
     f"round budget on both engines makes the iterative fixpoint "
     f"exact-hash-oracled (unrolled-CTE DuckDB twin).",
@@ -1044,6 +1057,31 @@ def bpe_merge_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _bpe_merge_local(
+    ws: list[str], freq: list[int], rounds: int
+) -> tuple[list[tuple[int, str, str, int]], list[str]]:
+    """The merge chain on the driver over space-wrapped symbol strings:
+    the same trim (spaces only) and two-space split as the Spark pair
+    expression, the same argmax order (-n, ls, rs) — Python compares
+    str by code point, which is Spark's UTF-8 byte order — and the same
+    space-wrapped ``replace``, which is left-to-right non-overlapping in
+    both. Returns (merges, final ws)."""
+    merges: list[tuple[int, str, str, int]] = []
+    for rnd in range(1, rounds + 1):
+        counts: dict[tuple[str, str], int] = {}
+        for w, f in zip(ws, freq):
+            syms = w.strip(" ").split("  ")
+            for pair in zip(syms, syms[1:]):
+                counts[pair] = counts.get(pair, 0) + f
+        if not counts:  # corpus fully merged before the budget — done
+            break
+        (ls, rs), n = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
+        merges.append((rnd, ls, rs, n))
+        old, new = f" {ls}  {rs} ", f" {ls}{rs} "
+        ws = [w.replace(old, new) for w in ws]
+    return merges, ws
+
+
 def _bpe_train_chain(
     spark: SparkSession, sf_dir: str, rounds: int = BPE_TRAIN_ROUNDS
 ) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
@@ -1053,8 +1091,15 @@ def _bpe_train_chain(
     space-wrapped symbol string AFTER all merges — bpe_merge_train
     reports the merges, bpe_encode_tokens joins the final segmentation
     back to documents. The `word` column rides along untouched so the
-    chain stays joinable (mirrored in the oracle's _bpe_chain_ctes)."""
+    chain stays joinable (mirrored in the oracle's _bpe_chain_ctes).
+
+    Up to ``BPE_DRIVER_MAX_WORDS`` distinct words the chain runs on the
+    driver (``_bpe_merge_local``) over the collected word table; above
+    it, each round is one distributed pair count + argmax."""
+    import pandas as pd
+
     from porcupine_spark.functions import seq1
+    from porcupine_spark.functions.driverstate import checkpoint_sized
 
     docs = load_table(spark, sf_dir, "documents")
     toks = tokens(F.col("text"))
@@ -1064,17 +1109,28 @@ def _bpe_train_chain(
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
-    # LAZY checkpoints (optimization r8): each round's argmax job
-    # materializes and persists the pending word table as a side effect,
-    # so the chain pays ONE blocking job per round instead of two
-    # (checkpoint + collect); merges and the final table are identical
-    # (A/B-verified) because persistence timing cannot change a
-    # deterministic plan's rows. (r7's *removal* of these checkpoints
-    # was reverted — the replace() lineage must still be truncated.)
-    cur = words.select(
-        "word", F.regexp_replace("word", "(.)", " $1 ").alias("ws"), "freq"
-    ).localCheckpoint(eager=False)
-    merges: list[tuple[int, str, str, int]] = []
+    # the initial wrap stays a Spark expression on both paths, so the
+    # driver loop starts from exactly the symbols Java's regex yields
+    cur, _, table = checkpoint_sized(
+        words.select("word", F.regexp_replace("word", "(.)", " $1 ").alias("ws"), "freq"),
+        BPE_DRIVER_MAX_WORDS,
+    )
+    if table is not None:
+        merges, ws = _bpe_merge_local(
+            table.column("ws").to_pylist(), table.column("freq").to_pylist(), rounds
+        )
+        final = spark.createDataFrame(
+            pd.DataFrame(
+                {
+                    "word": table.column("word").to_pylist(),
+                    "ws": ws,
+                    "freq": table.column("freq").to_numpy(),
+                }
+            ),
+            "word string, ws string, freq bigint",
+        )
+        return merges, final
+    merges = []
     for rnd in range(1, rounds + 1):
         syms = F.split(F.trim(F.col("ws")), "  ")
         pairs = cur.select(
@@ -1102,13 +1158,19 @@ def _bpe_train_chain(
             break
         ls, rs, n = best[0].ls, best[0].rs, int(best[0].n)
         merges.append((rnd, ls, rs, n))
+        # LAZY checkpoint (optimization r8): truncates the replace()
+        # lineage so round R never replays rounds 1..R-1. Under AQE a
+        # lazy checkpoint still runs the shuffle stages upstream of it
+        # when defined; here there are none (a projection of the
+        # previous checkpoint), so the next round's argmax job is what
+        # persists the rows.
         cur = cur.select(
             "word",
             F.replace(
                 F.col("ws"), F.lit(f" {ls}  {rs} "), F.lit(f" {ls}{rs} ")
             ).alias("ws"),
             "freq",
-        ).localCheckpoint(eager=False)  # truncate per-round lineage (lazily)
+        ).localCheckpoint(eager=False)
     return merges, cur
 
 
@@ -1155,7 +1217,8 @@ def _bpe_encode_oracle_sql(rounds: int = BPE_TRAIN_ROUNDS) -> str:
     f"data plan runs after training a tokenizer — and the per-source "
     f"fertility spread shows which sources get expensive to encode. "
     f"Scale shape: encoding happens ONCE per distinct word (Zipf-head "
-    f"collapse again), then one vocab-keyed equi-join of occurrences "
+    f"collapse again; on the driver up to {BPE_DRIVER_MAX_WORDS:,} "
+    f"distinct words), then one vocab-keyed equi-join of occurrences "
     f"against the encoded vocab (corpus-linear, AQE-planned) and a "
     f"|sources|-row aggregate.",
 )

@@ -58,30 +58,64 @@ def _convert_events(df: DataFrame) -> DataFrame:
     return df
 
 
-def _bound_testdata(sf_dir: str):
-    """The test tables as a bound engine catalog — every registered
+def _bound_table(sf_dir: str, name: str, schema):
+    """One test table as a bound engine catalog — every registered
     query reads through the engine's resource layer (Dataset/serials/
-    binding validation), not raw spark.read. The events post-read
+    binding validation), not raw spark.read. The memoized schema is
+    enforced on read, so the read infers nothing; the events post-read
     conversion rides the serial's rmap hook."""
     from porcupine_spark.catalog import Catalog, Dataset
     from porcupine_spark.serials import SerialSet, parquet_serial
 
-    if sf_dir in _BOUND_CACHE:
-        return _BOUND_CACHE[sf_dir]
-    datasets = []
-    for t in TABLES:
-        serial = parquet_serial()
-        if t == "events":
-            serial = serial.rmap(_convert_events)
-        datasets.append(Dataset.source(t, SerialSet(serial)))
-    bound = Catalog(datasets).bind(
-        sf_dir, {t: table_path(sf_dir, t) for t in TABLES}
+    serial = parquet_serial()
+    if name == "events":
+        serial = serial.rmap(_convert_events)
+    return Catalog([Dataset.source(name, SerialSet(serial), schema=schema)]).bind(
+        sf_dir, {name: table_path(sf_dir, name)}
     )
-    _BOUND_CACHE[sf_dir] = bound
-    return bound
 
 
-_BOUND_CACHE: dict = {}
+# Parquet SCHEMA per source — metadata only (a footer read), never
+# data. Without it every batch read paid a schema-inference job and
+# every streaming query a driver job re-reading the same footer. Keyed
+# on what decides the inferred schema: the source's mtime and size (a
+# rewritten table invalidates naturally) and the confs that type its
+# timestamp columns.
+_SCHEMA_MEMO: dict = {}
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+
+def _source_stamp(path: str) -> tuple[int, int] | None:
+    """(newest mtime_ns, total bytes) of a local file or directory of
+    parts; None when it cannot be stat'ed (remote URI, missing)."""
+    p = path[7:] if path.startswith("file://") else path
+    try:
+        st = os.stat(p)
+    except OSError:
+        return None
+    if not os.path.isdir(p):
+        return st.st_mtime_ns, st.st_size
+    mtime, size = st.st_mtime_ns, 0
+    for dirpath, _dirs, files in os.walk(p):
+        for f in files:
+            fst = os.stat(os.path.join(dirpath, f))
+            mtime, size = max(mtime, fst.st_mtime_ns), size + fst.st_size
+    return mtime, size
+
+
+def _table_schema(spark: SparkSession, path: str):
+    stamp = _source_stamp(path)
+    if stamp is None:
+        return spark.read.parquet(path).schema
+    key = (path, *stamp, *(spark.conf.get(c, None) for c in _SCHEMA_CONFS))
+    if key not in _SCHEMA_MEMO:
+        _SCHEMA_MEMO[key] = spark.read.parquet(path).schema
+    return _SCHEMA_MEMO[key]
+
+
 _CONFED_SESSIONS: set = set()
 
 
@@ -143,21 +177,6 @@ def _parse_bytes_conf(v: str) -> int:
     return int(s) * mult
 
 
-def _source_bytes(path: str) -> int | None:
-    """Driver-side size of a local source file/dir; None for remote
-    URIs (where the scan already yields plenty of splits at scale)."""
-    p = path[7:] if path.startswith("file://") else path
-    if "://" in p or not os.path.exists(p):
-        return None
-    if os.path.isfile(p):
-        return os.path.getsize(p)
-    total = 0
-    for dirpath, _dirs, files in os.walk(p):
-        for f in files:
-            total += os.path.getsize(os.path.join(dirpath, f))
-    return total
-
-
 def _widen_for_compute(df: DataFrame, src_path: str) -> DataFrame:
     """Decide the repartition from FILE SIZES, not df.rdd — touching
     .rdd converts the plan and costs a pass of analysis per read
@@ -168,9 +187,10 @@ def _widen_for_compute(df: DataFrame, src_path: str) -> DataFrame:
     shuffle overhead."""
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
-    size = _source_bytes(src_path)
-    if size is None:
+    stamp = _source_stamp(src_path)
+    if stamp is None:
         return df
+    size = stamp[1]
     try:
         max_bytes = _parse_bytes_conf(
             spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728b")
@@ -189,11 +209,12 @@ def load_table(
     uses that don't run per-row compute on the scan (driver collects,
     small join sides) where the repartition would be pure overhead."""
     ensure_session_confs(spark)
-    df = _bound_testdata(sf_dir).read(spark, name)
+    path = table_path(sf_dir, name)
+    df = _bound_table(sf_dir, name, _table_schema(spark, path)).read(spark, name)
     if widen is None:
         widen = name in WIDEN_TABLES
     if widen:
-        df = _widen_for_compute(df, table_path(sf_dir, name))
+        df = _widen_for_compute(df, path)
     return df
 
 
@@ -220,29 +241,12 @@ def _stream_source(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
         os.unlink(link)
     if not os.path.lexists(link):
         os.symlink(src, link)
-    schema = _stream_schema(spark, src)
+    schema = _table_schema(spark, src)
     return (
         spark.readStream.schema(schema)
         .option("recursiveFileLookup", "true")
         .parquet(stream_dir)
     )
-
-
-# Parquet SCHEMA per source path — metadata only (footer read), never
-# data: every streaming query used to pay a driver job re-reading the
-# same footer (~0.2-0.4 s x 19 stream queries per bench). Keyed on the
-# source's mtime so a rewritten test table invalidates naturally.
-_STREAM_SCHEMA_CACHE: dict = {}
-
-
-def _stream_schema(spark: SparkSession, src: str):
-    try:
-        key = (src, os.path.getmtime(src))
-    except OSError:
-        return spark.read.parquet(src).schema
-    if key not in _STREAM_SCHEMA_CACHE:
-        _STREAM_SCHEMA_CACHE[key] = spark.read.parquet(src).schema
-    return _STREAM_SCHEMA_CACHE[key]
 
 
 def load_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -255,13 +259,3 @@ def load_docs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents as a file-source stream (the incoming-crawl shape for
     streaming dedup/curation); no timestamp conversion needed."""
     return _stream_source(spark, sf_dir, "documents")
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view (for the SQL API surface)."""
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)

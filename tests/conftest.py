@@ -19,3 +19,18 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def jobs_so_far(spark):
+    """A function returning how many jobs the scheduler has accepted so
+    far (job ids are handed out 0, 1, ...); deltas count the jobs a call
+    ran."""
+
+    def count() -> int:
+        sc = spark.sparkContext._jsc.sc()
+        sc.listenerBus().waitUntilEmpty()
+        jobs = sc.statusStore().jobsList(None)
+        return jobs.head().jobId() + 1 if jobs.nonEmpty() else 0
+
+    return count

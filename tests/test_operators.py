@@ -185,7 +185,7 @@ def test_stream_dedup_matches_distinct(spark, sf_dir):
 
 
 def test_connected_components_chain_and_islands(spark, monkeypatch):
-    from porcupine_spark.operators import components
+    from porcupine_spark.functions import driverstate
     from porcupine_spark.operators.components import connected_components
 
     edges = spark.createDataFrame(
@@ -197,7 +197,7 @@ def test_connected_components_chain_and_islands(spark, monkeypatch):
     out = {r.node: r.component for r in connected_components(edges).collect()}
     assert out == expected
     # scale path: force the distributed label-propagation loop
-    monkeypatch.setattr(components, "UNION_FIND_MAX_EDGES", 0)
+    monkeypatch.setattr(driverstate, "DRIVER_STATE_MAX_ROWS", 0)
     out = {r.node: r.component for r in connected_components(edges).collect()}
     assert out == expected
 

@@ -121,10 +121,13 @@ def test_dsir_lean_scores_planted_signal(spark):
     assert out[4].lean_ppm == 0 and not out[4].keep
 
 
-def test_kcore_peel_planted(spark):
+def test_kcore_peel_planted(spark, monkeypatch):
     """K4 with a pendant chain: the chain peels layer by layer, K4 is
-    the 3-core."""
+    the 3-core (distributed rounds)."""
+    from porcupine_spark.functions import driverstate
     from porcupine_spark.operators.components import kcore_peel
+
+    monkeypatch.setattr(driverstate, "DRIVER_STATE_MAX_ROWS", 0)
 
     k4 = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
     chain = [(4, 10), (10, 11), (11, 12)]
@@ -137,10 +140,15 @@ def test_kcore_peel_planted(spark):
         assert not out[n].in_core and out[n].removed_round == 1
 
 
-def test_kcore_peel_converges_within_budget(spark):
+def test_kcore_peel_converges_within_budget(spark, monkeypatch):
     """On the real co-purchase graph the fixed budget IS the fixpoint:
-    two extra rounds change nothing (so the result is the true k-core)."""
+    two extra rounds change nothing (so the result is the true k-core,
+    checked on the distributed rounds)."""
     from pyspark.sql import functions as F
+
+    from porcupine_spark.functions import driverstate
+
+    monkeypatch.setattr(driverstate, "DRIVER_STATE_MAX_ROWS", 0)
     from porcupine_spark.operators.components import (
         KCORE_ROUNDS,
         TRI_MIN_SUPPORT,

@@ -91,12 +91,17 @@ def test_stream_familiarity_gate_matches_batch_rollup(spark):
     assert sum(v[1] for v in want.values()) > 0  # the gate keeps something
 
 
-def test_bpe_train_no_global_window(spark):
+def test_bpe_train_no_global_window(spark, monkeypatch):
     """The per-round argmax must plan as TakeOrderedAndProject (limit 1),
     never a partition-less window over the pair table."""
     import io
     import os
     import sys
+
+    from porcupine_spark.operators import corpus
+
+    # the distributed merge rounds, not the driver path
+    monkeypatch.setattr(corpus, "BPE_DRIVER_MAX_WORDS", 0)
 
     sys.path.insert(
         0,

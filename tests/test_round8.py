@@ -31,10 +31,13 @@ def test_pregel_contrib_plan_shapes(spark):
     assert "BroadcastHashJoin" not in plain_plan.split("== Physical Plan ==")[-1]
 
 
-def test_pagerank_gate_modes_identical(spark):
+def test_pagerank_gate_modes_identical(spark, monkeypatch):
     """Both Pregel layouts produce the identical exact-decimal ranks
     (sum order cannot matter: decimal adds are exact)."""
+    from porcupine_spark.functions import driverstate
     from porcupine_spark.operators.components import pagerank_scaled
+
+    monkeypatch.setattr(driverstate, "DRIVER_STATE_MAX_ROWS", 0)
 
     rows = [(i, (i * 7) % 23) for i in range(60)] + [(5, 6), (6, 5), (9, 11)]
     edges = spark.createDataFrame(
