@@ -28,6 +28,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
+from porcupine_spark.serials import parquet_serial
+
 _log = logging.getLogger("porcupine_spark.cache")
 
 
@@ -147,19 +149,21 @@ class CacheStore:
         if not os.path.exists(meta) and not self._pull_from_mirror(key):
             return None
         self.hits += 1
-        return self.spark.read.parquet(data)
+        return parquet_serial().read(self.spark, data)
 
     def put(self, key: str, df: DataFrame, info: dict | None = None) -> DataFrame:
         data, meta = self._paths(key)
         self.misses += 1
-        df.write.mode("overwrite").parquet(data)
+        serial = parquet_serial()
+        serial.write(df, data)
         os.makedirs(os.path.dirname(meta), exist_ok=True)
         with open(meta, "w") as fh:
             json.dump({"key": key, "written_at": time.time(), **(info or {})}, fh)
         self._push_to_mirror(key)
         # read back: downstream plans hang off the checkpoint, not the
-        # (possibly expensive) upstream lineage
-        return self.spark.read.parquet(data)
+        # (possibly expensive) upstream lineage; this read seeds the
+        # serial's schema memo, so a later hit plans without a job
+        return serial.read(self.spark, data)
 
     def cached(
         self,

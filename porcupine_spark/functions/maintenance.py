@@ -20,6 +20,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from porcupine_spark.serials import parquet_serial
+
 DEFAULT_TARGET_BYTES = 128 * 1024 * 1024  # match files.maxPartitionBytes
 
 
@@ -137,7 +139,7 @@ def compact_partition(spark: SparkSession, src_dir: str, n_out: int) -> str:
         # the aside dir — restore it before doing anything else
         if not fs.rename(aside, src):
             raise IOError(f"compact: failed to restore {aside} -> {src}")
-    df = spark.read.parquet(src_dir)
+    df = parquet_serial().read(spark, src_dir)
     df.coalesce(n_out).write.mode("overwrite").parquet(staging)
     dst = jvm.org.apache.hadoop.fs.Path(staging)
     if fs.exists(aside):  # stale aside from an even earlier crash

@@ -27,7 +27,8 @@ from pyspark.sql import functions as F
 from porcupine_spark.functions import seq1, word_ngrams
 from porcupine_spark.operators.corpus import SQL_SPLIT_CTE, split_col
 from porcupine_spark.plans.registry import REGISTRY, query
-from porcupine_spark.tables import load_table
+from porcupine_spark.serials import LRUMemo, source_stamp
+from porcupine_spark.tables import load_table, table_path
 
 N_PERMS = 8  # minhash permutations
 N_BANDS = 4  # LSH bands (2 rows each)
@@ -145,32 +146,26 @@ SQL_HOT_DF_CUTOFF = (
     f"{HOT_DF_CAP}))"
 )
 
-# one count() per (application, corpus dir) — the cutoff scalar is a
+# one count() per documents file state — the cutoff scalar is a
 # parquet metadata count, but re-running it per query build is still
-# one job each; every dedup builder shares this memo instead. Keyed by
-# applicationId (stable, never reused within a process — id() of a
-# stopped context can be reused by a new allocation). A pipeline that
-# REWRITES the documents table mid-session must call
-# invalidate_corpus_counts() (or pass df_cutoff explicitly) — a stale
-# count near the cutoff boundary would diverge from the oracle's live
-# (SELECT COUNT(*) FROM documents).
-_N_DOCS_CACHE: dict[tuple[str, str], int] = {}
+# one job each; every dedup builder shares this memo instead. Keyed on
+# the table's path and stamp (serials.source_stamp: newest mtime_ns and
+# total bytes), so a documents table rewritten mid-session is counted
+# afresh — a stale count near the cutoff boundary would diverge from
+# the oracle's live (SELECT COUNT(*) FROM documents). A path that
+# cannot be stat'ed is counted on every call.
+_N_DOCS_CACHE = LRUMemo(32)
 
 
 def corpus_n_docs(spark: SparkSession, sf_dir: str) -> int:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _N_DOCS_CACHE:
-        _N_DOCS_CACHE[key] = load_table(spark, sf_dir, "documents").count()
-    return _N_DOCS_CACHE[key]
-
-
-def invalidate_corpus_counts(sf_dir: str | None = None) -> None:
-    """Drop memoized corpus counts (all of them, or one dir's)."""
-    if sf_dir is None:
-        _N_DOCS_CACHE.clear()
-    else:
-        for k in [k for k in _N_DOCS_CACHE if k[1] == sf_dir]:
-            del _N_DOCS_CACHE[k]
+    path = table_path(sf_dir, "documents")
+    key = (path, source_stamp(path))
+    n = _N_DOCS_CACHE.get(key)
+    if n is None:
+        n = load_table(spark, sf_dir, "documents").count()
+        if key[1] is not None:
+            _N_DOCS_CACHE.put(key, n)
+    return n
 
 
 def ngram_jaccard_pairs(

@@ -12,12 +12,36 @@ optional pre-write / post-read DataFrame transforms (the profunctor
 
 Compression wrapping (``addZlibSerials`` SerializationMethod.hs:
 708-723) maps to Spark's per-format codec option.
+
+Schema memo. A reference ``VirtualFile`` carries its read type, so a
+load never looks at the data first. A parquet/ORC read without a
+declared schema would otherwise run a Spark job to infer one from the
+footers. ``Serial.read`` keeps what inference found in one process
+memo and reads with that schema next time. The key holds what decides
+the inferred schema:
+
+- the format and its sorted options;
+- the path and its stamp (newest mtime_ns and total bytes of every
+  file under it, ``source_stamp``), so a rewritten or grown dataset
+  misses;
+- the session confs that type inferred columns (``_SCHEMA_CONFS``).
+
+A miss is the ordinary inferring read; its ``df.schema`` is stored, so
+the data is never read twice. Paths that cannot be stat'ed (remote
+URIs) are not memoized. Writers do not seed the memo: a written
+frame's schema can differ from what inference returns (a partition
+column comes back with an inferred type). The memo holds metadata only
+and is an LRU of ``SCHEMA_MEMO_SIZE`` entries.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import os
+import threading
+from collections import OrderedDict
+from collections.abc import Callable, Hashable
 from dataclasses import dataclass, field, replace
+from typing import Any
 
 from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 
@@ -57,15 +81,32 @@ class Serial:
         return replace(self, post_read=g)
 
     def read(self, spark: SparkSession, path: str, schema=None) -> DataFrame:
+        """Read ``path``; without a declared schema a parquet/ORC read
+        takes the memoized one (see the module docstring)."""
         if not self.readable:
             raise ValueError(f"serial for .{self.ext} is write-only")
+        key = self._schema_key(spark, path) if schema is None else None
+        if key is not None:
+            schema = _SCHEMA_MEMO.get(key)
         reader: DataFrameReader = spark.read.format(self.format)
         if schema is not None:
             reader = reader.schema(schema)
         for k, v in self.options.items():
             reader = reader.option(k, v)
         df = reader.load(path)
+        if key is not None and schema is None:
+            _SCHEMA_MEMO.put(key, df.schema)
         return self.post_read(df) if self.post_read else df
+
+    def _schema_key(self, spark: SparkSession, path: str) -> tuple | None:
+        if self.format not in _MEMO_FORMATS:
+            return None
+        stamp = source_stamp(path)
+        if stamp is None:
+            return None
+        opts = tuple(sorted((k, str(v)) for k, v in self.options.items()))
+        confs = tuple(spark.conf.get(c, None) for c in _SCHEMA_CONFS)
+        return (self.format, opts, path, stamp, confs)
 
     def write(self, df: DataFrame, path: str, mode: str = "overwrite") -> None:
         if not self.writable:
@@ -76,6 +117,71 @@ class Serial:
         for k, v in self.options.items():
             writer = writer.option(k, v)
         writer.save(path)
+
+
+class LRUMemo:
+    """A process memo of metadata bounded to ``size`` entries, least
+    recently used first out. Locked: concurrent builders
+    (functions/concurrent.py) read through it from several threads."""
+
+    def __init__(self, size: int):
+        self.size = size
+        self._entries: OrderedDict = OrderedDict()
+        self._lock = threading.Lock()
+
+    def get(self, key: Hashable) -> Any:
+        with self._lock:
+            if key not in self._entries:
+                return None
+            self._entries.move_to_end(key)
+            return self._entries[key]
+
+    def put(self, key: Hashable, value: Any) -> None:
+        with self._lock:
+            self._entries[key] = value
+            self._entries.move_to_end(key)
+            while len(self._entries) > self.size:
+                self._entries.popitem(last=False)
+
+    def __len__(self) -> int:
+        return len(self._entries)
+
+
+def source_stamp(path: str) -> tuple[int, int] | None:
+    """(newest mtime_ns, total bytes) of a local file or of every file
+    under a directory; None when it cannot be stat'ed (remote URI,
+    glob, missing)."""
+    p = path[7:] if path.startswith("file://") else path
+    try:
+        st = os.stat(p)
+    except OSError:
+        return None
+    if not os.path.isdir(p):
+        return st.st_mtime_ns, st.st_size
+    mtime, size = st.st_mtime_ns, 0
+    for dirpath, _dirs, files in os.walk(p):
+        for f in files:
+            fst = os.stat(os.path.join(dirpath, f))
+            mtime, size = max(mtime, fst.st_mtime_ns), size + fst.st_size
+    return mtime, size
+
+
+_MEMO_FORMATS = ("parquet", "orc")
+# the confs that change an inferred parquet/ORC schema: timestamp and
+# binary column typing, partition-column type inference, schema merging
+# and the session time zone
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.orc.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.session.timeZone",
+)
+SCHEMA_MEMO_SIZE = 256
+_SCHEMA_MEMO = LRUMemo(SCHEMA_MEMO_SIZE)
 
 
 # the built-in serial constructors (reference: SerializationMethod.hs)

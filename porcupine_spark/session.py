@@ -5,6 +5,17 @@ would ship to a 1000-executor cluster — AQE on (runtime re-plan +
 skew-join splitting + partition coalescing), broadcast threshold set,
 Arrow enabled for the few Pandas-UDF operators, UTC session timezone so
 results compare bit-for-bit against the DuckDB oracle.
+
+Listing policy. Reading a layout of more than 32 paths (a partitioned
+dataset's ``idx=`` directories) lists them in a Spark job. Spark's
+default listing parallelism of 10000 gives that job one task per
+directory; ``one_wave_listing`` sizes it to one wave of task slots
+(``defaultParallelism``) instead. The job stays distributed, only its
+task count changes, and on a cluster the value comes from the
+cluster's own slots. Caveat: under dynamic allocation
+``defaultParallelism`` can be small at startup, before executors
+arrive, which narrows the listing to those first slots; pass the conf
+explicitly to ``get_spark`` there.
 """
 
 from __future__ import annotations
@@ -53,11 +64,23 @@ _DEFAULTS = {
 }
 
 
+LISTING_PARALLELISM = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
+_SPARK_LISTING_DEFAULT = "10000"
+
+
+def one_wave_listing(spark: SparkSession) -> None:
+    """Size listing jobs to one wave of task slots, only while the conf
+    is still at Spark's default (see the module docstring)."""
+    if spark.conf.get(LISTING_PARALLELISM) == _SPARK_LISTING_DEFAULT:
+        spark.conf.set(LISTING_PARALLELISM, str(spark.sparkContext.defaultParallelism))
+
+
 def get_spark(app_name: str = "porcupine_spark", **overrides: str) -> SparkSession:
     """Build (or fetch) the session.
 
     ``SPARK_GRAFT_CPUS`` selects local parallelism (default ``*``).
-    Keyword overrides are applied last, so tests can pin any knob.
+    Keyword overrides are applied last, so tests can pin any knob;
+    the listing parallelism is one wave of slots unless overridden.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = SparkSession.builder.master(f"local[{cpus}]").appName(app_name)
@@ -76,6 +99,8 @@ def get_spark(app_name: str = "porcupine_spark", **overrides: str) -> SparkSessi
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    if LISTING_PARALLELISM not in overrides:
+        one_wave_listing(spark)
     return spark
 
 

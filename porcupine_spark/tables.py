@@ -12,6 +12,9 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from porcupine_spark.serials import SerialSet, parquet_serial, source_stamp
+from porcupine_spark.session import one_wave_listing
+
 TABLES = (
     "region",
     "nation",
@@ -58,64 +61,25 @@ def _convert_events(df: DataFrame) -> DataFrame:
     return df
 
 
-def _bound_table(sf_dir: str, name: str, schema):
+def _bound_table(sf_dir: str, name: str):
     """One test table as a bound engine catalog — every registered
     query reads through the engine's resource layer (Dataset/serials/
-    binding validation), not raw spark.read. The memoized schema is
-    enforced on read, so the read infers nothing; the events post-read
-    conversion rides the serial's rmap hook."""
+    binding validation), not raw spark.read. The serial's schema memo
+    (serials.py) types the read, so once the file has been seen it
+    infers nothing; the events post-read conversion rides the serial's
+    rmap hook."""
     from porcupine_spark.catalog import Catalog, Dataset
-    from porcupine_spark.serials import SerialSet, parquet_serial
 
     serial = parquet_serial()
     if name == "events":
         serial = serial.rmap(_convert_events)
-    return Catalog([Dataset.source(name, SerialSet(serial), schema=schema)]).bind(
+    return Catalog([Dataset.source(name, SerialSet(serial))]).bind(
         sf_dir, {name: table_path(sf_dir, name)}
     )
 
 
-# Parquet SCHEMA per source — metadata only (a footer read), never
-# data. Without it every batch read paid a schema-inference job and
-# every streaming query a driver job re-reading the same footer. Keyed
-# on what decides the inferred schema: the source's mtime and size (a
-# rewritten table invalidates naturally) and the confs that type its
-# timestamp columns.
-_SCHEMA_MEMO: dict = {}
-_SCHEMA_CONFS = (
-    "spark.sql.legacy.parquet.nanosAsLong",
-    "spark.sql.parquet.inferTimestampNTZ.enabled",
-)
-
-
-def _source_stamp(path: str) -> tuple[int, int] | None:
-    """(newest mtime_ns, total bytes) of a local file or directory of
-    parts; None when it cannot be stat'ed (remote URI, missing)."""
-    p = path[7:] if path.startswith("file://") else path
-    try:
-        st = os.stat(p)
-    except OSError:
-        return None
-    if not os.path.isdir(p):
-        return st.st_mtime_ns, st.st_size
-    mtime, size = st.st_mtime_ns, 0
-    for dirpath, _dirs, files in os.walk(p):
-        for f in files:
-            fst = os.stat(os.path.join(dirpath, f))
-            mtime, size = max(mtime, fst.st_mtime_ns), size + fst.st_size
-    return mtime, size
-
-
-def _table_schema(spark: SparkSession, path: str):
-    stamp = _source_stamp(path)
-    if stamp is None:
-        return spark.read.parquet(path).schema
-    key = (path, *stamp, *(spark.conf.get(c, None) for c in _SCHEMA_CONFS))
-    if key not in _SCHEMA_MEMO:
-        _SCHEMA_MEMO[key] = spark.read.parquet(path).schema
-    return _SCHEMA_MEMO[key]
-
-
+# sessions already confed, by JVM session UUID: a new session can
+# reuse a stopped one's id(), never its UUID
 _CONFED_SESSIONS: set = set()
 
 
@@ -130,9 +94,11 @@ def ensure_session_confs(spark: SparkSession) -> None:
       the (UTC-naive) DuckDB oracle;
     - AQE + Arrow: the perf posture the engine is designed around;
     - shuffle partitions: only lowered when still at the 200 default —
-      never overrides a deliberate setting.
+      never overrides a deliberate setting;
+    - listing parallelism: one wave of task slots, only while still at
+      Spark's default (session.one_wave_listing).
     """
-    sid = id(spark)
+    sid = spark._jsparkSession.sessionUUID()
     if sid in _CONFED_SESSIONS:
         return
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -155,6 +121,7 @@ def ensure_session_confs(spark: SparkSession) -> None:
             spark.conf.set("spark.sql.shuffle.partitions", "32")
     except Exception:  # noqa: BLE001 — conf introspection must never break a read
         pass
+    one_wave_listing(spark)
     _CONFED_SESSIONS.add(sid)
 
 
@@ -187,7 +154,7 @@ def _widen_for_compute(df: DataFrame, src_path: str) -> DataFrame:
     shuffle overhead."""
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
-    stamp = _source_stamp(src_path)
+    stamp = source_stamp(src_path)
     if stamp is None:
         return df
     size = stamp[1]
@@ -210,7 +177,7 @@ def load_table(
     small join sides) where the repartition would be pure overhead."""
     ensure_session_confs(spark)
     path = table_path(sf_dir, name)
-    df = _bound_table(sf_dir, name, _table_schema(spark, path)).read(spark, name)
+    df = _bound_table(sf_dir, name).read(spark, name)
     if widen is None:
         widen = name in WIDEN_TABLES
     if widen:
@@ -241,7 +208,7 @@ def _stream_source(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
         os.unlink(link)
     if not os.path.lexists(link):
         os.symlink(src, link)
-    schema = _table_schema(spark, src)
+    schema = parquet_serial().read(spark, src).schema
     return (
         spark.readStream.schema(schema)
         .option("recursiveFileLookup", "true")

@@ -34,3 +34,23 @@ def jobs_so_far(spark):
         return jobs.head().jobId() + 1 if jobs.nonEmpty() else 0
 
     return count
+
+
+@pytest.fixture
+def jobs_since(spark):
+    """A function returning (description, task count) of every job with
+    an id of at least ``first``, oldest first."""
+
+    def jobs(first: int) -> list[tuple[str, int]]:
+        sc = spark.sparkContext._jsc.sc()
+        sc.listenerBus().waitUntilEmpty()
+        store = sc.statusStore()
+        last = store.jobsList(None).head().jobId()
+        out = []
+        for job_id in range(first, last + 1):
+            job = store.job(job_id)
+            desc = job.description()
+            out.append((desc.get() if desc.isDefined() else job.name(), job.numTasks()))
+        return out
+
+    return jobs
