@@ -15,6 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from porcupine_spark.serials import parquet_serial
+
 
 def write_bucketed(
     df: DataFrame,
@@ -67,4 +69,4 @@ def write_sorted(
         out = out.repartitionByRange(files_hint, *keys)
     else:
         out = out.repartitionByRange(*keys)
-    out.sortWithinPartitions(*keys).write.mode("overwrite").parquet(path)
+    parquet_serial().write(out.sortWithinPartitions(*keys), path)

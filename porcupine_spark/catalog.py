@@ -1,4 +1,5 @@
-"""Resource catalog — the reference's virtual resource tree.
+"""Resource catalog — the reference's virtual resource tree, and the
+one path by which the engine reaches a dataset's data.
 
 ``Dataset`` ≙ ``VirtualFile`` (porcupine-core/src/Data/Locations/
 VirtualFile.hs:98-107): a *logical* named resource with a serial set,
@@ -17,12 +18,21 @@ PorcupineTree.hs:602-636), ``None`` = explicitly unmapped (reads fall
 back to the embedded default; writes are skipped — dead-sink pruning,
 VirtualFileAccess.hs:309-313).
 
-Path templates may contain ``{variables}`` spliced at access time
-(Loc.hs:55-78,183-189) — repetition indices (SURVEY §2.7) ride these.
+``BoundCatalog`` ≙ the ``DataAccessTree`` (PorcupineTree.hs:15-64):
+every read or write of a dataset layer — ``read``, ``read_merged``,
+``write`` and the tasks built on them (task.py, task_ext.py) — goes
+through one per-layer step. It picks the layer's serial by extension
+(``SerialsFor``), splices the path's ``{variables}`` (Loc.hs:55-78,
+183-189; repetition indices, SURVEY §2.7, ride these), routes a
+``scheme://`` path to its registered accessor (``LocationAccessor``,
+accessors.py) and anything else to ``Serial.read``/``Serial.write``,
+and logs the access. The serial and the storage backend are therefore
+decided here and nowhere else.
 """
 
 from __future__ import annotations
 
+import functools
 import logging
 import os
 import re
@@ -408,43 +418,50 @@ class BoundCatalog:
     def _splice(self, path: str, extra_vars: dict | None) -> str:
         return splice_vars(path, {**self.variables, **(extra_vars or {})})
 
+    def _source(self, name: str) -> Dataset:
+        ds = self.catalog[name]
+        if not ds.readable:
+            raise ValueError(f"{name!r} is a sink (NoRead)")
+        return ds
+
+    def _read_layer(
+        self, spark: SparkSession, ds: Dataset, loc: Location, variables: dict | None
+    ) -> DataFrame:
+        """One physical layer: its serial, its spliced path, read
+        through the path's accessor if one is registered, else the
+        serial; timed into the access log (clockVFileAccesses,
+        VirtualFile.hs:400-401). The time covers planning and schema
+        resolution; execution shows up at action time."""
+        serial = ds.serials.for_ext(loc.ext)
+        path = self._splice(loc.path, variables)
+        t0 = time.perf_counter()
+        acc = accessor_for(path)
+        if acc is None:
+            df = serial.read(spark, path, ds.schema)
+        elif acc.read is None:
+            raise ValueError(f"accessor {acc.scheme!r} is write-only; cannot read {path!r}")
+        else:
+            df = acc.read(spark, path, serial, ds.schema)
+        _access_log.info("Read '%s' in %.3fs", path, time.perf_counter() - t0)
+        return df
+
     def read(
         self, spark: SparkSession, name: str, variables: dict | None = None
     ) -> DataFrame:
         """loadData (VirtualFileAccess.hs:73-83): read all layers,
         right-biased merge (§1.4). Single layer: plain read. Multiple:
         unionByName with layer precedence — callers needing keyed
-        last-wins semantics use merge_layers_keyed below."""
-        ds = self.catalog[name]
-        if not ds.readable:
-            raise ValueError(f"{name!r} is a sink (NoRead)")
+        last-wins semantics use read_merged."""
+        ds = self._source(name)
         locs = self._bound[name]
         if locs is None:
             if ds.embedded_default is not None:
                 return spark.createDataFrame(ds.embedded_default, schema=ds.schema)
             raise ValueError(f"{name!r} is unmapped and has no embedded default")
-        dfs = []
-        for loc in locs:
-            serial = ds.serials.for_ext(loc.ext)
-            path = self._splice(loc.path, variables)
-            t0 = time.perf_counter()
-            acc = accessor_for(path)
-            if acc is not None:
-                if acc.read is None:
-                    raise ValueError(
-                        f"accessor {acc.scheme!r} is write-only; cannot read {path!r}"
-                    )
-                dfs.append(acc.read(spark, path, serial, ds.schema))
-            else:
-                dfs.append(serial.read(spark, path, ds.schema))
-            # clockVFileAccesses (VirtualFile.hs:400-401): per-access timing.
-            # Read timing here covers plan+schema resolution; execution time
-            # shows up at action time in the Spark UI / task logs.
-            _access_log.info("Read '%s' in %.3fs", path, time.perf_counter() - t0)
-        out = dfs[0]
-        for layer_df in dfs[1:]:
-            out = out.unionByName(layer_df, allowMissingColumns=True)
-        return out
+        return functools.reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True),
+            [self._read_layer(spark, ds, loc, variables) for loc in locs],
+        )
 
     def read_many(
         self,
@@ -463,9 +480,7 @@ class BoundCatalog:
         index instead."""
         from porcupine_spark.sources.http import fetch_distributed, json_bodies_to_df
 
-        ds = self.catalog[name]
-        if not ds.readable:
-            raise ValueError(f"{name!r} is a sink (NoRead)")
+        ds = self._source(name)
         locs = self._bound[name]
         if not locs:
             raise ValueError(f"{name!r} is unmapped; read_many needs http layers")
@@ -491,14 +506,13 @@ class BoundCatalog:
         variables: dict | None = None,
     ) -> DataFrame:
         """Layered read with right-biased KEYED merge (LayeredReadScheme
-        / PorcupineTree.hs:614-636): later layers override earlier ones
-        per key. Implemented as union + keep-last window."""
+        / PorcupineTree.hs:614-636): each layer is read as ``read``
+        reads it, and later layers override earlier ones per key.
+        Implemented as union + keep-last window."""
         from pyspark.sql import Window as W
 
-        ds = self.catalog[name]
-        locs = self._bound[name] or []
+        ds = self._source(name)
         dfs = []
-        base = 0
         if ds.embedded_layers is not None:
             # config {"$layers": [...]}: each embedded layer keeps its
             # own precedence slot, later entries overriding earlier
@@ -507,9 +521,8 @@ class BoundCatalog:
                 dfs.append(spark.createDataFrame(layer, schema=ds.schema))
         elif ds.embedded_default is not None:
             dfs.append(spark.createDataFrame(ds.embedded_default, schema=ds.schema))
-        for loc in locs:
-            serial = ds.serials.for_ext(loc.ext)
-            dfs.append(serial.read(spark, self._splice(loc.path, variables), ds.schema))
+        for loc in self._bound[name] or []:
+            dfs.append(self._read_layer(spark, ds, loc, variables))
         if not dfs:
             raise ValueError(f"{name!r}: no layers and no default")
         tagged = [
@@ -531,33 +544,44 @@ class BoundCatalog:
         name: str,
         mode: str = "overwrite",
         variables: dict | None = None,
+        partition_by: str | None = None,
     ) -> list[str]:
         """writeData (VirtualFileAccess.hs:126-136): write to ALL layers
         (PorcupineTree.hs:602-613); unmapped sink => no-op (dead-sink
-        pruning, VirtualFileAccess.hs:309-313). Returns written paths."""
+        pruning, VirtualFileAccess.hs:309-313). Returns written paths.
+
+        ``partition_by`` lays every value of that column out in its own
+        ``<col>=<v>`` directory of each layer, in one job per layer
+        (writeDataStream, VirtualFileAccess.hs:156-182). Every layer is
+        checked before any is written: a layer whose accessor cannot
+        write, or cannot hold such a layout (an accessor takes one
+        body; a YAML serial writes one text column), is a ValueError
+        naming the dataset."""
         ds = self.catalog[name]
         if not ds.writable:
             raise ValueError(f"{name!r} is a source (NoWrite)")
-        locs = self._bound[name]
-        if locs is None:
-            return []  # dead sink: skip (laziness does the rest)
-        written = []
-        for loc in locs:
+        layers = []
+        for loc in self._bound[name] or []:  # None: dead sink, skip
             serial = ds.serials.for_ext(loc.ext)
             path = self._splice(loc.path, variables)
-            t0 = time.perf_counter()
             acc = accessor_for(path)
+            if acc is not None and acc.write is None:
+                raise ValueError(f"accessor {acc.scheme!r} is read-only; cannot write {path!r}")
+            if partition_by is not None and (acc is not None or not serial.partitionable):
+                via = f"its {acc.scheme} accessor" if acc else f"its .{serial.ext} serial"
+                raise ValueError(
+                    f"dataset {name!r}: {path!r} cannot be partitioned by "
+                    f"{partition_by!r}; {via} writes a single body"
+                )
+            layers.append((serial, path, acc))
+        for serial, path, acc in layers:
+            t0 = time.perf_counter()
             if acc is not None:
-                if acc.write is None:
-                    raise ValueError(
-                        f"accessor {acc.scheme!r} is read-only; cannot write {path!r}"
-                    )
                 acc.write(df, path, serial, mode)
             else:
-                serial.write(df, path, mode=mode)
+                serial.write(df, path, mode=mode, partition_by=partition_by)
             _access_log.info("Wrote '%s' in %.3fs", path, time.perf_counter() - t0)
-            written.append(path)
-        return written
+        return [path for _, path, _ in layers]
 
     def show_tree(
         self,

@@ -140,7 +140,7 @@ def compact_partition(spark: SparkSession, src_dir: str, n_out: int) -> str:
         if not fs.rename(aside, src):
             raise IOError(f"compact: failed to restore {aside} -> {src}")
     df = parquet_serial().read(spark, src_dir)
-    df.coalesce(n_out).write.mode("overwrite").parquet(staging)
+    parquet_serial().write(df.coalesce(n_out), staging)
     dst = jvm.org.apache.hadoop.fs.Path(staging)
     if fs.exists(aside):  # stale aside from an even earlier crash
         fs.delete(aside, True)

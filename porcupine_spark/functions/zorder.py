@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from porcupine_spark.serials import parquet_serial
+
 
 def z_interleave(a: Column, b: Column, bits: int = 16) -> Column:
     """Morton code of two non-negative ints using their low ``bits``
@@ -41,11 +43,7 @@ def write_zordered(
     One range shuffle at write time buys two-column slice reads after —
     same contract as bucketing.write_sorted, one dimension up."""
     z = z_interleave(F.col(col_a), F.col(col_b), bits).alias("_z")
-    (
-        df.withColumn("_z", z)
-        .repartitionByRange(n_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .parquet(path)
+    parquet_serial().write(
+        df.withColumn("_z", z).repartitionByRange(n_files, "_z").sortWithinPartitions("_z").drop("_z"),
+        path,
     )

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from porcupine_spark.functions import driverstate
-from porcupine_spark.operators.dedup import SQL_HOT_DF_CUTOFF, SQL_SHINGLES
+from porcupine_spark.operators.dedup import SQL_SHINGLE_OVERLAP
 from porcupine_spark.plans.registry import query
 
 MAX_ROUNDS = 50  # backstop far above any real near-dup graph diameter
@@ -161,19 +161,7 @@ def connected_components(
 @query(
     "dedup_clusters",
     f"""
-    WITH RECURSIVE {SQL_SHINGLES},
-    df AS (SELECT shingle, COUNT(*) AS c FROM shingles GROUP BY shingle),
-    keep AS (
-      SELECT s.doc_id, s.shingle FROM shingles s JOIN df USING (shingle)
-      WHERE c <= {SQL_HOT_DF_CUTOFF}
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM keep GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS i
-      FROM keep a JOIN keep b
-        ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    ),
+    WITH RECURSIVE {SQL_SHINGLE_OVERLAP},
     edges AS (
       SELECT doc_a AS src, doc_b AS dst
       FROM inter

@@ -146,6 +146,22 @@ SQL_HOT_DF_CUTOFF = (
     f"{HOT_DF_CAP}))"
 )
 
+# the oracle-side mirror of shingle_overlap (DuckDB SQL): CTEs ending in
+# sizes(doc_id, n) and inter(doc_a, doc_b, i) over informative shingles
+SQL_SHINGLE_OVERLAP = f"""{SQL_SHINGLES},
+    df AS (SELECT shingle, COUNT(*) AS c FROM shingles GROUP BY shingle),
+    keep AS (
+      SELECT s.doc_id, s.shingle FROM shingles s JOIN df USING (shingle)
+      WHERE c <= {SQL_HOT_DF_CUTOFF}
+    ),
+    sizes AS (SELECT doc_id, COUNT(*) AS n FROM keep GROUP BY doc_id),
+    inter AS (
+      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS i
+      FROM keep a JOIN keep b
+        ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+      GROUP BY a.doc_id, b.doc_id
+    )"""
+
 # one count() per documents file state — the cutoff scalar is a
 # parquet metadata count, but re-running it per query build is still
 # one job each; every dedup builder shares this memo instead. Keyed on
@@ -168,14 +184,11 @@ def corpus_n_docs(spark: SparkSession, sf_dir: str) -> int:
     return n
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame, min_jaccard: float = 0.05, df_cutoff: int | None = None
-) -> DataFrame:
-    """(doc_a, doc_b, jaccard) for doc pairs sharing >=1 informative
-    shingle. ``df_cutoff`` defaults to hot_df_cutoff(count(docs)); pass
-    an explicit value to skip the count() action."""
-    if df_cutoff is None:
-        df_cutoff = hot_df_cutoff(docs.count())
+def shingle_overlap(docs: DataFrame, df_cutoff: int) -> DataFrame:
+    """(doc_a, doc_b, i, na, nb) for doc pairs (doc_a < doc_b) sharing
+    >=1 informative shingle: ``i`` shared shingles, ``na``/``nb`` each
+    doc's informative-shingle count. The core of every shingle-overlap
+    measure; callers project it (jaccard, containment)."""
     # self-join on hashed shingles (see hashed_shingle_table): 8-byte
     # shuffle/join keys, and the shingle string is never even built
     sh_all = hashed_shingle_table(docs)
@@ -204,10 +217,20 @@ def ngram_jaccard_pairs(
     )
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
+    return inter.join(sa, "doc_a").join(sb, "doc_b")
+
+
+def ngram_jaccard_pairs(
+    docs: DataFrame, min_jaccard: float = 0.05, df_cutoff: int | None = None
+) -> DataFrame:
+    """(doc_a, doc_b, jaccard) for doc pairs sharing >=1 informative
+    shingle. ``df_cutoff`` defaults to hot_df_cutoff(count(docs)); pass
+    an explicit value to skip the count() action."""
+    if df_cutoff is None:
+        df_cutoff = hot_df_cutoff(docs.count())
     jac = F.col("i").cast("double") / (F.col("na") + F.col("nb") - F.col("i"))
     return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        shingle_overlap(docs, df_cutoff)
         .select("doc_a", "doc_b", jac.alias("jaccard"))
         .filter(F.col("jaccard") >= min_jaccard)
     )
@@ -216,19 +239,7 @@ def ngram_jaccard_pairs(
 @query(
     "dedup_ngram_jaccard",
     f"""
-    WITH {SQL_SHINGLES},
-    df AS (SELECT shingle, COUNT(*) AS c FROM shingles GROUP BY shingle),
-    keep AS (
-      SELECT s.doc_id, s.shingle FROM shingles s JOIN df USING (shingle)
-      WHERE c <= {SQL_HOT_DF_CUTOFF}
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM keep GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS i
-      FROM keep a JOIN keep b
-        ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    )
+    WITH {SQL_SHINGLE_OVERLAP}
     SELECT doc_a, doc_b,
            CAST(i AS DOUBLE) / (sa.n + sb.n - i) AS jaccard
     FROM inter
@@ -881,19 +892,7 @@ CONTAIN_NUM, CONTAIN_DEN = 1, 2  # keep pairs with containment >= 1/2
 @query(
     "dedup_containment_pairs",
     f"""
-    WITH {SQL_SHINGLES},
-    df AS (SELECT shingle, COUNT(*) AS c FROM shingles GROUP BY shingle),
-    keep AS (
-      SELECT s.doc_id, s.shingle FROM shingles s JOIN df USING (shingle)
-      WHERE c <= {SQL_HOT_DF_CUTOFF}
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM keep GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS i
-      FROM keep a JOIN keep b
-        ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    )
+    WITH {SQL_SHINGLE_OVERLAP}
     SELECT doc_a, doc_b, i AS n_shared,
            LEAST(sa.n, sb.n) AS n_smaller,
            CAST(i AS DOUBLE) / LEAST(sa.n, sb.n) AS containment
@@ -914,35 +913,9 @@ CONTAIN_NUM, CONTAIN_DEN = 1, 2  # keep pairs with containment >= 1/2
 )
 def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    df_cutoff = hot_df_cutoff(corpus_n_docs(spark, sf_dir))
-    sh_all = hashed_shingle_table(docs)
-    hot = (
-        sh_all.groupBy("h")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > df_cutoff)
-        .select("h")
-    )
-    # eager localCheckpoint, not .cache() (optimization r8): the three
-    # consumers (sizes + both self-join sides) then plan against a
-    # truncated checkpoint scan instead of re-deriving the shingle
-    # explode subtree per reference — measured 1.65 -> 1.36 s min-of-5
-    # on the containment query, all pairs in favor; single computation
-    # is guaranteed rather than cache-population racy.
-    sh = sh_all.join(F.broadcast(hot), "h", "left_anti").localCheckpoint(eager=True)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.h") == F.col("b.h")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("i"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
     smaller = F.least("na", "nb")
     return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        shingle_overlap(docs, hot_df_cutoff(corpus_n_docs(spark, sf_dir)))
         .filter(F.col("i") * CONTAIN_DEN >= smaller * CONTAIN_NUM)
         .select(
             "doc_a",

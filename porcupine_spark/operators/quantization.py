@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from porcupine_spark.operators.similarity import cosine_topk
+from porcupine_spark.operators.similarity import cosine_topk, recall_vs_exact, sql_recall_vs_exact
 from porcupine_spark.plans.registry import REGISTRY as _REG
 from porcupine_spark.plans.registry import query
 from porcupine_spark.tables import load_table
@@ -153,49 +153,12 @@ def sq8_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: cosine_topk(spark, sf_dir),
         lambda: sq8_topk(spark, sf_dir),
     )
-    exact = exact_df.select(
-        "query_id", "neighbor_id", F.lit(1).alias("in_exact")
-    )
-    approx = approx_df.select(
-        "query_id", "neighbor_id", F.lit(1).alias("in_sq8")
-    )
-    m = exact.join(approx, ["query_id", "neighbor_id"], "full_outer")
-    return m.groupBy("query_id").agg(
-        F.sum(F.coalesce("in_exact", F.lit(0))).cast("long").alias("n_exact"),
-        F.sum(F.coalesce("in_sq8", F.lit(0))).cast("long").alias("n_sq8"),
-        F.sum(
-            F.when(F.col("in_exact").isNotNull() & F.col("in_sq8").isNotNull(), 1)
-            .otherwise(0)
-        )
-        .cast("long")
-        .alias("n_hits"),
-        F.expr(
-            "CAST(SUM(CASE WHEN in_exact IS NOT NULL AND in_sq8 IS NOT NULL"
-            " THEN 1 ELSE 0 END) * 1000000"
-            " div SUM(CASE WHEN in_exact IS NOT NULL THEN 1 ELSE 0 END)"
-            " AS BIGINT)"
-        ).alias("recall_micro"),
-    )
+    return recall_vs_exact(exact_df, approx_df, "sq8")
 
 
-_REG["sq8_adc_recall"].oracle = f"""
-    WITH e AS (SELECT query_id, neighbor_id FROM ({_REG["cosine_topk"].oracle})),
-    s AS (SELECT query_id, neighbor_id FROM ({_REG["sq8_topk"].oracle})),
-    m AS (
-      SELECT COALESCE(e.query_id, s.query_id) AS query_id,
-             CASE WHEN e.query_id IS NOT NULL THEN 1 END AS in_exact,
-             CASE WHEN s.query_id IS NOT NULL THEN 1 END AS in_sq8
-      FROM e FULL OUTER JOIN s
-        ON s.query_id = e.query_id AND s.neighbor_id = e.neighbor_id
-    )
-    SELECT query_id,
-           CAST(SUM(CASE WHEN in_exact IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_exact,
-           CAST(SUM(CASE WHEN in_sq8 IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_sq8,
-           CAST(SUM(CASE WHEN in_exact IS NOT NULL AND in_sq8 IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-           CAST(SUM(CASE WHEN in_exact IS NOT NULL AND in_sq8 IS NOT NULL THEN 1 ELSE 0 END) * 1000000
-                // SUM(CASE WHEN in_exact IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS recall_micro
-    FROM m GROUP BY query_id
-"""
+_REG["sq8_adc_recall"].oracle = sql_recall_vs_exact(
+    _REG["cosine_topk"].oracle, _REG["sq8_topk"].oracle, "sq8"
+)
 
 
 # ---------------------------------------------------------------------------
@@ -478,50 +441,14 @@ def pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: cosine_topk(spark, sf_dir),
         lambda: _pq_adc_ranked(spark, sf_dir, PQ_SHORTLIST),
     )
-    exact = exact_df.select(
-        "query_id", "neighbor_id", F.lit(1).alias("in_exact")
-    )
-    approx = approx_df.select(
-        "query_id", "neighbor_id", F.lit(1).alias("in_pq")
-    )
-    m = exact.join(approx, ["query_id", "neighbor_id"], "full_outer")
-    return m.groupBy("query_id").agg(
-        F.sum(F.coalesce("in_exact", F.lit(0))).cast("long").alias("n_exact"),
-        F.sum(F.coalesce("in_pq", F.lit(0))).cast("long").alias("n_pq"),
-        F.sum(
-            F.when(F.col("in_exact").isNotNull() & F.col("in_pq").isNotNull(), 1)
-            .otherwise(0)
-        )
-        .cast("long")
-        .alias("n_hits"),
-        F.expr(
-            "CAST(SUM(CASE WHEN in_exact IS NOT NULL AND in_pq IS NOT NULL"
-            " THEN 1 ELSE 0 END) * 1000000"
-            " div SUM(CASE WHEN in_exact IS NOT NULL THEN 1 ELSE 0 END)"
-            " AS BIGINT)"
-        ).alias("recall_micro"),
-    )
+    return recall_vs_exact(exact_df, approx_df, "pq")
 
 
-_REG["pq_adc_recall"].oracle = f"""
-    WITH e AS (SELECT query_id, neighbor_id FROM ({_REG["cosine_topk"].oracle})),
-    s AS (SELECT query_id, neighbor_id
-          FROM ({_REG["pq_adc_topk"].oracle.replace(f"WHERE rank <= {TOPK}", f"WHERE rank <= {PQ_SHORTLIST}")})),
-    m AS (
-      SELECT COALESCE(e.query_id, s.query_id) AS query_id,
-             CASE WHEN e.query_id IS NOT NULL THEN 1 END AS in_exact,
-             CASE WHEN s.query_id IS NOT NULL THEN 1 END AS in_pq
-      FROM e FULL OUTER JOIN s
-        ON s.query_id = e.query_id AND s.neighbor_id = e.neighbor_id
-    )
-    SELECT query_id,
-           CAST(SUM(CASE WHEN in_exact IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_exact,
-           CAST(SUM(CASE WHEN in_pq IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_pq,
-           CAST(SUM(CASE WHEN in_exact IS NOT NULL AND in_pq IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-           CAST(SUM(CASE WHEN in_exact IS NOT NULL AND in_pq IS NOT NULL THEN 1 ELSE 0 END) * 1000000
-                // SUM(CASE WHEN in_exact IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS recall_micro
-    FROM m GROUP BY query_id
-"""
+_REG["pq_adc_recall"].oracle = sql_recall_vs_exact(
+    _REG["cosine_topk"].oracle,
+    _REG["pq_adc_topk"].oracle.replace(f"WHERE rank <= {TOPK}", f"WHERE rank <= {PQ_SHORTLIST}"),
+    "pq",
+)
 
 
 def _pq_kmeans_codebook(emb: DataFrame, qmax: float, sample=None) -> dict:
@@ -607,27 +534,8 @@ def pq_kmeans_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: cosine_topk(spark, sf_dir),
     )
     cbq = _pq_kmeans_codebook(emb, qmax, sample=sample)
-    exact = exact_df.select(
-        "query_id", "neighbor_id", F.lit(1).alias("in_exact")
-    )
     # qmax is threaded through so the scale agg runs ONCE per build
     # (it used to run again inside _pq_spark_parts — optimization r8)
-    approx = _pq_adc_ranked(spark, sf_dir, PQ_SHORTLIST, cbq, qmax=qmax).select(
-        "query_id", "neighbor_id", F.lit(1).alias("in_pq")
-    )
-    m = exact.join(approx, ["query_id", "neighbor_id"], "full_outer")
-    return m.groupBy("query_id").agg(
-        F.sum(F.coalesce("in_exact", F.lit(0))).cast("long").alias("n_exact"),
-        F.sum(
-            F.when(F.col("in_exact").isNotNull() & F.col("in_pq").isNotNull(), 1)
-            .otherwise(0)
-        )
-        .cast("long")
-        .alias("n_hits"),
-        F.expr(
-            "CAST(SUM(CASE WHEN in_exact IS NOT NULL AND in_pq IS NOT NULL"
-            " THEN 1 ELSE 0 END) * 1000000"
-            " div SUM(CASE WHEN in_exact IS NOT NULL THEN 1 ELSE 0 END)"
-            " AS BIGINT)"
-        ).alias("recall_micro"),
-    )
+    approx_df = _pq_adc_ranked(spark, sf_dir, PQ_SHORTLIST, cbq, qmax=qmax)
+    # the output contract has no shortlist-size column
+    return recall_vs_exact(exact_df, approx_df, "pq").drop("n_pq")

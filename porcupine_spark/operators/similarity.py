@@ -817,20 +817,6 @@ def _lsh_signatures(emb: DataFrame) -> DataFrame:
     return fast_part.unionByName(exact_part).localCheckpoint(eager=True)
 
 
-def _lsh_bands(sigs: DataFrame) -> DataFrame:
-    """(vec_id, band, chunk) — signature split into band substrings."""
-    n_bands = LSH_PLANES // LSH_BAND_BITS
-    return sigs.select(
-        "vec_id",
-        F.posexplode(
-            F.array(*[
-                F.substring("sig", b * LSH_BAND_BITS + 1, LSH_BAND_BITS)
-                for b in range(n_bands)
-            ])
-        ).alias("band", "chunk"),
-    )
-
-
 @query(
     "lsh_topk",
     f"""
@@ -1945,6 +1931,55 @@ def split_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def recall_vs_exact(exact_df: DataFrame, approx_df: DataFrame, tag: str) -> DataFrame:
+    """Per query_id: n_exact, n_<tag>, n_hits and recall_micro (hits per
+    million exact neighbors, integer division) of an approximate
+    (query_id, neighbor_id) list against the exact one. A full outer
+    join of two |queries| x k lists, then one aggregate."""
+    flag = f"in_{tag}"
+    exact = exact_df.select("query_id", "neighbor_id", F.lit(1).alias("in_exact"))
+    approx = approx_df.select("query_id", "neighbor_id", F.lit(1).alias(flag))
+    m = exact.join(approx, ["query_id", "neighbor_id"], "full_outer")
+    return m.groupBy("query_id").agg(
+        F.sum(F.coalesce("in_exact", F.lit(0))).cast("long").alias("n_exact"),
+        F.sum(F.coalesce(flag, F.lit(0))).cast("long").alias(f"n_{tag}"),
+        F.sum(F.when(F.col("in_exact").isNotNull() & F.col(flag).isNotNull(), 1).otherwise(0))
+        .cast("long")
+        .alias("n_hits"),
+        F.expr(
+            f"CAST(SUM(CASE WHEN in_exact IS NOT NULL AND {flag} IS NOT NULL"
+            " THEN 1 ELSE 0 END) * 1000000"
+            " div SUM(CASE WHEN in_exact IS NOT NULL THEN 1 ELSE 0 END)"
+            " AS BIGINT)"
+        ).alias("recall_micro"),
+    )
+
+
+def sql_recall_vs_exact(exact_sql: str, approx_sql: str, tag: str) -> str:
+    """The DuckDB oracle of ``recall_vs_exact`` over two oracle queries'
+    (query_id, neighbor_id) lists."""
+    flag = f"in_{tag}"
+    hit = f"CASE WHEN in_exact IS NOT NULL AND {flag} IS NOT NULL THEN 1 ELSE 0 END"
+    return f"""
+    WITH e AS (SELECT query_id, neighbor_id FROM ({exact_sql})),
+    a AS (SELECT query_id, neighbor_id FROM ({approx_sql})),
+    m AS (
+      SELECT COALESCE(e.query_id, a.query_id) AS query_id,
+             CASE WHEN e.query_id IS NOT NULL THEN 1 END AS in_exact,
+             CASE WHEN a.query_id IS NOT NULL THEN 1 END AS {flag}
+      FROM e FULL OUTER JOIN a
+        ON a.query_id = e.query_id AND a.neighbor_id = e.neighbor_id
+    )
+    SELECT query_id,
+           CAST(SUM(CASE WHEN in_exact IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_exact,
+           CAST(SUM(CASE WHEN {flag} IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_{tag},
+           CAST(SUM({hit}) AS BIGINT) AS n_hits,
+           CAST(SUM({hit}) * 1000000
+                // SUM(CASE WHEN in_exact IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS recall_micro
+    FROM m GROUP BY query_id
+"""
+
+
 @query(
     "lsh_recall_at_k",
     None,  # late-bound below: composes cosine_topk's and lsh_topk's oracles
@@ -1980,53 +2015,12 @@ def lsh_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: cosine_topk(spark, sf_dir),
         lambda: lsh_topk(spark, sf_dir),
     )
-    exact = exact_df.select(
-        "query_id", "neighbor_id", F.lit(1).alias("in_exact")
-    )
-    approx = approx_df.select(
-        "query_id", "neighbor_id", F.lit(1).alias("in_lsh")
-    )
-    m = exact.join(approx, ["query_id", "neighbor_id"], "full_outer")
-    return (
-        m.groupBy("query_id")
-        .agg(
-            F.sum(F.coalesce("in_exact", F.lit(0))).cast("long").alias("n_exact"),
-            F.sum(F.coalesce("in_lsh", F.lit(0))).cast("long").alias("n_lsh"),
-            F.sum(
-                F.when(
-                    F.col("in_exact").isNotNull() & F.col("in_lsh").isNotNull(), 1
-                ).otherwise(0)
-            )
-            .cast("long")
-            .alias("n_hits"),
-            F.expr(
-                "CAST(SUM(CASE WHEN in_exact IS NOT NULL AND in_lsh IS NOT NULL"
-                " THEN 1 ELSE 0 END) * 1000000"
-                " div SUM(CASE WHEN in_exact IS NOT NULL THEN 1 ELSE 0 END)"
-                " AS BIGINT)"
-            ).alias("recall_micro"),
-        )
-    )
+    return recall_vs_exact(exact_df, approx_df, "lsh")
 
 
-_REG["lsh_recall_at_k"].oracle = f"""
-    WITH e AS (SELECT query_id, neighbor_id FROM ({_REG["cosine_topk"].oracle})),
-    l AS (SELECT query_id, neighbor_id FROM ({_REG["lsh_topk"].oracle})),
-    m AS (
-      SELECT COALESCE(e.query_id, l.query_id) AS query_id,
-             CASE WHEN e.query_id IS NOT NULL THEN 1 END AS in_exact,
-             CASE WHEN l.query_id IS NOT NULL THEN 1 END AS in_lsh
-      FROM e FULL OUTER JOIN l
-        ON l.query_id = e.query_id AND l.neighbor_id = e.neighbor_id
-    )
-    SELECT query_id,
-           CAST(SUM(CASE WHEN in_exact IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_exact,
-           CAST(SUM(CASE WHEN in_lsh IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_lsh,
-           CAST(SUM(CASE WHEN in_exact IS NOT NULL AND in_lsh IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
-           CAST(SUM(CASE WHEN in_exact IS NOT NULL AND in_lsh IS NOT NULL THEN 1 ELSE 0 END) * 1000000
-                // SUM(CASE WHEN in_exact IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS recall_micro
-    FROM m GROUP BY query_id
-"""
+_REG["lsh_recall_at_k"].oracle = sql_recall_vs_exact(
+    _REG["cosine_topk"].oracle, _REG["lsh_topk"].oracle, "lsh"
+)
 
 
 @query(

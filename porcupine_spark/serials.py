@@ -41,7 +41,7 @@ import threading
 from collections import OrderedDict
 from collections.abc import Callable, Hashable
 from dataclasses import dataclass, field, replace
-from typing import Any
+from typing import Any, ClassVar
 
 from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 
@@ -64,6 +64,8 @@ class Serial:
     post_read: Transform | None = None  # rmap: applied after reading
     writable: bool = True
     readable: bool = True
+    # whether a write can lay rows out by a partition column
+    partitionable: ClassVar[bool] = True
 
     def with_options(self, **opts) -> "Serial":
         return replace(self, options={**self.options, **opts})
@@ -108,14 +110,18 @@ class Serial:
         confs = tuple(spark.conf.get(c, None) for c in _SCHEMA_CONFS)
         return (self.format, opts, path, stamp, confs)
 
-    def write(self, df: DataFrame, path: str, mode: str = "overwrite") -> None:
+    def write(
+        self, df: DataFrame, path: str, mode: str = "overwrite", partition_by: str | None = None
+    ) -> None:
+        """Write ``df`` to ``path``; with ``partition_by``, each value of
+        that column lands in its own ``<col>=<v>`` directory, one job."""
         if not self.writable:
             raise ValueError(f"serial for .{self.ext} is read-only")
         if self.pre_write:
             df = self.pre_write(df)
-        writer = df.write.format(self.format).mode(mode)
-        for k, v in self.options.items():
-            writer = writer.option(k, v)
+        writer = df.write.format(self.format).mode(mode).options(**self.options)
+        if partition_by is not None:
+            writer = writer.partitionBy(partition_by)
         writer.save(path)
 
 
@@ -308,9 +314,15 @@ class YamlSerial(Serial):
             df = spark.read.json(jlines.rdd.map(lambda r: r.value))
         return self.post_read(df) if self.post_read else df
 
-    def write(self, df: DataFrame, path: str, mode: str = "overwrite") -> None:
+    partitionable: ClassVar[bool] = False  # rows become one text column
+
+    def write(
+        self, df: DataFrame, path: str, mode: str = "overwrite", partition_by: str | None = None
+    ) -> None:
         import pandas as pd
 
+        if partition_by is not None:
+            raise ValueError(f"serial for .{self.ext} cannot partition by {partition_by!r}")
         if self.pre_write:
             df = self.pre_write(df)
 

@@ -35,14 +35,8 @@ def stream_to_dataset(
 
     def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
         for loc in locs:
-            serial = ds.serials.for_ext(loc.ext)
-            out = serial.pre_write(batch_df) if serial.pre_write else batch_df
-            (
-                out.write.format(serial.format)
-                .mode("overwrite")  # scoped to this epoch's directory
-                .options(**serial.options)
-                .save(f"{loc.path}/epoch={epoch_id}")
-            )
+            # overwrite is scoped to this epoch's directory
+            ds.serials.for_ext(loc.ext).write(batch_df, f"{loc.path}/epoch={epoch_id}")
 
     writer = stream.writeStream.foreachBatch(write_epoch).option(
         "checkpointLocation", checkpoint_dir
@@ -111,20 +105,13 @@ def stream_upsert_to_dataset(
         dst = jvm.org.apache.hadoop.fs.Path(jvm_path)
         fs = dst.getFileSystem(hconf)
         if fs.exists(dst):
-            cur = (
-                spark.read.format(serial.format).options(**serial.options).load(jvm_path)
-            )
-            merged = merge_upsert(cur, latest, key)
+            # read back through the serial, so its post_read undoes the
+            # pre_write its write applied
+            merged = merge_upsert(serial.read(spark, jvm_path, ds.schema), latest, key)
         else:
             merged = latest
-        out = serial.pre_write(merged) if serial.pre_write else merged
         tmp = f"{jvm_path}__epoch{epoch_id}_tmp"
-        (
-            out.write.format(serial.format)
-            .mode("overwrite")
-            .options(**serial.options)
-            .save(tmp)
-        )
+        serial.write(merged, tmp)
         # swap via Hadoop FS (works for file:// and hdfs://; on object
         # stores pair with a manifest/log commit instead)
         src = jvm.org.apache.hadoop.fs.Path(tmp)

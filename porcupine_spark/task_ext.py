@@ -1,22 +1,29 @@
 """Repetition-aware IO tasks and control combinators (SURVEY §2.1/§2.2).
 
-The per-index read/write family (VirtualFileAccess.hs:89-182) and the
-stream utilities (Streaming/TaskPipelineUtils.hs) — each as the Spark
-construct it wants to be:
+Every dataset read and write here goes through the bound catalog
+(``BoundCatalog.read``/``write``), which reaches data only through a
+layer's accessor or its ``Serial.read``/``Serial.write`` — the
+reference's ``DataAccessTree`` closures (PorcupineTree.hs:15-64). So
+variable splicing, accessor routing, the serial's ``readable``/
+``writable`` checks and pre-write/post-read transforms, and the access
+log are decided in one place for every task below.
 
-- ``load_indexed``  ≙ loadDataStream/loadDataList (:89-111): one
-  occurrence of a repeated dataset per index, index recovered as a
-  column. Per-index paths are unioned scans (Catalyst merges them into
-  one multi-path FileScan); a partition-keyed layout instead becomes a
-  single partition-pruned scan via ``load_partitioned``.
-- ``try_load_indexed`` ≙ tryLoadDataStream (:114-122): per-element
-  failure tolerance — missing/corrupt occurrences become error rows,
-  not job failures.
+- ``load_indexed``  ≙ loadDataStream/loadDataList (VirtualFileAccess.hs:
+  89-111): one read per index, each exactly ``load`` of the dataset with
+  ``{var}`` bound to that index — EVERY layer, unioned by name as in
+  ``BoundCatalog.read`` — plus an ``idx`` column; the per-index frames
+  are unioned by name. A partition-keyed layout is better read as one
+  partition-pruned scan with ``load_partitioned``.
+- ``try_load_indexed`` ≙ tryLoadDataStream (:114-122): the same per-index
+  read inside ``try``; missing/corrupt occurrences become error entries,
+  not job failures. Both raise ValueError on an unmapped dataset.
 - ``write_partitioned`` ≙ writeDataStream/writeDataList/writeDataFold
-  (:156-182): every (idx, rows) occurrence lands in its own
-  ``idx=<v>`` directory via partitionBy — one job, no driver loop.
+  (:156-182): ``BoundCatalog.write(partition_by=idx_col)`` — every index
+  value lands in its own ``idx=<v>`` directory of each layer, one job per
+  layer, no driver loop.
 - ``read_folder``     ≙ streamFolder (TaskPipelineUtils.hs:49-65):
-  recursive listing with provenance (input_file_name).
+  recursive listing with provenance (input_file_name); it reads a raw
+  folder, not a catalog dataset.
 - ``tee``             ≙ mapCopy/hoistCopy (:119-134): fan one frame out
   to N sinks, one of them transformed; frame persisted so upstream
   computes once.
@@ -26,6 +33,7 @@ construct it wants to be:
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable, Sequence
 from typing import Any
 
@@ -33,56 +41,51 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from porcupine_spark.catalog import splice_vars
 from porcupine_spark.task import RunCtx, Task, _resolve
 
 
+def _index_reader(ctx: RunCtx, name: str, var: str) -> Callable[[Any], DataFrame]:
+    """The per-index read of ``load_indexed``/``try_load_indexed``:
+    ``load`` of the dataset with ``{var}`` bound to the index, every
+    layer, through the bound catalog, plus an ``idx`` column. An
+    unmapped dataset has no occurrences to index: ValueError."""
+    resolved = _resolve(ctx, name)
+    if ctx.bound.locations(resolved) is None:
+        raise ValueError(f"{name!r} unmapped")
+
+    def read_one(idx: Any) -> DataFrame:
+        df = ctx.bound.read(ctx.spark, resolved, variables={**ctx.variables, var: idx})
+        return df.withColumn("idx", F.lit(idx))
+
+    return read_one
+
+
 def load_indexed(name: str, var: str, indices: Sequence[Any]) -> Task:
-    """() -> DataFrame with an ``idx`` column; one layer-0 occurrence per
-    index. All per-index paths go into ONE spark.read (single FileScan)
-    when schemas agree; the index is recovered from the path."""
+    """() -> DataFrame with an ``idx`` column: per index, every layer of
+    the dataset read as ``load`` reads it with ``{var}`` bound to the
+    index; the per-index frames unioned by name."""
 
     def runner(ctx: RunCtx, _):
-        ds = ctx.bound.catalog[_resolve(ctx, name)]
-        locs = ctx.bound.locations(_resolve(ctx, name))
-        if locs is None:
-            raise ValueError(f"{name!r} unmapped")
-        loc = locs[0]
-        serial = ds.serials.for_ext(loc.ext)
-        frames = []
-        for idx in indices:
-            path = splice_vars(loc.path, {**ctx.bound.variables, **ctx.variables, var: idx})
-            df = serial.read(ctx.spark, path, ds.schema)
-            frames.append(df.withColumn("idx", F.lit(idx)))
-        out = frames[0]
-        for f_ in frames[1:]:
-            out = out.unionByName(f_)
-        return out
+        read_one = _index_reader(ctx, name, var)
+        return functools.reduce(DataFrame.unionByName, map(read_one, indices))
 
     return Task(runner, reads=frozenset({name}), name=f"load_indexed:{name}")
 
 
 def try_load_indexed(name: str, var: str, indices: Sequence[Any]) -> Task:
-    """Failure-tolerant variant: returns (DataFrame, [(idx, error)])."""
+    """Failure-tolerant variant: returns (DataFrame or None, [(idx, error)])."""
 
     def runner(ctx: RunCtx, _):
-        ds = ctx.bound.catalog[_resolve(ctx, name)]
-        loc = (ctx.bound.locations(_resolve(ctx, name)) or [None])[0]
-        serial = ds.serials.for_ext(loc.ext)
+        read_one = _index_reader(ctx, name, var)
         frames, errors = [], []
         for idx in indices:
-            path = splice_vars(loc.path, {**ctx.bound.variables, **ctx.variables, var: idx})
             try:
-                df = serial.read(ctx.spark, path, ds.schema)
+                df = read_one(idx)
                 df.schema  # force analysis so missing paths raise here
-                frames.append(df.withColumn("idx", F.lit(idx)))
+                frames.append(df)
             except Exception as e:  # noqa: BLE001
                 errors.append((idx, f"{type(e).__name__}: {e}"))
-        out = None
-        if frames:
-            out = frames[0]
-            for f_ in frames[1:]:
-                out = out.unionByName(f_)
+        out = functools.reduce(DataFrame.unionByName, frames) if frames else None
         return out, errors
 
     return Task(runner, reads=frozenset({name}), name=f"try_load_indexed:{name}")
@@ -90,31 +93,12 @@ def try_load_indexed(name: str, var: str, indices: Sequence[Any]) -> Task:
 
 def write_partitioned(name: str, idx_col: str, mode: str = "overwrite") -> Task:
     """DataFrame -> written paths; one physical dir per index value
-    (…/idx=v/part-*.parquet) in a single distributed job."""
+    (…/idx=v/part-*.parquet) in a single distributed job per layer."""
 
     def runner(ctx: RunCtx, df: DataFrame):
-        resolved = _resolve(ctx, name)
-        ds = ctx.bound.catalog[resolved]
-        locs = ctx.bound.locations(resolved)
-        if locs is None:
-            return []
-        written = []
-        for loc in locs:
-            serial = ds.serials.for_ext(loc.ext)
-            path = splice_vars(loc.path, {**ctx.bound.variables, **ctx.variables})
-            if serial.pre_write:
-                df2 = serial.pre_write(df)
-            else:
-                df2 = df
-            (
-                df2.write.format(serial.format)
-                .mode(mode)
-                .partitionBy(idx_col)
-                .options(**serial.options)
-                .save(path)
-            )
-            written.append(path)
-        return written
+        return ctx.bound.write(
+            df, _resolve(ctx, name), mode=mode, variables=ctx.variables, partition_by=idx_col
+        )
 
     return Task(runner, writes=frozenset({name}), name=f"write_partitioned:{name}")
 

@@ -124,6 +124,36 @@ def test_layered_read_right_biased(spark, tmp_path):
     assert merged == {0: "default", 1: "base", 2: "override", 3: "new"}
 
 
+def test_read_merged_routes_layers_through_accessors(spark, tmp_path):
+    """read_merged reads each layer like read does: a layer bound to a
+    registered accessor is read through it, and a sink cannot be read."""
+    from porcupine_spark.accessors import register_accessor, unregister_accessor
+
+    store = {"mem://fixtures/over": [(2, "override"), (3, "new")]}
+
+    def mem_read(spark_, path, serial, schema):
+        return spark_.createDataFrame(store[path], schema=schema)
+
+    spark.createDataFrame([(1, "base"), (2, "base")], "id long, v string") \
+        .write.parquet(str(tmp_path / "base.parquet"))
+    register_accessor("mem", read=mem_read)
+    try:
+        c = Catalog([Dataset("layered", schema="id long, v string"),
+                     Dataset.sink("out")])
+        bound = c.bind(
+            str(tmp_path),
+            {"layered": [str(tmp_path / "base.parquet"), "mem://fixtures/over"]},
+        )
+        merged = bound.read_merged(spark, "layered", key="id")
+        assert {r.id: r.v for r in merged.collect()} == {
+            1: "base", 2: "override", 3: "new"
+        }
+        with pytest.raises(ValueError, match="sink"):
+            bound.read_merged(spark, "out", key="id")
+    finally:
+        unregister_accessor("mem")
+
+
 def test_read_unmapped_falls_back_to_embedded(spark):
     c = Catalog([Dataset("opts", schema="k string, v long", embedded_default=[("a", 1)])])
     bound = c.bind(".", {"opts": None})

@@ -1,9 +1,12 @@
-"""One read path: file reads in the engine go through ``serials.py``.
+"""One access path: file reads and writes in the engine go through
+``serials.py``.
 
-Every other use of a session's ``read``/``readStream`` reader in
-``porcupine_spark/`` must be on the allowlist below, with its reason;
-a new direct read would bypass the serial layer's schema memo and its
-post-read hooks.
+Every other use of a session's ``read``/``readStream`` reader, or of a
+frame's ``write`` builder, in ``porcupine_spark/`` must be on an
+allowlist below, with its reason. A new direct read would bypass the
+serial layer's schema memo and its post-read hooks; a new direct write
+would bypass the serial's ``writable`` check, its pre-write transform
+and, for a catalog dataset, the accessors and the access log.
 """
 
 import ast
@@ -21,9 +24,6 @@ ALLOWED = {
     ("sources/pyds.py", "register_synth_scheme._read"): (
         "a Python DataSource generates its rows: no files, no schema to infer"
     ),
-    ("streaming/sinks.py", "stream_upsert_to_dataset.upsert_epoch"): (
-        "reads back the sink it rewrites every micro-batch, on any Hadoop URI"
-    ),
     ("task_ext.py", "read_folder"): (
         "recursive scan with a provenance column, any format, caller options"
     ),
@@ -32,29 +32,49 @@ ALLOWED = {
     ),
 }
 
+ALLOWED_WRITES = {
+    ("bucketing.py", "write_bucketed"): (
+        "bucketBy needs a metastore table (saveAsTable), which no serial writes"
+    ),
+}
 
-def _reader_uses(tree: ast.AST):
-    """(function qualname, line) of every ``<...spark...>.read`` or
-    ``.readStream`` attribute, e.g. ``spark.read.parquet(p)`` or
-    ``reader = self.spark.read``."""
+
+def _is_reader(node: ast.AST) -> bool:
+    """``<...spark...>.read`` or ``.readStream``, e.g.
+    ``spark.read.parquet(p)`` or ``reader = self.spark.read``."""
+    return (
+        isinstance(node, ast.Attribute)
+        and node.attr in ("read", "readStream")
+        and "spark" in ast.unparse(node.value).lower()
+    )
+
+
+def _is_writer(node: ast.AST) -> bool:
+    """``<expr>.write.<method>``, e.g. ``df.write.mode("overwrite")``;
+    a call of a ``write`` method (``serial.write(df, p)``) is not one."""
+    return (
+        isinstance(node, ast.Attribute)
+        and isinstance(node.value, ast.Attribute)
+        and node.value.attr == "write"
+    )
+
+
+def _uses(tree: ast.AST, match):
+    """(function qualname, line) of every node ``match`` accepts."""
 
     def walk(node, scope):
         for child in ast.iter_child_nodes(node):
             if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
                 yield from walk(child, scope + [child.name])
                 continue
-            if (
-                isinstance(child, ast.Attribute)
-                and child.attr in ("read", "readStream")
-                and "spark" in ast.unparse(child.value).lower()
-            ):
+            if match(child):
                 yield ".".join(scope), child.lineno
             yield from walk(child, scope)
 
     yield from walk(tree, [])
 
 
-def _direct_reads() -> dict[tuple[str, str], int]:
+def _scan(match) -> dict[tuple[str, str], int]:
     found = {}
     for dirpath, _dirs, files in os.walk(PKG):
         for name in files:
@@ -66,19 +86,33 @@ def _direct_reads() -> dict[tuple[str, str], int]:
                 continue
             with open(path) as fh:
                 tree = ast.parse(fh.read(), path)
-            for scope, line in _reader_uses(tree):
+            for scope, line in _uses(tree, match):
                 found.setdefault((rel, scope), line)
     return found
 
 
-def test_file_reads_go_through_the_serial_layer():
-    stray = {
+def _stray(found: dict, allowed: dict) -> set[str]:
+    return {
         f"porcupine_spark/{rel}:{line} ({scope})"
-        for (rel, scope), line in _direct_reads().items()
-        if (rel, scope) not in ALLOWED
+        for (rel, scope), line in found.items()
+        if (rel, scope) not in allowed
     }
+
+
+def test_file_reads_go_through_the_serial_layer():
+    stray = _stray(_scan(_is_reader), ALLOWED)
     assert not stray, f"direct spark.read outside serials.py: {sorted(stray)}"
 
 
 def test_allowlist_has_no_stale_entries():
-    assert set(ALLOWED) <= set(_direct_reads())
+    assert set(ALLOWED) <= set(_scan(_is_reader))
+
+
+def test_file_writes_go_through_the_serial_layer():
+    stray = _stray(_scan(_is_writer), ALLOWED_WRITES)
+    assert not stray, f"direct df.write outside serials.py: {sorted(stray)}"
+
+
+def test_write_allowlist_has_no_stale_entries():
+    assert set(ALLOWED_WRITES) <= set(_scan(_is_writer))
+

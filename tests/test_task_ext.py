@@ -1,6 +1,8 @@
 """Per-index IO, partitioned writes, folder streams, tee, error ops
 (SURVEY §2.1/§2.2 extended family) + stateful streaming equivalence."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -49,6 +51,79 @@ def test_try_load_indexed_tolerates_missing(spark, user_files):
     assert df.count() == 2
     assert len(errors) == 1 and errors[0][0] == 7
     assert "PATH_NOT_FOUND" in errors[0][1] or "Path does not exist" in errors[0][1]
+
+
+def test_try_load_indexed_unmapped_raises(spark, tmp_path):
+    """An unmapped dataset has no occurrences to index: both indexed
+    loads raise the same ValueError (not an AttributeError)."""
+    cat = Catalog([Dataset("users")])
+    for task in (load_indexed, try_load_indexed):
+        with pytest.raises(ValueError, match="'users' unmapped"):
+            run_pipeline(
+                task("users", "userId", [0]), cat, spark, root=str(tmp_path),
+                mappings={"users": None},
+            )
+
+
+def test_load_indexed_reads_every_layer(spark, user_files):
+    """Each index reads like ``load`` with the index spliced: a
+    two-layer dataset yields both layers' rows, not only layer 0's."""
+    for i in range(3):
+        spark.createDataFrame([(i, f"extra{i}", 40 + i)], "id long, name string, age int") \
+            .write.parquet(str(user_files / f"Extra-{i}.parquet"))
+    cat = Catalog([Dataset.source("users")])
+    mappings = {"users": [str(user_files / "User-{userId}.parquet"),
+                          str(user_files / "Extra-{userId}.parquet")]}
+    got = run_pipeline(
+        load_indexed("users", "userId", [0, 2]), cat, spark, root=str(user_files),
+        mappings=mappings,
+    )
+    want = set()
+    for idx in (0, 2):
+        rows = run_pipeline(
+            load("users"), cat, spark, root=str(user_files), mappings=mappings,
+            variables={"userId": idx},
+        ).collect()
+        want |= {(idx, r.id, r.name, r.age) for r in rows}
+    assert {(r.idx, r.id, r.name, r.age) for r in got.collect()} == want
+    assert {n for _, _, n, _ in want} == {"user0", "extra0", "user2", "extra2"}
+
+
+def test_write_partitioned_checks_the_serial(spark, tmp_path):
+    """write_partitioned goes through Serial.write: a binary serial is
+    read-only, and a YAML serial (one text column) cannot be
+    partitioned, which fails at the catalog naming the dataset."""
+    from porcupine_spark.serials import SerialSet, binary_serial, yaml_serial
+
+    df = spark.createDataFrame([(1, "a")], "k int, v string")
+    cat = Catalog([Dataset("blobs", SerialSet(binary_serial())),
+                   Dataset("docs", SerialSet(yaml_serial()))])
+    with pytest.raises(ValueError, match="read-only"):
+        run_pipeline(write_partitioned("blobs", "k"), cat, spark, root=str(tmp_path), input_=df)
+    with pytest.raises(ValueError, match="dataset 'docs'.*cannot be partitioned by 'k'"):
+        run_pipeline(write_partitioned("docs", "k"), cat, spark, root=str(tmp_path), input_=df)
+    assert not os.listdir(tmp_path)
+
+
+def test_write_partitioned_accessor_layer_fails_before_any_write(spark, tmp_path):
+    """An accessor takes one body, so a partitioned write to a layer
+    bound to one is refused before any layer is written."""
+    from porcupine_spark.accessors import register_accessor, unregister_accessor
+    from porcupine_spark.serials import SerialSet, json_serial
+
+    register_accessor("mem", read=None, write=lambda df, path, serial, mode: None)
+    try:
+        cat = Catalog([Dataset("out", SerialSet(json_serial()))])
+        df = spark.createDataFrame([(1, "a")], "k int, v string")
+        local = str(tmp_path / "out.json")
+        with pytest.raises(ValueError, match="dataset 'out'.*mem accessor"):
+            run_pipeline(
+                write_partitioned("out", "k"), cat, spark, root=str(tmp_path),
+                mappings={"out": [local, "mem://fixtures/out"]}, input_=df,
+            )
+        assert not os.path.exists(local)
+    finally:
+        unregister_accessor("mem")
 
 
 def test_write_partitioned_roundtrip(spark, tmp_path):
@@ -349,6 +424,46 @@ def test_stream_upsert_sink_latest_state(spark, tmp_path):
     assert t2 == {1: (1, "a1"), 2: (9, "newer"), 3: (1, "c1"), 4: (2, "d1")}
     # no temp swap dirs left behind
     assert not [p for p in tmp_path.iterdir() if "_tmp" in p.name]
+
+
+def test_stream_upsert_sink_reads_back_through_the_serial(spark, tmp_path):
+    """The upsert sink writes through Serial.write (pre_write) and reads
+    its table back through Serial.read (post_read), so a serial whose
+    on-disk columns differ from the dataset's merges epoch after epoch."""
+    from porcupine_spark.serials import SerialSet, parquet_serial
+    from porcupine_spark.streaming.sinks import stream_upsert_to_dataset
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = tmp_path / "src"
+    src.mkdir()
+    serial = (
+        parquet_serial()
+        .lmap(lambda df: df.withColumnRenamed("v", "v_disk"))
+        .rmap(lambda df: df.withColumnRenamed("v_disk", "v"))
+    )
+    bound = Catalog([Dataset.sink("state", SerialSet(serial))]).bind(
+        str(tmp_path), {"state": str(tmp_path / "state.parquet")}
+    )
+
+    def run_once(name, rows):
+        ids, tss, vs = zip(*rows)
+        pq.write_table(pa.table({"id": pa.array(ids, pa.int64()),
+                                 "ts": pa.array(tss, pa.int64()),
+                                 "v": pa.array(vs)}), str(src / name))
+        stream = spark.readStream.schema("id long, ts long, v string").parquet(str(src))
+        stream_upsert_to_dataset(stream, bound, "state", str(tmp_path / "ckpt"),
+                                 key="id", order_col="ts")
+
+    run_once("b1.parquet", [(1, 1, "a1"), (2, 1, "b1")])
+    run_once("b2.parquet", [(2, 3, "b2"), (3, 1, "c1")])
+    on_disk = spark.read.parquet(str(tmp_path / "state.parquet"))
+    assert sorted(on_disk.columns) == ["id", "ts", "v_disk"]
+    back = serial.read(spark, str(tmp_path / "state.parquet"))
+    assert {(r.id, r.ts, r.v) for r in back.collect()} == {
+        (1, 1, "a1"), (2, 3, "b2"), (3, 1, "c1")
+    }
 
 
 def test_compaction_diagnose_and_rewrite(spark, tmp_path):
