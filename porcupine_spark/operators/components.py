@@ -67,14 +67,13 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_rounds: int | None = None,
-    union_find_max_edges: int | None = None,
 ) -> DataFrame:
     """(src, dst) undirected edges -> (node, component) where component
     is the minimum node id in the connected component.
 
     Near-dup edge lists are the OUTPUT of LSH/threshold pruning, orders
-    of magnitude smaller than the corpus. Up to ``union_find_max_edges``
-    (default ``driverstate.DRIVER_STATE_MAX_ROWS``) edges the components
+    of magnitude smaller than the corpus. Up to
+    ``driverstate.DRIVER_STATE_MAX_ROWS`` edges the components
     come from one exact driver-side union-find pass (O(E α(E))) over
     the collected edges; above it, the distributed min-label
     propagation loop runs.
@@ -92,8 +91,7 @@ def connected_components(
     # materialize the (possibly expensive) edge lineage ONCE — the loop
     # below joins against sym every round and must not recompute it
     edges, n_edges, table = driverstate.checkpoint_sized(
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d")),
-        union_find_max_edges,
+        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
     )
     if table is not None:
         node_type = edges.schema["s"].dataType.simpleString()

@@ -2249,8 +2249,9 @@ def verbatim_spans_over(
     # the window table is CORPUS-SIZED and downstream of an explode, whose
     # size Catalyst underestimates badly enough to BROADCAST it (measured
     # at 10x: 36.7 s broadcast plan vs 6.5 s shuffled, identical rows) —
-    # pin the scale-correct strategy; the hash join compares co-located
-    # 8-byte keys (no exchange: both sides read the h-partitioned ckpt)
+    # pin the scale-correct strategy. Both sides are hash-exchanged on h
+    # (the local checkpoint reports UnknownPartitioning, see above); the
+    # hash join then compares co-located 8-byte keys
     matches = a.join(
         b.hint("shuffle_hash"),
         (F.col("a.h") == F.col("b.h")) & (F.col("a.doc_id") < F.col("b.doc_id")),

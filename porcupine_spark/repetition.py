@@ -6,7 +6,8 @@ into every resource path the task touches
 (Repetition/Internal.hs:102-131). In Spark the index collection IS a
 DataFrame column and the parallelism is the cluster's: a repeated task
 body that is SQL-expressible compiles to plain keyed DataFrame ops; an
-opaque body compiles to ``groupBy(idx).applyInPandas``.
+opaque body is ``folds.pandas_fold`` keyed on the index column (one
+``groupBy(idx).applyInPandas``).
 
 Also here: the ``IndexRange`` config syntax ``"a..b"`` /
 ``"[a..b, c, d..e]"`` (Repetition.hs:114-181) kept verbatim.
@@ -15,11 +16,9 @@ Also here: the ``IndexRange`` config syntax ``"a..b"`` /
 from __future__ import annotations
 
 import re
-from collections.abc import Callable, Sequence
+from collections.abc import Sequence
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 _RANGE_RE = re.compile(r"^\s*(-?\d+)\s*\.\.\s*(-?\d+)\s*$")
 
@@ -49,28 +48,3 @@ def parse_index_range(spec: str | int | Sequence) -> list[int]:
 def indices_dataframe(spark: SparkSession, indices: Sequence[int], col: str = "idx") -> DataFrame:
     """Materialize an index collection as a (tiny, broadcastable) DataFrame."""
     return spark.createDataFrame([(int(i),) for i in indices], f"{col} long")
-
-
-def par_map_task(
-    df: DataFrame,
-    idx_col: str,
-    body: Callable[[pd.DataFrame], pd.DataFrame],
-    output_schema: str,
-) -> DataFrame:
-    """``parMapTask`` for an *opaque* per-index body.
-
-    Each index's rows are handed to ``body`` as one pandas DataFrame;
-    bodies run data-parallel across the cluster (one shuffle on
-    ``idx_col``). SQL-expressible bodies should NOT use this — plain
-    keyed DataFrame ops are shuffle-equal and codegen-fused.
-    """
-    return df.groupBy(idx_col).applyInPandas(body, schema=output_schema)
-
-
-def seq_map_collected(
-    df: DataFrame, idx_col: str, body: Callable[[pd.DataFrame], pd.DataFrame]
-) -> pd.DataFrame:
-    """``seqMapTask`` (Repetition.hs:39-58): ordered, driver-side map over
-    indices. Only for tiny side-inputs — this collects."""
-    pdf = df.toPandas().sort_values(idx_col)
-    return pd.concat([body(g) for _, g in pdf.groupby(idx_col, sort=True)], ignore_index=True)

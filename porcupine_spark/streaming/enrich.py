@@ -12,12 +12,11 @@ is bounded by the watermark.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from porcupine_spark.plans.registry import query
+from porcupine_spark.streaming.drain import drain, state_sized_session
 from porcupine_spark.tables import load_events_stream, load_table
 
 
@@ -47,11 +46,8 @@ from porcupine_spark.tables import load_events_stream, load_table
 )
 def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     # state keys = windows only (a few hundred); size state partitioning
-    # to that, same discipline as windows._state_sized_session
-    from porcupine_spark.streaming.windows import _state_sized_session
-
-    ns = _state_sized_session(spark)
-    spark = ns
+    # to that, same discipline as the other stateful stream builders
+    spark = state_sized_session(spark)
     # static dim: bounded, derived deterministically from the batch view
     dim = (
         load_table(spark, sf_dir, "events")
@@ -73,13 +69,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("weighted_value"),
         )
     )
-    name = f"enrich_{uuid.uuid4().hex[:8]}"
-    q = agg.writeStream.outputMode("complete").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).select(
+    return drain(agg, "complete").select(
         F.col("w.start").alias("window_start"),
         F.col("w.end").alias("window_end"),
         "n_events",
@@ -116,10 +106,7 @@ def stream_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from porcupine_spark.tables import load_docs_stream
 
-    from porcupine_spark.streaming.windows import _state_sized_session
-
-    ns = _state_sized_session(spark)
-    spark = ns
+    spark = state_sized_session(spark)
     docs = load_table(spark, sf_dir, "documents")
     base = docs.filter(~(F.col("doc_id") % NEW_BATCH_MOD == 0))
     # materialize the static corpus indexes ONCE — lazy, each of the
@@ -173,18 +160,7 @@ def stream_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             *[F.col(f"hit{b}") for b in range(N_BANDS)], F.lit(False)
         ).alias("near_dup"),
     )
-    name = f"sneardup_{uuid.uuid4().hex[:8]}"
-    q = (
-        flags.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).select("doc_id", "exact_dup", "near_dup")
+    return drain(flags, "append").select("doc_id", "exact_dup", "near_dup")
 
 
 from porcupine_spark.plans.registry import REGISTRY as _REG  # noqa: E402
@@ -209,23 +185,14 @@ def stream_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from porcupine_spark.operators.curation import gopher_flags
     from porcupine_spark.tables import load_docs_stream
 
-    from porcupine_spark.streaming.windows import _state_sized_session
-
-    ns = _state_sized_session(spark)
-    spark = ns
+    spark = state_sized_session(spark)
     stream = load_docs_stream(spark, sf_dir)
     flags = gopher_flags(stream, keep_cols=("source",))
     agg = flags.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("keep").alias("n_keep"),
     )
-    name = f"sqgate_{uuid.uuid4().hex[:8]}"
-    q = agg.writeStream.outputMode("complete").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).select("source", "n_docs", "n_keep")
+    return drain(agg, "complete").select("source", "n_docs", "n_keep")
 
 
 _REG["stream_quality_gate"].oracle = f"""
@@ -260,9 +227,7 @@ def stream_segment_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from porcupine_spark.tables import load_docs_stream
 
-    from porcupine_spark.streaming.windows import _state_sized_session
-
-    ns = _state_sized_session(spark)
+    ns = state_sized_session(spark)
     # batch-built broadcast index: per-hash distinct-doc counts
     docs = load_table(ns, sf_dir, "documents")
     df_index = (
@@ -284,13 +249,7 @@ def stream_segment_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         dup_ppm.alias("dup_frac_ppm"),
         F.when(dup_ppm <= DUP_FRAC_KEEP_PPM, 1).otherwise(0).alias("keep"),
     )
-    name = f"seggate_{uuid.uuid4().hex[:8]}"
-    q = agg.writeStream.outputMode("complete").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return ns.table(name)
+    return drain(agg, "complete")
 
 
 _REG["stream_segment_gate"].oracle = _REG["segment_dup_fraction"].oracle
@@ -327,9 +286,7 @@ def stream_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from porcupine_spark.tables import load_docs_stream
 
-    from porcupine_spark.streaming.windows import _state_sized_session
-
-    ns = _state_sized_session(spark)
+    ns = state_sized_session(spark)
     # batch phase: the 1024-bucket lean index — built through the SAME
     # shared helpers the batch scorer uses (curation._norm / dsir_bucket /
     # dsir_lean_index), so the gate cannot drift from dsir_proxy_selection
@@ -368,13 +325,7 @@ def stream_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = scored.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("keep").alias("n_keep")
     )
-    name = f"sdgate_{uuid.uuid4().hex[:8]}"
-    q = agg.writeStream.outputMode("complete").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return ns.table(name).select("source", "n_docs", "n_keep")
+    return drain(agg, "complete").select("source", "n_docs", "n_keep")
 
 
 def _late_bind_dsir_gate() -> None:
@@ -423,9 +374,7 @@ def stream_familiarity_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from porcupine_spark.tables import load_docs_stream
 
-    from porcupine_spark.streaming.windows import _state_sized_session
-
-    ns = _state_sized_session(spark)
+    ns = state_sized_session(spark)
     # batch phase: train the familiar-bigram table with the SAME shared
     # expressions the batch gate uses (curation._norm + word_ngrams), so
     # the gate cannot drift from bigram_familiarity_gate by a stale copy
@@ -454,22 +403,11 @@ def stream_familiarity_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_bigrams"),
         F.sum(F.coalesce(F.col("is_fam"), F.lit(0))).cast("long").alias("n_familiar"),
     )
-    name = f"sfgate_{uuid.uuid4().hex[:8]}"
-    q = (
-        perdoc.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     ppm = F.expr(
         f"CAST(n_familiar AS DECIMAL(38,0)) * {FAMIL_SCALE} div n_bigrams"
     )
     return (
-        ns.table(name)
+        drain(perdoc, "complete")
         .select("source", (ppm >= FAMIL_KEEP_PPM).cast("long").alias("keep"))
         .groupBy("source")
         .agg(F.count(F.lit(1)).alias("n_docs"), F.sum("keep").alias("n_keep"))
@@ -517,9 +455,7 @@ def stream_classifier_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from porcupine_spark.tables import load_docs_stream
 
-    from porcupine_spark.streaming.windows import _state_sized_session
-
-    ns = _state_sized_session(spark)
+    ns = state_sized_session(spark)
     # the whole weight vector is CLS_BUCKETS ints — materialize once
     # driver-side (config-width, independent of corpus size) and embed
     # as a literal, exactly like stream_dsir_gate's lean index
@@ -555,13 +491,7 @@ def stream_classifier_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = scored.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"), F.sum("keep").alias("n_keep")
     )
-    name = f"scgate_{uuid.uuid4().hex[:8]}"
-    q = agg.writeStream.outputMode("complete").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return ns.table(name).select("source", "n_docs", "n_keep")
+    return drain(agg, "complete").select("source", "n_docs", "n_keep")
 
 
 def _late_bind_classifier_gate() -> None:

@@ -25,13 +25,11 @@ windows.py/stateful.py.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from porcupine_spark.plans.registry import query
-from porcupine_spark.streaming.windows import _state_sized_session
+from porcupine_spark.streaming.drain import drain, state_sized_session
 from porcupine_spark.tables import load_events_stream
 
 ATTRIB_MINUTES = 30
@@ -62,7 +60,7 @@ ATTRIB_MINUTES = 30
     "batch join an exact oracle.",
 )
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark = _state_sized_session(spark)  # see stream_tumbling_agg
+    spark = state_sized_session(spark)  # see stream_tumbling_agg
     views = (
         load_events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "view")
@@ -98,13 +96,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "purchase_ts",
         "amount",
     )
-    name = f"ssjoin_{uuid.uuid4().hex[:8]}"
-    q = joined.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return drain(joined, "append")
 
 
 @query(
@@ -123,7 +115,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(arrival-order independent); oracle is SELECT DISTINCT.",
 )
 def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark = _state_sized_session(spark)  # see stream_tumbling_agg
+    spark = state_sized_session(spark)  # see stream_tumbling_agg
     deduped = (
         load_events_stream(spark, sf_dir)
         .select(
@@ -134,10 +126,4 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("minute", "10 minutes")
         .dropDuplicates(["user_id", "event_type", "minute"])
     )
-    name = f"sdedup_{uuid.uuid4().hex[:8]}"
-    q = deduped.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).select("user_id", "event_type", "minute")
+    return drain(deduped, "append").select("user_id", "event_type", "minute")

@@ -18,7 +18,6 @@ correctly-rounded decimal->double cast)."""
 
 from __future__ import annotations
 
-import uuid
 from collections.abc import Iterator
 from decimal import Decimal
 
@@ -28,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from porcupine_spark.plans.registry import query
+from porcupine_spark.streaming.drain import drain, state_sized_session
 from porcupine_spark.tables import load_events_stream
 
 OUT_SCHEMA = (
@@ -68,7 +68,7 @@ def running_user_stats(
     )
 
 
-def stateful_user_stats(spark: SparkSession, stream: DataFrame) -> DataFrame:
+def stateful_user_stats(stream: DataFrame) -> DataFrame:
     """Drive the stateful query over a (file-source) stream to
     completion; returns the final per-key emissions."""
     out = (
@@ -82,13 +82,7 @@ def stateful_user_stats(spark: SparkSession, stream: DataFrame) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    name = f"stateful_{uuid.uuid4().hex[:8]}"
-    q = out.writeStream.outputMode("update").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return drain(out, "update")
 
 
 @query(
@@ -126,11 +120,9 @@ def stream_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (150-1500 users here), not the session's shuffle width. A cloned
     # session scopes the conf change to this query. On a real cluster
     # this is executors-sized instead.
-    from porcupine_spark.streaming.windows import _state_sized_session
-
-    ns = _state_sized_session(spark)
+    ns = state_sized_session(spark)
     stream = load_events_stream(ns, sf_dir)
-    raw = stateful_user_stats(ns, stream)
+    raw = stateful_user_stats(stream)
     # keep only each user's final emission (latest n_events wins) so the
     # result is batch-boundary-insensitive after all data is processed
     w = W.partitionBy("user_id").orderBy(F.desc("n_events"))
@@ -262,11 +254,11 @@ def make_timeout_sessionizer(gap_ms: int):
 
 
 def stream_sessionize_with_timeout(
-    spark: SparkSession, stream: DataFrame, gap_ms: int, watermark: str = "0 seconds"
-) -> tuple[DataFrame, str]:
-    """Wire the timeout sessionizer over a watermarked stream; returns
-    (sink DataFrame factory table, query name). Sessions appear in the
-    sink ONLY when closed by watermark passage — append semantics."""
+    stream: DataFrame, gap_ms: int, watermark: str = "0 seconds"
+) -> DataFrame:
+    """Drain the timeout sessionizer over a watermarked stream; returns
+    the sink table. Sessions appear in it ONLY when closed by watermark
+    passage — append semantics."""
     out = (
         stream.withWatermark("ts", watermark)
         .groupBy("user_id")
@@ -278,13 +270,7 @@ def stream_sessionize_with_timeout(
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
-    name = f"tsess_{uuid.uuid4().hex[:8]}"
-    q = out.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name), name
+    return drain(out, "append")
 
 
 # --- streaming SCD2 apply -------------------------------------------
@@ -381,9 +367,7 @@ def scd2_apply(key, pdfs, state):
     "end to end.",
 )
 def stream_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from porcupine_spark.streaming.windows import _state_sized_session
-
-    ns = _state_sized_session(spark)
+    ns = state_sized_session(spark)
     stream = load_events_stream(ns, sf_dir).select(
         "user_id", "event_id", "event_type", F.unix_micros("ts").alias("tsu")
     )
@@ -394,10 +378,4 @@ def stream_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"scd2_{uuid.uuid4().hex[:8]}"
-    q = out.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return ns.table(name)
+    return drain(out, "append")

@@ -11,50 +11,12 @@ date_trunc('hour', ts).
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from porcupine_spark.plans.registry import query
+from porcupine_spark.streaming.drain import drain, state_sized_session
 from porcupine_spark.tables import load_events_stream, load_table
-
-
-def _state_sized_session(spark: SparkSession) -> SparkSession:
-    """Clone the session with a state-cardinality-sized shuffle width so
-    the conf change is scoped to the one streaming query.
-
-    State-store provider: ``PORCUPINE_SPARK_STATESTORE=rocksdb``
-    switches the clone to RocksDBStateStoreProvider. The default stays
-    the HDFS-backed in-memory provider because it WINS at this
-    deployment's state sizes — measured head-to-head at 10x sf0.1
-    (SCALE.md round-5 note): per-key state here is a handful of
-    scalars x <=15k keys, far under executor memory, so RocksDB's
-    per-microbatch checkpoint/compaction overhead buys nothing. The
-    knob is for cluster deployments whose keyspace (1e8+ sessions)
-    outgrows heap — flipping the env var changes every stateful query
-    at once, no code edits."""
-    import os
-
-    ns = spark.newSession()
-    # Default 8 CONFIRMED floor-optimal for this deployment's state sizes
-    # (r8 A/B, min-of-3 over 4 stateful queries at sf0.1: width 4 -> 6.79 s,
-    # 8 -> 7.42 s, 16 -> 8.19 s — 4 is marginally ahead but inside the
-    # host-noise band, and narrowing the default would be a local-only
-    # tune). Cluster deployments whose state outgrows 8 partitions set
-    # the env var; the local default stays 8 so driver benches remain
-    # comparable round-over-round.
-    ns.conf.set(
-        "spark.sql.shuffle.partitions",
-        os.environ.get("PORCUPINE_SPARK_STREAM_SHUFFLE_PARTITIONS", "8"),
-    )
-    if os.environ.get("PORCUPINE_SPARK_STATESTORE", "").lower() == "rocksdb":
-        ns.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-    return ns
 
 
 @query(
@@ -80,7 +42,7 @@ def stream_tumbling_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     # each state partition carries fixed provider/commit cost per
     # microbatch (same trick as stream_stateful_user_stats; on a real
     # cluster this is executors-sized instead).
-    spark = _state_sized_session(spark)
+    spark = state_sized_session(spark)
     stream = load_events_stream(spark, sf_dir)
     agg = (
         stream.withWatermark("ts", "10 minutes")
@@ -90,19 +52,7 @@ def stream_tumbling_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(38,6)")).cast("double").alias("total_value"),
         )
     )
-    name = f"tumbling_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    out = spark.table(name)
-    return out.select(
+    return drain(agg, "complete").select(
         F.col("w.start").alias("window_start"),
         F.col("w.end").alias("window_end"),
         "event_type",
@@ -134,20 +84,14 @@ def stream_tumbling_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     "k*slide).",
 )
 def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark = _state_sized_session(spark)  # see stream_tumbling_agg
+    spark = state_sized_session(spark)  # see stream_tumbling_agg
     stream = load_events_stream(spark, sf_dir)
     agg = (
         stream.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    name = f"sliding_{uuid.uuid4().hex[:8]}"
-    q = agg.writeStream.outputMode("complete").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).select(
+    return drain(agg, "complete").select(
         F.col("w.start").alias("window_start"),
         F.col("w.end").alias("window_end"),
         "event_type",
@@ -189,7 +133,7 @@ def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "watermark closes sessions and evicts their state.",
 )
 def stream_session_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark = _state_sized_session(spark)
+    spark = state_sized_session(spark)
     stream = load_events_stream(spark, sf_dir)
     agg = (
         stream.withWatermark("ts", "10 minutes")
@@ -199,13 +143,7 @@ def stream_session_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(38,6)")).cast("double").alias("total_value"),
         )
     )
-    name = f"session_{uuid.uuid4().hex[:8]}"
-    q = agg.writeStream.outputMode("complete").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).select(
+    return drain(agg, "complete").select(
         "user_id",
         F.col("w.start").alias("session_start"),
         F.col("w.end").alias("session_end"),
@@ -262,20 +200,14 @@ def stream_session_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sqrt so the flag needs no tolerance.",
 )
 def stream_window_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark = _state_sized_session(spark)
+    spark = state_sized_session(spark)
     stream = load_events_stream(spark, sf_dir)
     agg = (
         stream.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.sum(F.col("value").cast("decimal(18,6)")).alias("total"))
     )
-    name = f"zscore_{uuid.uuid4().hex[:8]}"
-    q = agg.writeStream.outputMode("complete").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    totals = spark.table(name).select(
+    totals = drain(agg, "complete").select(
         F.col("w.start").alias("window_start"), "event_type", "total"
     )
     # second stage: batch analytics over the window aggregates
@@ -348,20 +280,14 @@ TRENDING_K = 3
     "tiebreak (count desc, type asc) keeps the result hash-stable.",
 )
 def stream_topk_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark = _state_sized_session(spark)  # see stream_tumbling_agg
+    spark = state_sized_session(spark)  # see stream_tumbling_agg
     stream = load_events_stream(spark, sf_dir)
     agg = (
         stream.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    name = f"trending_{uuid.uuid4().hex[:8]}"
-    q = agg.writeStream.outputMode("complete").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    counts = spark.table(name).select(
+    counts = drain(agg, "complete").select(
         F.col("w.start").alias("window_start"), "event_type", "n"
     )
     wr = Window.partitionBy("window_start").orderBy(
@@ -390,7 +316,7 @@ def stream_topk_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
     "seen this hour|, the minimum any exact-distinct needs.",
 )
 def stream_hourly_unique_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark = _state_sized_session(spark)  # see stream_tumbling_agg
+    spark = state_sized_session(spark)  # see stream_tumbling_agg
     stream = load_events_stream(spark, sf_dir)
     deduped = (
         stream.withColumn("hour", F.date_trunc("hour", F.col("ts")))
@@ -400,13 +326,7 @@ def stream_hourly_unique_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = deduped.groupBy(F.window("ts", "1 hour").alias("w")).agg(
         F.count(F.lit(1)).alias("n_users")
     )
-    name = f"uniq_{uuid.uuid4().hex[:8]}"
-    q = agg.writeStream.outputMode("complete").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).select(
+    return drain(agg, "complete").select(
         F.col("w.start").alias("window_start"), "n_users"
     )
 
@@ -457,7 +377,7 @@ def stream_hourly_unique_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     "per-service incident keys would shard the state in production.",
 )
 def stream_incident_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark = _state_sized_session(spark)
+    spark = state_sized_session(spark)
     stream = load_events_stream(spark, sf_dir).filter(
         F.col("event_type") == "error"
     )
@@ -471,13 +391,7 @@ def stream_incident_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_errors"))
         .filter(F.col("n_errors") >= 5)
     )
-    name = f"incident_{uuid.uuid4().hex[:8]}"
-    q = agg.writeStream.outputMode("complete").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).select(
+    return drain(agg, "complete").select(
         F.col("w.start").alias("incident_start"),
         F.col("w.end").alias("incident_end"),
         "n_errors",
@@ -542,7 +456,7 @@ def stream_hourly_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         HLL_RHO_MAX,
     )
 
-    spark = _state_sized_session(spark)
+    spark = state_sized_session(spark)
     stream = load_events_stream(spark, sf_dir)
     h = md5_long60(F.concat(F.lit("hllu:"), F.col("user_id").cast("string")))
     w = F.expr(f"h div {HLL_M}")
@@ -556,14 +470,8 @@ def stream_hourly_hll_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour").alias("hw"), "bucket")
         .agg(F.max(rho).alias("mj"))
     )
-    name = f"hll_{uuid.uuid4().hex[:8]}"
-    q = regs.writeStream.outputMode("complete").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     per_hour = (
-        spark.table(name)
+        drain(regs, "complete")
         .groupBy(F.col("hw.start").alias("hour"))
         .agg(
             (

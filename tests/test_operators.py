@@ -202,26 +202,27 @@ def test_connected_components_chain_and_islands(spark, monkeypatch):
     assert out == expected
 
 
-def test_connected_components_raises_on_round_exhaustion(spark):
+def test_connected_components_raises_on_round_exhaustion(spark, monkeypatch):
     """A deep path graph whose diameter exceeds max_rounds must FAIL
     LOUDLY — a silent return there would hand back wrong components
     (labels still propagating down the chain)."""
     import pytest
 
+    from porcupine_spark.functions import driverstate
     from porcupine_spark.operators.components import connected_components
+
+    monkeypatch.setattr(driverstate, "DRIVER_STATE_MAX_ROWS", 0)
 
     # path 0-1-2-...-12: min-label needs ~12 rounds to reach the far end
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], "src long, dst long"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, max_rounds=3, union_find_max_edges=0)
+        connected_components(edges, max_rounds=3)
     # and with enough rounds the same graph converges exactly
     out = {
         r.node: r.component
-        for r in connected_components(
-            edges, max_rounds=20, union_find_max_edges=0
-        ).collect()
+        for r in connected_components(edges, max_rounds=20).collect()
     }
     assert out == {i: 0 for i in range(13)}
 

@@ -1,53 +1,11 @@
-"""Round-5 additions: state-store provider knob.
+"""Round-5 additions: triangle counts, the z-order layout audit, DSIR
+lean scores, k-core peeling and the JL distortion audit.
 
-(The other round-5 items test where they belong: the keep-policy
-broadcast guard in test_plans.py, $layers + zip_with in
-test_catalog.py, IVF persistence in test_operators.py.)
+(The other round-5 items test where they belong: the state-store
+provider in test_streaming.py, the keep-policy broadcast guard in
+test_plans.py, $layers + zip_with in test_catalog.py, IVF persistence
+in test_operators.py.)
 """
-
-import os
-
-import pytest
-
-
-def test_statestore_knob_switches_provider_and_preserves_results(spark, sf_dir):
-    """PORCUPINE_SPARK_STATESTORE=rocksdb must flip the cloned session
-    to RocksDBStateStoreProvider and leave results IDENTICAL — the
-    cluster-scale escape hatch for keyspaces that outgrow heap
-    (SCALE.md round-5 A/B: the in-memory default wins locally, so the
-    knob defaults off)."""
-    from porcupine_spark.plans.registry import load_all_plans
-    from porcupine_spark.streaming.windows import _state_sized_session
-
-    specs = load_all_plans()
-    baseline = {
-        tuple(r) for r in specs["stream_tumbling_agg"].builder(spark, sf_dir).collect()
-    }
-    old = os.environ.get("PORCUPINE_SPARK_STATESTORE")
-    os.environ["PORCUPINE_SPARK_STATESTORE"] = "rocksdb"
-    try:
-        ns = _state_sized_session(spark)
-        assert "RocksDBStateStoreProvider" in ns.conf.get(
-            "spark.sql.streaming.stateStore.providerClass"
-        )
-        rocks = {
-            tuple(r)
-            for r in specs["stream_tumbling_agg"].builder(spark, sf_dir).collect()
-        }
-        assert rocks == baseline
-    finally:
-        if old is None:
-            os.environ.pop("PORCUPINE_SPARK_STATESTORE", None)
-        else:
-            os.environ["PORCUPINE_SPARK_STATESTORE"] = old
-    # and the default session is back on the default provider
-    ns2 = _state_sized_session(spark)
-    assert "RocksDB" not in (
-        ns2.conf.get(
-            "spark.sql.streaming.stateStore.providerClass",
-            "HDFSBackedStateStoreProvider",
-        )
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -1,0 +1,114 @@
+"""Structured Streaming runs: the drain helper, the state-sized session
+and the one-drain-path rule.
+
+Every ``stream_*`` builder hands its streaming frame to
+``streaming.drain.drain``, the only place in ``porcupine_spark/`` that
+starts a memory sink or calls ``processAllAvailable``. A pasted copy
+would be a second way to run a stream, with its own query naming and
+its own (or no) cleanup when the stream fails.
+"""
+
+import ast
+import os
+
+import pytest
+
+PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "porcupine_spark")
+DRAIN = os.path.join("streaming", "drain.py")
+ROCKSDB = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+
+def _write_parquet_source(spark, path):
+    import pandas as pd
+
+    path.mkdir()
+    pdf = pd.DataFrame({"x": list(range(10))}).astype("int64")
+    spark.createDataFrame(pdf).coalesce(1).write.parquet(str(path / "f1"))
+    return spark.readStream.schema("x long").parquet(f"{path}/*")
+
+
+def test_drain_stops_the_query_when_the_stream_fails(spark, tmp_path):
+    from porcupine_spark.streaming.drain import drain
+
+    def boom(batches):
+        raise ValueError("drain-test-boom")
+
+    stream = _write_parquet_source(spark, tmp_path / "src")
+    with pytest.raises(Exception, match="drain-test-boom"):
+        drain(stream.mapInPandas(boom, "x long"), "append")
+    assert spark.streams.active == []
+
+
+def test_drain_stops_the_query_when_the_wait_is_interrupted(spark, tmp_path, monkeypatch):
+    """A failed stream terminates on its own; a wait that raises on the
+    driver (an interrupt) leaves a healthy query running unless drain
+    stops it."""
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    from porcupine_spark.streaming.drain import drain
+
+    def interrupted(self):
+        raise KeyboardInterrupt
+
+    monkeypatch.setattr(StreamingQuery, "processAllAvailable", interrupted)
+    stream = _write_parquet_source(spark, tmp_path / "src")
+    with pytest.raises(KeyboardInterrupt):
+        drain(stream, "append")
+    assert spark.streams.active == []
+
+
+def test_state_sized_session_follows_runtime_provider_conf(spark, sf_dir):
+    """A provider set on the parent at runtime (``spark.conf.set``,
+    which ``newSession`` does not inherit) reaches the clone and leaves
+    results identical; once unset, the clone is back on the default."""
+    from porcupine_spark.plans.registry import load_all_plans
+    from porcupine_spark.streaming.drain import STATE_STORE_PROVIDER, state_sized_session
+
+    builder = load_all_plans()["stream_tumbling_agg"].builder
+    baseline = {tuple(r) for r in builder(spark, sf_dir).collect()}
+    spark.conf.set(STATE_STORE_PROVIDER, ROCKSDB)
+    try:
+        ns = state_sized_session(spark)
+        assert ns.conf.get(STATE_STORE_PROVIDER) == ROCKSDB
+        assert {tuple(r) for r in builder(spark, sf_dir).collect()} == baseline
+    finally:
+        spark.conf.unset(STATE_STORE_PROVIDER)
+    assert "RocksDB" not in state_sized_session(spark).conf.get(STATE_STORE_PROVIDER)
+
+
+def _drain_steps(tree: ast.AST):
+    """Line of every memory-sink ``.format("memory")``, every
+    ``.processAllAvailable(...)`` call and every ``_state_sized_session``
+    name (the clone helper's old private copy)."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+            attr = node.func.attr
+            if attr == "processAllAvailable":
+                yield node.lineno
+            elif attr == "format" and any(
+                isinstance(a, ast.Constant) and a.value == "memory" for a in node.args
+            ):
+                yield node.lineno
+        if "_state_sized_session" in (getattr(node, k, None) for k in ("id", "attr", "name")):
+            yield getattr(node, "lineno", 0)
+
+
+def _scan() -> dict[str, list[int]]:
+    found = {}
+    for dirpath, _dirs, files in os.walk(PKG):
+        for name in files:
+            if name.endswith(".py"):
+                path = os.path.join(dirpath, name)
+                with open(path) as fh:
+                    lines = sorted(set(_drain_steps(ast.parse(fh.read(), path))))
+                if lines:
+                    found[os.path.relpath(path, PKG)] = lines
+    return found
+
+
+def test_streams_drain_only_through_drain_py():
+    found = _scan()
+    stray = {rel: lines for rel, lines in found.items() if rel != DRAIN}
+    assert not stray, f"memory sink or processAllAvailable outside {DRAIN}: {stray}"
+    # and the scan still sees the one real drain
+    assert DRAIN in found

@@ -541,7 +541,7 @@ def test_event_time_timeout_sessionizer_closes_and_evicts(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(f"{src}/*")
     )
-    out, _ = stream_sessionize_with_timeout(spark, stream, gap_ms=60_000)
+    out = stream_sessionize_with_timeout(stream, gap_ms=60_000)
     rows = out.collect()
     # exactly one closed session: user 1's
     assert len(rows) == 1
@@ -591,7 +591,7 @@ def test_timeout_sessionizer_splits_intra_batch_gaps(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(f"{src}/*")
     )
-    out, _ = stream_sessionize_with_timeout(spark, stream, gap_ms=60_000)
+    out = stream_sessionize_with_timeout(stream, gap_ms=60_000)
     rows = sorted(out.filter("user_id = 1").collect(), key=lambda r: r.session_start)
     assert len(rows) == 2  # a gap-merging sessionizer would emit 1
     a, b = rows
@@ -766,8 +766,8 @@ def test_timeout_sessionizer_merges_late_above_watermark_event(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(f"{src}/*")
     )
-    out, _ = stream_sessionize_with_timeout(
-        spark, stream, gap_ms=60_000, watermark="30 minutes"
+    out = stream_sessionize_with_timeout(
+        stream, gap_ms=60_000, watermark="30 minutes"
     )
     rows = sorted(out.filter("user_id = 1").collect(), key=lambda r: r.session_start)
     assert len(rows) == 2
