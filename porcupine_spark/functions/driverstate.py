@@ -27,36 +27,39 @@ from pyspark.sql import functions as F
 DRIVER_STATE_MAX_ROWS = 2_000_000
 
 
-def checkpoint_sized(df: DataFrame, max_rows: int | None = None):
-    """Checkpoint ``df`` once (eager) with its row count observed on the
-    same job. Returns ``(checkpointed, rows, table)``: ``table`` is the
+def checkpoint_sized(df: DataFrame, max_rows: int | None = None, size=None):
+    """Checkpoint ``df`` once (eager) with its size observed on the same
+    job. ``size`` is an aggregate ``Column`` giving that size (a row
+    count by default; an empty input's NULL aggregate reads as 0).
+    Returns ``(checkpointed, size, table)``: ``table`` is the
     checkpoint's rows as a ``pyarrow.Table`` when ``0 < max_rows`` and
-    ``rows <= max_rows``, else None. ``max_rows=None`` reads
+    ``size <= max_rows``, else None. ``max_rows=None`` reads
     ``DRIVER_STATE_MAX_ROWS`` at call time."""
     if max_rows is None:
         max_rows = DRIVER_STATE_MAX_ROWS
+    if size is None:
+        size = F.count(F.lit(1))
     obs = Observation()
-    ck = df.observe(obs, F.count(F.lit(1)).alias("rows")).localCheckpoint(eager=True)
-    rows = obs.get["rows"]
-    if max_rows <= 0 or rows > max_rows:
-        return ck, rows, None
-    return ck, rows, ck.toArrow()
+    ck = df.observe(obs, size.alias("size")).localCheckpoint(eager=True)
+    n = obs.get["size"] or 0
+    if max_rows <= 0 or n > max_rows:
+        return ck, n, None
+    return ck, n, ck.toArrow()
+
+
+def dense_ids(a, b):
+    """Node ids of two numpy endpoint arrays as dense indices: returns
+    ``(ids, ia, ib)`` with ``ids`` the sorted distinct ids of ``a`` and
+    ``b`` and ``ia``/``ib`` each edge's endpoint positions in ``ids``."""
+    import numpy as np
+
+    ids, idx = np.unique(np.concatenate([a, b]), return_inverse=True)
+    return ids, idx[: len(a)], idx[len(a) :]
 
 
 def dense_nodes(edges, a: str, b: str):
-    """Node ids of an Arrow edge table as dense indices: returns
-    ``(ids, ia, ib)`` with ``ids`` the sorted distinct ids of columns
-    ``a`` and ``b`` and ``ia``/``ib`` each edge's endpoint positions in
-    ``ids``."""
-    import numpy as np
-
-    ids, idx = np.unique(
-        np.concatenate(
-            [
-                edges.column(a).to_numpy(zero_copy_only=False),
-                edges.column(b).to_numpy(zero_copy_only=False),
-            ]
-        ),
-        return_inverse=True,
+    """``dense_ids`` of columns ``a`` and ``b`` of an Arrow edge table."""
+    return dense_ids(
+        edges.column(a).to_numpy(zero_copy_only=False),
+        edges.column(b).to_numpy(zero_copy_only=False),
     )
-    return ids, idx[: edges.num_rows], idx[edges.num_rows :]

@@ -11,7 +11,8 @@ checks the (scalar) changed-count per round. Near-dup graphs are
 shallow (diameter is small), so rounds stay in single digits at any
 corpus size; hot components behave like any skewed agg key (AQE/salt).
 Small edge lists skip the rounds: see ``functions/driverstate.py``,
-whose gate also routes k-core and PageRank to exact driver loops.
+whose gate also routes k-core and PageRank to exact driver loops, and
+below which ``dedup_clusters`` builds its edges on the driver as well.
 
 Oracle: a DuckDB recursive CTE computing min reachable id per node —
 an independent formulation of the same fixpoint.
@@ -23,43 +24,48 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from porcupine_spark.functions import driverstate
+from porcupine_spark.operators import dedup
 from porcupine_spark.operators.dedup import SQL_SHINGLE_OVERLAP
 from porcupine_spark.plans.registry import query
 
 MAX_ROUNDS = 50  # backstop far above any real near-dup graph diameter
 
 
-def _union_find_components(spark: SparkSession, edges, node_type: str) -> DataFrame:
-    """Exact driver-side components of an Arrow edge table (columns
-    ``s``/``d``): union-find with path halving, re-distributed."""
-    parent: dict[int, int] = {}
+def _min_labels(ia, ib, n: int):
+    """Each of ``n`` dense nodes' component as its smallest member,
+    given edges ``ia``/``ib``: union-find in numpy, alternating a full
+    shortcut (every node points at its root) with a hook (each root
+    adopts the smallest root across its edges). Pointers only move to
+    smaller ids, and a round that finds an edge between two roots
+    lowers the larger one, so the loop ends; the hooks merge every
+    root with a smaller neighbour at once, so near-dup graphs finish
+    in a few rounds."""
+    import numpy as np
 
-    def find(x: int) -> int:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]  # path halving
-            x = parent[x]
-        return x
+    lab = np.arange(n)
+    while True:
+        nxt = lab[lab]
+        while not np.array_equal(nxt, lab):
+            lab, nxt = nxt, nxt[nxt]
+        ra, rb = lab[ia], lab[ib]
+        if np.array_equal(ra, rb):
+            return lab
+        lo = np.minimum(ra, rb)
+        np.minimum.at(lab, ra, lo)
+        np.minimum.at(lab, rb, lo)
 
-    for a, b in zip(edges.column("s").to_pylist(), edges.column("d").to_pylist()):
-        parent.setdefault(a, a)
-        parent.setdefault(b, b)
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[ra] = rb
-    # component id = min member id (same contract as the distributed path)
-    root_min: dict[int, int] = {}
-    for node in parent:
-        r = find(node)
-        if r not in root_min or node < root_min[r]:
-            root_min[r] = node
+
+def _union_find_components(spark: SparkSession, ids, ia, ib, node_type: str) -> DataFrame:
+    """Exact driver-side components of a dense edge list (``ids``
+    sorted, see ``driverstate.dense_ids``), re-distributed; component
+    id = min member id, the distributed path's contract."""
     import pandas as pd
 
-    pdf = pd.DataFrame(
-        [(node, root_min[find(node)]) for node in parent], columns=["node", "component"]
+    comp = ids[_min_labels(ia, ib, len(ids))]
+    return spark.createDataFrame(
+        pd.DataFrame({"node": ids, "component": comp}),
+        schema=f"node {node_type}, component {node_type}",
     )
-    # Arrow path (pandas in, explicit schema) — the tuple-list path costs
-    # seconds in per-row pickling + 32-task parallelize for tiny data
-    return spark.createDataFrame(pdf, schema=f"node {node_type}, component {node_type}")
 
 
 def connected_components(
@@ -74,8 +80,8 @@ def connected_components(
     Near-dup edge lists are the OUTPUT of LSH/threshold pruning, orders
     of magnitude smaller than the corpus. Up to
     ``driverstate.DRIVER_STATE_MAX_ROWS`` edges the components
-    come from one exact driver-side union-find pass (O(E α(E))) over
-    the collected edges; above it, the distributed min-label
+    come from an exact driver-side numpy union-find (``_min_labels``)
+    over the collected edges; above it, the distributed min-label
     propagation loop runs.
 
     Raises ``RuntimeError`` if the label-propagation loop exhausts
@@ -95,7 +101,9 @@ def connected_components(
     )
     if table is not None:
         node_type = edges.schema["s"].dataType.simpleString()
-        return _union_find_components(edges.sparkSession, table, node_type)
+        return _union_find_components(
+            edges.sparkSession, *driverstate.dense_nodes(table, "s", "d"), node_type
+        )
     # size the loop's partitioning to the GRAPH, not the session: the
     # label frontier is usually orders of magnitude smaller than the
     # corpus, and per-round fixed cost scales with partition count
@@ -182,24 +190,60 @@ def connected_components(
     """,
     tags=("dedup", "graph", "iterative"),
     doc="Near-dup cluster assignment: word-3-gram Jaccard>=0.05 pairs "
-    f"as edges, connected components. Up to "
-    f"{driverstate.DRIVER_STATE_MAX_ROWS:,} edges the edge list is "
-    "checkpointed once, collected through Arrow and clustered by an "
-    "exact driver-side union-find; above that gate by min-label "
-    "propagation (iterative joins, lineage-checkpointed, converges in "
-    "<=diameter rounds). Oracle = recursive-CTE transitive closure, an "
-    "independent fixpoint formulation.",
+    "as edges, connected components. The hashed shingle arrays are "
+    "checkpointed once, sized by their total shingle count; up to "
+    f"{driverstate.DRIVER_STATE_MAX_ROWS:,} shingles they are collected "
+    "through Arrow, and if the candidate pair count sum C(df_h, 2) "
+    "over the informative shingles is also within that gate, overlap, "
+    "Jaccard and an exact union-find run in numpy on the driver (one "
+    "createDataFrame back). Past either gate the Spark path runs off "
+    "the same checkpoint: inverted-index self-join, then components "
+    "by union-find (edges within the gate) or min-label propagation. "
+    "Oracle = recursive-CTE transitive closure, an independent "
+    "fixpoint formulation.",
 )
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the edge list IS dedup_ngram_jaccard's output (already thresholded
-    # at 0.05) — one implementation of the inverted-index join to keep
-    # fast, not two
-    from porcupine_spark.operators.dedup import dedup_ngram_jaccard
+    """(node, component) over dedup_ngram_jaccard's edges. Below the
+    gates (see the query doc) the whole step runs on the driver, where
+    one machine beats the cluster's per-job fixed cost; the Spark
+    fallback reuses the checkpointed arrays, so ``documents`` is read
+    once either way."""
+    from porcupine_spark.tables import load_table
 
-    edges = dedup_ngram_jaccard(spark, sf_dir).select(
-        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
+    docs = load_table(spark, sf_dir, "documents")
+    cutoff = dedup.hot_df_cutoff(dedup.corpus_n_docs(spark, sf_dir))
+    arrays, _, table = driverstate.checkpoint_sized(
+        dedup.hashed_shingle_arrays(docs), size=F.sum(F.size("arr"))
     )
-    return connected_components(edges).select("node", "component")
+    node_type = arrays.schema["doc_id"].dataType.simpleString()
+    if table is not None:
+        overlap = dedup.shingle_overlap_local(
+            table, cutoff, max_pairs=driverstate.DRIVER_STATE_MAX_ROWS
+        )
+        if overlap is not None:
+            return _near_dup_components_local(spark, overlap, node_type)
+    edges = dedup.overlap_jaccard(dedup.shingle_overlap(arrays, cutoff))
+    return connected_components(edges, "doc_a", "doc_b").select("node", "component")
+
+
+def _near_dup_components_local(spark: SparkSession, overlap, node_type: str) -> DataFrame:
+    """Components of the Jaccard >= MIN_JACCARD edges of a numpy
+    ``shingle_overlap_local`` result. A zero denominator (possible
+    only with duplicate doc_id rows) raises under ANSI and drops the
+    pair otherwise, as the Spark division does."""
+    import numpy as np
+
+    doc_a, doc_b, i, na, nb = overlap
+    den = na + nb - i
+    zero = den == 0
+    if zero.any() and spark.conf.get("spark.sql.ansi.enabled") == "true":
+        raise ArithmeticError("dedup_clusters: [DIVIDE_BY_ZERO] zero Jaccard denominator")
+    with np.errstate(divide="ignore", invalid="ignore"):
+        jac = i.astype(np.float64) / den
+    keep = ~zero & (jac >= dedup.MIN_JACCARD)
+    return _union_find_components(
+        spark, *driverstate.dense_ids(doc_a[keep], doc_b[keep]), node_type
+    )
 
 
 @query(
@@ -901,9 +945,10 @@ def kcore_peel(edges: DataFrame, k: int = KCORE_K, rounds: int = KCORE_ROUNDS) -
         for vr in victim_rounds[1:]:
             removed = removed.unionByName(vr)
     else:  # rounds == 0: empty (node, removed_round) accumulator
-        removed = all_nodes.select(
-            "node", F.lit(None).cast("int").alias("removed_round")
-        ).where(F.lit(False))
+        node_type = edges.schema["u"].dataType.simpleString()
+        removed = edges.sparkSession.createDataFrame(
+            [], f"node {node_type}, removed_round int"
+        )
     # isolated-by-peeling nodes: removed when their last neighbor went —
     # they never show a degree row again. Assign them the round AFTER
     # their absence began? No: they had deg >= 1 while any edge remained,

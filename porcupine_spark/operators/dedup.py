@@ -184,14 +184,16 @@ def corpus_n_docs(spark: SparkSession, sf_dir: str) -> int:
     return n
 
 
-def shingle_overlap(docs: DataFrame, df_cutoff: int) -> DataFrame:
+def shingle_overlap(arrays: DataFrame, df_cutoff: int) -> DataFrame:
     """(doc_a, doc_b, i, na, nb) for doc pairs (doc_a < doc_b) sharing
-    >=1 informative shingle: ``i`` shared shingles, ``na``/``nb`` each
-    doc's informative-shingle count. The core of every shingle-overlap
-    measure; callers project it (jaccard, containment)."""
+    >=1 informative shingle, from ``arrays`` = hashed_shingle_arrays
+    (doc_id, arr): ``i`` shared shingles, ``na``/``nb`` each doc's
+    informative-shingle count. The core of every shingle-overlap
+    measure; callers project it (jaccard, containment).
+    ``shingle_overlap_local`` is the same computation on the driver."""
     # self-join on hashed shingles (see hashed_shingle_table): 8-byte
     # shuffle/join keys, and the shingle string is never even built
-    sh_all = hashed_shingle_table(docs)
+    sh_all = arrays.select("doc_id", F.explode(F.col("arr")).alias("h"))
     # hot set is tiny by definition (few keys exceed the cutoff):
     # broadcast anti-join, no extra shuffle of the shingle table
     hot = (
@@ -220,19 +222,76 @@ def shingle_overlap(docs: DataFrame, df_cutoff: int) -> DataFrame:
     return inter.join(sa, "doc_a").join(sb, "doc_b")
 
 
+def shingle_overlap_local(table, df_cutoff: int, max_pairs: int | None = None):
+    """``shingle_overlap`` on the driver: an Arrow ``(doc_id, arr)``
+    table (collected hashed_shingle_arrays) to numpy ``(doc_a, doc_b,
+    i, na, nb)``, sorted by (doc_a, doc_b), with the Spark path's exact
+    semantics: document frequency counts every (row, hash), NULL
+    doc_id rows included; hashes above ``df_cutoff`` are dropped
+    before ``na``/``nb``; a pair needs doc_a < doc_b strictly and
+    counts one shared shingle per matching pair of rows, so duplicate
+    doc_id rows never pair with themselves and a NULL doc_id never
+    pairs.
+
+    Returns None, before any pair is built, when the candidate pair
+    count sum C(df_h, 2) over the kept hashes exceeds ``max_pairs``."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    doc = table.column("doc_id").combine_chunks()
+    arr = table.column("arr").combine_chunks()
+    lengths = pc.list_value_length(arr).fill_null(0).to_numpy()
+    h = pc.list_flatten(arr).to_numpy()
+    row_doc = np.repeat(doc.fill_null(0).to_numpy(), lengths)
+    row_valid = np.repeat(doc.is_valid().to_numpy(zero_copy_only=False), lengths)
+    hid, dfreq = np.unique(h, return_inverse=True, return_counts=True)[1:]
+    kept = dfreq[hid] <= df_cutoff
+    kept_df = dfreq[dfreq <= df_cutoff]
+    if max_pairs is not None and int((kept_df * (kept_df - 1) // 2).sum()) > max_pairs:
+        return None
+    keep = kept & row_valid
+    ids, d = np.unique(row_doc[keep], return_inverse=True)
+    sizes = np.bincount(d, minlength=len(ids))
+    # rows grouped by hash, ascending doc within a group: every row
+    # pairs with each later row of its group; dense ids keep doc order,
+    # so doc_a < doc_b is da < db
+    order = np.lexsort((d, hid[keep]))
+    d, g = d[order], hid[keep][order]
+    ends = np.r_[np.flatnonzero(g[1:] != g[:-1]) + 1, len(g)]
+    after = np.repeat(ends, np.diff(np.r_[0, ends])) - np.arange(len(g)) - 1
+    left = np.repeat(np.arange(len(g)), after)
+    first = np.cumsum(after) - after
+    right = left + 1 + np.arange(len(left)) - np.repeat(first, after)
+    da, db = d[left], d[right]
+    strict = da < db
+    n = max(len(ids), 1)
+    key, i = np.unique(da[strict] * n + db[strict], return_counts=True)
+    a, b = key // n, key % n
+    return ids[a], ids[b], i, sizes[a], sizes[b]
+
+
+MIN_JACCARD = 0.05  # near-dup edge threshold of dedup_ngram_jaccard and dedup_clusters
+
+
+def overlap_jaccard(overlap: DataFrame, min_jaccard: float = MIN_JACCARD) -> DataFrame:
+    """(doc_a, doc_b, jaccard) rows of a ``shingle_overlap`` with
+    jaccard >= ``min_jaccard``: one IEEE division of exact ints."""
+    jac = F.col("i").cast("double") / (F.col("na") + F.col("nb") - F.col("i"))
+    return overlap.select("doc_a", "doc_b", jac.alias("jaccard")).filter(
+        F.col("jaccard") >= min_jaccard
+    )
+
+
 def ngram_jaccard_pairs(
-    docs: DataFrame, min_jaccard: float = 0.05, df_cutoff: int | None = None
+    docs: DataFrame, min_jaccard: float = MIN_JACCARD, df_cutoff: int | None = None
 ) -> DataFrame:
     """(doc_a, doc_b, jaccard) for doc pairs sharing >=1 informative
     shingle. ``df_cutoff`` defaults to hot_df_cutoff(count(docs)); pass
     an explicit value to skip the count() action."""
     if df_cutoff is None:
         df_cutoff = hot_df_cutoff(docs.count())
-    jac = F.col("i").cast("double") / (F.col("na") + F.col("nb") - F.col("i"))
-    return (
-        shingle_overlap(docs, df_cutoff)
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= min_jaccard)
+    return overlap_jaccard(
+        shingle_overlap(hashed_shingle_arrays(docs), df_cutoff), min_jaccard
     )
 
 
@@ -387,6 +446,31 @@ def minhash_lsh_pairs(docs: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame
     return _minhash_lsh_pairs_and_sigs(docs, carry)[0]
 
 
+def _check_carry(docs: DataFrame, carry: tuple[str, ...]) -> None:
+    """Reject ``carry`` entries that would silently corrupt or
+    ambiguate the pair table: a duplicate entry; a name, or its
+    ``<c>_a``/``<c>_b`` alias, equal to a pair-table or internal column
+    (doc_a, doc_b, jaccard, arr_*, and hashed_shingle_arrays' doc_id,
+    arr, th); a name equal to another carry's alias; a column ``docs``
+    lacks."""
+    reserved = {"doc_a", "doc_b", "jaccard", "arr_a", "arr_b", "doc_id", "arr", "th"}
+    aliases = {f"{c}_{side}" for c in carry for side in "ab"}
+    seen: set[str] = set()
+    for c in carry:
+        if c in seen:
+            raise ValueError(f"carry: duplicate entry {c!r}")
+        seen.add(c)
+        clash = ({c, f"{c}_a", f"{c}_b"} & reserved) | ({c} & aliases)
+        if clash:
+            raise ValueError(
+                f"carry: {c!r} collides with pair-table names {sorted(clash)}; "
+                f"rename the column first"
+            )
+    missing = [c for c in carry if c not in docs.columns]
+    if missing:
+        raise ValueError(f"carry: columns {missing} are not in docs")
+
+
 def _minhash_lsh_pairs_and_sigs(
     docs: DataFrame, carry: tuple[str, ...] = ()
 ) -> tuple[DataFrame, DataFrame]:
@@ -395,6 +479,7 @@ def _minhash_lsh_pairs_and_sigs(
     signatures (minhash_estimator_calibration) reuses the materialized
     pass instead of recomputing the full md5 scan (within ONE query
     build; nothing crosses runs)."""
+    _check_carry(docs, carry)
     # per-row signatures (no shuffle); checkpoint so the band SELF-join
     # (two refs) and the candidate join don't recompute the md5 pass
     sigs = minhash_signatures(docs).localCheckpoint(eager=True)
@@ -915,7 +1000,9 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     smaller = F.least("na", "nb")
     return (
-        shingle_overlap(docs, hot_df_cutoff(corpus_n_docs(spark, sf_dir)))
+        shingle_overlap(
+            hashed_shingle_arrays(docs), hot_df_cutoff(corpus_n_docs(spark, sf_dir))
+        )
         .filter(F.col("i") * CONTAIN_DEN >= smaller * CONTAIN_NUM)
         .select(
             "doc_a",

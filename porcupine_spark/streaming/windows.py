@@ -165,7 +165,7 @@ def stream_session_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT window_start, event_type, total,
              COUNT(*) OVER (PARTITION BY event_type) AS n_w,
              SUM(total) OVER (PARTITION BY event_type) AS s,
-             SUM(CAST(total AS DECIMAL(18,6)) * CAST(total AS DECIMAL(18,6)))
+             SUM(CAST(total AS DECIMAL(38,6)) * CAST(total AS DECIMAL(38,6)))
                OVER (PARTITION BY event_type) AS ss
       FROM totals
     )

@@ -268,6 +268,31 @@ def test_minhash_carry_columns_match_joined(spark):
     )
 
 
+@pytest.mark.parametrize(
+    "carry, match",
+    [
+        (("doc",), "collides"),  # doc_a/doc_b aliases
+        (("arr",), "collides"),  # arr_a/arr_b aliases
+        (("jaccard",), "collides"),
+        (("source", "source_a"), "collides"),  # another carry's alias
+        (("source", "source"), "duplicate"),
+        (("no_such_col",), "not in docs"),
+    ],
+    ids=["doc", "arr", "jaccard", "alias", "duplicate", "missing"],
+)
+def test_minhash_carry_rejects_bad_names(spark, carry, match):
+    """carry= names are checked when the pairs are built, before any
+    job runs: each bad name raises ValueError instead of a silent
+    column clash or an analysis error deep in the plan."""
+    from porcupine_spark.operators.dedup import minhash_lsh_pairs
+
+    cols = {c for c in carry} | {"doc_id", "text", "source"}
+    cols.discard("no_such_col")
+    docs = spark.createDataFrame([], ", ".join(f"{c} string" for c in sorted(cols)))
+    with pytest.raises(ValueError, match=match):
+        minhash_lsh_pairs(docs, carry=carry)
+
+
 def test_embedding_pervec_hof_matches_explode(spark):
     """r8: the per-vector centroid-distance fold (zip_with/aggregate
     against a broadcast dim-ordered centroid array) must equal the old

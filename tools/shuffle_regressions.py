@@ -58,8 +58,8 @@ SCALE_ABS_MB = 24.0  # ignore queries below this at 10x (noise floor)
 # a breach means a NEW mechanism appeared and must be re-verified.
 EXPECTED_SUPERLINEAR: dict[str, tuple[float, str]] = {
     "dedup_ngram_jaccard": (300.0, "lost-broadcast at 10x; nobcast A/B 44->454 MB = 10.3x linear"),
-    "dedup_clusters": (300.0, "same plan family as dedup_ngram_jaccard (nobcast A/B 10.3x linear)"),
-    "dup_cluster_size_histogram": (300.0, "same plan family as dedup_ngram_jaccard (nobcast A/B 10.3x linear)"),
+    "dedup_clusters": (300.0, "below the driver gates the overlap and union-find run on the driver, so sf0.1 shuffles almost nothing; large 10x growth is a gate crossing onto the dedup_ngram_jaccard Spark path"),
+    "dup_cluster_size_histogram": (300.0, "composes dedup_clusters: almost no sf0.1 shuffle below the driver gates; large 10x growth is a gate crossing onto the dedup_ngram_jaccard Spark path"),
     "dedup_keep_best_quality": (300.0, "lost-broadcast at 10x; nobcast A/B 45->464 MB = 10.2x linear"),
     "dedup_containment_pairs": (300.0, "same shingle-pair base as dedup_ngram_jaccard (identical byte profile; nobcast A/B 10.3x linear)"),
     "q3_shipping_priority": (80.0, "sf0.1 sides all broadcast (0.3 MB); nobcast A/B 6.3->62.7 MB = 9.9x linear"),
