@@ -167,75 +167,24 @@ def asof_join(
     return picked.filter(F.col("__side") == 1).drop("__side")
 
 
-@query(
-    "asof_purchase_last_view",
-    """
-    WITH p AS (
+# the purchase (p) and view (v) frames of the asof_purchase_* oracles
+_SQL_PV = """p AS (
       SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'
     ),
     v AS (
       SELECT event_id AS view_id, user_id, ts, value AS view_value
       FROM events WHERE event_type = 'view'
-    ),
-    ranked AS (
-      SELECT p.event_id, v.view_id, v.view_value,
-             ROW_NUMBER() OVER (PARTITION BY p.event_id
-                                ORDER BY v.ts DESC, v.view_id DESC) AS rn
-      FROM p JOIN v ON v.user_id = p.user_id AND v.ts <= p.ts
-    )
-    SELECT p.event_id, p.user_id, r.view_id, r.view_value
+    )"""
+# every purchase with the rn = 1 view of a ``ranked`` CTE, if any
+_SQL_PV_PICK = """SELECT p.event_id, p.user_id, r.view_id, r.view_value
     FROM p LEFT JOIN (SELECT event_id, view_id, view_value FROM ranked WHERE rn = 1) r
-      ON r.event_id = p.event_id
-    """,
-    tags=("asof", "window"),
-    doc="As-of join: each purchase gets the latest at-or-before view of "
-    "the same user. Spark side is the union+window merge (no join); the "
-    "oracle is an independent correlated-rank formulation.",
-)
-def asof_purchase_last_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
-    views = ev.filter(F.col("event_type") == "view").select(
-        F.col("event_id").alias("view_id"), "user_id", "ts", F.col("value").alias("view_value")
-    )
-    out = asof_join(
-        purchases,
-        views,
-        on="user_id",
-        left_ts="ts",
-        right_ts="ts",
-        right_order="view_id",
-        payload_cols=["view_id", "view_value"],
-    )
-    return out.select("event_id", "user_id", "view_id", "view_value")
+      ON r.event_id = p.event_id"""
 
 
-@query(
-    "asof_purchase_next_view",
-    """
-    WITH p AS (
-      SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'
-    ),
-    v AS (
-      SELECT event_id AS view_id, user_id, ts, value AS view_value
-      FROM events WHERE event_type = 'view'
-    ),
-    ranked AS (
-      SELECT p.event_id, v.view_id, v.view_value,
-             ROW_NUMBER() OVER (PARTITION BY p.event_id
-                                ORDER BY v.ts ASC, v.view_id ASC) AS rn
-      FROM p JOIN v ON v.user_id = p.user_id AND v.ts >= p.ts
-    )
-    SELECT p.event_id, p.user_id, r.view_id, r.view_value
-    FROM p LEFT JOIN (SELECT event_id, view_id, view_value FROM ranked WHERE rn = 1) r
-      ON r.event_id = p.event_id
-    """,
-    tags=("asof", "window"),
-    doc="Forward as-of: each purchase gets the EARLIEST at-or-after view "
-    "of the same user (merge_asof direction='forward'). Same join-free "
-    "union+window plan; oracle by correlated rank.",
-)
-def asof_purchase_next_view(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _purchase_view_asof(spark: SparkSession, sf_dir: str, **how) -> DataFrame:
+    """(event_id, user_id, view_id, view_value): each purchase as-of
+    joined to the same user's views; ``how`` is asof_join's direction
+    and tolerance_s."""
     ev = load_table(spark, sf_dir, "events")
     purchases = ev.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
     views = ev.filter(F.col("event_type") == "view").select(
@@ -243,22 +192,55 @@ def asof_purchase_next_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = asof_join(
         purchases, views, on="user_id", left_ts="ts", right_ts="ts",
-        right_order="view_id", payload_cols=["view_id", "view_value"],
-        direction="forward",
+        right_order="view_id", payload_cols=["view_id", "view_value"], **how,
     )
     return out.select("event_id", "user_id", "view_id", "view_value")
 
 
 @query(
+    "asof_purchase_last_view",
+    f"""
+    WITH {_SQL_PV},
+    ranked AS (
+      SELECT p.event_id, v.view_id, v.view_value,
+             ROW_NUMBER() OVER (PARTITION BY p.event_id
+                                ORDER BY v.ts DESC, v.view_id DESC) AS rn
+      FROM p JOIN v ON v.user_id = p.user_id AND v.ts <= p.ts
+    )
+    {_SQL_PV_PICK}""",
+    tags=("asof", "window"),
+    doc="As-of join: each purchase gets the latest at-or-before view of "
+    "the same user. Spark side is the union+window merge (no join); the "
+    "oracle is an independent correlated-rank formulation.",
+)
+def asof_purchase_last_view(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _purchase_view_asof(spark, sf_dir)
+
+
+@query(
+    "asof_purchase_next_view",
+    f"""
+    WITH {_SQL_PV},
+    ranked AS (
+      SELECT p.event_id, v.view_id, v.view_value,
+             ROW_NUMBER() OVER (PARTITION BY p.event_id
+                                ORDER BY v.ts ASC, v.view_id ASC) AS rn
+      FROM p JOIN v ON v.user_id = p.user_id AND v.ts >= p.ts
+    )
+    {_SQL_PV_PICK}""",
+    tags=("asof", "window"),
+    doc="Forward as-of: each purchase gets the EARLIEST at-or-after view "
+    "of the same user (merge_asof direction='forward'). Same join-free "
+    "union+window plan; oracle by correlated rank.",
+)
+def asof_purchase_next_view(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _purchase_view_asof(spark, sf_dir, direction="forward")
+
+
+@query(
     "asof_purchase_nearest_view",
-    """
-    WITH p AS (
-      SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'
-    ),
-    v AS (
-      SELECT event_id AS view_id, user_id, ts, value AS view_value
-      FROM events WHERE event_type = 'view'
-    ),
+    f"""
+    WITH {_SQL_PV},
     b AS (
       SELECT event_id, view_id, view_value, vts FROM (
         SELECT p.event_id, v.view_id, v.view_value, v.ts AS vts,
@@ -293,17 +275,7 @@ def asof_purchase_next_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     "window passes.",
 )
 def asof_purchase_nearest_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
-    views = ev.filter(F.col("event_type") == "view").select(
-        F.col("event_id").alias("view_id"), "user_id", "ts", F.col("value").alias("view_value")
-    )
-    out = asof_join(
-        purchases, views, on="user_id", left_ts="ts", right_ts="ts",
-        right_order="view_id", payload_cols=["view_id", "view_value"],
-        direction="nearest",
-    )
-    return out.select("event_id", "user_id", "view_id", "view_value")
+    return _purchase_view_asof(spark, sf_dir, direction="nearest")
 
 
 ATTR_WINDOW_S = 3600
@@ -378,13 +350,7 @@ ASOF_TOL_S = 3600  # 1 hour attribution tolerance
 @query(
     "asof_purchase_view_tolerance",
     f"""
-    WITH p AS (
-      SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'
-    ),
-    v AS (
-      SELECT event_id AS view_id, user_id, ts, value AS view_value
-      FROM events WHERE event_type = 'view'
-    ),
+    WITH {_SQL_PV},
     ranked AS (
       SELECT p.event_id, v.view_id, v.view_value,
              ROW_NUMBER() OVER (PARTITION BY p.event_id
@@ -393,10 +359,7 @@ ASOF_TOL_S = 3600  # 1 hour attribution tolerance
                    AND v.ts <= p.ts
                    AND v.ts >= p.ts - INTERVAL {ASOF_TOL_S} SECOND
     )
-    SELECT p.event_id, p.user_id, r.view_id, r.view_value
-    FROM p LEFT JOIN (SELECT event_id, view_id, view_value FROM ranked WHERE rn = 1) r
-      ON r.event_id = p.event_id
-    """,
+    {_SQL_PV_PICK}""",
     tags=("asof", "window"),
     doc=f"Bounded-lookback as-of (merge_asof's tolerance, the missing "
     f"fourth knob after the three directions): each purchase gets the "
@@ -409,22 +372,7 @@ ASOF_TOL_S = 3600  # 1 hour attribution tolerance
     f"instead - two independent formulations.",
 )
 def asof_purchase_view_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    purchases = ev.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
-    views = ev.filter(F.col("event_type") == "view").select(
-        F.col("event_id").alias("view_id"), "user_id", "ts", F.col("value").alias("view_value")
-    )
-    out = asof_join(
-        purchases,
-        views,
-        on="user_id",
-        left_ts="ts",
-        right_ts="ts",
-        right_order="view_id",
-        payload_cols=["view_id", "view_value"],
-        tolerance_s=ASOF_TOL_S,
-    )
-    return out.select("event_id", "user_id", "view_id", "view_value")
+    return _purchase_view_asof(spark, sf_dir, tolerance_s=ASOF_TOL_S)
 
 
 ATTRIB_WINDOW_S = 3600

@@ -302,19 +302,8 @@ PR_DAMP_NUM, PR_DAMP_DEN = 85, 100  # damping 0.85 as an exact ratio
 # round's rank->edge attach is a plain shuffled join instead (same
 # arithmetic, identical exact-decimal result). Default
 # ~10M nodes ≈ a 250 MB framed broadcast — the guide's §3.1 comfort
-# ceiling; override per deployment via the env var.
+# ceiling. Read at call time, so tests can patch the constant.
 PREGEL_BROADCAST_MAX_NODES = 10_000_000
-
-
-def _pregel_broadcast_max_nodes() -> int:
-    import os
-
-    return int(
-        os.environ.get(
-            "PORCUPINE_SPARK_PREGEL_BROADCAST_MAX_NODES",
-            PREGEL_BROADCAST_MAX_NODES,
-        )
-    )
 
 
 def _pregel_contrib(edges: DataFrame, rd: DataFrame, broadcast_ranks: bool) -> DataFrame:
@@ -417,7 +406,7 @@ def pagerank_scaled(
     # input's hash partitioning (the planner shuffles a checkpointed
     # repartition(src) frame again), so the edge side is shuffled every
     # round either way. n is already on the driver, so the gate is free.
-    broadcast_ranks = n <= _pregel_broadcast_max_nodes()
+    broadcast_ranks = n <= PREGEL_BROADCAST_MAX_NODES
     r0 = PR_SCALE // n
     teleport = (PR_SCALE * (PR_DAMP_DEN - PR_DAMP_NUM) // PR_DAMP_DEN) // n
     r = nodes.withColumn("r", F.lit(r0).cast("decimal(38,0)"))

@@ -26,16 +26,21 @@ family is beyond-reference surface — see SURVEY.md §2 addendum.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from porcupine_spark.operators.similarity import cosine_topk, recall_vs_exact, sql_recall_vs_exact
+from porcupine_spark.operators.similarity import (
+    N_QUERIES,
+    TOPK,
+    cosine_topk,
+    neighbor_topk,
+    recall_vs_exact,
+    sql_neighbor_topk,
+    sql_recall_vs_exact,
+)
 from porcupine_spark.plans.registry import REGISTRY as _REG
 from porcupine_spark.plans.registry import query
 from porcupine_spark.tables import load_table
-
-N_QUERIES = 10
-TOPK = 5
 
 # Global symmetric scale: qmax = max |element| over the corpus; each
 # element quantizes to floor(v * 127 / qmax) in [-127, 127]. floor (not
@@ -58,6 +63,15 @@ def _q8(col, qmax):
     )
 
 
+def _qmax(emb: DataFrame) -> DataFrame:
+    """The one-row global scale: max |element| over the corpus."""
+    return emb.agg(
+        F.max(F.array_max(F.transform("embedding", lambda v: F.abs(v))))
+        .cast("double")
+        .alias("qmax")
+    )
+
+
 @query(
     "sq8_topk",
     f"""
@@ -76,16 +90,7 @@ def _q8(col, qmax):
                p -> p[1] * p[2])) AS BIGINT) AS score
       FROM q CROSS JOIN c
       WHERE query_id <> neighbor_id
-    ),
-    ranked AS (
-      SELECT query_id, neighbor_id, score,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-                                ORDER BY score DESC, neighbor_id) AS rank
-      FROM scored
-    )
-    SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank, score
-    FROM ranked WHERE rank <= {TOPK}
-    """,
+    ),{sql_neighbor_topk('score', TOPK)}""",
     tags=("similarity", "ann", "quantization"),
     doc=f"Int8 symmetric-quantized top-{TOPK} retrieval for the broadcast "
     f"query set (vec_id < {N_QUERIES}): one global scale (corpus "
@@ -97,12 +102,7 @@ def _q8(col, qmax):
 )
 def sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    qmax_df = emb.agg(
-        F.max(F.array_max(F.transform("embedding", lambda v: F.abs(v))))
-        .cast("double")
-        .alias("qmax")
-    )
-    with_scale = emb.crossJoin(F.broadcast(qmax_df))
+    with_scale = emb.crossJoin(F.broadcast(_qmax(emb)))
     cand = with_scale.select(
         F.col("vec_id").alias("neighbor_id"),
         _q8(F.col("embedding"), F.col("qmax")).alias("qc"),
@@ -124,12 +124,7 @@ def sq8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= TOPK)
-        .select("query_id", "neighbor_id", "rank", "score")
-    )
+    return neighbor_topk(scored, "score", TOPK)
 
 
 @query(
@@ -218,15 +213,9 @@ def _pq_spark_parts(
 
     emb = load_table(spark, sf_dir, "embeddings")
 
-    def _qmax():
+    def _collect_qmax():
         # callers that already ran the scale agg pass qmax in instead
-        return float(
-            emb.agg(
-                F.max(F.array_max(F.transform("embedding", lambda v: F.abs(v))))
-                .cast("double")
-                .alias("qmax")
-            ).collect()[0][0]
-        )
+        return float(_qmax(emb).collect()[0][0])
 
     def _cbrows():
         return {
@@ -239,9 +228,9 @@ def _pq_spark_parts(
         # two independent driver-blocking jobs — overlap them (§2.6);
         # the codebook rows don't depend on qmax (the quantization math
         # below is driver-side, after both land)
-        qmax, cbrows = run_concurrently(_qmax, _cbrows)
+        qmax, cbrows = run_concurrently(_collect_qmax, _cbrows)
     elif qmax is None:
-        qmax = _qmax()
+        qmax = _collect_qmax()
     elif cbq is None:
         cbrows = _cbrows()
     if cbq is None:
@@ -333,9 +322,8 @@ def pq_code_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "pq_adc_topk",
-    f"""
+# the ADC scores of pq_adc_topk's oracle, ranked by sql_neighbor_topk
+_SQL_PQ_ADC_SCORED = f"""
     WITH mq AS ({_SQL_QMAX}),{_SQL_CB},
     luts AS (
       SELECT qv.vec_id AS query_id, cb.m, cb.c,
@@ -349,16 +337,12 @@ def pq_code_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM enc e JOIN luts l ON l.m = e.m AND l.c = e.code
       WHERE e.vec_id <> l.query_id
       GROUP BY 1, 2
-    ),
-    ranked AS (
-      SELECT query_id, neighbor_id, score,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-                                ORDER BY score DESC, neighbor_id) AS rank
-      FROM scored
-    )
-    SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank, score
-    FROM ranked WHERE rank <= {TOPK}
-    """,
+    ),"""
+
+
+@query(
+    "pq_adc_topk",
+    _SQL_PQ_ADC_SCORED + sql_neighbor_topk("score", TOPK),
     tags=("similarity", "ann", "quantization"),
     doc=f"PQ asymmetric-distance (ADC) top-{TOPK}: each query builds its "
     f"{PQ_M}x{PQ_K} lookup table of subspace dot products against the "
@@ -410,12 +394,7 @@ def _pq_adc_ranked(
         .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
         .agg(F.sum("t").cast("long").alias("score"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "score")
-    )
+    return neighbor_topk(scored, "score", k)
 
 
 @query(
@@ -446,7 +425,7 @@ def pq_adc_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _REG["pq_adc_recall"].oracle = sql_recall_vs_exact(
     _REG["cosine_topk"].oracle,
-    _REG["pq_adc_topk"].oracle.replace(f"WHERE rank <= {TOPK}", f"WHERE rank <= {PQ_SHORTLIST}"),
+    _SQL_PQ_ADC_SCORED + sql_neighbor_topk("score", PQ_SHORTLIST),
     "pq",
 )
 
@@ -523,13 +502,7 @@ def pq_kmeans_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint) is independent of the PQ trainer inputs — run all
     # three blocking branches in one concurrent batch (optimization r8)
     qmax, sample, exact_df = run_concurrently(
-        lambda: float(
-            emb.agg(
-                F.max(F.array_max(F.transform("embedding", lambda v: F.abs(v))))
-                .cast("double")
-                .alias("qmax")
-            ).collect()[0][0]
-        ),
+        lambda: float(_qmax(emb).collect()[0][0]),
         lambda: bounded_training_sample(emb, PQ_K),
         lambda: cosine_topk(spark, sf_dir),
     )

@@ -114,6 +114,113 @@ def _exact_cosine_map(
     return pairs.mapInPandas(run, schema=f"{fields}, {out} double")
 
 
+N_QUERIES = 10  # the broadcast query set of the top-k queries: vec_id < 10
+TOPK = 5
+IVF_CENTROIDS = 8  # ivf_topk's deterministic coarse centroids: vec_id < 8
+IVF_PROBES = 2  # buckets each ivf_topk query probes
+
+
+def _unit_rows(embeddings):
+    """A pandas column of embedding arrays as a float64 matrix whose rows
+    are scaled to unit L2 norm: the numpy prefilters' approximate
+    cosine operand."""
+    import numpy as np
+
+    mat = np.array(embeddings.tolist(), dtype=np.float64)
+    return mat / np.linalg.norm(mat, axis=1, keepdims=True)
+
+
+def neighbor_topk(scored: DataFrame, score: str, k: int) -> DataFrame:
+    """(query_id, neighbor_id, rank, <score>): per query, the k best
+    neighbors by ``score`` descending, ties to the smaller neighbor_id."""
+    w = W.partitionBy("query_id").orderBy(F.desc(score), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", score)
+    )
+
+
+def sql_neighbor_topk(score: str, k: int) -> str:
+    """The DuckDB oracle of ``neighbor_topk``: the tail of a WITH list
+    whose last CTE is ``scored(query_id, neighbor_id, <score>)``."""
+    return f"""
+    ranked AS (
+      SELECT query_id, neighbor_id, {score},
+             ROW_NUMBER() OVER (PARTITION BY query_id
+                                ORDER BY {score} DESC, neighbor_id) AS rank
+      FROM scored
+    )
+    SELECT query_id, neighbor_id, CAST(rank AS BIGINT) AS rank, {score}
+    FROM ranked WHERE rank <= {k}
+    """
+
+
+def exact_rerank_topk(cand: DataFrame, vecs: DataFrame, k: int) -> DataFrame:
+    """Per-query exact-cosine top-k of (query_id, neighbor_id) candidate
+    pairs. Both sides come from the (vec_id, embedding, vn) norms table
+    ``vecs``; the query side (vec_id < N_QUERIES) is broadcast. Only the
+    candidates pay the exact-decimal re-score, whose values, and so
+    ranks, equal the oracle's full scan."""
+    q = vecs.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe"), F.col("vn").alias("qn")
+    )
+    c = vecs.select(
+        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ce"), F.col("vn").alias("cn")
+    )
+    scored = _exact_cosine_map(
+        cand.join(c, "neighbor_id").join(F.broadcast(q), "query_id"),
+        keep=[("query_id", "long"), ("neighbor_id", "long")],
+        a_col="qe", b_col="ce", na_col="qn", nb_col="cn",
+    )
+    return neighbor_topk(scored, "cosine", k)
+
+
+def exact_centroid_ranks(emb: DataFrame, vecs: DataFrame, cloc, probes: int = 1) -> DataFrame:
+    """(vec_id, embedding, cid, sim, arn): each vector's candidate
+    centroids ranked by exact cosine, arn 1 being its bucket.
+
+    The centroids are the collected rows ``cloc`` (vec_id, embedding)
+    of the vec_id < IVF_CENTROIDS vectors. A numpy prefilter keeps the
+    centroids within 2*epsilon of a vector's approximate best, or of
+    its ``probes``-th best for query rows (vec_id < N_QUERIES), so with
+    probes=1 every row is a plain argmax. Only the survivors (usually
+    one per vector) get the exact-decimal re-score against the norms
+    table ``vecs``, and the ranks among them equal the oracle's ranks
+    over all centroids."""
+    import numpy as np
+    import pandas as pd
+
+    bc_cent = emb.sparkSession.sparkContext.broadcast(
+        (cloc["vec_id"].to_numpy(), _unit_rows(cloc["embedding"]))
+    )
+    margin = 2 * NEARDUP_MARGIN
+
+    def assign_probe_cands(batches):
+        ids, mat_n = bc_cent.value
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            a_ids = pdf["vec_id"].to_numpy()
+            sims = _unit_rows(pdf["embedding"]) @ mat_n.T  # (batch, centroids)
+            top = -np.partition(-sims, range(probes), axis=1)  # best ... probes-th best first
+            cut = np.where(a_ids < N_QUERIES, top[:, probes - 1], top[:, 0])
+            ai, ci = np.where(sims >= (cut - margin)[:, None])
+            yield pd.DataFrame({"vec_id": a_ids[ai], "cid": ids[ci]})
+
+    cand = emb.mapInPandas(assign_probe_cands, schema="vec_id long, cid long")
+    cent = vecs.filter(F.col("vec_id") < IVF_CENTROIDS).select(
+        F.col("vec_id").alias("cid"), F.col("embedding").alias("cent_e"), F.col("vn").alias("cent_n")
+    )
+    wassign = W.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("cid"))
+    return _exact_cosine_map(
+        cand.join(vecs, "vec_id").join(F.broadcast(cent), "cid"),
+        keep=[("vec_id", "long"), ("embedding", "array<float>"), ("cid", "long")],
+        a_col="embedding", b_col="cent_e", na_col="vn", nb_col="cent_n",
+        out="sim",
+    ).withColumn("arn", F.row_number().over(wassign))
+
+
 _SQL_DOT = (
     "CAST(list_sum(list_transform(list_zip({a}, {b}), "
     "p -> CAST(CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE) AS DECIMAL(38,12)))) AS DOUBLE)"
@@ -124,11 +231,27 @@ def sql_dot(a: str, b: str) -> str:
     return _SQL_DOT.format(a=a, b=b)
 
 
+# the oracle of exact_centroid_ranks (all centroids scored): arn 1 is
+# each vector's bucket
+SQL_IVF_ASSIGN = f"""
+    cent AS (
+      SELECT vec_id AS cid, embedding AS cent_e FROM embeddings WHERE vec_id < {IVF_CENTROIDS}
+    ),
+    assign AS (
+      SELECT vec_id, embedding, cid, ROW_NUMBER() OVER (
+               PARTITION BY vec_id
+               ORDER BY {sql_dot('embedding', 'cent_e')}
+                        / (SQRT({sql_dot('embedding', 'embedding')})
+                           * SQRT({sql_dot('cent_e', 'cent_e')})) DESC, cid) AS arn
+      FROM embeddings CROSS JOIN cent
+    )"""
+
+
 @query(
     "cosine_topk",
     f"""
     WITH q AS (
-      SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < 10
+      SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE vec_id < {N_QUERIES}
     ),
     c AS (SELECT vec_id AS neighbor_id, embedding AS ce FROM embeddings),
     scored AS (
@@ -137,15 +260,7 @@ def sql_dot(a: str, b: str) -> str:
                / (SQRT({sql_dot('qe', 'qe')}) * SQRT({sql_dot('ce', 'ce')})) AS cosine
       FROM q CROSS JOIN c
       WHERE query_id <> neighbor_id
-    ),
-    ranked AS (
-      SELECT query_id, neighbor_id, cosine,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-                                ORDER BY cosine DESC, neighbor_id) AS rank
-      FROM scored
-    )
-    SELECT query_id, neighbor_id, rank, cosine FROM ranked WHERE rank <= 5
-    """,
+    ),{sql_neighbor_topk('cosine', TOPK)}""",
     tags=("similarity", "ann"),
     doc="Brute-force cosine top-5 for a broadcast query set (vec_id<10). "
     "Exact-decimal dot products make scores and therefore ranks "
@@ -172,29 +287,26 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from porcupine_spark.functions.concurrent import run_concurrently
 
     qloc, norms = run_concurrently(
-        lambda: emb_raw.filter(F.col("vec_id") < 10)
+        lambda: emb_raw.filter(F.col("vec_id") < N_QUERIES)
         .select("vec_id", "embedding")
         .toPandas(),
         lambda: _exact_norms(
             emb_raw, keep=[("vec_id", "long"), ("embedding", "array<float>")]
         ).localCheckpoint(eager=True),
     )
-    q_ids = qloc["vec_id"].to_numpy()
-    q_mat = np.array(qloc["embedding"].tolist(), dtype=np.float64)
-    q_mat_n = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
-    bc = emb.sparkSession.sparkContext.broadcast((q_ids, q_mat_n))
+    bc = emb.sparkSession.sparkContext.broadcast(
+        (qloc["vec_id"].to_numpy(), _unit_rows(qloc["embedding"]))
+    )
     margin = 2 * NEARDUP_MARGIN
 
     def prefilter(batches):
         b_ids, b_mat_n = bc.value
-        k = 5
+        k = TOPK
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             a_ids = pdf["vec_id"].to_numpy()
-            a_mat = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            a_mat = a_mat / np.linalg.norm(a_mat, axis=1, keepdims=True)
-            sims = a_mat @ b_mat_n.T  # (batch, |Q|)
+            sims = _unit_rows(pdf["embedding"]) @ b_mat_n.T  # (batch, |Q|)
             sims[a_ids[:, None] == b_ids[None, :]] = -np.inf  # self pairs
             if sims.shape[0] > k:
                 kth = np.partition(sims, -k, axis=0)[-k]  # per-query 5th best
@@ -204,56 +316,21 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"query_id": b_ids[qi], "neighbor_id": a_ids[ai]})
 
     cand = emb.mapInPandas(prefilter, schema="query_id long, neighbor_id long")
-    # exact re-score of the surviving pairs only; norms once per vector
-    # (both Arrow-vectorized, bit-identical to the decimal expressions)
-    # one eager pass (checkpointed above, concurrently with the query
-    # collect): four consumers below would otherwise re-run the Arrow
-    # norm stage each (tiny table: id + embedding + vn per vector)
-    q = norms.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.col("vn").alias("qn"),
-    )
-    c = norms.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("ce"),
-        F.col("vn").alias("cn"),
-    )
-    scored = _exact_cosine_map(
-        # self-pairs can sneak past the prefilter in degenerate tiny
-        # batches (-inf >= -inf - margin); drop them here regardless
-        cand.filter(F.col("query_id") != F.col("neighbor_id"))
-        .join(c, "neighbor_id")
-        .join(F.broadcast(q), "query_id"),
-        keep=[("query_id", "long"), ("neighbor_id", "long")],
-        a_col="qe", b_col="ce", na_col="qn", nb_col="cn",
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 5)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    # exact re-score of the surviving pairs only, against the norms
+    # checkpointed above (the re-rank reads it on both sides); self-pairs
+    # can sneak past the prefilter in degenerate tiny batches
+    # (-inf >= -inf - margin), so drop them here regardless
+    return exact_rerank_topk(cand.filter(F.col("query_id") != F.col("neighbor_id")), norms, TOPK)
 
 
 @query(
     "ivf_topk",
     f"""
-    WITH cent AS (
-      SELECT vec_id AS cid, embedding AS cent_e FROM embeddings WHERE vec_id < 8
-    ),
-    assign AS (
-      SELECT vec_id, embedding, cid, ROW_NUMBER() OVER (
-               PARTITION BY vec_id
-               ORDER BY {sql_dot('embedding', 'cent_e')}
-                        / (SQRT({sql_dot('embedding', 'embedding')})
-                           * SQRT({sql_dot('cent_e', 'cent_e')})) DESC, cid) AS arn
-      FROM embeddings CROSS JOIN cent
-    ),
+    WITH {SQL_IVF_ASSIGN},
     buckets AS (SELECT vec_id, embedding, cid FROM assign WHERE arn = 1),
-    probes AS (  -- queries probe their 2 nearest centroids
+    probes AS (  -- queries probe their nearest centroids
       SELECT vec_id AS query_id, embedding AS qe, cid
-      FROM assign WHERE arn <= 2 AND vec_id < 10
+      FROM assign WHERE arn <= {IVF_PROBES} AND vec_id < {N_QUERIES}
     ),
     scored AS (
       SELECT p.query_id, b.vec_id AS neighbor_id,
@@ -261,15 +338,7 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                / (SQRT({sql_dot('p.qe', 'p.qe')})
                   * SQRT({sql_dot('b.embedding', 'b.embedding')})) AS cosine
       FROM probes p JOIN buckets b ON b.cid = p.cid AND b.vec_id <> p.query_id
-    ),
-    ranked AS (
-      SELECT query_id, neighbor_id, cosine,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-                                ORDER BY cosine DESC, neighbor_id) AS rank
-      FROM scored
-    )
-    SELECT query_id, neighbor_id, rank, cosine FROM ranked WHERE rank <= 5
-    """,
+    ),{sql_neighbor_topk('cosine', TOPK)}""",
     tags=("similarity", "ann", "ivf"),
     doc="IVF-bucketed approximate top-5: vectors assigned to nearest of 8 "
     "deterministic coarse centroids; queries probe 2 buckets. Scored "
@@ -298,7 +367,6 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     emb_raw = load_table(spark, sf_dir, "embeddings", widen=False)
-    sc = emb.sparkSession.sparkContext
 
     # the centroid collect, the norms checkpoint, and the query collect
     # are mutually independent driver-blocking jobs — overlap them
@@ -308,77 +376,46 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from porcupine_spark.functions.concurrent import run_concurrently
 
     cloc, vecs, qloc = run_concurrently(
-        lambda: emb_raw.filter(F.col("vec_id") < 8)
+        lambda: emb_raw.filter(F.col("vec_id") < IVF_CENTROIDS)
         .select("vec_id", "embedding")
         .toPandas(),
         lambda: _exact_norms(
             emb_raw, keep=[("vec_id", "long"), ("embedding", "array<float>")]
         ).localCheckpoint(eager=True),
-        lambda: emb_raw.filter(F.col("vec_id") < 10)
+        lambda: emb_raw.filter(F.col("vec_id") < N_QUERIES)
         .select("vec_id", "embedding")
         .toPandas(),
     )
-    c_ids = cloc["vec_id"].to_numpy()
-    c_mat = np.array(cloc["embedding"].tolist(), dtype=np.float64)
-    c_mat_n = c_mat / np.linalg.norm(c_mat, axis=1, keepdims=True)
-    bc_cent = sc.broadcast((c_ids, c_mat_n))
     margin = 2 * NEARDUP_MARGIN
-
-    def assign_probe_cands(batches):
-        ids, mat_n = bc_cent.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            a_ids = pdf["vec_id"].to_numpy()
-            a_mat = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            a_mat = a_mat / np.linalg.norm(a_mat, axis=1, keepdims=True)
-            sims = a_mat @ mat_n.T  # (batch, 8)
-            top2 = -np.partition(-sims, 1, axis=1)[:, :2]  # per-row best, 2nd-best
-            cut = np.where(a_ids < 10, top2[:, 1], top2[:, 0])  # queries rank top-2
-            ai, ci = np.where(sims >= (cut - margin)[:, None])
-            yield pd.DataFrame({"vec_id": a_ids[ai], "cid": ids[ci]})
-
-    cand = emb.mapInPandas(assign_probe_cands, schema="vec_id long, cid long")
-    cent = vecs.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cid"), F.col("embedding").alias("cent_e"), F.col("vn").alias("cent_n")
-    )
-    wassign = W.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("cid"))
-    ranked = (
-        _exact_cosine_map(
-            cand.join(vecs, "vec_id").join(F.broadcast(cent), "cid"),
-            keep=[("vec_id", "long"), ("embedding", "array<float>"), ("cid", "long")],
-            a_col="embedding", b_col="cent_e", na_col="vn", nb_col="cent_n",
-            out="sim",
-        )
-        .withColumn("arn", F.row_number().over(wassign))
-        .localCheckpoint(eager=True)  # tiny (~1 row/vector); reused by both stages
-    )
+    # stages 1 and 2; tiny (~1 row/vector) and reused by both uses below
+    ranked = exact_centroid_ranks(emb, vecs, cloc, IVF_PROBES).localCheckpoint(eager=True)
     buckets = ranked.filter(F.col("arn") == 1).select("vec_id", "embedding", "cid")
 
     # probe list to the driver (tiny), for the stage-3 prefilter; the
     # query matrix (qloc) was already collected in the overlapped batch
-    probe_rows = ranked.filter((F.col("arn") <= 2) & (F.col("vec_id") < 10)).select("vec_id", "cid").collect()
+    probe_rows = (
+        ranked.filter((F.col("arn") <= IVF_PROBES) & (F.col("vec_id") < N_QUERIES))
+        .select("vec_id", "cid")
+        .collect()
+    )
     q_ids = qloc["vec_id"].to_numpy()
-    q_mat = np.array(qloc["embedding"].tolist(), dtype=np.float64)
-    q_mat_n = q_mat / np.linalg.norm(q_mat, axis=1, keepdims=True)
+    q_mat_n = _unit_rows(qloc["embedding"])
     p_qids = np.array([r.vec_id for r in probe_rows])
     p_cids = np.array([r.cid for r in probe_rows])
     order = np.argsort(q_ids)
     q_ids, q_mat_n = q_ids[order], q_mat_n[order]
     p_mat_n = q_mat_n[np.searchsorted(q_ids, p_qids)]
-    bc_probe = sc.broadcast((p_qids, p_cids, p_mat_n))
+    bc_probe = emb.sparkSession.sparkContext.broadcast((p_qids, p_cids, p_mat_n))
 
     def topk_prefilter(batches):
         pq_ids, pq_cids, pq_mat = bc_probe.value
-        k = 5
+        k = TOPK
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             a_ids = pdf["vec_id"].to_numpy()
             a_cids = pdf["cid"].to_numpy()
-            a_mat = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            a_mat = a_mat / np.linalg.norm(a_mat, axis=1, keepdims=True)
-            sims = a_mat @ pq_mat.T  # (batch, n_probes)
+            sims = _unit_rows(pdf["embedding"]) @ pq_mat.T  # (batch, n_probes)
             mask = (a_cids[:, None] == pq_cids[None, :]) & (a_ids[:, None] != pq_ids[None, :])
             sims = np.where(mask, sims, -np.inf)
             n = sims.shape[0]
@@ -387,23 +424,7 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame({"query_id": pq_ids[pi], "neighbor_id": a_ids[ai]})
 
     topc = buckets.mapInPandas(topk_prefilter, schema="query_id long, neighbor_id long").distinct()
-    q = vecs.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe"), F.col("vn").alias("qn")
-    )
-    c = vecs.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ce"), F.col("vn").alias("cn")
-    )
-    scored = _exact_cosine_map(
-        topc.join(c, "neighbor_id").join(F.broadcast(q), "query_id"),
-        keep=[("query_id", "long"), ("neighbor_id", "long")],
-        a_col="qe", b_col="ce", na_col="qn", nb_col="cn",
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 5)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return exact_rerank_topk(topc, vecs, TOPK)
 
 
 def ivf_centroids(emb: DataFrame, k: int, mode: str = "first") -> DataFrame:
@@ -454,21 +475,7 @@ def ivf_topk_generic(
        cid — never a cross product);
     3. per-query top-k by a window over the scored candidates.
     """
-    vecs = emb.select(
-        "vec_id", "embedding",
-        F.sqrt(dot_double(F.col("embedding"), F.col("embedding"))).alias("vn"),
-    )
-    cent = centroids.select(
-        "cid", "cent_e",
-        F.sqrt(dot_double(F.col("cent_e"), F.col("cent_e"))).alias("cn"),
-    )
-    sim = dot_double(F.col("embedding"), F.col("cent_e")) / (F.col("vn") * F.col("cn"))
-    assign_w = W.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("cid"))
-    ranked = (
-        vecs.join(F.broadcast(cent), how="cross")
-        .select("vec_id", "embedding", "vn", "cid", sim.alias("sim"))
-        .withColumn("arn", F.row_number().over(assign_w))
-    )
+    ranked = double_centroid_ranks(emb, centroids)
     is_query = F.col("vec_id").isin([int(q) for q in query_ids])
     buckets = ranked.filter(F.col("arn") == 1).select("vec_id", "embedding", "vn", "cid")
     probes_df = ranked.filter(is_query & (F.col("arn") <= probes)).select(
@@ -489,11 +496,27 @@ def ivf_topk_generic(
         # unique by construction — the old distinct() was a no-op
         # Exchange over the scored candidate set
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return neighbor_topk(scored, "cosine", k)
+
+
+def double_centroid_ranks(emb: DataFrame, centroids: DataFrame) -> DataFrame:
+    """(vec_id, embedding, vn, cid, sim, arn): every vector against the
+    broadcast (cid, cent_e) centroid table by all-double cosine, ranked
+    per vector (sim desc, cid asc); arn 1 is the vector's bucket."""
+    vecs = emb.select(
+        "vec_id", "embedding",
+        F.sqrt(dot_double(F.col("embedding"), F.col("embedding"))).alias("vn"),
+    )
+    cent = centroids.select(
+        "cid", "cent_e",
+        F.sqrt(dot_double(F.col("cent_e"), F.col("cent_e"))).alias("cn"),
+    )
+    sim = dot_double(F.col("embedding"), F.col("cent_e")) / (F.col("vn") * F.col("cn"))
+    assign_w = W.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("cid"))
     return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
+        vecs.join(F.broadcast(cent), how="cross")
+        .select("vec_id", "embedding", "vn", "cid", sim.alias("sim"))
+        .withColumn("arn", F.row_number().over(assign_w))
     )
 
 
@@ -518,20 +541,8 @@ def ivf_index_build(
     """
     from porcupine_spark.bucketing import write_bucketed
 
-    vecs = emb.select(
-        "vec_id", "embedding",
-        F.sqrt(dot_double(F.col("embedding"), F.col("embedding"))).alias("vn"),
-    )
-    cent = centroids.select(
-        "cid", "cent_e",
-        F.sqrt(dot_double(F.col("cent_e"), F.col("cent_e"))).alias("cn"),
-    )
-    sim = dot_double(F.col("embedding"), F.col("cent_e")) / (F.col("vn") * F.col("cn"))
-    assign_w = W.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("cid"))
     assigned = (
-        vecs.join(F.broadcast(cent), how="cross")
-        .select("vec_id", "embedding", "vn", "cid", sim.alias("sim"))
-        .withColumn("arn", F.row_number().over(assign_w))
+        double_centroid_ranks(emb, centroids)
         .filter(F.col("arn") == 1)
         .select("cid", "vec_id", "embedding", "vn")
     )
@@ -604,12 +615,7 @@ def ivf_topk_from(
         # distinct probed cids per query ⇒ unique rows by construction
         # (see ivf_topk_generic)
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return neighbor_topk(scored, "cosine", k)
 
 
 @query(
@@ -829,7 +835,7 @@ def _lsh_signatures(emb: DataFrame) -> DataFrame:
       SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
       FROM bands q JOIN bands c
         ON c.band = q.band AND c.chunk = q.chunk AND c.vec_id <> q.vec_id
-      WHERE q.vec_id < 10
+      WHERE q.vec_id < {N_QUERIES}
     ),
     scored AS (
       SELECT query_id, neighbor_id,
@@ -839,15 +845,7 @@ def _lsh_signatures(emb: DataFrame) -> DataFrame:
       FROM cand
       JOIN embeddings a ON a.vec_id = cand.query_id
       JOIN embeddings b ON b.vec_id = cand.neighbor_id
-    ),
-    ranked AS (
-      SELECT query_id, neighbor_id, cosine,
-             ROW_NUMBER() OVER (PARTITION BY query_id
-                                ORDER BY cosine DESC, neighbor_id) AS rank
-      FROM scored
-    )
-    SELECT query_id, neighbor_id, rank, cosine FROM ranked WHERE rank <= 5
-    """,
+    ),{sql_neighbor_topk('cosine', TOPK)}""",
     tags=("similarity", "ann", "lsh"),
     doc=f"Random-hyperplane LSH top-5: {LSH_PLANES}-bit sign signatures "
     f"against deterministic integer hyperplanes, banded "
@@ -885,7 +883,7 @@ def lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ])
         ).alias("band", "chunk"),
     )
-    q_bands = bands.filter(F.col("vec_id") < 10).select(
+    q_bands = bands.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("sig").alias("qsig"), "band", "chunk"
     )
     first_band = F.coalesce(
@@ -907,23 +905,7 @@ def lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = _exact_norms(
         emb, keep=[("vec_id", "long"), ("embedding", "array<float>")]
     ).localCheckpoint(eager=True)
-    q = vecs.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe"), F.col("vn").alias("qn")
-    )
-    c = vecs.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("ce"), F.col("vn").alias("cn")
-    )
-    scored = _exact_cosine_map(
-        cand.join(c, "neighbor_id").join(F.broadcast(q), "query_id"),
-        keep=[("query_id", "long"), ("neighbor_id", "long")],
-        a_col="qe", b_col="ce", na_col="qn", nb_col="cn",
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 5)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return exact_rerank_topk(cand, vecs, TOPK)
 
 
 NEARDUP_T = 0.4
@@ -1007,8 +989,7 @@ def block_pair_candidates(
     def pair_cands(pdf: pd.DataFrame) -> pd.DataFrame:
         lo, hi = int(pdf["lo"].iat[0]), int(pdf["hi"].iat[0])
         ids = pdf["vec_id"].to_numpy()
-        mat = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-        mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
+        mat = _unit_rows(pdf["embedding"])
         if lo == hi:
             sims = mat @ mat.T
             ai, bi = np.where(sims >= thresh)
@@ -1267,30 +1248,15 @@ def semdedup(emb: DataFrame, k: int, tau: float) -> DataFrame:
     cents = ivf_centroids(emb, k=k, mode="kmeans")
     # top-1 cluster per vector: broadcast the k-row centroid table,
     # cosine in doubles, window keeps the argmax — one shuffle on vec_id
-    scored = (
-        emb.select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-        .crossJoin(F.broadcast(cents.select("cid", F.col("cent_e").cast("array<double>").alias("c"))))
-        .withColumn(
-            "sim",
-            F.aggregate(
-                F.zip_with("e", "c", lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
-            )
-            / (
-                F.sqrt(F.aggregate(F.transform("e", lambda x: x * x), F.lit(0.0), lambda a, x: a + x))
-                * F.sqrt(F.aggregate(F.transform("c", lambda x: x * x), F.lit(0.0), lambda a, x: a + x))
-            ),
-        )
-    )
-    w = W.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("cid"))
     assigned = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "cid", F.col("sim").alias("cent_sim"), "e")
+        double_centroid_ranks(emb, cents)
+        .filter(F.col("arn") == 1)
+        .select("vec_id", "cid", F.col("sim").alias("cent_sim"), "embedding")
     )
 
     def dedup_cluster(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(["cent_sim", "vec_id"]).reset_index(drop=True)
-        mat = np.stack(pdf["e"].to_numpy())
+        mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
         norms = np.linalg.norm(mat, axis=1)
         norms[norms == 0] = 1.0
         unit = mat / norms[:, None]
@@ -1520,7 +1486,9 @@ def embedding_quantization_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     # with zip_with/aggregate. The per-element term is the identical
     # IEEE expression; the decimal accumulation is exact, so the
     # dim-order sum equals the old hash-agg sum bit-for-bit. The
-    # size>0 filter mirrors the explode form's row behavior.
+    # size>0 filter mirrors the explode form's row behavior, and a NULL
+    # term (a NULL element, or a position past a short vector's end)
+    # adds 0, as the explode form's sum skipped it.
     scales = dims.agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("dim0", "s"))), lambda r: r["s"]
@@ -1529,13 +1497,14 @@ def embedding_quantization_error(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _term_e(xe, se):
         dq_e = (xe * 127 / se).cast("long").cast("double") * se / 127
-        return (
+        return F.coalesce(
             (
                 F.when(se == 0, F.lit(0.0)).otherwise((xe - dq_e) * (xe - dq_e))
                 * F.lit(1e18)
             )
             .cast("long")
-            .cast("decimal(38,0)")
+            .cast("decimal(38,0)"),
+            F.lit(0).cast("decimal(38,0)"),
         )
 
     per_vec = (
@@ -1640,7 +1609,8 @@ def embedding_outlier_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-vector distance without the second |vecs|x|dims| explode
     # (optimization r8 — same array-HOF fold as label_centroid_
     # separation; exact decimal accumulation, identical per-element
-    # terms, size>0 filter mirrors the explode form's row behavior)
+    # terms, size>0 filter mirrors the explode form's row behavior, a
+    # NULL or missing element's term adds 0)
     cent_arr = cent.groupBy("label").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("dim", "c"))), lambda s: s["c"]
@@ -1658,7 +1628,7 @@ def embedding_outlier_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.aggregate(
                 F.zip_with(s_arr, F.col("c_arr"), lambda s, c: (s - c) * (s - c)),
                 F.lit(0).cast("decimal(38,0)"),
-                lambda acc, t: acc + t.cast("decimal(38,0)"),
+                lambda acc, t: acc + F.coalesce(t, F.lit(0)).cast("decimal(38,0)"),
             )
             .cast("long")
             .alias("dist_sq_pico"),
@@ -1777,7 +1747,9 @@ def label_centroid_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "embedding", lambda x: (x.cast("double") * F.lit(1e6)).cast("long")
     )
     # size>0 filter mirrors the explode form exactly: a NULL/empty
-    # embedding produced no element rows (so no per_vec row) there
+    # embedding produced no element rows (so no per_vec row) there; a
+    # NULL element or a position past a short vector's end adds 0, as
+    # the explode form's sum skipped it
     per_vec = (
         emb.filter(F.size("embedding") > 0)
         .join(F.broadcast(cent_arr), "label")
@@ -1787,7 +1759,7 @@ def label_centroid_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.aggregate(
                 F.zip_with(s_arr, F.col("c_arr"), lambda s, c: (s - c) * (s - c)),
                 F.lit(0).cast("decimal(38,0)"),
-                lambda acc, t: acc + t.cast("decimal(38,0)"),
+                lambda acc, t: acc + F.coalesce(t, F.lit(0)).cast("decimal(38,0)"),
             ).alias("dsp"),
         )
     )
@@ -2026,17 +1998,7 @@ _REG["lsh_recall_at_k"].oracle = sql_recall_vs_exact(
 @query(
     "ivf_cell_balance",
     f"""
-    WITH cent AS (
-      SELECT vec_id AS cid, embedding AS cent_e FROM embeddings WHERE vec_id < 8
-    ),
-    assign AS (
-      SELECT vec_id, cid, ROW_NUMBER() OVER (
-               PARTITION BY vec_id
-               ORDER BY {sql_dot('embedding', 'cent_e')}
-                        / (SQRT({sql_dot('embedding', 'embedding')})
-                           * SQRT({sql_dot('cent_e', 'cent_e')})) DESC, cid) AS arn
-      FROM embeddings CROSS JOIN cent
-    ),
+    WITH {SQL_IVF_ASSIGN},
     cells AS (
       SELECT cid, COUNT(*) AS n_vectors FROM assign WHERE arn = 1 GROUP BY cid
     ),
@@ -2060,53 +2022,13 @@ _REG["lsh_recall_at_k"].oracle = sql_recall_vs_exact(
     "assignment everything is |cells|-sized.",
 )
 def ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-    import pandas as pd
-
     emb = load_table(spark, sf_dir, "embeddings")
     emb_raw = load_table(spark, sf_dir, "embeddings", widen=False)
-    sc = emb.sparkSession.sparkContext
-
-    cloc = emb_raw.filter(F.col("vec_id") < 8).select("vec_id", "embedding").toPandas()
-    c_ids = cloc["vec_id"].to_numpy()
-    c_mat = np.array(cloc["embedding"].tolist(), dtype=np.float64)
-    c_mat_n = c_mat / np.linalg.norm(c_mat, axis=1, keepdims=True)
-    bc_cent = sc.broadcast((c_ids, c_mat_n))
-    margin = 2 * NEARDUP_MARGIN
-
-    def assign_cands(batches):
-        ids, mat_n = bc_cent.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            a_ids = pdf["vec_id"].to_numpy()
-            a_mat = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            a_mat = a_mat / np.linalg.norm(a_mat, axis=1, keepdims=True)
-            sims = a_mat @ mat_n.T  # (batch, 8)
-            best = sims.max(axis=1)
-            ai, ci = np.where(sims >= (best - margin)[:, None])
-            yield pd.DataFrame({"vec_id": a_ids[ai], "cid": ids[ci]})
-
-    cand = emb.mapInPandas(assign_cands, schema="vec_id long, cid long")
+    cloc = emb_raw.filter(F.col("vec_id") < IVF_CENTROIDS).select("vec_id", "embedding").toPandas()
     vecs = _exact_norms(
         emb_raw, keep=[("vec_id", "long"), ("embedding", "array<float>")]
     )
-    cent = vecs.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("cent_e"),
-        F.col("vn").alias("cent_n"),
-    )
-    wassign = W.partitionBy("vec_id").orderBy(F.desc("sim"), F.asc("cid"))
-    assigned = (
-        _exact_cosine_map(
-            cand.join(vecs, "vec_id").join(F.broadcast(cent), "cid"),
-            keep=[("vec_id", "long"), ("cid", "long")],
-            a_col="embedding", b_col="cent_e", na_col="vn", nb_col="cent_n",
-            out="sim",
-        )
-        .withColumn("arn", F.row_number().over(wassign))
-        .filter(F.col("arn") == 1)
-    )
+    assigned = exact_centroid_ranks(emb, vecs, cloc).filter(F.col("arn") == 1)
     cells = assigned.groupBy("cid").agg(F.count(F.lit(1)).alias("n_vectors"))
     tot = cells.agg(F.sum("n_vectors").alias("t"), F.count(F.lit(1)).alias("k"))
     return cells.crossJoin(F.broadcast(tot)).select(

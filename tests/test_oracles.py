@@ -135,6 +135,10 @@ REPRESENTATIVE = [
     "pareto_revenue_concentration",  # cross-multiplied 80/20 numbers
     "split_source_balance_chi2",  # hash-split independence statistic
     "lsh_recall_at_k",  # exactly-oracled ANN recall audit
+    "ivf_topk",  # IVF buckets, shared centroid stage + exact re-rank
+    "ivf_cell_balance",  # argmax-only use of the shared centroid stage
+    "sq8_topk",  # int8 integer-dot top-k
+    "pq_adc_topk",  # PQ lookup-table top-k
 ]
 
 

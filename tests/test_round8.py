@@ -2,8 +2,6 @@
 co-purchase edge-stage single-exchange rewrite, localkmeans sample
 de-bias + repair fixes."""
 
-import os
-
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -35,6 +33,7 @@ def test_pagerank_gate_modes_identical(spark, monkeypatch):
     """Both Pregel layouts produce the identical exact-decimal ranks
     (sum order cannot matter: decimal adds are exact)."""
     from porcupine_spark.functions import driverstate
+    from porcupine_spark.operators import components
     from porcupine_spark.operators.components import pagerank_scaled
 
     monkeypatch.setattr(driverstate, "DRIVER_STATE_MAX_ROWS", 0)
@@ -43,18 +42,10 @@ def test_pagerank_gate_modes_identical(spark, monkeypatch):
     edges = spark.createDataFrame(
         [(a, b) for a, b in rows if a != b], "src long, dst long"
     )
-    key = "PORCUPINE_SPARK_PREGEL_BROADCAST_MAX_NODES"
-    old = os.environ.get(key)
-    try:
-        os.environ[key] = "1000000"
-        bc = {(r.node, r.rank_scaled) for r in pagerank_scaled(spark, edges).collect()}
-        os.environ[key] = "0"  # force the co-partitioned layout
-        cp = {(r.node, r.rank_scaled) for r in pagerank_scaled(spark, edges).collect()}
-    finally:
-        if old is None:
-            os.environ.pop(key, None)
-        else:
-            os.environ[key] = old
+    monkeypatch.setattr(components, "PREGEL_BROADCAST_MAX_NODES", 1_000_000)
+    bc = {(r.node, r.rank_scaled) for r in pagerank_scaled(spark, edges).collect()}
+    monkeypatch.setattr(components, "PREGEL_BROADCAST_MAX_NODES", 0)  # force the shuffled layout
+    cp = {(r.node, r.rank_scaled) for r in pagerank_scaled(spark, edges).collect()}
     assert bc == cp and len(bc) > 0
 
 
