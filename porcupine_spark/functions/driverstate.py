@@ -9,10 +9,16 @@ through Arrow, iterated exactly on the driver, and handed back with
 ``createDataFrame``. Above the gate the caller keeps the checkpoint and
 runs its distributed loop unchanged.
 
-The gate is compared with the observed row count, never set by a conf
-or env var, so a query's plan depends only on its input. A gate of 0
-disables the driver path entirely (tests use it to force the
-distributed loop, empty inputs included).
+A loop whose state derives from small base tables goes one step
+further: ``collect_small_table`` decides from the rows stored in the
+table's parquet footers, before any Spark job, and collects the base
+columns through Arrow, so the caller derives the state in numpy with
+no shuffle at all.
+
+The gate is compared with the observed (or stored) row count, never
+set by a conf or env var, so a query's plan depends only on its input.
+A gate of 0 disables the driver path entirely (tests use it to force
+the distributed loop, empty inputs included).
 """
 
 from __future__ import annotations
@@ -45,6 +51,21 @@ def checkpoint_sized(df: DataFrame, max_rows: int | None = None, size=None):
     if max_rows <= 0 or n > max_rows:
         return ck, n, None
     return ck, n, ck.toArrow()
+
+
+def collect_small_table(spark, sf_dir: str, name: str, cols, max_rows: int | None = None):
+    """Columns ``cols`` of test table ``name`` as a ``pyarrow.Table``
+    (one Arrow collect) when its stored rows are known and at most
+    ``max_rows``, else None, decided before any Spark job.
+    ``max_rows=None`` reads ``DRIVER_STATE_MAX_ROWS`` at call time."""
+    from porcupine_spark.tables import load_table, stored_rows
+
+    if max_rows is None:
+        max_rows = DRIVER_STATE_MAX_ROWS
+    n = stored_rows(sf_dir, name) if max_rows > 0 else None
+    if n is None or n > max_rows:
+        return None
+    return load_table(spark, sf_dir, name, widen=False).select(*cols).toArrow()
 
 
 def dense_ids(a, b):

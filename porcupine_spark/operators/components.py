@@ -12,7 +12,8 @@ shallow (diameter is small), so rounds stay in single digits at any
 corpus size; hot components behave like any skewed agg key (AQE/salt).
 Small edge lists skip the rounds: see ``functions/driverstate.py``,
 whose gate also routes k-core and PageRank to exact driver loops, and
-below which ``dedup_clusters`` builds its edges on the driver as well.
+below which ``dedup_clusters``, ``kcore_peel_parts`` and
+``pagerank_supplier_graph`` build their edges on the driver as well.
 
 Oracle: a DuckDB recursive CTE computing min reachable id per node —
 an independent formulation of the same fixpoint.
@@ -66,6 +67,19 @@ def _union_find_components(spark: SparkSession, ids, ia, ib, node_type: str) -> 
         pd.DataFrame({"node": ids, "component": comp}),
         schema=f"node {node_type}, component {node_type}",
     )
+
+
+def _first_of_run(*cols):
+    """Mask of the rows of lexsorted equal-length numpy columns that
+    differ from the row before in any column (the first row included):
+    a sort-based distinct."""
+    import numpy as np
+
+    first = np.zeros(len(cols[0]), dtype=bool)
+    first[:1] = True
+    for c in cols:
+        first[1:] |= c[1:] != c[:-1]
+    return first
 
 
 def connected_components(
@@ -190,14 +204,16 @@ def connected_components(
     """,
     tags=("dedup", "graph", "iterative"),
     doc="Near-dup cluster assignment: word-3-gram Jaccard>=0.05 pairs "
-    "as edges, connected components. The hashed shingle arrays are "
-    "checkpointed once, sized by their total shingle count; up to "
+    "as edges, connected components. The hashed shingle arrays of "
+    "the documents scan (not repartitioned) are checkpointed once, "
+    "sized by their total shingle count; up to "
     f"{driverstate.DRIVER_STATE_MAX_ROWS:,} shingles they are collected "
     "through Arrow, and if the candidate pair count sum C(df_h, 2) "
     "over the informative shingles is also within that gate, overlap, "
     "Jaccard and an exact union-find run in numpy on the driver (one "
     "createDataFrame back). Past either gate the Spark path runs off "
-    "the same checkpoint: inverted-index self-join, then components "
+    "the same checkpoint, repartitioned to the session's parallelism: "
+    "inverted-index self-join, then components "
     "by union-find (edges within the gate) or min-label propagation. "
     "Oracle = recursive-CTE transitive closure, an independent "
     "fixpoint formulation.",
@@ -210,7 +226,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     once either way."""
     from porcupine_spark.tables import load_table
 
-    docs = load_table(spark, sf_dir, "documents")
+    docs = load_table(spark, sf_dir, "documents", widen=False)
     cutoff = dedup.hot_df_cutoff(dedup.corpus_n_docs(spark, sf_dir))
     arrays, _, table = driverstate.checkpoint_sized(
         dedup.hashed_shingle_arrays(docs), size=F.sum(F.size("arr"))
@@ -222,6 +238,10 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         if overlap is not None:
             return _near_dup_components_local(spark, overlap, node_type)
+    # the unwidened scan may be one split: spread the explode and the
+    # self-join over the session's cores (load_table's widening, paid
+    # only past the gates)
+    arrays = arrays.repartition(spark.sparkContext.defaultParallelism)
     edges = dedup.overlap_jaccard(dedup.shingle_overlap(arrays, cutoff))
     return connected_components(edges, "doc_a", "doc_b").select("node", "component")
 
@@ -494,6 +514,71 @@ def _pr_oracle_sql() -> str:
     )
 
 
+def _trade_pairs_local(li, orders, max_rows: int):
+    """The distinct ``(ck, sk)`` of lineitem inner-joined to orders on
+    orderkey, in numpy over the Arrow ``(l_orderkey, l_suppkey)`` and
+    ``(o_orderkey, o_custkey)`` tables: a ``searchsorted`` probe of the
+    sorted ``o_orderkey`` (duplicate keys allowed, NULL keys dropped),
+    then a sort-based distinct. None, leaving the Spark derivation to
+    run, unless the join keys are integers and ck and sk int64 without
+    NULLs and with |key| < 2^62 (the packed ids 2k and 2k+1 then fit
+    in int64; past it the Spark path raises its ANSI overflow error),
+    and unless the join size is within ``max_rows`` (checked before any
+    joined row is built)."""
+    import numpy as np
+    import pyarrow as pa
+
+    ck, sk = orders.column("o_custkey"), li.column("l_suppkey")
+    if not (
+        pa.types.is_integer(li.schema.field("l_orderkey").type)
+        and pa.types.is_integer(orders.schema.field("o_orderkey").type)
+        and pa.types.is_int64(ck.type)
+        and pa.types.is_int64(sk.type)
+        and ck.null_count == sk.null_count == 0
+    ):
+        return None
+    orders, li = orders.drop_null(), li.drop_null()
+    ok, ck = orders.column("o_orderkey").to_numpy(), orders.column("o_custkey").to_numpy()
+    lk, sk = li.column("l_orderkey").to_numpy(), li.column("l_suppkey").to_numpy()
+    if any(((k <= -(2**62)) | (k >= 2**62)).any() for k in (ck, sk)):
+        return None
+    order = np.argsort(ok, kind="stable")
+    ok, ck = ok[order], ck[order]
+    lo = np.searchsorted(ok, lk, "left")
+    hits = np.searchsorted(ok, lk, "right") - lo
+    n = int(hits.sum())
+    if n > max_rows:
+        return None
+    o_pos = np.repeat(lo - (np.cumsum(hits) - hits), hits) + np.arange(n)
+    ck, sk = ck[o_pos], np.repeat(sk, hits)
+    order = np.lexsort((sk, ck))
+    ck, sk = ck[order], sk[order]
+    first = _first_of_run(ck, sk)
+    return ck[first], sk[first]
+
+
+def _supplier_graph_ranks_local(spark: SparkSession, sf_dir: str):
+    """``pagerank_supplier_graph``'s packed-id ranks on the driver when
+    both base tables are within the driver-state gate (decided from
+    their stored rows before any job) and ``_trade_pairs_local``
+    derives the pairs; else None."""
+    import numpy as np
+    import pyarrow as pa
+
+    li = driverstate.collect_small_table(spark, sf_dir, "lineitem", ("l_orderkey", "l_suppkey"))
+    if li is None:
+        return None
+    orders = driverstate.collect_small_table(spark, sf_dir, "orders", ("o_orderkey", "o_custkey"))
+    if orders is None:
+        return None
+    pairs = _trade_pairs_local(li, orders, driverstate.DRIVER_STATE_MAX_ROWS)
+    if pairs is None:
+        return None
+    c, s = pairs[0] * 2, pairs[1] * 2 + 1
+    edges = pa.table({"src": np.concatenate([c, s]), "dst": np.concatenate([s, c])})
+    return _pagerank_local(spark, edges, "bigint", PR_ITERS)
+
+
 @query(
     "pagerank_supplier_graph",
     None,  # assigned below (unrolled-iteration SQL)
@@ -505,23 +590,21 @@ def _pr_oracle_sql() -> str:
     f"1e12 - truncating-division arithmetic makes every iterate "
     f"bit-identical across engines, so an ITERATIVE GRAPH ALGORITHM "
     f"gets a full hash oracle (unrolled-CTE formulation) instead of "
-    f"the usual rows-only check. Up to {driverstate.DRIVER_STATE_MAX_ROWS:,} edges "
-    f"the edge list is checkpointed once, collected through Arrow and "
-    f"iterated on the driver in exact int64 (the same truncating "
-    f"divisions); above that gate each iteration is one join + one "
-    f"aggregate (the Pregel shuffle shape), lineage truncated per round "
-    f"via localCheckpoint.",
+    f"the usual rows-only check. When lineitem and orders each store "
+    f"at most {driverstate.DRIVER_STATE_MAX_ROWS:,} rows (read from the "
+    f"parquet footers before any job), their key columns come back in "
+    f"one Arrow collect each and the whole query runs on the driver: a "
+    f"numpy searchsorted join on orderkey (its size also within that "
+    f"gate), a sort-based distinct, packed int64 ids and the "
+    f"iterations in exact int64 (the same truncating divisions). "
+    f"Otherwise the trade edges are derived in Spark and checkpointed "
+    f"once; up to the gate they are iterated on the driver, above it "
+    f"each iteration is one join + one aggregate (the Pregel shuffle "
+    f"shape), lineage truncated per round via localCheckpoint.",
 )
 def pagerank_supplier_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     from porcupine_spark.tables import load_table
 
-    li = load_table(spark, sf_dir, "lineitem")
-    orders = load_table(spark, sf_dir, "orders")
-    pairs = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .select(F.col("o_custkey").alias("ck"), F.col("l_suppkey").alias("sk"))
-        .distinct()
-    )
     # node ids are PACKED LONGS inside the loop (customer 2k, supplier
     # 2k+1), not 'c:<k>'/'s:<k>' strings: the per-iteration shuffle rows
     # are (node, rank) pairs, so with string ids the shuffle mass is
@@ -531,15 +614,24 @@ def pagerank_supplier_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 10.0x, avg key bytes 11.1 -> 19.1 = 1.71x). Fixed-width longs make
     # shuffle mass track EDGE COUNT alone; labels are restored by one
     # final projection that never shuffles.
-    edges = pairs.select(
-        (F.col("ck") * 2).alias("src"), (F.col("sk") * 2 + 1).alias("dst")
-    ).unionByName(
-        pairs.select(
-            (F.col("sk") * 2 + 1).alias("src"), (F.col("ck") * 2).alias("dst")
+    ranked = _supplier_graph_ranks_local(spark, sf_dir)
+    if ranked is None:
+        li = load_table(spark, sf_dir, "lineitem")
+        orders = load_table(spark, sf_dir, "orders")
+        pairs = (
+            li.join(orders, li.l_orderkey == orders.o_orderkey)
+            .select(F.col("o_custkey").alias("ck"), F.col("l_suppkey").alias("sk"))
+            .distinct()
         )
-    )
-    # pairs is already distinct and the two directions are disjoint
-    ranked = pagerank_scaled(spark, edges, edges_distinct=True)
+        edges = pairs.select(
+            (F.col("ck") * 2).alias("src"), (F.col("sk") * 2 + 1).alias("dst")
+        ).unionByName(
+            pairs.select(
+                (F.col("sk") * 2 + 1).alias("src"), (F.col("ck") * 2).alias("dst")
+            )
+        )
+        # pairs is already distinct and the two directions are disjoint
+        ranked = pagerank_scaled(spark, edges, edges_distinct=True)
     return ranked.select(
         F.when(
             F.col("node") % 2 == 0,
@@ -667,6 +759,43 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("support") >= TRI_MIN_SUPPORT)
         .select("u", "v")
     )
+
+
+def _copurchase_edges_local(items, max_pairs: int):
+    """``_copurchase_edges`` in numpy over an Arrow ``(l_orderkey,
+    l_partkey)`` table: ``(u, v)`` arrays, or None for non-integer keys
+    or when the within-order pair count sum C(k, 2) over the distinct
+    items exceeds ``max_pairs`` (checked before any pair is built).
+    Rows with a NULL key drop out, as the Spark join and ``u < v`` drop
+    them."""
+    import numpy as np
+    import pyarrow as pa
+
+    if not all(pa.types.is_integer(f.type) for f in items.schema):
+        return None
+    items = items.drop_null()
+    ok = items.column("l_orderkey").to_numpy()
+    pk = items.column("l_partkey").to_numpy()
+    order = np.lexsort((pk, ok))
+    ok, pk = ok[order], pk[order]
+    first = _first_of_run(ok, pk)
+    ok, pk = ok[first], pk[first]
+    starts = np.flatnonzero(_first_of_run(ok))
+    sizes = np.diff(np.r_[starts, len(ok)])
+    n_pairs = int((sizes * (sizes - 1) // 2).sum())
+    if n_pairs > max_pairs:
+        return None
+    # each item pairs with the larger parts after it in its order
+    after = np.repeat(starts + sizes, sizes) - 1 - np.arange(len(ok))
+    left = np.repeat(np.arange(len(ok)), after)
+    right = left + 1 + np.arange(n_pairs) - np.repeat(np.cumsum(after) - after, after)
+    u, v = pk[left], pk[right]
+    order = np.lexsort((v, u))
+    u, v = u[order], v[order]
+    starts = np.flatnonzero(_first_of_run(u, v))
+    support = np.diff(np.r_[starts, len(u)])
+    keep = starts[support >= TRI_MIN_SUPPORT]
+    return u[keep], v[keep]
 
 
 def triangle_counts(edges: DataFrame, scale: int = TRI_LCC_SCALE) -> DataFrame:
@@ -1024,17 +1153,33 @@ def _kcore_oracle_sql(k: int = KCORE_K, rounds: int = KCORE_ROUNDS) -> str:
     f"survivors are the {KCORE_K}-core. Fixed round budget on both "
     f"engines makes an ITERATIVE fixpoint exact-hash-oracled (the "
     f"pagerank recipe); tests assert convergence inside the budget so "
-    f"the result IS the true k-core on real inputs. Up to "
-    f"{driverstate.DRIVER_STATE_MAX_ROWS:,} edges the edge list is "
-    f"checkpointed once, collected through Arrow and peeled on the "
-    f"driver (numpy bincount degrees); above that gate each round is "
-    f"one degree agg + two anti-join filters on the shrinking edge "
-    f"set, lineage truncated per round.",
+    f"the result IS the true k-core on real inputs. When lineitem "
+    f"stores at most {driverstate.DRIVER_STATE_MAX_ROWS:,} rows (read "
+    f"from the parquet footers before any job), its (orderkey, "
+    f"partkey) columns come back in one Arrow collect and the edges "
+    f"are derived in numpy (distinct items, the u < v pairs of each "
+    f"order when their count sum C(k, 2) is within that gate, a "
+    f"sort-based support count), then peeled on the driver (numpy "
+    f"bincount degrees). Otherwise the edges are derived in Spark and "
+    f"checkpointed once; up to the gate they are peeled on the "
+    f"driver, above it each round is one degree agg + two anti-join "
+    f"filters on the shrinking edge set, lineage truncated per round.",
 )
 def kcore_peel_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return kcore_peel(_copurchase_edges(spark, sf_dir)).withColumnRenamed(
-        "node", "part_key"
-    )
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_type
+
+    gate = driverstate.DRIVER_STATE_MAX_ROWS
+    items = driverstate.collect_small_table(spark, sf_dir, "lineitem", ("l_orderkey", "l_partkey"))
+    edges = None if items is None else _copurchase_edges_local(items, gate)
+    if edges is None:
+        peeled = kcore_peel(_copurchase_edges(spark, sf_dir))
+    else:
+        node_type = from_arrow_type(items.schema.field("l_partkey").type).simpleString()
+        peeled = _kcore_local(
+            spark, pa.table(dict(zip("uv", edges))), node_type, KCORE_K, KCORE_ROUNDS
+        )
+    return peeled.withColumnRenamed("node", "part_key")
 
 
 _REG2["kcore_peel_parts"].oracle = _kcore_oracle_sql()

@@ -27,8 +27,7 @@ from pyspark.sql import functions as F
 from porcupine_spark.functions import seq1, word_ngrams
 from porcupine_spark.operators.corpus import SQL_SPLIT_CTE, split_col
 from porcupine_spark.plans.registry import REGISTRY, query
-from porcupine_spark.serials import LRUMemo, source_stamp
-from porcupine_spark.tables import load_table, table_path
+from porcupine_spark.tables import load_table, stored_rows
 
 N_PERMS = 8  # minhash permutations
 N_BANDS = 4  # LSH bands (2 rows each)
@@ -162,26 +161,14 @@ SQL_SHINGLE_OVERLAP = f"""{SQL_SHINGLES},
       GROUP BY a.doc_id, b.doc_id
     )"""
 
-# one count() per documents file state — the cutoff scalar is a
-# parquet metadata count, but re-running it per query build is still
-# one job each; every dedup builder shares this memo instead. Keyed on
-# the table's path and stamp (serials.source_stamp: newest mtime_ns and
-# total bytes), so a documents table rewritten mid-session is counted
-# afresh — a stale count near the cutoff boundary would diverge from
-# the oracle's live (SELECT COUNT(*) FROM documents). A path that
-# cannot be stat'ed is counted on every call.
-_N_DOCS_CACHE = LRUMemo(32)
-
-
 def corpus_n_docs(spark: SparkSession, sf_dir: str) -> int:
-    path = table_path(sf_dir, "documents")
-    key = (path, source_stamp(path))
-    n = _N_DOCS_CACHE.get(key)
-    if n is None:
-        n = load_table(spark, sf_dir, "documents").count()
-        if key[1] is not None:
-            _N_DOCS_CACHE.put(key, n)
-    return n
+    """The documents row count behind the hot-shingle cutoff: the rows
+    stored in the table's parquet footers (``tables.stored_rows``,
+    memoized on the file's path and stamp, so a rewritten table is
+    counted afresh), and a Spark ``count()`` only where the footers
+    cannot give it (a path that cannot be stat'ed)."""
+    n = stored_rows(sf_dir, "documents")
+    return load_table(spark, sf_dir, "documents").count() if n is None else n
 
 
 def shingle_overlap(arrays: DataFrame, df_cutoff: int) -> DataFrame:

@@ -2022,11 +2022,21 @@ _REG["lsh_recall_at_k"].oracle = sql_recall_vs_exact(
     "assignment everything is |cells|-sized.",
 )
 def ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from porcupine_spark.functions.concurrent import run_concurrently
+
     emb = load_table(spark, sf_dir, "embeddings")
     emb_raw = load_table(spark, sf_dir, "embeddings", widen=False)
-    cloc = emb_raw.filter(F.col("vec_id") < IVF_CENTROIDS).select("vec_id", "embedding").toPandas()
-    vecs = _exact_norms(
-        emb_raw, keep=[("vec_id", "long"), ("embedding", "array<float>")]
+    # the norms table feeds both the candidate join and the centroid
+    # side, and the centroid filter cannot pass the Python UDF:
+    # checkpoint it so the Arrow norm stage runs over the corpus once
+    # (as in ivf_topk), overlapped with the centroid collect
+    cloc, vecs = run_concurrently(
+        lambda: emb_raw.filter(F.col("vec_id") < IVF_CENTROIDS)
+        .select("vec_id", "embedding")
+        .toPandas(),
+        lambda: _exact_norms(
+            emb_raw, keep=[("vec_id", "long"), ("embedding", "array<float>")]
+        ).localCheckpoint(eager=True),
     )
     assigned = exact_centroid_ranks(emb, vecs, cloc).filter(F.col("arn") == 1)
     cells = assigned.groupBy("cid").agg(F.count(F.lit(1)).alias("n_vectors"))

@@ -32,6 +32,12 @@ URIs) are not memoized. Writers do not seed the memo: a written
 frame's schema can differ from what inference returns (a partition
 column comes back with an inferred type). The memo holds metadata only
 and is an LRU of ``SCHEMA_MEMO_SIZE`` entries.
+
+Row-count memo. ``Serial.stored_rows`` gives the rows a parquet
+dataset stores, summed from its file footers (no Spark job, no data
+page read), memoized the same way under (path, ``source_stamp``).
+Callers decide on it before any job whether a table is small enough
+to collect whole.
 """
 
 from __future__ import annotations
@@ -109,6 +115,26 @@ class Serial:
         opts = tuple(sorted((k, str(v)) for k, v in self.options.items()))
         confs = tuple(spark.conf.get(c, None) for c in _SCHEMA_CONFS)
         return (self.format, opts, path, stamp, confs)
+
+    def stored_rows(self, path: str) -> int | None:
+        """Rows stored under ``path``, from the parquet footers of the
+        files a read would list (metadata only; see the module
+        docstring). None for a path that cannot be stat'ed, a
+        non-parquet serial, a serial with read options (a path filter
+        could list other files) or a ``post_read`` transform (which
+        could change the row count)."""
+        if self.format != "parquet" or self.options or self.post_read is not None:
+            return None
+        stamp = source_stamp(path)
+        if stamp is None:
+            return None
+        key = (path, stamp)
+        n = _ROWS_MEMO.get(key)
+        if n is None:
+            n = _parquet_footer_rows(path[7:] if path.startswith("file://") else path)
+            if n is not None:
+                _ROWS_MEMO.put(key, n)
+        return n
 
     def write(
         self, df: DataFrame, path: str, mode: str = "overwrite", partition_by: str | None = None
@@ -188,6 +214,47 @@ _SCHEMA_CONFS = (
 )
 SCHEMA_MEMO_SIZE = 256
 _SCHEMA_MEMO = LRUMemo(SCHEMA_MEMO_SIZE)
+_ROWS_MEMO = LRUMemo(SCHEMA_MEMO_SIZE)
+
+
+def _listed(name: str) -> bool:
+    """Whether a file-source listing keeps a file or directory name:
+    Spark skips ``_``-prefixed names (but ``<col>=<v>`` partition
+    directories), ``.``-prefixed ones and in-flight copies."""
+    return not (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def _parquet_footer_rows(path: str) -> int | None:
+    """Sum of the footer row counts of the parquet file ``path`` or of
+    every listed file under the directory ``path``. None when a footer
+    cannot be read, or when the files do not all sit at one depth of
+    ``<col>=<v>`` partition directories: what the read makes of such a
+    layout is the Spark read's to decide."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    files = [path]
+    if os.path.isdir(path):
+        files, depths = [], set()
+        for dirpath, dirs, names in os.walk(path):
+            dirs[:] = [d for d in dirs if _listed(d)]
+            listed = [os.path.join(dirpath, f) for f in names if _listed(f)]
+            if listed:
+                parts = [] if dirpath == path else os.path.relpath(dirpath, path).split(os.sep)
+                if not all("=" in p for p in parts):
+                    return None
+                depths.add(len(parts))
+                files += listed
+        if len(depths) > 1:
+            return None
+    try:
+        return sum(pq.read_metadata(f).num_rows for f in files)
+    except (OSError, pa.ArrowException):
+        return None
 
 
 # the built-in serial constructors (reference: SerializationMethod.hs)

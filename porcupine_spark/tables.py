@@ -61,21 +61,30 @@ def _convert_events(df: DataFrame) -> DataFrame:
     return df
 
 
+def _table_serial(name: str):
+    """The serial of a test table: parquet, with the events post-read
+    conversion riding its rmap hook."""
+    serial = parquet_serial()
+    return serial.rmap(_convert_events) if name == "events" else serial
+
+
 def _bound_table(sf_dir: str, name: str):
     """One test table as a bound engine catalog — every registered
     query reads through the engine's resource layer (Dataset/serials/
     binding validation), not raw spark.read. The serial's schema memo
     (serials.py) types the read, so once the file has been seen it
-    infers nothing; the events post-read conversion rides the serial's
-    rmap hook."""
+    infers nothing."""
     from porcupine_spark.catalog import Catalog, Dataset
 
-    serial = parquet_serial()
-    if name == "events":
-        serial = serial.rmap(_convert_events)
-    return Catalog([Dataset.source(name, SerialSet(serial))]).bind(
+    return Catalog([Dataset.source(name, SerialSet(_table_serial(name)))]).bind(
         sf_dir, {name: table_path(sf_dir, name)}
     )
+
+
+def stored_rows(sf_dir: str, name: str) -> int | None:
+    """The rows a test table stores, from its parquet footers without a
+    Spark job (``Serial.stored_rows``); None where that is unknown."""
+    return _table_serial(name).stored_rows(table_path(sf_dir, name))
 
 
 # sessions already confed, by JVM session UUID: a new session can

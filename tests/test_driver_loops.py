@@ -1,13 +1,16 @@
 """The four driver loops (connected components, k-core, PageRank, BPE)
 and the near-duplicate clustering on both paths: the exact driver path
 below the ``driverstate`` gate and the distributed rounds above it
-(forced here with a gate of 0)."""
+(forced here with a gate of 0); the numpy edge derivations of
+``kcore_peel_parts`` and ``pagerank_supplier_graph`` against their
+Spark twins; and the stored-row-count memo that gates them."""
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from porcupine_spark import serials, tables
 from porcupine_spark.functions import driverstate
 from porcupine_spark.operators import components, corpus, dedup
 
@@ -351,10 +354,10 @@ def test_bpe_corpus_without_pairs_has_no_merges(spark, tmp_path, monkeypatch, di
 @pytest.mark.parametrize(
     "name, bound",
     [
-        ("pagerank_supplier_graph", 8),
-        ("kcore_peel_parts", 8),
+        ("pagerank_supplier_graph", 2),
+        ("kcore_peel_parts", 1),
         ("bpe_encode_tokens", 8),
-        ("dedup_clusters", 4),
+        ("dedup_clusters", 2),
     ],
 )
 def test_driver_loop_build_job_bounds(spark, sf_dir, jobs_so_far, name, bound):
@@ -425,3 +428,339 @@ def test_checkpoint_sized_observes_size_aggregate(spark):
     assert n == 20 and table is None and ck.count() == 10
     ck, n, table = driverstate.checkpoint_sized(df.where(F.lit(False)), 1, size=size)
     assert n == 0 and table.num_rows == 0
+
+
+def test_kcore_peel_planted(spark, monkeypatch):
+    """K4 with a pendant chain: the chain peels layer by layer, K4 is
+    the 3-core (distributed rounds)."""
+    monkeypatch.setattr(driverstate, "DRIVER_STATE_MAX_ROWS", 0)
+    k4 = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
+    chain = [(4, 10), (10, 11), (11, 12)]
+    edges = spark.createDataFrame(k4 + chain, "u long, v long")
+    out = {r.node: r for r in components.kcore_peel(edges, k=3, rounds=6).collect()}
+    for n in (1, 2, 3, 4):
+        assert out[n].in_core and out[n].removed_round == 0
+    # whole chain has degree < 3 from round 1
+    for n in (10, 11, 12):
+        assert not out[n].in_core and out[n].removed_round == 1
+
+
+def test_kcore_peel_converges_within_budget(spark, sf_dir, monkeypatch):
+    """On the real co-purchase graph the fixed budget IS the fixpoint:
+    two extra rounds change nothing (so the result is the true k-core,
+    checked on the distributed rounds)."""
+    monkeypatch.setattr(driverstate, "DRIVER_STATE_MAX_ROWS", 0)
+    e = components._copurchase_edges(spark, sf_dir)
+    rounds = components.KCORE_ROUNDS
+    base = {tuple(r) for r in components.kcore_peel(e, rounds=rounds).collect()}
+    more = {tuple(r) for r in components.kcore_peel(e, rounds=rounds + 2).collect()}
+    # survivors identical; removed rounds identical for all removed nodes
+    assert {t for t in base if t[1] == 0} == {t for t in more if t[1] == 0}
+    assert {t for t in base if 0 < t[1] < rounds} == {t for t in more if 0 < t[1] < rounds}
+
+
+def _write_trade(path, items, orders, key_type=pa.int64()):
+    """lineitem ``(l_orderkey, l_partkey, l_suppkey)`` and orders
+    ``(o_orderkey, o_custkey)`` tables under ``path`` (None is NULL)."""
+    path.mkdir(exist_ok=True)
+
+    def col(rows, i, t):
+        return pa.array([r[i] for r in rows], t)
+
+    pq.write_table(
+        pa.table(
+            {
+                "l_orderkey": col(items, 0, pa.int64()),
+                "l_partkey": col(items, 1, key_type),
+                "l_suppkey": col(items, 2, pa.int64()),
+            }
+        ),
+        str(path / "lineitem.parquet"),
+    )
+    pq.write_table(
+        pa.table(
+            {"o_orderkey": col(orders, 0, pa.int64()), "o_custkey": col(orders, 1, pa.int64())}
+        ),
+        str(path / "orders.parquet"),
+    )
+    return str(path)
+
+
+def _basket_items():
+    """Twenty orders of 2-5 parts out of 9 (so many pairs repeat and a
+    3-core exists) and two orders pairing part 0 with part 20 (a
+    pendant that peels), suppliers part-dependent."""
+    import numpy as np
+
+    rng = np.random.default_rng(5)
+    baskets = [rng.choice(9, int(rng.integers(2, 6)), replace=False) for _ in range(20)]
+    baskets += [[0, 20], [20, 0]]
+    return [(ok, int(pk), int(pk) % 4 + 100) for ok, b in enumerate(baskets, 1) for pk in b]
+
+
+_ITEMS = _basket_items()
+_ORDERS = [(ok, ok % 6) for ok in range(1, 23)]
+_BIG = 2**62
+
+# planted (lineitem, orders) tables for the two numpy derivations
+TRADE_TABLES = {
+    "basket": (_ITEMS, _ORDERS),
+    "null_keys": (
+        _ITEMS + [(None, 1, 100), (3, None, 101), (None, None, 102), (25, 2, 100)],
+        _ORDERS + [(None, 4), (25, 3)],
+    ),
+    "duplicate_rows": (_ITEMS + _ITEMS[::3] + _ITEMS[:2], _ORDERS),
+    "duplicate_orderkey": (_ITEMS, _ORDERS + [(ok, ok % 6 + 10) for ok in range(1, 23, 4)]),
+    "single_item_orders": (
+        _ITEMS + [(ok, ok % 9, 103) for ok in range(30, 40)],
+        _ORDERS + [(ok, 7) for ok in range(30, 40)],
+    ),
+    "orphan_rows": (_ITEMS + [(50, 1, 100), (50, 2, 100)], _ORDERS + [(60, 1)]),
+    "large_part_keys": ([(ok, pk + 2**63 - 30, sk) for ok, pk, sk in _ITEMS], _ORDERS),
+    "empty": ([], []),
+}
+
+
+def _trade_rows(spark, sf):
+    kcore = sorted(tuple(r) for r in components.kcore_peel_parts(spark, sf).collect())
+    ranks = sorted(tuple(r) for r in components.pagerank_supplier_graph(spark, sf).collect())
+    return kcore, ranks
+
+
+def _spy_derivations(monkeypatch):
+    """Record which k-core and PageRank edge derivations run: the
+    collected table sizes and the Spark derivations' calls."""
+    seen = {"collected": [], "spark": []}
+    real_collect = driverstate.collect_small_table
+    real_edges, real_pr = components._copurchase_edges, components.pagerank_scaled
+
+    def collect(spark, sf_dir, name, cols, max_rows=None):
+        out = real_collect(spark, sf_dir, name, cols, max_rows)
+        seen["collected"].append((name, None if out is None else out.num_rows))
+        return out
+
+    def edges(spark, sf_dir):
+        seen["spark"].append("kcore")
+        return real_edges(spark, sf_dir)
+
+    def pagerank(*args, **kwargs):
+        seen["spark"].append("pagerank")
+        return real_pr(*args, **kwargs)
+
+    monkeypatch.setattr(driverstate, "collect_small_table", collect)
+    monkeypatch.setattr(components, "_copurchase_edges", edges)
+    monkeypatch.setattr(components, "pagerank_scaled", pagerank)
+    return seen
+
+
+@pytest.mark.parametrize("case", sorted(TRADE_TABLES))
+def test_trade_graphs_planted_paths_agree(spark, tmp_path, monkeypatch, case):
+    """kcore_peel_parts and pagerank_supplier_graph give one rowset from
+    the numpy derivations and from the gate-0 Spark path for NULL keys,
+    duplicate rows, duplicate o_orderkey, single-item orders, rows
+    without a join partner, part keys near 2^63 and empty tables."""
+    sf = _write_trade(tmp_path, *TRADE_TABLES[case])
+    with monkeypatch.context() as m:
+        seen = _spy_derivations(m)
+        local = _trade_rows(spark, sf)
+    assert seen["spark"] == []
+    with monkeypatch.context() as m:
+        _force_distributed(m)
+        assert _trade_rows(spark, sf) == local
+    if case == "empty":
+        assert local == ([], [])
+    else:
+        assert all(local)
+        assert any(r[2] for r in local[0]) and any(not r[2] for r in local[0])
+
+
+def test_kcore_int_part_keys_keep_their_type(spark, tmp_path):
+    sf = _write_trade(tmp_path, _ITEMS, _ORDERS, key_type=pa.int32())
+    assert dict(components.kcore_peel_parts(spark, sf).dtypes)["part_key"] == "int"
+
+
+def test_kcore_pair_gate_falls_back_after_collect(spark, tmp_path, monkeypatch):
+    """Ten orders of the same six parts: 60 stored rows, 150 within-order
+    pairs. A gate of 100 collects lineitem, then the pair count sends
+    the derivation to Spark; the rowset is the gate-0 one."""
+    items = [(ok, pk, 100) for ok in range(10) for pk in range(6)]
+    sf = _write_trade(tmp_path, items, [(ok, 1) for ok in range(10)])
+    with monkeypatch.context() as m:
+        _force_distributed(m)
+        expected = sorted(tuple(r) for r in components.kcore_peel_parts(spark, sf).collect())
+    seen = _spy_derivations(monkeypatch)
+    monkeypatch.setattr(driverstate, "DRIVER_STATE_MAX_ROWS", 100)
+    got = sorted(tuple(r) for r in components.kcore_peel_parts(spark, sf).collect())
+    assert got == expected == [(pk, 0, True) for pk in range(6)]
+    assert seen == {"collected": [("lineitem", 60)], "spark": ["kcore"]}
+
+
+def test_pagerank_join_gate_falls_back_after_collect(spark, tmp_path, monkeypatch):
+    """Ten lineitem rows and ten orders rows on one orderkey: a join of
+    100 rows. A gate of 50 collects both tables, then the join size
+    sends the derivation to Spark; the rowset is the gate-0 one."""
+    sf = _write_trade(
+        tmp_path, [(1, 1, 100 + i) for i in range(10)], [(1, 10 + i) for i in range(10)]
+    )
+    with monkeypatch.context() as m:
+        _force_distributed(m)
+        expected = sorted(tuple(r) for r in components.pagerank_supplier_graph(spark, sf).collect())
+    seen = _spy_derivations(monkeypatch)
+    monkeypatch.setattr(driverstate, "DRIVER_STATE_MAX_ROWS", 50)
+    got = sorted(tuple(r) for r in components.pagerank_supplier_graph(spark, sf).collect())
+    assert got == expected and len(got) == 20
+    assert seen == {"collected": [("lineitem", 10), ("orders", 10)], "spark": ["pagerank"]}
+
+
+@pytest.mark.parametrize("key", [_BIG, -_BIG, 2**63 - 1], ids=["2^62", "-2^62", "max"])
+@pytest.mark.parametrize("distributed", [False, True], ids=["driver", "distributed"])
+def test_pagerank_packed_id_overflow_surfaces(spark, tmp_path, monkeypatch, key, distributed):
+    """A customer key with |key| >= 2^62 has no packed id 2k within
+    int64: the numpy path steps aside and the Spark path raises its
+    ANSI overflow error (-2^62 still packs: 2k = -2^63)."""
+    if distributed:
+        _force_distributed(monkeypatch)
+    seen = _spy_derivations(monkeypatch)
+    sf = _write_trade(tmp_path, _ITEMS, _ORDERS[:-1] + [(22, key)])
+    if key == -_BIG:
+        rows = components.pagerank_supplier_graph(spark, sf).collect()
+        assert f"c:{key}" in {r.node for r in rows}
+    else:
+        with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
+            components.pagerank_supplier_graph(spark, sf).collect()
+    assert seen["spark"] == ["pagerank"]
+
+
+def test_copurchase_edges_local_matches_reference_loop():
+    """Random item tables with NULL and duplicate keys against a plain
+    per-order loop over every pair of distinct parts."""
+    import itertools
+    from collections import Counter
+
+    import numpy as np
+
+    rng = np.random.default_rng(3)
+    for _ in range(20):
+        n = int(rng.integers(0, 60))
+        ok = [None if rng.random() < 0.05 else int(rng.integers(0, 10)) for _ in range(n)]
+        pk = [None if rng.random() < 0.05 else int(rng.integers(0, 12)) for _ in range(n)]
+        baskets: dict = {}
+        for o, p in zip(ok, pk):
+            if o is not None and p is not None:
+                baskets.setdefault(o, set()).add(p)
+        support = Counter(
+            pair for b in baskets.values() for pair in itertools.combinations(sorted(b), 2)
+        )
+        want = sorted(p for p, c in support.items() if c >= components.TRI_MIN_SUPPORT)
+        t = pa.table(
+            {"l_orderkey": pa.array(ok, pa.int64()), "l_partkey": pa.array(pk, pa.int64())}
+        )
+        n_pairs = sum(len(b) * (len(b) - 1) // 2 for b in baskets.values())
+        assert components._copurchase_edges_local(t, n_pairs - 1 if n_pairs else -1) is None
+        u, v = components._copurchase_edges_local(t, n_pairs)
+        assert list(zip(u.tolist(), v.tolist())) == want
+
+
+def test_trade_pairs_local_matches_reference_loop():
+    """Random lineitem and orders tables with NULL join keys and
+    duplicate o_orderkey against a nested-loop join."""
+    import numpy as np
+
+    rng = np.random.default_rng(9)
+
+    def keys(n):
+        return [None if rng.random() < 0.1 else int(rng.integers(0, 8)) for _ in range(n)]
+
+    def table(**cols):
+        return pa.table({c: pa.array(v, pa.int64()) for c, v in cols.items()})
+
+    for _ in range(20):
+        lk, ok = keys(int(rng.integers(0, 30))), keys(int(rng.integers(0, 12)))
+        sk = [int(x) for x in rng.integers(-5, 5, len(lk))]
+        ck = [int(x) for x in rng.integers(-5, 5, len(ok))]
+        joined = [
+            (c, s) for lo, s in zip(lk, sk) for oo, c in zip(ok, ck) if lo is not None and lo == oo
+        ]
+        li = table(l_orderkey=lk, l_suppkey=sk)
+        orders = table(o_orderkey=ok, o_custkey=ck)
+        if joined:
+            assert components._trade_pairs_local(li, orders, len(joined) - 1) is None
+        c, s = components._trade_pairs_local(li, orders, len(joined))
+        assert list(zip(c.tolist(), s.tolist())) == sorted(set(joined))
+
+
+def _write_rows(path, n):
+    pq.write_table(pa.table({"x": pa.array(range(n), pa.int64())}), str(path))
+
+
+def test_stored_rows_follows_a_rewritten_file(tmp_path):
+    path = tmp_path / "t.parquet"
+    _write_rows(path, 3)
+    assert serials.parquet_serial().stored_rows(str(path)) == 3
+    _write_rows(path, 5)
+    assert serials.parquet_serial().stored_rows(str(path)) == 5
+    assert serials.parquet_serial().stored_rows(f"file://{path}") == 5
+
+
+def test_stored_rows_sums_a_directory_of_parts(spark, tmp_path):
+    """Every listed part file counts, in the partition directories too;
+    the files and directories a Spark listing skips (``_``/``.``
+    prefixed) do not. The sum is the Spark count."""
+    d = tmp_path / "t.parquet"
+    for sub in ("k=1", "k=2", "_temporary"):
+        (d / sub).mkdir(parents=True)
+    _write_rows(d / "k=1" / "part-0.parquet", 2)
+    _write_rows(d / "k=1" / "part-1.parquet", 3)
+    _write_rows(d / "k=2" / "part-0.parquet", 4)
+    _write_rows(d / "_temporary" / "part-2.parquet", 7)
+    _write_rows(d / "k=2" / ".part-3.parquet", 11)
+    (d / "_SUCCESS").write_text("")
+    serial = serials.parquet_serial()
+    assert serial.stored_rows(str(d)) == 9 == serial.read(spark, str(d)).count()
+    flat = tmp_path / "flat.parquet"
+    flat.mkdir()
+    _write_rows(flat / "part-0.parquet", 2)
+    _write_rows(flat / "part-1.parquet", 5)
+    assert serial.stored_rows(str(flat)) == 7 == serial.read(spark, str(flat)).count()
+
+
+def test_stored_rows_unknown_gives_none(tmp_path):
+    """None where the footers cannot give the rows a read returns: a
+    path that cannot be stat'ed, a non-parquet serial, a post-read
+    transform, a file that is not parquet."""
+    path = tmp_path / "t.parquet"
+    _write_rows(path, 3)
+    serial = serials.parquet_serial()
+    assert serial.stored_rows(str(tmp_path / "missing.parquet")) is None
+    assert serial.stored_rows("s3a://bucket/t.parquet") is None
+    assert serials.orc_serial().stored_rows(str(path)) is None
+    assert serial.rmap(lambda df: df.limit(1)).stored_rows(str(path)) is None
+    (tmp_path / "bad.parquet").write_text("not parquet")
+    assert serial.stored_rows(str(tmp_path / "bad.parquet")) is None
+    # part files beside partition directories, or under a directory
+    # that is not one: which of them a read lists is Spark's to decide
+    mixed = tmp_path / "mixed.parquet"
+    (mixed / "k=1").mkdir(parents=True)
+    _write_rows(mixed / "part-0.parquet", 2)
+    _write_rows(mixed / "k=1" / "part-1.parquet", 3)
+    assert serial.stored_rows(str(mixed)) is None
+    nested = tmp_path / "nested.parquet"
+    (nested / "sub").mkdir(parents=True)
+    _write_rows(nested / "sub" / "part-0.parquet", 2)
+    assert serial.stored_rows(str(nested)) is None
+    tables_dir = tmp_path / "sf"
+    tables_dir.mkdir()
+    _write_rows(tables_dir / "events.parquet", 3)
+    _write_rows(tables_dir / "orders.parquet", 4)
+    assert tables.stored_rows(str(tables_dir), "events") is None
+    assert tables.stored_rows(str(tables_dir), "orders") == 4
+
+
+def test_collect_small_table_gates_before_any_job(spark, tmp_path, jobs_so_far):
+    _write_rows(tmp_path / "orders.parquet", 4)
+    sf = str(tmp_path)
+    j0 = jobs_so_far()
+    assert driverstate.collect_small_table(spark, sf, "orders", ["x"], max_rows=3) is None
+    assert driverstate.collect_small_table(spark, sf, "orders", ["x"], max_rows=0) is None
+    assert jobs_so_far() == j0
+    assert driverstate.collect_small_table(spark, sf, "orders", ["x"], max_rows=4).num_rows == 4

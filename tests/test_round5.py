@@ -1,10 +1,10 @@
 """Round-5 additions: triangle counts, the z-order layout audit, DSIR
-lean scores, k-core peeling and the JL distortion audit.
+lean scores and the JL distortion audit.
 
 (The other round-5 items test where they belong: the state-store
-provider in test_streaming.py, the keep-policy broadcast guard in
-test_plans.py, $layers + zip_with in test_catalog.py, IVF persistence
-in test_operators.py.)
+provider in test_streaming.py, k-core peeling in test_driver_loops.py,
+the keep-policy broadcast guard in test_plans.py, $layers + zip_with
+in test_catalog.py, IVF persistence in test_operators.py.)
 """
 
 
@@ -77,62 +77,6 @@ def test_dsir_lean_scores_planted_signal(spark):
     assert out[2].lean_ppm == 1_000_000 and out[2].keep
     assert out[3].lean_ppm == 0 and not out[3].keep
     assert out[4].lean_ppm == 0 and not out[4].keep
-
-
-def test_kcore_peel_planted(spark, monkeypatch):
-    """K4 with a pendant chain: the chain peels layer by layer, K4 is
-    the 3-core (distributed rounds)."""
-    from porcupine_spark.functions import driverstate
-    from porcupine_spark.operators.components import kcore_peel
-
-    monkeypatch.setattr(driverstate, "DRIVER_STATE_MAX_ROWS", 0)
-
-    k4 = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
-    chain = [(4, 10), (10, 11), (11, 12)]
-    edges = spark.createDataFrame(k4 + chain, "u long, v long")
-    out = {r.node: r for r in kcore_peel(edges, k=3, rounds=6).collect()}
-    for n in (1, 2, 3, 4):
-        assert out[n].in_core and out[n].removed_round == 0
-    # whole chain has degree < 3 from round 1
-    for n in (10, 11, 12):
-        assert not out[n].in_core and out[n].removed_round == 1
-
-
-def test_kcore_peel_converges_within_budget(spark, monkeypatch):
-    """On the real co-purchase graph the fixed budget IS the fixpoint:
-    two extra rounds change nothing (so the result is the true k-core,
-    checked on the distributed rounds)."""
-    from pyspark.sql import functions as F
-
-    from porcupine_spark.functions import driverstate
-
-    monkeypatch.setattr(driverstate, "DRIVER_STATE_MAX_ROWS", 0)
-    from porcupine_spark.operators.components import (
-        KCORE_ROUNDS,
-        TRI_MIN_SUPPORT,
-        kcore_peel,
-    )
-    from porcupine_spark.tables import load_table
-
-    li = load_table(spark, "/root/testdata/sf0.001", "lineitem")
-    items = li.select("l_orderkey", "l_partkey").distinct()
-    a = items.select("l_orderkey", F.col("l_partkey").alias("u"))
-    b = items.select("l_orderkey", F.col("l_partkey").alias("v"))
-    e = (
-        a.join(b, "l_orderkey")
-        .where(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).alias("support"))
-        .where(F.col("support") >= TRI_MIN_SUPPORT)
-        .select("u", "v")
-    )
-    base = {tuple(r) for r in kcore_peel(e, rounds=KCORE_ROUNDS).collect()}
-    more = {tuple(r) for r in kcore_peel(e, rounds=KCORE_ROUNDS + 2).collect()}
-    # survivors identical; removed rounds identical for all removed nodes
-    assert {t for t in base if t[1] == 0} == {t for t in more if t[1] == 0}
-    assert {t for t in base if 0 < t[1] < KCORE_ROUNDS} == {
-        t for t in more if 0 < t[1] < KCORE_ROUNDS
-    }
 
 
 def test_jl_distortion_concentrates(spark):

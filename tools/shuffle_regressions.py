@@ -67,7 +67,8 @@ EXPECTED_SUPERLINEAR: dict[str, tuple[float, str]] = {
     "q5_region_revenue": (95.0, "sf0.1 sides all broadcast (0 MB); fact joins shuffle at 10x"),
     "q17_small_quantity_revenue": (70.0, "sf0.1 sides broadcast (0.3 MB); nobcast A/B 8.3->80.8 MB = 9.7x linear"),
     "q18_large_volume_customers": (130.0, "sf0.1 mostly broadcast (1.8 MB); group-filter join shuffles at 10x"),
-    "pagerank_supplier_graph": (350.0, "r7 A/B: edge derivation exactly 10.0x; residual is map-side-combine collapse being MORE effective at sf0.1 (4.6 vs 7.1 B/edge on the node-keyed aggs) — the sf0.1 baseline is sub-linear, agg bytes are capped at E x row-width (linear at scale). String-key inflation was the other half, fixed by packed-long node ids"),
+    "pagerank_supplier_graph": (350.0, "below the driver gate (lineitem and orders each at most DRIVER_STATE_MAX_ROWS stored rows) the join, distinct and iterations run on the driver, so sf0.1 shuffles almost nothing; large 10x growth is a gate crossing onto the Spark derivation and, past the edge gate, the Pregel rounds (r7 A/B of that path: edge derivation exactly 10.0x, packed-long node ids)"),
+    "kcore_peel_parts": (360.0, "below the driver gate (lineitem at most DRIVER_STATE_MAX_ROWS stored rows, its pair count too) the co-purchase edges and the peel run on the driver, so sf0.1 shuffles almost nothing; large 10x growth is a gate crossing onto the Spark edge derivation (the triangle_count_parts base, 240 MB at 10x) and the distributed peel"),
 }
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
