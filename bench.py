@@ -21,10 +21,16 @@ spread = (max - min) / median — so a round-over-round comparison can
 tell signal from a GC hiccup arithmetically instead of forensically
 (VERDICT r6 #1: 19.5s-at-sf0.1 vs 7.0s-at-10x on the same build was
 noise, and it cost a round of analysis).
+
+``--only name,...`` times just the named queries, at the same scale
+dir and with the same run counts; such a partial run prints its line
+but leaves BENCH_DETAIL.json as it is, since that file must cover
+every registered query.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
@@ -45,8 +51,17 @@ EXCLUDE: set[str] = set()
 
 
 def main() -> int:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--only", help="comma-separated query names to time (no BENCH_DETAIL.json)")
+    args = ap.parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
     specs = load_all_plans()
+    names = sorted(set(specs) - EXCLUDE)
+    if args.only is not None:
+        names = [n for n in args.only.split(",") if n]
+        unknown = sorted(set(names) - set(specs))
+        if unknown:
+            ap.error(f"unknown queries: {', '.join(unknown)}")
     spark = get_spark("porcupine_bench")
 
     # Warmup: prime JVM, codegen and the parquet footer cache — and the
@@ -96,11 +111,9 @@ def main() -> int:
         df = None  # noqa: F841 — drop the plan's refs before gc
         return True
 
-    for name, spec in sorted(specs.items()):
-        if name in EXCLUDE:
-            continue
+    for name in names:
         for _ in range(RUNS):
-            if not _timed_run(name, spec):
+            if not _timed_run(name, specs[name]):
                 break
         drop_session_residue(spark)
 
@@ -168,8 +181,9 @@ def main() -> int:
         os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
     )
     try:
-        with open(detail_path, "w") as fh:
-            json.dump(detail, fh, indent=1)
+        if args.only is None:
+            with open(detail_path, "w") as fh:
+                json.dump(detail, fh, indent=1)
     except OSError:  # read-only checkout: the stdout line must still emit
         pass
 

@@ -131,7 +131,8 @@ def connected_components(
         edges.select(F.col("s").alias("a"), F.col("d").alias("b"))
         .unionByName(edges.select(F.col("d").alias("a"), F.col("s").alias("b")))
         .distinct()
-        .repartition(n_parts, "b")
+        # no repartition on b first: a local checkpoint drops hash
+        # partitioning, so each round's join exchanges sym either way
         .localCheckpoint(eager=True)
     )
     labels = nodes.repartition(n_parts, "node").withColumn("component", F.col("node"))
@@ -477,6 +478,7 @@ def _pr_oracle_sql() -> str:
     WITH pairs AS (
       SELECT DISTINCT o.o_custkey AS ck, l.l_suppkey AS sk
       FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
+      WHERE o.o_custkey IS NOT NULL AND l.l_suppkey IS NOT NULL
     ),
     edges AS (
       SELECT concat('c:', ck) AS src, concat('s:', sk) AS dst FROM pairs
@@ -518,10 +520,11 @@ def _trade_pairs_local(li, orders, max_rows: int):
     """The distinct ``(ck, sk)`` of lineitem inner-joined to orders on
     orderkey, in numpy over the Arrow ``(l_orderkey, l_suppkey)`` and
     ``(o_orderkey, o_custkey)`` tables: a ``searchsorted`` probe of the
-    sorted ``o_orderkey`` (duplicate keys allowed, NULL keys dropped),
+    sorted ``o_orderkey`` (duplicate keys allowed, rows with a NULL
+    join key, ck or sk dropped, as on every path and in the oracle),
     then a sort-based distinct. None, leaving the Spark derivation to
-    run, unless the join keys are integers and ck and sk int64 without
-    NULLs and with |key| < 2^62 (the packed ids 2k and 2k+1 then fit
+    run, unless the join keys are integers and ck and sk int64 with
+    |key| < 2^62 (the packed ids 2k and 2k+1 then fit
     in int64; past it the Spark path raises its ANSI overflow error),
     and unless the join size is within ``max_rows`` (checked before any
     joined row is built)."""
@@ -534,7 +537,6 @@ def _trade_pairs_local(li, orders, max_rows: int):
         and pa.types.is_integer(orders.schema.field("o_orderkey").type)
         and pa.types.is_int64(ck.type)
         and pa.types.is_int64(sk.type)
-        and ck.null_count == sk.null_count == 0
     ):
         return None
     orders, li = orders.drop_null(), li.drop_null()
@@ -621,6 +623,7 @@ def pagerank_supplier_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs = (
             li.join(orders, li.l_orderkey == orders.o_orderkey)
             .select(F.col("o_custkey").alias("ck"), F.col("l_suppkey").alias("sk"))
+            .filter(F.col("ck").isNotNull() & F.col("sk").isNotNull())
             .distinct()
         )
         edges = pairs.select(

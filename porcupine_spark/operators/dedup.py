@@ -171,6 +171,21 @@ def corpus_n_docs(spark: SparkSession, sf_dir: str) -> int:
     return load_table(spark, sf_dir, "documents").count() if n is None else n
 
 
+def drop_hot_keys(df: DataFrame, key: str, cutoff: int) -> DataFrame:
+    """``df`` without the rows whose ``key`` occurs more than ``cutoff``
+    times: the hot-key cap of every inverted-index self-join, where a
+    key shared by d rows alone feeds d^2/2 matches. The hot set is tiny
+    by definition, so it drops by a broadcast anti-join and ``df``
+    itself is never shuffled for it."""
+    hot = (
+        df.groupBy(key)
+        .agg(F.count(F.lit(1)).alias("df"))
+        .filter(F.col("df") > cutoff)
+        .select(key)
+    )
+    return df.join(F.broadcast(hot), key, "left_anti")
+
+
 def shingle_overlap(arrays: DataFrame, df_cutoff: int) -> DataFrame:
     """(doc_a, doc_b, i, na, nb) for doc pairs (doc_a < doc_b) sharing
     >=1 informative shingle, from ``arrays`` = hashed_shingle_arrays
@@ -181,21 +196,13 @@ def shingle_overlap(arrays: DataFrame, df_cutoff: int) -> DataFrame:
     # self-join on hashed shingles (see hashed_shingle_table): 8-byte
     # shuffle/join keys, and the shingle string is never even built
     sh_all = arrays.select("doc_id", F.explode(F.col("arr")).alias("h"))
-    # hot set is tiny by definition (few keys exceed the cutoff):
-    # broadcast anti-join, no extra shuffle of the shingle table
-    hot = (
-        sh_all.groupBy("h")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > df_cutoff)
-        .select("h")
-    )
     # eager localCheckpoint, not .cache() (optimization r8): the three
     # consumers (sizes + both self-join sides) then plan against a
     # truncated checkpoint scan instead of re-deriving the shingle
     # explode subtree per reference — measured 1.65 -> 1.36 s min-of-5
     # on the containment query, all pairs in favor; single computation
     # is guaranteed rather than cache-population racy.
-    sh = sh_all.join(F.broadcast(hot), "h", "left_anti").localCheckpoint(eager=True)
+    sh = drop_hot_keys(sh_all, "h", df_cutoff).localCheckpoint(eager=True)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a = sh.alias("a")
     b = sh.alias("b")
@@ -725,55 +732,68 @@ _SQL_SIMHASH_CTE = f"""
     "keep bucket sizes (and the candidate join) small.",
 )
 def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # materialize signatures ONCE before the self-join — both aliases
-    # below would otherwise recompute the full tokenize+32-sum agg
-    # (localCheckpoint, not .cache(): AQE plans through checkpointed
-    # data fine but regressed through InMemoryRelation here — measured)
-    sigs = simhash_signatures(spark, sf_dir).localCheckpoint(eager=True)
-    bb = SIMHASH_BAND_BITS
-    # pack the 32-bit signature string into a LONG once per doc: hamming
-    # on a pair is then popcount(xor) — one ALU op, no per-pair arrays
+    # pack the 32-bit signature string into a LONG once per doc: bands
+    # are then shift-and-mask chunks and hamming on a pair is
+    # popcount(xor) — one ALU op, no per-pair arrays
+    sigs = simhash_signatures(spark, sf_dir).select(
+        "doc_id", F.conv(F.col("simhash"), 2, 10).cast("long").alias("sig")
+    )
+    return banded_hamming_pairs(sigs, SIMHASH_BITS, SIMHASH_BAND_BITS, 3)
+
+
+def banded_hamming_pairs(
+    sigs: DataFrame, bits: int, band_bits: int, max_hamming: int
+) -> DataFrame:
+    """(doc_a, doc_b, hamming) for the doc pairs (doc_a < doc_b) whose
+    ``bits``-bit signatures, packed into the long ``sig`` of ``sigs``
+    (doc_id, sig), differ in at most ``max_hamming`` bits. Candidates
+    are exact collisions on one of the ``bits // band_bits`` bands
+    (band b = bits b*band_bits and up); with more bands than
+    ``max_hamming`` every such pair collides somewhere (pigeonhole),
+    then hamming = bit_count(xor) verifies. The candidate join shuffles
+    (band, chunk) longs, never the signatures' sources."""
+    n_bands = bits // band_bits
+    mask = (1 << band_bits) - 1
+
+    def chunk(c: Column, b: int) -> Column:
+        return F.shiftrightunsigned(c, b * band_bits).bitwiseAND(mask)
+
+    # materialize signatures ONCE before the self-join — both sides
+    # would otherwise recompute them (localCheckpoint, not .cache():
+    # AQE plans through checkpointed data fine but regressed through
+    # InMemoryRelation here — measured)
+    sigs = sigs.localCheckpoint(eager=True)
     bands = sigs.select(
         "doc_id",
-        F.conv(F.col("simhash"), 2, 10).cast("long").alias("sig_long"),
-        F.posexplode(
-            F.array(*[F.substring("simhash", b * bb + 1, bb) for b in range(4)])
-        ).alias("band", "chunk"),
+        "sig",
+        F.posexplode(F.array(*[chunk(F.col("sig"), b) for b in range(n_bands)])).alias(
+            "band", "chunk"
+        ),
     )
-    a = bands.alias("a")
-    b = bands.alias("b")
-    # A pair colliding in several bands used to be deduped by a
-    # distinct() Exchange over the candidate set (the big intermediate
-    # at crawl dup rates). The packed sig_long carries the FULL
-    # signature on every band row, so each join row can decide locally
-    # whether ITS band is the pair's first matching band — string
-    # position b*8+1 is the MSB side, so band b occupies bits
-    # 31-8b..24-8b of the long and "band b matches" is one mask test on
-    # the xor. Keeping only first-band rows makes candidates unique by
-    # construction: filter replaces shuffle (optimization r7, guide
+    # A pair colliding in several bands would come out once per band.
+    # Each band row carries the FULL signature, so each join row decides
+    # locally whether ITS band is the pair's first matching band (one
+    # mask test per band on the xor); keeping only those makes the
+    # candidates unique by construction, a filter instead of a
+    # distinct() Exchange over the candidate set (optimization r7, guide
     # §2.1; same min-band trick as the embedding-LSH path).
-    x = F.col("a.sig_long").bitwiseXOR(F.col("b.sig_long"))
-    first_band = (
-        F.when(x.bitwiseAND(F.lit(0xFF000000)) == 0, 0)
-        .when(x.bitwiseAND(F.lit(0x00FF0000)) == 0, 1)
-        .when(x.bitwiseAND(F.lit(0x0000FF00)) == 0, 2)
-        .otherwise(3)
-    )
+    x = F.col("a.sig").bitwiseXOR(F.col("b.sig"))
+    first_band = F.when(chunk(x, 0) == 0, 0)
+    for b in range(1, n_bands - 1):
+        first_band = first_band.when(chunk(x, b) == 0, b)
+    first_band = first_band.otherwise(n_bands - 1)
+    a, b = bands.alias("a"), bands.alias("b")
     cand = a.join(
         b,
         (F.col("a.band") == F.col("b.band"))
         & (F.col("a.chunk") == F.col("b.chunk"))
         & (F.col("a.doc_id") < F.col("b.doc_id")),
-    ).filter(F.col("a.band") == first_band).select(
+    ).filter(F.col("a.band") == first_band)
+    return cand.select(
         F.col("a.doc_id").alias("doc_a"),
         F.col("b.doc_id").alias("doc_b"),
-        F.col("a.sig_long").alias("la"),
-        F.col("b.sig_long").alias("lb"),
-    )
-    ham = F.bit_count(F.col("la").bitwiseXOR(F.col("lb")))
-    return cand.select("doc_a", "doc_b", ham.cast("long").alias("hamming")).filter(
-        F.col("hamming") <= 3
-    )
+        F.bit_count(x).cast("long").alias("hamming"),
+    ).filter(F.col("hamming") <= max_hamming)
 
 
 DUP_EDGE_T = 0.5  # same verified-duplicate threshold as dedup_keep_canonical
@@ -1115,19 +1135,11 @@ def winnow_pairs(docs: DataFrame, fp_cutoff: int | None = None) -> DataFrame:
         .select("doc_id", "fp")
         .distinct()
     )
-    # hot-fingerprint guard, same shape as the hot-shingle cutoff in
-    # ngram_jaccard_pairs: a boilerplate window minimum shared by d
+    # hot-fingerprint cap: a boilerplate window minimum shared by d
     # docs would otherwise contribute d^2 rows to the self-join below
-    # with no cutoff at all — winnowing thins the index density
-    # (~2/(w+1)) but does nothing about per-key skew. Absolute cap via
-    # hot_df_cutoff; the hot set is tiny, so broadcast anti-join.
-    hot_fp = (
-        fps.groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > fp_cutoff)
-        .select("fp")
-    )
-    fps = fps.join(F.broadcast(hot_fp), "fp", "left_anti")
+    # — winnowing thins the index density (~2/(w+1)) but does nothing
+    # about per-key skew
+    fps = drop_hot_keys(fps, "fp", fp_cutoff)
     a = fps.select(F.col("doc_id").alias("doc_a"), "fp")
     b = fps.select(F.col("doc_id").alias("doc_b"), "fp")
     return (
@@ -2297,6 +2309,27 @@ def verbatim_spans_over(
     exact Spark twin of the oracle's ``vspans`` CTE. Pair-level
     aggregates (verbatim_span_pairs_over) and the contamination audit
     (split_verbatim_leakage) both derive from this grain."""
+    pa, pb = F.col("a.pos"), F.col("b.pos")
+    return span_islands(
+        docs,
+        df_cutoff,
+        F.col("a.doc_id") < F.col("b.doc_id"),
+        {"doc_a": F.col("a.doc_id"), "doc_b": F.col("b.doc_id"), "diag": pa - pb},
+        k,
+        min_run,
+    ).select("doc_a", "doc_b", "span_tokens")
+
+
+def span_islands(
+    docs: DataFrame, df_cutoff: int, on: Column, keys: dict[str, Column], k: int, min_run: int
+) -> DataFrame:
+    """(*keys, span_tokens): one row per maximal run of >= k+min_run-1
+    tokens whose k-token windows match, the core of the verbatim-span
+    and intra-document repetition queries. Windows of the ``a`` and
+    ``b`` sides match on their hash ``h`` and on ``on``; ``keys`` name
+    the island a match belongs to (a pair or document and the offset
+    diagonal, from the ``a``/``b`` columns), and the matches of one
+    island merge along ``a.pos``."""
     from pyspark.sql import Window as W
 
     # ONE tokenize pass feeds the whole span pipeline (optimization r8,
@@ -2311,14 +2344,7 @@ def verbatim_spans_over(
     # reports UnknownPartitioning on the restored RDD, so the extra
     # shuffle bought nothing — measured and dropped.)
     wins = verbatim_window_table(docs, k).localCheckpoint(eager=True)
-    hot = (
-        wins.groupBy("h")
-        .agg(F.count(F.lit(1)).alias("occ"))
-        .filter(F.col("occ") > df_cutoff)
-        .select("h")
-    )
-    # hot set is tiny by definition; anti-join without moving the index
-    w = wins.join(F.broadcast(hot), "h", "left_anti")
+    w = drop_hot_keys(wins, "h", df_cutoff)
     a, b = w.alias("a"), w.alias("b")
     # the window table is CORPUS-SIZED and downstream of an explode, whose
     # size Catalyst underestimates badly enough to BROADCAST it (measured
@@ -2326,22 +2352,17 @@ def verbatim_spans_over(
     # pin the scale-correct strategy. Both sides are hash-exchanged on h
     # (the local checkpoint reports UnknownPartitioning, see above); the
     # hash join then compares co-located 8-byte keys
-    matches = a.join(
-        b.hint("shuffle_hash"),
-        (F.col("a.h") == F.col("b.h")) & (F.col("a.doc_id") < F.col("b.doc_id")),
-    ).select(
-        F.col("a.doc_id").alias("doc_a"),
-        F.col("b.doc_id").alias("doc_b"),
-        F.col("a.pos").alias("pa"),
-        (F.col("a.pos") - F.col("b.pos")).alias("diag"),
+    matches = a.join(b.hint("shuffle_hash"), (F.col("a.h") == F.col("b.h")) & on).select(
+        *[c.alias(n) for n, c in keys.items()], F.col("a.pos").alias("pa")
     )
-    wisl = W.partitionBy("doc_a", "doc_b", "diag").orderBy("pa")
+    # consecutive matches on one diagonal share pa - row_number()
+    wisl = W.partitionBy(*keys).orderBy("pa")
     return (
         matches.withColumn("grp", F.col("pa") - F.row_number().over(wisl))
-        .groupBy("doc_a", "doc_b", "diag", "grp")
+        .groupBy(*keys, "grp")
         .agg((F.count(F.lit(1)) + (k - 1)).alias("span_tokens"))
         .filter(F.col("span_tokens") >= k + min_run - 1)
-        .select("doc_a", "doc_b", "span_tokens")
+        .drop("grp")
     )
 
 
@@ -2420,38 +2441,14 @@ def intra_doc_repeated_spans(
     Spark and the DuckDB oracle — making the oracle comparison
     non-trivially non-empty. Returns (doc_id, n_repeat_spans,
     max_span_tokens, total_span_tokens)."""
-    from pyspark.sql import Window as W
-
-    # same single-pass discipline as verbatim_spans_over (r8): the
-    # tokenize+md5 window pass materializes once; every consumer reads
-    # the checkpoint instead of recomputing the text pipeline
-    wins = verbatim_window_table(docs, k).localCheckpoint(eager=True)
-    hot = (
-        wins.groupBy("h")
-        .agg(F.count(F.lit(1)).alias("occ"))
-        .filter(F.col("occ") > df_cutoff)
-        .select("h")
-    )
-    w = wins.join(F.broadcast(hot), "h", "left_anti")
-    a, b = w.alias("a"), w.alias("b")
-    # same broadcast-misestimate guard as verbatim_spans_over: the window
-    # table is corpus-sized; never let the planner broadcast it
-    matches = a.join(
-        b.hint("shuffle_hash"),
-        (F.col("a.h") == F.col("b.h"))
-        & (F.col("a.doc_id") == F.col("b.doc_id"))
-        & (F.col("a.pos") < F.col("b.pos")),
-    ).select(
-        F.col("a.doc_id").alias("doc_id"),
-        F.col("a.pos").alias("pa"),
-        (F.col("b.pos") - F.col("a.pos")).alias("diag"),
-    )
-    wisl = W.partitionBy("doc_id", "diag").orderBy("pa")
-    spans = (
-        matches.withColumn("grp", F.col("pa") - F.row_number().over(wisl))
-        .groupBy("doc_id", "diag", "grp")
-        .agg((F.count(F.lit(1)) + (k - 1)).alias("span_tokens"))
-        .filter(F.col("span_tokens") >= k + min_run - 1)
+    pa, pb = F.col("a.pos"), F.col("b.pos")
+    spans = span_islands(
+        docs,
+        df_cutoff,
+        (F.col("a.doc_id") == F.col("b.doc_id")) & (pa < pb),
+        {"doc_id": F.col("a.doc_id"), "diag": pb - pa},
+        k,
+        min_run,
     )
     return spans.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_repeat_spans"),

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from porcupine_spark.functions import seq1
+from porcupine_spark.operators.dedup import banded_hamming_pairs
 from porcupine_spark.plans.registry import query
 from porcupine_spark.tables import load_table
 
@@ -216,59 +217,22 @@ def ahash64(payload: bytes) -> int:
 
 
 def media_ahash(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel: (doc_id, payload) -> (doc_id, ahash)."""
+    """mapInPandas kernel: (doc_id, payload) -> (doc_id, sig = ahash64)."""
     for pdf in batches:
         yield pd.DataFrame(
-            {"doc_id": pdf["doc_id"].values, "ahash": [ahash64(p) for p in pdf["payload"]]}
+            {"doc_id": pdf["doc_id"].values, "sig": [ahash64(p) for p in pdf["payload"]]}
         )
 
 
 def media_ahash_pairs(media: DataFrame, max_hamming: int = AHASH_MAX_HAMMING) -> DataFrame:
-    """(doc_a, doc_b, hamming) for near-identical media: banded
-    candidate generation over 16-bit slices of the aHash (pigeonhole:
-    hamming<=3 differing bits cannot touch all 4 bands), then exact
-    hamming = bit_count(xor) on the packed longs — both JVM-side. The
-    only Python is the per-row hash kernel; the self-join shuffles
-    (band, 16-bit slice) keys, never payload bytes. Same shape as
-    simhash_pairs (dedup.py) — this is its multimodal twin."""
-    sigs = media.mapInPandas(media_ahash, "doc_id long, ahash long").localCheckpoint(
-        eager=True
-    )
-    bands = sigs.select(
-        "doc_id",
-        "ahash",
-        F.posexplode(
-            F.array(
-                *[
-                    F.shiftrightunsigned(F.col("ahash"), 16 * b).bitwiseAND(0xFFFF)
-                    for b in range(AHASH_BANDS)
-                ]
-            )
-        ).alias("band", "slice"),
-    )
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.slice") == F.col("b.slice"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.ahash").alias("ha"),
-            F.col("b.ahash").alias("hb"),
-        )
-        .distinct()
-    )
-    ham = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
-    return (
-        cand.withColumn("hamming", ham)
-        .where(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
-    )
+    """(doc_a, doc_b, hamming) for near-identical media: the aHash of
+    each payload, then ``dedup.banded_hamming_pairs`` over its 16-bit
+    bands (pigeonhole: hamming<=3 differing bits cannot touch all 4
+    bands) — the pair generator of ``simhash_pairs`` on a 64-bit
+    signature. The only Python is the per-row hash kernel; the
+    self-join shuffles band chunks, never payload bytes."""
+    sigs = media.mapInPandas(media_ahash, "doc_id long, sig long")
+    return banded_hamming_pairs(sigs, 64, 64 // AHASH_BANDS, max_hamming)
 
 
 @query(

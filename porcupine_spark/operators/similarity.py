@@ -47,16 +47,19 @@ def norm2_exact(a: Column) -> Column:
     return dot_exact(a, a)
 
 
-def _exact_norms(
-    df: DataFrame, keep: list[tuple[str, str]], emb_col: str = "embedding", out: str = "vn"
-) -> DataFrame:
-    """``keep`` columns + ``out`` = sqrt of the exact quantized self-dot,
-    Arrow-vectorized (functions/exactdot.py — bit-identical to
-    F.sqrt(norm2_exact(...)), pinned by test_exactdot_matches_jvm;
-    np.sqrt and java.lang.Math.sqrt are both IEEE correctly-rounded).
-    The JVM expression costs interpreted BigDecimal per element and
-    runs once per VECTOR — at 10x scale that alone was seconds per
-    query."""
+_VEC_COLS = (("vec_id", "long"), ("embedding", "array<float>"))
+
+
+def _exact_norms(df: DataFrame, keep=_VEC_COLS) -> DataFrame:
+    """``keep`` columns + ``vn`` = sqrt of the exact quantized self-dot
+    of ``embedding``, Arrow-vectorized (functions/exactdot.py —
+    bit-identical to F.sqrt(norm2_exact(...)), pinned by
+    test_exactdot_matches_jvm; np.sqrt and java.lang.Math.sqrt are both
+    IEEE correctly-rounded), materialized by an eager local checkpoint:
+    every caller reads the table on both sides of a join or from
+    several consumers. The JVM expression costs interpreted BigDecimal
+    per element and runs once per VECTOR — at 10x scale that alone was
+    seconds per query."""
     fields = ", ".join(f"{c} {t}" for c, t in keep)
 
     def run(it):
@@ -68,13 +71,13 @@ def _exact_norms(
         for pdf in it:
             if not len(pdf):
                 continue
-            mat = np.stack(pdf[emb_col].to_numpy())
+            mat = np.stack(pdf["embedding"].to_numpy())
             units = exact_unit_dots(mat, mat)
             d = {c: pdf[c] for c, _ in keep}
-            d[out] = np.sqrt(units / 1e12)
+            d["vn"] = np.sqrt(units / 1e12)
             yield pd.DataFrame(d)
 
-    return df.mapInPandas(run, schema=f"{fields}, {out} double")
+    return df.mapInPandas(run, schema=f"{fields}, vn double").localCheckpoint(eager=True)
 
 
 def _exact_cosine_map(
@@ -290,9 +293,7 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: emb_raw.filter(F.col("vec_id") < N_QUERIES)
         .select("vec_id", "embedding")
         .toPandas(),
-        lambda: _exact_norms(
-            emb_raw, keep=[("vec_id", "long"), ("embedding", "array<float>")]
-        ).localCheckpoint(eager=True),
+        lambda: _exact_norms(emb_raw),
     )
     bc = emb.sparkSession.sparkContext.broadcast(
         (qloc["vec_id"].to_numpy(), _unit_rows(qloc["embedding"]))
@@ -379,9 +380,7 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: emb_raw.filter(F.col("vec_id") < IVF_CENTROIDS)
         .select("vec_id", "embedding")
         .toPandas(),
-        lambda: _exact_norms(
-            emb_raw, keep=[("vec_id", "long"), ("embedding", "array<float>")]
-        ).localCheckpoint(eager=True),
+        lambda: _exact_norms(emb_raw),
         lambda: emb_raw.filter(F.col("vec_id") < N_QUERIES)
         .select("vec_id", "embedding")
         .toPandas(),
@@ -823,6 +822,18 @@ def _lsh_signatures(emb: DataFrame) -> DataFrame:
     return fast_part.unionByName(exact_part).localCheckpoint(eager=True)
 
 
+def _lsh_chunk(sig: str, b: int) -> Column:
+    """Band ``b`` of an LSH bit-string signature column."""
+    return F.substring(sig, b * LSH_BAND_BITS + 1, LSH_BAND_BITS)
+
+
+def _lsh_band_table(sigs: DataFrame, *cols: str) -> DataFrame:
+    """``cols`` + (band, chunk): one row per band of each signature
+    ``sig``, the bucket table of the banded-LSH candidate joins."""
+    chunks = [_lsh_chunk("sig", b) for b in range(LSH_PLANES // LSH_BAND_BITS)]
+    return sigs.select(*cols, F.posexplode(F.array(*chunks)).alias("band", "chunk"))
+
+
 @query(
     "lsh_topk",
     f"""
@@ -865,35 +876,20 @@ def lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one numpy matmul (~40 ms for the whole sf0.1 table), so the widen
     # repartition was an Exchange + 32 tiny python tasks for nothing;
     # at scale the parquet splits parallelize the scan on their own
-    sigs = _lsh_signatures(emb)
-    n_bands = LSH_PLANES // LSH_BAND_BITS
     # band rows carry the row's FULL sig so each collision row can test
     # locally whether ITS band is the (query, neighbor) pair's first
     # matching band — candidates are then unique by construction and
     # the distinct() Exchange over the candidate set disappears
     # (optimization r7, guide §2.1; same min-band trick as the
     # near-dup path)
-    bands = sigs.select(
-        "vec_id",
-        "sig",
-        F.posexplode(
-            F.array(*[
-                F.substring("sig", b * LSH_BAND_BITS + 1, LSH_BAND_BITS)
-                for b in range(n_bands)
-            ])
-        ).alias("band", "chunk"),
-    )
+    bands = _lsh_band_table(_lsh_signatures(emb), "vec_id", "sig")
     q_bands = bands.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("sig").alias("qsig"), "band", "chunk"
     )
     first_band = F.coalesce(
         *[
-            F.when(
-                F.substring("sig", b * LSH_BAND_BITS + 1, LSH_BAND_BITS)
-                == F.substring("qsig", b * LSH_BAND_BITS + 1, LSH_BAND_BITS),
-                F.lit(b),
-            )
-            for b in range(n_bands)
+            F.when(_lsh_chunk("sig", b) == _lsh_chunk("qsig", b), F.lit(b))
+            for b in range(LSH_PLANES // LSH_BAND_BITS)
         ]
     )
     cand = (
@@ -902,9 +898,7 @@ def lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("band") == first_band)
         .select("query_id", F.col("vec_id").alias("neighbor_id"))
     )
-    vecs = _exact_norms(
-        emb, keep=[("vec_id", "long"), ("embedding", "array<float>")]
-    ).localCheckpoint(eager=True)
+    vecs = _exact_norms(emb)
     return exact_rerank_topk(cand, vecs, TOPK)
 
 
@@ -1028,10 +1022,7 @@ def _neardup_verify(cand: DataFrame, emb_raw: DataFrame) -> DataFrame:
     set), a double dot prefilters the pairs with a provable epsilon
     margin, and only survivors pay the exact-decimal dot whose value is
     bit-identical to the oracle's."""
-    vecs = _exact_norms(
-        emb_raw,
-        keep=[("vec_id", "long"), ("embedding", "array<float>"), ("label", "int")],
-    ).localCheckpoint(eager=True)
+    vecs = _exact_norms(emb_raw, keep=_VEC_COLS + (("label", "int"),))
     ea = vecs.select(
         F.col("vec_id").alias("id_a"), F.col("embedding").alias("ea"),
         F.col("label").alias("label_a"), F.col("vn").alias("na"),
@@ -1198,18 +1189,7 @@ def _lsh_bucket_candidates(sigs: DataFrame) -> DataFrame:
     lowest colliding band only — so no cross-bucket distinct() is
     needed (the keep decision is a pure function of the two embeddings,
     hence identical in every bucket that sees the pair)."""
-    n_bands = LSH_PLANES // LSH_BAND_BITS
-    be = sigs.select(
-        "vec_id",
-        "embedding",
-        "sig",
-        F.posexplode(
-            F.array(*[
-                F.substring("sig", b * LSH_BAND_BITS + 1, LSH_BAND_BITS)
-                for b in range(n_bands)
-            ])
-        ).alias("band", "chunk"),
-    )
+    be = _lsh_band_table(sigs, "vec_id", "embedding", "sig")
     return be.groupBy("band", "chunk").applyInPandas(
         _neardup_bucket_pairs, schema="id_a long, id_b long"
     )
@@ -2034,9 +2014,7 @@ def ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: emb_raw.filter(F.col("vec_id") < IVF_CENTROIDS)
         .select("vec_id", "embedding")
         .toPandas(),
-        lambda: _exact_norms(
-            emb_raw, keep=[("vec_id", "long"), ("embedding", "array<float>")]
-        ).localCheckpoint(eager=True),
+        lambda: _exact_norms(emb_raw),
     )
     assigned = exact_centroid_ranks(emb, vecs, cloc).filter(F.col("arn") == 1)
     cells = assigned.groupBy("cid").agg(F.count(F.lit(1)).alias("n_vectors"))

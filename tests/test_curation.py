@@ -1,6 +1,6 @@
 """Edge-case units for the curation operators (Gopher filter, sequence
-packing, duplicated-span stats); oracle parity for the full queries is
-covered by tools/verify_oracles.py."""
+packing, duplicated-span stats, DSIR lean scores); oracle parity for
+the full queries is covered by tools/verify_oracles.py."""
 
 from __future__ import annotations
 
@@ -196,3 +196,24 @@ def test_pack_docs_property(spark):
             cum += t
 
     check()
+
+
+def test_dsir_lean_scores_planted_signal(spark):
+    """Target docs use a disjoint vocabulary: every target token leans
+    (its buckets carry only target mass), no raw-only token does —
+    scores separate to 1e6 vs 0 and the keep flag follows."""
+    from porcupine_spark.operators.curation import dsir_lean_scores
+    from pyspark.sql import functions as F
+
+    rows = [
+        (1, "alpha beta gamma alpha", True),
+        (2, "beta gamma alpha beta", True),
+        (3, "delta epsilon zeta zeta", False),
+        (4, "epsilon delta delta zeta", False),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string, is_t boolean")
+    out = {r.doc_id: r for r in dsir_lean_scores(docs, F.col("is_t")).collect()}
+    assert out[1].lean_ppm == 1_000_000 and out[1].keep
+    assert out[2].lean_ppm == 1_000_000 and out[2].keep
+    assert out[3].lean_ppm == 0 and not out[3].keep
+    assert out[4].lean_ppm == 0 and not out[4].keep

@@ -3,7 +3,8 @@ and the near-duplicate clustering on both paths: the exact driver path
 below the ``driverstate`` gate and the distributed rounds above it
 (forced here with a gate of 0); the numpy edge derivations of
 ``kcore_peel_parts`` and ``pagerank_supplier_graph`` against their
-Spark twins; and the stored-row-count memo that gates them."""
+Spark twins and oracles; the stored-row-count memo that gates them;
+and the triangle counts on planted graphs."""
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -459,6 +460,38 @@ def test_kcore_peel_converges_within_budget(spark, sf_dir, monkeypatch):
     assert {t for t in base if 0 < t[1] < rounds} == {t for t in more if 0 < t[1] < rounds}
 
 
+def test_triangle_counts_planted(spark):
+    """K4 plus a pendant: every corner of K4 sits on C(3,2)=3 triangles,
+    lcc=1.0 for the degree-3 corners; the pendant node has none."""
+    from porcupine_spark.operators.components import triangle_counts
+
+    k4 = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
+    edges = spark.createDataFrame(k4 + [(4, 9)], "u long, v long")
+    out = {r.node: r for r in triangle_counts(edges).collect()}
+    for n in (1, 2, 3):
+        assert out[n].triangles == 3 and out[n].degree == 3
+        assert out[n].lcc_ppm == 1_000_000
+    # node 4 has degree 4 (extra pendant edge): 3 triangles over C(4,2)=6
+    assert out[4].triangles == 3 and out[4].degree == 4
+    assert out[4].lcc_ppm == 500_000
+    assert out[9].triangles == 0 and out[9].lcc_ppm == 0
+
+
+def test_triangle_counts_skew_star(spark):
+    """A star graph (max-skew hub) has ZERO triangles and — the scale
+    property under test — the hub generates no wedge blowup: orientation
+    sends every spoke->hub edge INTO the hub (spokes have lower degree),
+    so the hub's out-degree is 0 and the wedge join emits nothing."""
+    from porcupine_spark.operators.components import triangle_counts
+
+    star = [(i, 100) for i in range(1, 40)]
+    out = triangle_counts(spark.createDataFrame(star, "u long, v long"))
+    rows = out.collect()
+    assert all(r.triangles == 0 for r in rows)
+    hub = next(r for r in rows if r.node == 100)
+    assert hub.degree == 39 and hub.lcc_ppm == 0
+
+
 def _write_trade(path, items, orders, key_type=pa.int64()):
     """lineitem ``(l_orderkey, l_partkey, l_suppkey)`` and orders
     ``(o_orderkey, o_custkey)`` tables under ``path`` (None is NULL)."""
@@ -509,6 +542,10 @@ TRADE_TABLES = {
         _ITEMS + [(None, 1, 100), (3, None, 101), (None, None, 102), (25, 2, 100)],
         _ORDERS + [(None, 4), (25, 3)],
     ),
+    "null_pair_keys": (
+        _ITEMS + [(3, 5, None), (7, 2, None), (40, 1, 100), (40, 2, 104)],
+        _ORDERS + [(40, None)],
+    ),
     "duplicate_rows": (_ITEMS + _ITEMS[::3] + _ITEMS[:2], _ORDERS),
     "duplicate_orderkey": (_ITEMS, _ORDERS + [(ok, ok % 6 + 10) for ok in range(1, 23, 4)]),
     "single_item_orders": (
@@ -525,6 +562,24 @@ def _trade_rows(spark, sf):
     kcore = sorted(tuple(r) for r in components.kcore_peel_parts(spark, sf).collect())
     ranks = sorted(tuple(r) for r in components.pagerank_supplier_graph(spark, sf).collect())
     return kcore, ranks
+
+
+def _trade_oracle_rows(sf):
+    """``_trade_rows`` from the two queries' DuckDB oracles."""
+    import duckdb
+
+    from porcupine_spark.plans.registry import REGISTRY
+
+    con = duckdb.connect()
+    for t in ("lineitem", "orders"):
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{tables.table_path(sf, t)}')")
+    try:
+        return tuple(
+            sorted(con.sql(REGISTRY[q].oracle).fetchall())
+            for q in ("kcore_peel_parts", "pagerank_supplier_graph")
+        )
+    finally:
+        con.close()
 
 
 def _spy_derivations(monkeypatch):
@@ -555,18 +610,28 @@ def _spy_derivations(monkeypatch):
 
 @pytest.mark.parametrize("case", sorted(TRADE_TABLES))
 def test_trade_graphs_planted_paths_agree(spark, tmp_path, monkeypatch, case):
-    """kcore_peel_parts and pagerank_supplier_graph give one rowset from
-    the numpy derivations and from the gate-0 Spark path for NULL keys,
-    duplicate rows, duplicate o_orderkey, single-item orders, rows
-    without a join partner, part keys near 2^63 and empty tables."""
+    """kcore_peel_parts and pagerank_supplier_graph give their oracles'
+    rowsets from the numpy derivations, from the Spark derivations
+    iterated on the driver and from the gate-0 distributed rounds, for
+    NULL join, part, customer and supplier keys (a pair with a NULL key
+    is dropped everywhere), duplicate rows, duplicate o_orderkey,
+    single-item orders, rows without a join partner, part keys near
+    2^63 and empty tables."""
     sf = _write_trade(tmp_path, *TRADE_TABLES[case])
     with monkeypatch.context() as m:
         seen = _spy_derivations(m)
         local = _trade_rows(spark, sf)
     assert seen["spark"] == []
     with monkeypatch.context() as m:
+        seen = _spy_derivations(m)
+        m.setattr(components, "_copurchase_edges_local", lambda *a: None)
+        m.setattr(components, "_trade_pairs_local", lambda *a: None)
+        assert _trade_rows(spark, sf) == local
+    assert seen["spark"] == ["kcore", "pagerank"]
+    with monkeypatch.context() as m:
         _force_distributed(m)
         assert _trade_rows(spark, sf) == local
+    assert _trade_oracle_rows(sf) == local
     if case == "empty":
         assert local == ([], [])
     else:

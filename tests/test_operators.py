@@ -1,5 +1,5 @@
 """Operator-level unit tests (asof, sessionize, dedup, similarity,
-multimodal, http source). The full-query correctness gate is
+multimodal, http source, the JL distortion audit). The full-query correctness gate is
 tools/verify_oracles.py; these cover operator edge cases the oracle
 corpus doesn't reach."""
 
@@ -1427,3 +1427,18 @@ def test_transitivity_planted_triangle(spark, tmp_path):
     assert got.n_wedges == 3
     assert got.n_triangles == 1
     assert got.transitivity_micro == 1000000
+
+
+def test_jl_distortion_concentrates(spark):
+    """JL with m=16 keeps squared-distance ratios within a constant
+    band of 1 (std ~ sqrt(2/m) ~ 0.35) — the audit's reason to exist."""
+    from porcupine_spark.plans.registry import load_all_plans
+
+    rows = load_all_plans()["jl_distortion_audit"].builder(
+        spark, "/root/testdata/sf0.001"
+    ).collect()
+    assert len(rows) >= 10
+    ppm = [r.distortion_ppm for r in rows]
+    assert all(100_000 < p < 4_000_000 for p in ppm)
+    mean = sum(ppm) / len(ppm)
+    assert 600_000 < mean < 1_600_000

@@ -464,11 +464,13 @@ def test_neardup_lsh_min_band_candidates_unique_and_complete(spark):
 
 def test_minhash_simhash_pairs_duplicate_free_without_distinct(spark):
     """The r7 min-band emission replaced the candidate distinct() in
-    BOTH banded pair generators: a pair colliding in several bands must
+    the banded pair generators (minhash, and the banded-Hamming core of
+    simhash and media aHash): a pair colliding in several bands must
     still appear exactly once in the output (the oracle hash-compare in
     test_oracles also pins the exact sets; this pins the uniqueness
     mechanism on its own)."""
     from porcupine_spark.operators import dedup as D
+    from porcupine_spark.operators.multimodal import media_ahash_pairs, media_table
     from porcupine_spark.tables import load_table
 
     sf = "/root/testdata/sf0.01"
@@ -482,6 +484,15 @@ def test_minhash_simhash_pairs_duplicate_free_without_distinct(spark):
         for r in D.simhash_pairs(spark, sf).collect()
     ]
     assert len(sh) == len(set(sh)) and len(sh) > 0
+
+    # the corpus has no near-identical payloads: plant copies of five
+    # under new ids, each colliding with its original in all 4 bands
+    media = media_table(spark, sf)
+    copies = media.orderBy("doc_id").limit(5).select(
+        (F.col("doc_id") + 10**9).alias("doc_id"), "payload"
+    )
+    md = [(r.doc_a, r.doc_b) for r in media_ahash_pairs(media.unionByName(copies)).collect()]
+    assert len(md) == len(set(md)) and len(md) >= 5
 
 
 def test_ivf_candidates_unique_without_distinct(spark):

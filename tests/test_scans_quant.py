@@ -1,6 +1,6 @@
 """Semantics tests for the two-level prefix scan (functions/scans.py),
-the global watermark audit, and int8 ADC retrieval (operators/
-quantization.py)."""
+the global watermark audit, int8 ADC retrieval (operators/
+quantization.py) and the z-order layout audit's tile spans."""
 
 import pytest
 from pyspark.sql import Row, Window, functions as F
@@ -242,3 +242,17 @@ class TestAnisotropyProbe:
 
         assert _tdiv(7, 2) == 3 and _tdiv(-7, 2) == -3
         assert _tdiv(7, -2) == -3 and _tdiv(-7, -2) == 3
+
+
+def test_zorder_layout_audit_tile_spans(spark):
+    """Every tile's value span is <= 16 in BOTH dimensions — the
+    data-skipping property the write path depends on."""
+    from porcupine_spark.plans.registry import load_all_plans
+
+    out = load_all_plans()["zorder_layout_audit"].builder(
+        spark, "/root/testdata/sf0.001"
+    ).collect()
+    assert len(out) > 0
+    for r in out:
+        assert r.max_x - r.min_x <= 15
+        assert r.max_y - r.min_y <= 15
