@@ -43,11 +43,15 @@ def bucketed_join(
     return spark.table(left_table).join(spark.table(right_table), keys, how)
 
 
-def shuffle_exchanges_in_plan(df: DataFrame) -> int:
-    """Count SHUFFLE Exchange operators (hash/range repartitions) in the
-    executed plan — 0 for a properly co-bucketed join. Broadcast
-    exchanges are not shuffles and are not counted."""
-    plan = df._jdf.queryExecution().executedPlan().toString()
+def executed_plan(df: DataFrame) -> str:
+    """The executed physical plan of ``df`` as a string."""
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def shuffle_exchanges_in_plan(plan: str) -> int:
+    """Count SHUFFLE Exchange operators (hash/range repartitions) in an
+    ``executed_plan`` string — 0 for a properly co-bucketed join.
+    Broadcast exchanges are not shuffles and are not counted."""
     return plan.count("Exchange hashpartitioning") + plan.count("Exchange rangepartitioning")
 
 

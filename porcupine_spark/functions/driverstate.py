@@ -19,6 +19,8 @@ The gate is compared with the observed (or stored) row count, never
 set by a conf or env var, so a query's plan depends only on its input.
 A gate of 0 disables the driver path entirely (tests use it to force
 the distributed loop, empty inputs included).
+
+``materialize`` is the package's one way to keep an intermediate.
 """
 
 from __future__ import annotations
@@ -31,6 +33,20 @@ from pyspark.sql import functions as F
 # in Arrow and numpy; each distributed round costs more in fixed job
 # overhead than a driver pass over them.
 DRIVER_STATE_MAX_ROWS = 2_000_000
+
+
+def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
+    """``df`` as a local checkpoint, the one way this package keeps an
+    intermediate (chain it: ``.transform(materialize)``). The lineage
+    is truncated. The blocks are unreplicated: a lost block fails the
+    job instead of recomputing it. The hash partitioning is dropped, so
+    a ``repartition`` before the checkpoint buys nothing
+    (``test_checkpoint_drops_hash_partitioning``). ``eager=True`` runs
+    one job at call time; under AQE, ``eager=False`` still runs the
+    upstream shuffle stages at definition. The blocks are freed only
+    when the refs die and the ContextCleaner runs
+    (``metrics.drop_session_residue``)."""
+    return df.localCheckpoint(eager=eager)
 
 
 def checkpoint_sized(df: DataFrame, max_rows: int | None = None, size=None):
@@ -46,7 +62,7 @@ def checkpoint_sized(df: DataFrame, max_rows: int | None = None, size=None):
     if size is None:
         size = F.count(F.lit(1))
     obs = Observation()
-    ck = df.observe(obs, size.alias("size")).localCheckpoint(eager=True)
+    ck = materialize(df.observe(obs, size.alias("size")))
     n = obs.get["size"] or 0
     if max_rows <= 0 or n > max_rows:
         return ck, n, None

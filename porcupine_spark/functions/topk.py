@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from porcupine_spark.functions.driverstate import materialize
+
 
 def ranked_topk(
     df: DataFrame,
@@ -122,13 +124,8 @@ def global_rank(
     srt = (
         df.repartitionByRange(*order)
         .withColumn("_gr_pid", F.spark_partition_id())
-        # LAZY checkpoint (optimization r8): the offset pass below is the
-        # first consumer and materializes+persists the layout as part of
-        # its own job (one blocking job instead of two); the rank pass
-        # then reads the SAME persisted blocks, so the partition-id
-        # pinning guarantee is unchanged (localCheckpoint never falls
-        # back to recompute — a lost block fails the job instead).
-        .localCheckpoint(eager=False)
+        # lazy: the offset pass persists it, one blocking job not two (r8)
+        .transform(materialize, eager=False)
     )
     aggs = [F.count(F.lit(1)).alias("_gr_c")]
     for out, src in cumsum.items():

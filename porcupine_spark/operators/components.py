@@ -131,9 +131,7 @@ def connected_components(
         edges.select(F.col("s").alias("a"), F.col("d").alias("b"))
         .unionByName(edges.select(F.col("d").alias("a"), F.col("s").alias("b")))
         .distinct()
-        # no repartition on b first: a local checkpoint drops hash
-        # partitioning, so each round's join exchanges sym either way
-        .localCheckpoint(eager=True)
+        .transform(driverstate.materialize)
     )
     labels = nodes.repartition(n_parts, "node").withColumn("component", F.col("node"))
     converged = False
@@ -161,7 +159,7 @@ def connected_components(
                 ),
                 "component",
             )
-            .localCheckpoint(eager=True)
+            .transform(driverstate.materialize)
         )
         # one scalar to the driver per round: the convergence check
         changed = updated.filter(F.col("new_component") != F.col("component")).count()
@@ -411,11 +409,11 @@ def pagerank_scaled(
     outdeg, nodes = run_concurrently(
         lambda: edges.groupBy("src")
         .agg(F.count(F.lit(1)).alias("d"))
-        .localCheckpoint(eager=True),
+        .transform(driverstate.materialize),
         lambda: edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True),  # reused every round + for n
+        .transform(driverstate.materialize),  # reused every round + for n
     )
     n = nodes.count()  # one scalar to the driver (like components' guard)
     if n == 0:
@@ -423,10 +421,9 @@ def pagerank_scaled(
     # Size gate (optimization r8): broadcast the per-round |nodes|-sized
     # tables only while they are broadcast-sized; above the gate each
     # round's attach is a plain shuffled join. The edges are NOT
-    # pre-partitioned on src: a local checkpoint does not keep its
-    # input's hash partitioning (the planner shuffles a checkpointed
-    # repartition(src) frame again), so the edge side is shuffled every
-    # round either way. n is already on the driver, so the gate is free.
+    # pre-partitioned on src (materialize drops hash partitioning), so
+    # the edge side is shuffled every round either way. n is already on
+    # the driver, so the gate is free.
     broadcast_ranks = n <= PREGEL_BROADCAST_MAX_NODES
     r0 = PR_SCALE // n
     teleport = (PR_SCALE * (PR_DAMP_DEN - PR_DAMP_NUM) // PR_DAMP_DEN) // n
@@ -459,13 +456,8 @@ def pagerank_scaled(
                 .cast("decimal(38,0)")
                 .alias("r"),
             )
-            # LAZY checkpoint (optimization r8): truncates the lineage so
-            # round R never replans rounds 1..R-1. It is not free at
-            # definition: under AQE the round's shuffle stages still run
-            # as jobs when the checkpoint is defined; only the final
-            # result stage waits for the consumer (means 3.25 -> 3.08 s
-            # against the eager form).
-            .localCheckpoint(eager=False)
+            # lazy: 3.25 -> 3.08 s mean against eager (optimization r8)
+            .transform(driverstate.materialize, eager=False)
         )
     return r.select("node", F.col("r").cast("long").alias("rank_scaled"))
 
@@ -823,13 +815,13 @@ def triangle_counts(edges: DataFrame, scale: int = TRI_LCC_SCALE) -> DataFrame:
     integer truncating division (the repo's cross-engine-exact ratio
     recipe), 0 for degree < 2.
     """
-    edges = edges.select("u", "v").localCheckpoint(eager=True)
+    edges = edges.select("u", "v").transform(driverstate.materialize)
     deg = (
         edges.select(F.col("u").alias("node"))
         .unionByName(edges.select(F.col("v").alias("node")))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("deg"))
-        .localCheckpoint(eager=True)  # reused: rank join + final output
+        .transform(driverstate.materialize)  # reused: rank join + final output
     )
     # total orientation order: r = deg * 2^32 + node (ties broken by id).
     # The packing requires node ids < 2^32 — an id past that would bleed
@@ -857,7 +849,7 @@ def triangle_counts(edges: DataFrame, scale: int = TRI_LCC_SCALE) -> DataFrame:
             F.when(F.col("ru") < F.col("rv"), F.col("v")).otherwise(F.col("u")).alias("d"),
             F.greatest("ru", "rv").alias("rd"),
         )
-        .localCheckpoint(eager=True)  # scanned 3x (two wedge sides + close)
+        .transform(driverstate.materialize)  # scanned 3x (two wedge sides + close)
     )
     x, y = er.alias("x"), er.alias("y")
     wedges = (
@@ -1050,7 +1042,7 @@ def kcore_peel(edges: DataFrame, k: int = KCORE_K, rounds: int = KCORE_ROUNDS) -
         victims = (
             deg.where(F.col("deg") < k)
             .select("node", F.lit(rnd).cast("int").alias("removed_round"))
-            .localCheckpoint(eager=True)
+            .transform(driverstate.materialize)
         )
         victim_rounds.append(victims)
         live_edges = (
@@ -1059,7 +1051,7 @@ def kcore_peel(edges: DataFrame, k: int = KCORE_K, rounds: int = KCORE_ROUNDS) -
             )
             .join(victims.select(F.col("node").alias("v")), "v", "left_anti")
             .select("u", "v")
-            .localCheckpoint(eager=True)
+            .transform(driverstate.materialize)
         )
     if victim_rounds:
         removed = victim_rounds[0]

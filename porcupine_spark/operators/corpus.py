@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from porcupine_spark.functions.driverstate import materialize
 from porcupine_spark.functions.topk import ranked_topk
 from porcupine_spark.operators.text import tokens
 from porcupine_spark.plans.registry import query
@@ -527,7 +528,7 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select(F.explode(tokens(F.col("text"))).alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)  # scanned twice: top-k + grand total
+        .transform(materialize)  # scanned twice: top-k + grand total
     )
     top = ranked_topk(counts, "n", ["tok"], max(COVERAGE_KS))
     total = counts.agg(F.sum("n").cast("long").alias("total_n"))
@@ -763,7 +764,7 @@ def _bm25_base(docs: DataFrame) -> DataFrame:
         "doc_id",
         F.size("toks").alias("dl"),
         F.filter("toks", lambda t: F.array_contains(qterms, t)).alias("matched"),
-    ).localCheckpoint(eager=True)
+    ).transform(materialize)
 
 
 def _bm25_scored(base: DataFrame) -> DataFrame:
@@ -853,12 +854,12 @@ def source_novelty_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("doc_id", "source"), "doc_id"
     )
     first_seen = grams.groupBy("h").agg(F.min("doc_id").alias("first_doc"))
-    j = grams.join(first_seen, "h")
-    per_source = j.groupBy("source").agg(
-        F.countDistinct("h").alias("distinct_grams"),
-        F.countDistinct(
-            F.when(F.col("first_doc") == F.col("doc_id"), F.col("h"))
-        ).alias("novel_grams"),
+    # plain counts over one (source, h) row each: two countDistincts
+    # rewrite into an Expand whose group order varies by session
+    nov = F.max((F.col("first_doc") == F.col("doc_id")).cast("long")).alias("nov")
+    per_gram = grams.join(first_seen, "h").groupBy("source", "h").agg(nov)
+    per_source = per_gram.groupBy("source").agg(
+        F.count(F.lit(1)).alias("distinct_grams"), F.sum("nov").alias("novel_grams")
     )
     return per_source.select(
         "source",
@@ -1158,19 +1159,15 @@ def _bpe_train_chain(
             break
         ls, rs, n = best[0].ls, best[0].rs, int(best[0].n)
         merges.append((rnd, ls, rs, n))
-        # LAZY checkpoint (optimization r8): truncates the replace()
-        # lineage so round R never replays rounds 1..R-1. Under AQE a
-        # lazy checkpoint still runs the shuffle stages upstream of it
-        # when defined; here there are none (a projection of the
-        # previous checkpoint), so the next round's argmax job is what
-        # persists the rows.
+        # lazy (r8): a projection of the last checkpoint has no upstream
+        # shuffle, so the next round's argmax job persists the rows
         cur = cur.select(
             "word",
             F.replace(
                 F.col("ws"), F.lit(f" {ls}  {rs} "), F.lit(f" {ls}{rs} ")
             ).alias("ws"),
             "freq",
-        ).localCheckpoint(eager=False)
+        ).transform(materialize, eager=False)
     return merges, cur
 
 

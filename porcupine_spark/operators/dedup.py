@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from porcupine_spark.functions import seq1, word_ngrams
+from porcupine_spark.functions.driverstate import materialize
 from porcupine_spark.operators.corpus import SQL_SPLIT_CTE, split_col
 from porcupine_spark.plans.registry import REGISTRY, query
 from porcupine_spark.tables import load_table, stored_rows
@@ -196,13 +197,8 @@ def shingle_overlap(arrays: DataFrame, df_cutoff: int) -> DataFrame:
     # self-join on hashed shingles (see hashed_shingle_table): 8-byte
     # shuffle/join keys, and the shingle string is never even built
     sh_all = arrays.select("doc_id", F.explode(F.col("arr")).alias("h"))
-    # eager localCheckpoint, not .cache() (optimization r8): the three
-    # consumers (sizes + both self-join sides) then plan against a
-    # truncated checkpoint scan instead of re-deriving the shingle
-    # explode subtree per reference — measured 1.65 -> 1.36 s min-of-5
-    # on the containment query, all pairs in favor; single computation
-    # is guaranteed rather than cache-population racy.
-    sh = drop_hot_keys(sh_all, "h", df_cutoff).localCheckpoint(eager=True)
+    # read 3x (sizes + both join sides); vs .cache() 1.65 -> 1.36 s min-of-5
+    sh = drop_hot_keys(sh_all, "h", df_cutoff).transform(materialize)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a = sh.alias("a")
     b = sh.alias("b")
@@ -476,7 +472,7 @@ def _minhash_lsh_pairs_and_sigs(
     _check_carry(docs, carry)
     # per-row signatures (no shuffle); checkpoint so the band SELF-join
     # (two refs) and the candidate join don't recompute the md5 pass
-    sigs = minhash_signatures(docs).localCheckpoint(eager=True)
+    sigs = minhash_signatures(docs).transform(materialize)
     # band signature packed into ONE long (mh<2^31: hi*2^31+lo < 2^62)
     # — the self-join shuffles 8-byte keys, not strings; the candidate
     # SET is identical to the oracle's string-concat formulation.
@@ -758,11 +754,8 @@ def banded_hamming_pairs(
     def chunk(c: Column, b: int) -> Column:
         return F.shiftrightunsigned(c, b * band_bits).bitwiseAND(mask)
 
-    # materialize signatures ONCE before the self-join — both sides
-    # would otherwise recompute them (localCheckpoint, not .cache():
-    # AQE plans through checkpointed data fine but regressed through
-    # InMemoryRelation here — measured)
-    sigs = sigs.localCheckpoint(eager=True)
+    # both self-join sides read the signatures
+    sigs = sigs.transform(materialize)
     bands = sigs.select(
         "doc_id",
         "sig",
@@ -842,7 +835,7 @@ def dup_graph_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_lsh_pairs(docs)
         .filter(F.col("jaccard") >= DUP_EDGE_T)
         .select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-        .localCheckpoint(eager=True)  # small (post-LSH); read by 4 plans below
+        .transform(materialize)  # small (post-LSH); read by 4 plans below
     )
     degrees = (
         edges.select(F.col("a").alias("doc_id"))
@@ -1838,7 +1831,7 @@ def dup_transitivity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize the candidate+verify pipeline once instead of 5x
     e = p.select(
         F.least("doc_a", "doc_b").alias("a"), F.greatest("doc_a", "doc_b").alias("b")
-    ).localCheckpoint(eager=True)
+    ).transform(materialize)
     deg = (
         e.select(F.col("a").alias("v"))
         .unionAll(e.select(F.col("b").alias("v")))
@@ -2339,19 +2332,15 @@ def span_islands(
     # stage reuse deduped the two join sides but not the differing
     # hot-agg subtree). Checkpointed, it is computed once; downstream
     # exchanges then move 20-byte (doc_id, pos, h) rows, not text.
-    # (A repartition("h") before the checkpoint would in principle also
-    # kill those exchanges, but localCheckpoint in this Spark build
-    # reports UnknownPartitioning on the restored RDD, so the extra
-    # shuffle bought nothing — measured and dropped.)
-    wins = verbatim_window_table(docs, k).localCheckpoint(eager=True)
+    wins = verbatim_window_table(docs, k).transform(materialize)
     w = drop_hot_keys(wins, "h", df_cutoff)
     a, b = w.alias("a"), w.alias("b")
     # the window table is CORPUS-SIZED and downstream of an explode, whose
     # size Catalyst underestimates badly enough to BROADCAST it (measured
     # at 10x: 36.7 s broadcast plan vs 6.5 s shuffled, identical rows) —
     # pin the scale-correct strategy. Both sides are hash-exchanged on h
-    # (the local checkpoint reports UnknownPartitioning, see above); the
-    # hash join then compares co-located 8-byte keys
+    # (materialize drops hash partitioning); the hash join then compares
+    # co-located 8-byte keys
     matches = a.join(b.hint("shuffle_hash"), (F.col("a.h") == F.col("b.h")) & on).select(
         *[c.alias(n) for n, c in keys.items()], F.col("a.pos").alias("pa")
     )

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from porcupine_spark.functions.driverstate import materialize
 from porcupine_spark.plans.registry import query
 from porcupine_spark.tables import load_table
 
@@ -219,7 +220,7 @@ def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double")
             .alias("monetary"),
         )
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
 
     def _ranked(metric: str, rank_col: str, keep_metric: bool):

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from porcupine_spark.functions.driverstate import materialize
 from porcupine_spark.plans.registry import query
 from porcupine_spark.tables import load_table
 
@@ -77,7 +78,7 @@ def _exact_norms(df: DataFrame, keep=_VEC_COLS) -> DataFrame:
             d["vn"] = np.sqrt(units / 1e12)
             yield pd.DataFrame(d)
 
-    return df.mapInPandas(run, schema=f"{fields}, vn double").localCheckpoint(eager=True)
+    return df.mapInPandas(run, schema=f"{fields}, vn double").transform(materialize)
 
 
 def _exact_cosine_map(
@@ -387,7 +388,7 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     margin = 2 * NEARDUP_MARGIN
     # stages 1 and 2; tiny (~1 row/vector) and reused by both uses below
-    ranked = exact_centroid_ranks(emb, vecs, cloc, IVF_PROBES).localCheckpoint(eager=True)
+    ranked = exact_centroid_ranks(emb, vecs, cloc, IVF_PROBES).transform(materialize)
     buckets = ranked.filter(F.col("arn") == 1).select("vec_id", "embedding", "cid")
 
     # probe list to the driver (tiny), for the stage-3 prefilter; the
@@ -591,7 +592,7 @@ def ivf_topk_from(
         .withColumn("prn", F.row_number().over(probe_w))
         .filter(F.col("prn") <= probes)
         .select("query_id", "qe", "qn", "cid")
-        .localCheckpoint(eager=True)  # scanned twice: cid collect + join
+        .transform(materialize)  # scanned twice: cid collect + join
     )
     probe_cids = sorted({r.cid for r in probes_df.select("cid").distinct().collect()})
     if probe_cids_out is not None:
@@ -812,14 +813,14 @@ def _lsh_signatures(emb: DataFrame) -> DataFrame:
     dbl = emb.select("vec_id", "embedding").mapInPandas(
         sigs_batch,
         schema="vec_id long, embedding array<float>, sig string, nz boolean",
-    ).localCheckpoint(eager=True)
+    ).transform(materialize)
     if dbl.filter(F.col("nz")).limit(1).count() == 0:
         return dbl.select("vec_id", "embedding", "sig")
     exact_part = dbl.filter(F.col("nz")).select(
         "vec_id", "embedding", to_sig(dots_dec).alias("sig")
     )
     fast_part = dbl.filter(~F.col("nz")).select("vec_id", "embedding", "sig")
-    return fast_part.unionByName(exact_part).localCheckpoint(eager=True)
+    return fast_part.unionByName(exact_part).transform(materialize)
 
 
 def _lsh_chunk(sig: str, b: int) -> Column:
@@ -1710,7 +1711,7 @@ def label_centroid_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = (
         elems.groupBy("label", "dim")
         .agg(F.expr("CAST(SUM(s) AS BIGINT) div COUNT(*)").alias("c"))
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     # per-vector distance WITHOUT the second |vecs|x|dims| explode
     # (optimization r8, guide §4.1/§2.3): pack each label's centroid

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from porcupine_spark.functions.driverstate import materialize
 from porcupine_spark.functions.hashing import md5_bucket, md5_long60
 from porcupine_spark.functions.topk import ranked_topk
 from porcupine_spark.operators.text import tokens
@@ -333,11 +334,11 @@ def frequent_tokens_mg(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
 
-    # Bounded by partitions x (cap+1) rows; localCheckpoint materializes it
-    # once so candidates and the total don't each re-run the corpus scan.
+    # Bounded by partitions x (cap+1) rows; materialized once so
+    # candidates and the total don't each re-run the corpus scan.
     summary = toks.mapInPandas(
         mg_partition, schema="tok string, mass long"
-    ).localCheckpoint()
+    ).transform(materialize)
     candidates = summary.filter(F.col("tok").isNotNull()).select("tok").distinct()
     total = summary.filter(F.col("tok").isNull()).agg(F.sum("mass").alias("n"))
     return (
@@ -511,7 +512,7 @@ def kmv_overlap_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed = grams.select(
         "source",
         md5_long60("g").alias("h"),
-    ).distinct().localCheckpoint(eager=True)
+    ).distinct().transform(materialize)
     sk = (
         hashed.withColumn(
             "rk", F.row_number().over(W.partitionBy("source").orderBy("h"))
@@ -975,7 +976,7 @@ def hll_union_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
             md5_long60("g").alias("h"),
         )
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(materialize)
     )
     merged = _hll_regs(hashed).groupBy("bucket").agg(F.max("mj").alias("mj"))
     s = merged.agg(_hll_s_agg().alias("s"))

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from porcupine_spark.functions.driverstate import materialize
 from porcupine_spark.plans.registry import query
 from porcupine_spark.streaming.drain import drain, state_sized_session
 from porcupine_spark.tables import load_events_stream, load_table
@@ -120,8 +121,8 @@ def stream_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     base_h, base_bands = run_concurrently(
         lambda: base.select(F.md5(F.trim(F.col("text"))).alias("h"))
         .distinct()
-        .localCheckpoint(eager=True),
-        lambda: _band_table(minhash_signatures(base)).localCheckpoint(eager=True),
+        .transform(materialize),
+        lambda: _band_table(minhash_signatures(base)).transform(materialize),
     )
 
     stream = load_docs_stream(spark, sf_dir).filter(

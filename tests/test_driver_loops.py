@@ -4,7 +4,11 @@ below the ``driverstate`` gate and the distributed rounds above it
 (forced here with a gate of 0); the numpy edge derivations of
 ``kcore_peel_parts`` and ``pagerank_supplier_graph`` against their
 Spark twins and oracles; the stored-row-count memo that gates them;
-and the triangle counts on planted graphs."""
+the triangle counts on planted graphs; the PageRank layouts and the
+co-purchase edge stage; and the one materialization path."""
+
+import ast
+import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -12,8 +16,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from porcupine_spark import serials, tables
+from porcupine_spark.bucketing import executed_plan
 from porcupine_spark.functions import driverstate
 from porcupine_spark.operators import components, corpus, dedup
+from test_streaming import package_lines
 
 
 def _force_distributed(monkeypatch):
@@ -375,9 +381,10 @@ def test_driver_loop_build_job_bounds(spark, sf_dir, jobs_so_far, name, bound):
 
 
 def test_checkpoint_drops_hash_partitioning(spark):
-    """Why PageRank's shuffled-join layout does not pre-partition its
-    edges: a local checkpoint of a repartition(src) frame loses the
-    partitioning, so a join on src shuffles the edges again."""
+    """``materialize``'s documented contract, and why PageRank's
+    shuffled-join layout does not pre-partition its edges: the
+    checkpoint of a repartition(src) frame loses the partitioning, so a
+    join on src shuffles the edges again."""
     key = "spark.sql.autoBroadcastJoinThreshold"
     old = spark.conf.get(key)
     spark.conf.set(key, "-1")
@@ -385,17 +392,36 @@ def test_checkpoint_drops_hash_partitioning(spark):
         edges = spark.range(64).select(
             (F.col("id") % 7).alias("src"), (F.col("id") % 5).alias("dst")
         )
-        ck = edges.repartition(F.col("src")).localCheckpoint(eager=True)
+        ck = edges.repartition(F.col("src")).transform(driverstate.materialize)
         rd = spark.range(7).select(F.col("id").alias("src"), F.lit(1).alias("c"))
-        plan = (
-            components._pregel_contrib(ck, rd, False)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
+        plan = executed_plan(components._pregel_contrib(ck, rd, False))
     finally:
         spark.conf.set(key, old)
     assert plan.count("Exchange hashpartitioning(src") == 2
+
+
+MATERIALIZE = os.path.join("functions", "driverstate.py")
+
+
+def _checkpoint_calls(tree: ast.AST):
+    """Line of every ``.localCheckpoint(...)`` or ``.checkpoint(...)`` call."""
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in ("localCheckpoint", "checkpoint")
+        ):
+            yield node.lineno
+
+
+def test_intermediates_materialize_only_through_driverstate():
+    """An intermediate is kept only through ``driverstate.materialize``,
+    so how safely it is kept is decided in one place."""
+    found = package_lines(_checkpoint_calls)
+    stray = {rel: lines for rel, lines in found.items() if rel != MATERIALIZE}
+    assert not stray, f"checkpoint calls outside {MATERIALIZE}: {stray}"
+    # and the scan still sees the one real checkpoint
+    assert MATERIALIZE in found
 
 
 @pytest.mark.parametrize("distributed", [False, True], ids=["driver", "distributed"])
@@ -829,3 +855,83 @@ def test_collect_small_table_gates_before_any_job(spark, tmp_path, jobs_so_far):
     assert driverstate.collect_small_table(spark, sf, "orders", ["x"], max_rows=0) is None
     assert jobs_so_far() == j0
     assert driverstate.collect_small_table(spark, sf, "orders", ["x"], max_rows=4).num_rows == 4
+
+
+def test_pregel_contrib_plan_shapes(spark):
+    """The broadcast↔co-partition choice is CODE, not a comment: below
+    the node gate the rank attach is a broadcast join, above it a plain
+    (co-partitionable) join with no broadcast hint."""
+    from porcupine_spark.operators.components import _pregel_contrib
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1)], "src long, dst long"
+    )
+    rd = spark.createDataFrame(
+        [(1, 10), (2, 10), (3, 10)], "src long, c long"
+    )
+    bcast_plan = _pregel_contrib(edges, rd, True)._jdf.queryExecution().toString()
+    plain_plan = _pregel_contrib(edges, rd, False)._jdf.queryExecution().toString()
+    assert "BroadcastHashJoin" in bcast_plan
+    # pre-AQE initial plan: no broadcast exchange without the hint (tiny
+    # inputs may still AQE-convert at runtime; the GATE is what's pinned)
+    assert "BroadcastHashJoin" not in plain_plan.split("== Physical Plan ==")[-1]
+
+
+def test_pagerank_gate_modes_identical(spark, monkeypatch):
+    """Both Pregel layouts produce the identical exact-decimal ranks
+    (sum order cannot matter: decimal adds are exact)."""
+    from porcupine_spark.functions import driverstate
+    from porcupine_spark.operators import components
+    from porcupine_spark.operators.components import pagerank_scaled
+
+    monkeypatch.setattr(driverstate, "DRIVER_STATE_MAX_ROWS", 0)
+
+    rows = [(i, (i * 7) % 23) for i in range(60)] + [(5, 6), (6, 5), (9, 11)]
+    edges = spark.createDataFrame(
+        [(a, b) for a, b in rows if a != b], "src long, dst long"
+    )
+    monkeypatch.setattr(components, "PREGEL_BROADCAST_MAX_NODES", 1_000_000)
+    bc = {(r.node, r.rank_scaled) for r in pagerank_scaled(spark, edges).collect()}
+    monkeypatch.setattr(components, "PREGEL_BROADCAST_MAX_NODES", 0)  # force the shuffled layout
+    cp = {(r.node, r.rank_scaled) for r in pagerank_scaled(spark, edges).collect()}
+    assert bc == cp and len(bc) > 0
+
+
+def test_copurchase_edges_single_exchange_and_equivalence(spark, sf_dir):
+    """r8 edge-stage rewrite: repartition(l_orderkey) feeds distinct AND
+    the self-join off ONE exchange (HashPartitioning(ok) satisfies both
+    clusterings), and the edge set is byte-identical to the naive
+    distinct-then-join form."""
+    from porcupine_spark.operators.components import (
+        TRI_MIN_SUPPORT,
+        _copurchase_edges,
+    )
+    from porcupine_spark.tables import load_table
+
+    e_new = _copurchase_edges(spark, sf_dir)
+    # initial physical plan: the edge-stage inputs shuffle by l_orderkey
+    # ALONE (one layout serves distinct + self-join; identical subplans
+    # are stage-reused at runtime); no (ok, pk)-keyed exchange survives
+    plan = executed_plan(e_new)
+    import re
+
+    assert re.search(r"Exchange hashpartitioning\(l_orderkey#\d+L, \d+\)", plan), plan
+    assert not re.search(
+        r"Exchange hashpartitioning\(l_orderkey#\d+L, l_partkey", plan
+    ), plan
+
+    li = load_table(spark, sf_dir, "lineitem")
+    items = li.select("l_orderkey", "l_partkey").distinct()
+    a = items.select("l_orderkey", F.col("l_partkey").alias("u"))
+    b = items.select("l_orderkey", F.col("l_partkey").alias("v"))
+    e_old = (
+        a.join(b, "l_orderkey")
+        .where(F.col("u") < F.col("v"))
+        .groupBy("u", "v")
+        .agg(F.count(F.lit(1)).alias("support"))
+        .where(F.col("support") >= TRI_MIN_SUPPORT)
+        .select("u", "v")
+    )
+    assert {(r.u, r.v) for r in e_new.collect()} == {
+        (r.u, r.v) for r in e_old.collect()
+    }

@@ -10,6 +10,7 @@ import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
 
@@ -71,3 +72,58 @@ def test_fold_skips_null_and_missing_elements(spark, ragged_sf, name):
     con.close()
     assert len(want) > 0
     assert canon(got, 0.0) == canon(want, 0.0)
+
+
+def test_embedding_pervec_hof_matches_explode(spark):
+    """r8: the per-vector centroid-distance fold (zip_with/aggregate
+    against a broadcast dim-ordered centroid array) must equal the old
+    explode+join+hash-agg form exactly — including dtype (decimal sums
+    are order-independent, so the dim-order fold is bit-identical)."""
+    import random
+
+    rng = random.Random(11)
+    rows = [
+        (i, i % 3, [rng.uniform(-2, 2) for _ in range(17)]) for i in range(200)
+    ]
+    emb = spark.createDataFrame(
+        rows, "vec_id long, label int, embedding array<float>"
+    )
+
+    elems = emb.select(
+        "vec_id", "label", F.posexplode("embedding").alias("dim0", "x")
+    ).select(
+        "vec_id", "label", (F.col("dim0") + 1).alias("dim"),
+        (F.col("x").cast("double") * F.lit(1e6)).cast("long").alias("s"),
+    )
+    cent = elems.groupBy("label", "dim").agg(
+        F.expr("CAST(SUM(s) AS BIGINT) div COUNT(*)").alias("c")
+    )
+    old = (
+        elems.join(F.broadcast(cent), ["label", "dim"])
+        .select("vec_id", "label",
+                ((F.col("s") - F.col("c")) * (F.col("s") - F.col("c"))).alias("t"))
+        .groupBy("vec_id", "label")
+        .agg(F.sum(F.col("t").cast("decimal(38,0)")).alias("dsp"))
+    )
+    cent_arr = cent.groupBy("label").agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("dim", "c"))), lambda s: s["c"]
+        ).alias("c_arr")
+    )
+    s_arr = F.transform(
+        "embedding", lambda x: (x.cast("double") * F.lit(1e6)).cast("long")
+    )
+    new = (
+        emb.filter(F.size("embedding") > 0)
+        .join(F.broadcast(cent_arr), "label")
+        .select(
+            "vec_id", "label",
+            F.aggregate(
+                F.zip_with(s_arr, F.col("c_arr"), lambda s, c: (s - c) * (s - c)),
+                F.lit(0).cast("decimal(38,0)"),
+                lambda acc, t: acc + t.cast("decimal(38,0)"),
+            ).alias("dsp"),
+        )
+    )
+    assert old.schema["dsp"].dataType == new.schema["dsp"].dataType
+    assert sorted(map(tuple, old.collect())) == sorted(map(tuple, new.collect()))

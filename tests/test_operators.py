@@ -7,6 +7,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from porcupine_spark.bucketing import executed_plan
 from porcupine_spark.operators.asof import asof_join
 from porcupine_spark.operators.dedup import shingle_table, word_shingles
 from porcupine_spark.operators.multimodal import decode_media_meta, fake_decode
@@ -761,7 +762,7 @@ def test_ivf_index_persistence_artifact_mode(spark, sf_dir, tmp_path):
         assert served == fresh
         # the artifact read is the bucketed layout: the scan advertises
         # its buckets and the probe join needs no corpus-side Exchange
-        plan = served_df._jdf.queryExecution().executedPlan().toString()
+        plan = executed_plan(served_df)
         assert "Bucketed: true" in plan
         # probe-side pruning is REAL: the literal probed-cid filter makes
         # the FileScan read only the probed buckets of the 16-bucket
@@ -864,7 +865,7 @@ def test_asof_join_directions(spark):
     # single shuffle even for nearest (two windows share the exchange)
     out = asof_join(left, right, on="user_id", left_ts="lts", right_ts="rts",
                     right_order="rid", payload_cols=["rid"], direction="nearest")
-    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(out)
     assert plan.count("Exchange hashpartitioning") == 1
 
 
@@ -1442,3 +1443,87 @@ def test_jl_distortion_concentrates(spark):
     assert all(100_000 < p < 4_000_000 for p in ppm)
     mean = sum(ppm) / len(ppm)
     assert 600_000 < mean < 1_600_000
+
+
+def test_rfm_concurrent_ranks_match_chained(spark, sf_dir):
+    """r8: the three RFM quartile rankings run as concurrent jobs and
+    recombine on the unique customer key — the segment table must be
+    byte-identical to the old chained global_rank form."""
+    from porcupine_spark.functions.topk import global_rank, ntile_from_rank
+    from porcupine_spark.operators.quality import rfm_segmentation
+    from porcupine_spark.tables import load_table
+
+    new = rfm_segmentation(spark, sf_dir)
+
+    o = load_table(spark, sf_dir, "orders")
+    per_cust = o.groupBy("o_custkey").agg(
+        F.max("o_orderdate").alias("last_order"),
+        F.count(F.lit(1)).alias("frequency"),
+        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("monetary"),
+    )
+    r_rk, n, _ = global_rank(
+        per_cust, [F.desc("last_order"), F.asc("o_custkey")], rank_col="_r"
+    )
+    f_rk, _, _ = global_rank(
+        r_rk, [F.desc("frequency"), F.asc("o_custkey")], rank_col="_f"
+    )
+    m_rk, _, _ = global_rank(
+        f_rk, [F.desc("monetary"), F.asc("o_custkey")], rank_col="_m"
+    )
+    scored = m_rk.select(
+        "monetary",
+        ntile_from_rank("_r", n, 4).cast("long").alias("r_quartile"),
+        ntile_from_rank("_f", n, 4).cast("long").alias("f_quartile"),
+        ntile_from_rank("_m", n, 4).cast("long").alias("m_quartile"),
+    )
+    old = scored.groupBy("r_quartile", "f_quartile", "m_quartile").agg(
+        F.count(F.lit(1)).alias("n_customers"),
+        F.min("monetary").alias("min_monetary"),
+        F.max("monetary").alias("max_monetary"),
+    )
+    assert sorted(map(tuple, new.collect())) == sorted(map(tuple, old.collect()))
+
+
+def test_minhash_carry_columns_match_joined(spark, sf_dir):
+    """r8: carry= threads per-doc attributes through the verification
+    join; the pair set and attached values must equal the old
+    join-by-doc-id form exactly."""
+    from porcupine_spark.operators.dedup import minhash_lsh_pairs
+    from porcupine_spark.tables import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    carried = minhash_lsh_pairs(docs, carry=("source",))
+    plain = minhash_lsh_pairs(docs)
+    sa = docs.select(F.col("doc_id").alias("doc_a"), F.col("source").alias("source_a"))
+    sb = docs.select(F.col("doc_id").alias("doc_b"), F.col("source").alias("source_b"))
+    joined = plain.join(sa, "doc_a").join(sb, "doc_b").select(
+        "doc_a", "doc_b", "jaccard", "source_a", "source_b"
+    )
+    assert sorted(map(tuple, carried.collect())) == sorted(
+        map(tuple, joined.collect())
+    )
+
+
+@pytest.mark.parametrize(
+    "carry, match",
+    [
+        (("doc",), "collides"),  # doc_a/doc_b aliases
+        (("arr",), "collides"),  # arr_a/arr_b aliases
+        (("jaccard",), "collides"),
+        (("source", "source_a"), "collides"),  # another carry's alias
+        (("source", "source"), "duplicate"),
+        (("no_such_col",), "not in docs"),
+    ],
+    ids=["doc", "arr", "jaccard", "alias", "duplicate", "missing"],
+)
+def test_minhash_carry_rejects_bad_names(spark, carry, match):
+    """carry= names are checked when the pairs are built, before any
+    job runs: each bad name raises ValueError instead of a silent
+    column clash or an analysis error deep in the plan."""
+    from porcupine_spark.operators.dedup import minhash_lsh_pairs
+
+    cols = {c for c in carry} | {"doc_id", "text", "source"}
+    cols.discard("no_such_col")
+    docs = spark.createDataFrame([], ", ".join(f"{c} string" for c in sorted(cols)))
+    with pytest.raises(ValueError, match=match):
+        minhash_lsh_pairs(docs, carry=carry)

@@ -4,23 +4,21 @@ asserted against executed plans so perf regressions fail loudly."""
 import re
 
 import pytest
+from pyspark.sql import functions as F
 
+from porcupine_spark.bucketing import executed_plan, shuffle_exchanges_in_plan
 from porcupine_spark.plans.registry import load_all_plans
 
 SPECS = load_all_plans()
 
 
 def plan_of(spark, sf_dir, name):
-    return SPECS[name].builder(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-
-
-def shuffles(plan: str) -> int:
-    return plan.count("Exchange hashpartitioning") + plan.count("Exchange rangepartitioning")
+    return executed_plan(SPECS[name].builder(spark, sf_dir))
 
 
 def test_q1_single_shuffle_with_pushdown(spark, sf_dir):
     plan = plan_of(spark, sf_dir, "q1_pricing_summary")
-    assert shuffles(plan) == 1  # partial agg map-side, one exchange
+    assert shuffle_exchanges_in_plan(plan) == 1  # partial agg map-side, one exchange
     assert "PushedFilters: [IsNotNull(l_shipdate), LessThanOrEqual(l_shipdate" in plan
     # column pruning: the FileScan projects only referenced columns
     m = re.search(r"FileScan parquet \[([^\]]*)\]", plan)
@@ -40,14 +38,14 @@ def test_q5_broadcasts_all_dims(spark, sf_dir):
 
 def test_filter_project_zero_shuffle(spark, sf_dir):
     plan = plan_of(spark, sf_dir, "filter_project")
-    assert shuffles(plan) == 0
+    assert shuffle_exchanges_in_plan(plan) == 0
 
 
 @pytest.mark.parametrize("name", ["window_sliding_mean", "sessionize_events",
                                   "asof_purchase_last_view", "topk_per_group"])
 def test_window_family_single_shuffle(spark, sf_dir, name):
     """Windows/sessionize/as-of reuse ONE key-partitioned exchange."""
-    assert shuffles(plan_of(spark, sf_dir, name)) == 1
+    assert shuffle_exchanges_in_plan(plan_of(spark, sf_dir, name)) == 1
 
 
 def test_contamination_broadcasts_bench_side(spark, sf_dir):
@@ -82,7 +80,7 @@ def test_cosine_topk_prefilters_in_python_then_verifies(spark, sf_dir):
 def test_salted_agg_two_exchanges(spark, sf_dir):
     """Salted two-phase agg = exactly two hash exchanges: (keys+salt)
     then keys. More means a lost partial; fewer means salting no-oped."""
-    assert shuffles(plan_of(spark, sf_dir, "salted_source_stats")) == 2
+    assert shuffle_exchanges_in_plan(plan_of(spark, sf_dir, "salted_source_stats")) == 2
 
 
 def test_q16_anti_join_broadcast(spark, sf_dir):
@@ -102,7 +100,7 @@ def test_q2_single_fact_shuffle(spark, sf_dir):
     # fact side: per-part min agg + min-cost join + final distinct —
     # bounded shuffle count, all on l_partkey (AQE may still convert
     # the min-cost join to broadcast at runtime)
-    assert shuffles(plan) <= 4
+    assert shuffle_exchanges_in_plan(plan) <= 4
 
 
 def test_q20_semi_joins_broadcast(spark, sf_dir):
@@ -116,7 +114,7 @@ def test_token_diversity_zero_shuffle(spark, sf_dir):
     (the widen repartition of the scan is the only exchange allowed)."""
     plan = plan_of(spark, sf_dir, "token_diversity")
     assert "Generate" not in plan  # no explode
-    assert shuffles(plan) == 0
+    assert shuffle_exchanges_in_plan(plan) == 0
 
 
 def test_repetition_ratio_zero_shuffle(spark, sf_dir):
@@ -124,7 +122,7 @@ def test_repetition_ratio_zero_shuffle(spark, sf_dir):
     no explode of the token corpus, no grouping exchange."""
     plan = plan_of(spark, sf_dir, "repetition_ratio")
     assert "Generate" not in plan
-    assert shuffles(plan) == 0
+    assert shuffle_exchanges_in_plan(plan) == 0
 
 
 def test_tfidf_no_token_corpus_shuffle(spark, sf_dir):
@@ -134,7 +132,7 @@ def test_tfidf_no_token_corpus_shuffle(spark, sf_dir):
     the join as a broadcast. The raw token corpus never shuffles and
     nothing needs a checkpoint barrier."""
     plan = plan_of(spark, sf_dir, "tfidf_top_terms")
-    assert shuffles(plan) == 2
+    assert shuffle_exchanges_in_plan(plan) == 2
     assert "Scan ExistingRDD" not in plan
 
 
@@ -215,7 +213,7 @@ def test_dedup_keep_policies_no_forced_broadcast(spark, tmp_path):
         for fn in (dedup_keep_canonical, dedup_keep_best_quality):
             kept = fn(spark, str(tmp_path))
             n_kept = kept.count()  # materializes -> AQE final plan
-            plan = kept._jdf.queryExecution().executedPlan().toString()
+            plan = executed_plan(kept)
             assert "BroadcastHashJoin" not in plan, f"{fn.__name__} forces broadcast"
             assert "LeftAnti" in plan
             assert "CartesianProduct" not in plan
@@ -259,7 +257,7 @@ def test_partitioned_write_prunes_on_read(spark, tmp_path):
         mappings={"inp": src, "outp": f"{tmp_path}/out.parquet"},
     )
     back = spark.read.parquet(f"{tmp_path}/out.parquet").filter("part = 3")
-    plan = back._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(back)
     import re
 
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
@@ -295,7 +293,7 @@ def test_write_sorted_layout_enables_data_skipping(spark, tmp_path):
         assert hi1 <= lo2, f"overlapping file ranges {(lo1, hi1)} {(lo2, hi2)}"
 
     back = spark.read.parquet(p).filter("k >= 39000")
-    plan = back._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(back)
     assert "PushedFilters: [IsNotNull(k), GreaterThanOrEqual(k,39000)]" in plan
     assert back.count() == 1000
 
@@ -305,7 +303,7 @@ def test_retention_cohorts_join_free(spark, sf_dir):
     bounded exchanges (distinct, per-user window, final agg), no join
     operator anywhere."""
     plan = plan_of(spark, sf_dir, "retention_cohorts")
-    assert shuffles(plan) == 3
+    assert shuffle_exchanges_in_plan(plan) == 3
     assert "Join" not in plan
 
 
@@ -351,7 +349,7 @@ def test_event_transition_single_event_shuffle(spark, sf_dir):
     """Sessionize + lead + count: the raw event log shuffles once (the
     user_id window); only the 25-cell aggregate shuffles again."""
     plan = plan_of(spark, sf_dir, "event_transition_counts")
-    assert shuffles(plan) == 2
+    assert shuffle_exchanges_in_plan(plan) == 2
 
 
 def test_aqe_splits_skewed_join_at_runtime(spark):
@@ -360,8 +358,6 @@ def test_aqe_splits_skewed_join_at_runtime(spark):
     it (skew=true in the final adaptive plan). Salting
     (functions/skew.py) remains the fix for skewed AGGREGATIONS, which
     AQE does not split."""
-    from pyspark.sql import functions as F
-
     ns = spark.newSession()
     for k, v in {
         "spark.sql.adaptive.enabled": "true",
@@ -384,7 +380,7 @@ def test_aqe_splits_skewed_join_at_runtime(spark):
     )
     j = left.join(right, "k")
     assert len(j.collect()) == 200_000
-    final = j._jdf.queryExecution().executedPlan().toString()
+    final = executed_plan(j)
     assert final.count("skew=true") >= 1, final
 
 
@@ -395,8 +391,6 @@ def test_runtime_bloom_filter_prunes_fact_scan(spark, sf_dir):
     die before the exchange — the at-scale feature that turns a
     100 TB fact shuffle into a filtered one. Asserted: the filter is
     injected, and the result is identical with it off."""
-    from pyspark.sql import functions as F
-
     from porcupine_spark.tables import load_table
 
     keys = {
@@ -444,10 +438,6 @@ def test_dynamic_partition_pruning_from_dim_filter(spark, tmp_path):
     is the difference between scanning 2 partitions and scanning 500.
     Asserted: the pruning expression lands in PartitionFilters, and
     the result is identical with DPP disabled."""
-    import re
-
-    from pyspark.sql import functions as F
-
     fact = spark.range(0, 10_000).selectExpr("id % 20 AS pk", "id AS v")
     fact.write.partitionBy("pk").parquet(f"{tmp_path}/fact")
     dim = spark.createDataFrame(
@@ -463,7 +453,7 @@ def test_dynamic_partition_pruning_from_dim_filter(spark, tmp_path):
         )
 
     j = build()
-    plan = j._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(j)
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert m and "dynamicpruning" in m.group(1), plan[:800]
     with_dpp = {(r.pk, r.s) for r in j.collect()}
@@ -517,3 +507,59 @@ def test_verbatim_window_self_join_never_broadcasts(spark, sf_dir):
     for name in ("verbatim_span_pairs", "intra_doc_repetition_spans"):
         plan = plan_of(spark, sf_dir, name)
         assert "ShuffledHashJoin" in plan, name
+
+
+def test_source_novelty_rate_plans_without_expand(spark, sf_dir):
+    """The two distinct counts are plain counts over one (source, h) row
+    each: as ``countDistinct``s they rewrite into an Expand whose group
+    order varies from one session to the next."""
+    assert "Expand" not in plan_of(spark, sf_dir, "source_novelty_rate")
+
+
+def test_basket_items_single_exchange_and_equivalence(spark, sf_dir):
+    """r8: basket_pair_lift derives its item set off ONE l_orderkey
+    exchange (same layout trick as _copurchase_edges); no (ok, pk)-keyed
+    exchange survives, and the result matches the naive distinct form."""
+    import re
+
+    from porcupine_spark.plans.joins_extra import (
+        BASKET_MIN_SUPPORT,
+        basket_pair_lift,
+    )
+    from porcupine_spark.tables import load_table
+
+    new = basket_pair_lift(spark, sf_dir)
+    plan = executed_plan(new)
+    assert re.search(r"Exchange hashpartitioning\(l_orderkey#\d+L, \d+\)", plan), plan
+    assert not re.search(
+        r"Exchange hashpartitioning\(l_orderkey#\d+L, l_partkey", plan
+    ), plan
+
+    li = load_table(spark, sf_dir, "lineitem")
+    items = li.select("l_orderkey", "l_partkey").distinct()
+    n = items.agg(F.countDistinct("l_orderkey").alias("n_orders"))
+    freq = items.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("n_part"))
+    a = items.select(F.col("l_orderkey"), F.col("l_partkey").alias("part_a"))
+    b = items.select(F.col("l_orderkey"), F.col("l_partkey").alias("part_b"))
+    pairs = (
+        a.join(b, "l_orderkey")
+        .where(F.col("part_a") < F.col("part_b"))
+        .groupBy("part_a", "part_b")
+        .agg(F.count(F.lit(1)).alias("support"))
+        .where(F.col("support") >= BASKET_MIN_SUPPORT)
+    )
+    fa = freq.select(F.col("l_partkey").alias("part_a"), F.col("n_part").alias("n_a"))
+    fb = freq.select(F.col("l_partkey").alias("part_b"), F.col("n_part").alias("n_b"))
+    old = (
+        pairs.join(F.broadcast(fa), "part_a")
+        .join(F.broadcast(fb), "part_b")
+        .crossJoin(F.broadcast(n))
+        .select(
+            "part_a", "part_b", "support", "n_a", "n_b",
+            (
+                (F.col("support").cast("decimal(38,0)") * F.col("n_orders")).cast("double")
+                / (F.col("n_a").cast("decimal(38,0)") * F.col("n_b")).cast("double")
+            ).alias("lift"),
+        )
+    )
+    assert sorted(map(tuple, new.collect())) == sorted(map(tuple, old.collect()))

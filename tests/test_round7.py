@@ -7,8 +7,11 @@ application, merge chaining across rounds, stream-vs-batch result
 parity, and plan shapes (broadcast weight table, no global window).
 """
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
+
+from porcupine_spark.bucketing import executed_plan
 
 
 def test_bpe_wrapped_replace_is_greedy_nonoverlapping(spark):
@@ -58,7 +61,7 @@ def test_classifier_gate_plan_broadcasts_weights_no_udf(spark):
     df = load_all_plans()["classifier_quality_gate"].builder(
         spark, "/root/testdata/sf0.001"
     )
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(df)
     assert "BroadcastHashJoin" in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     rows = df.collect()
@@ -148,7 +151,7 @@ def test_bpe_train_no_global_window(spark, monkeypatch):
         .orderBy(F.desc("n"), F.asc("ls"), F.asc("rs"))
         .limit(1)
     )
-    plan = best._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(best)
     assert "TakeOrderedAndProject" in plan
     assert not has_global_window(plan)
 
@@ -348,8 +351,6 @@ def test_local_kmeans_trainer_contract():
     replaced the pyspark.ml fits in optimization r7: deterministic
     across calls, GEMM distances == naive distances, and the n<k /
     empty-cluster paths return a full (k, dim) matrix."""
-    import numpy as np
-
     from porcupine_spark.functions.localkmeans import local_kmeans_fit
 
     rng = np.random.RandomState(3)
@@ -386,9 +387,7 @@ def test_bounded_training_sample_is_capped_and_deterministic(spark):
     selected in a deterministic order (stable under partitioning),
     Arrow path. r8 switched the order from a vec_id prefix to
     xxhash64(vec_id) (de-biased subsample — ADVICE r7); the hash-order
-    specifics are pinned in test_round8."""
-    import numpy as np
-
+    specifics are pinned in test_bounded_training_sample_hash_order."""
     from porcupine_spark.functions import localkmeans as lk
 
     rows = [(int(i), [float(i), float(-i)]) for i in range(700, -1, -1)]
@@ -404,12 +403,73 @@ def test_bounded_training_sample_is_capped_and_deterministic(spark):
     assert np.array_equal(s, s2)
 
 
+def test_kmeans_empty_cluster_repairs_are_distinct():
+    """ADVICE r7: two clusters empty in the SAME Lloyd iteration must
+    repair to DIFFERENT points (the chosen row is masked out), not both
+    to the global argmax."""
+    from porcupine_spark.functions.localkmeans import _one_kmeans_run
+
+    # 2 distinct coords, k=4 -> k-means++ must duplicate inits -> >=2
+    # empty clusters in iteration 1; both coords must survive as centers
+    x = np.array([[0.0, 0.0], [100.0, 0.0], [0.0, 0.0], [100.0, 0.0]])
+    for seed in range(12):
+        centers, inertia = _one_kmeans_run(x, 4, seed, 1)
+        vals = sorted(c[0] for c in centers)
+        assert vals == [0.0, 0.0, 100.0, 100.0], (seed, vals)
+        assert inertia == 0.0
+
+
+def test_kmeans_inertia_scored_on_final_centers():
+    """ADVICE r7: restart ranking must use a FRESH assignment against the
+    post-update centers, not the pre-update one."""
+    from porcupine_spark.functions.localkmeans import _one_kmeans_run
+
+    rng = np.random.RandomState(3)
+    x = np.vstack(
+        [rng.randn(40, 3) + off for off in ([0, 0, 0], [8, 0, 0], [0, 8, 0])]
+    )
+    for seed in (7, 1007, 2007):
+        centers, inertia = _one_kmeans_run(x, 3, seed, 1)
+        d = ((x[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
+        fresh = float(d.min(axis=1).sum())
+        assert inertia == pytest.approx(fresh, rel=0, abs=0)
+
+
+def test_bounded_training_sample_hash_order(spark):
+    """r8 de-bias (ADVICE): the training sample is the lowest-k rows by
+    xxhash64(vec_id) — deterministic, partitioning-independent, and NOT
+    a vec_id prefix."""
+    from porcupine_spark.functions import localkmeans as lk
+
+    rows = [(int(i), [float(i), float(-i)]) for i in range(700, -1, -1)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    old = lk.TRAIN_POINTS_PER_CENTROID
+    lk.TRAIN_POINTS_PER_CENTROID = 100
+    try:
+        s1 = lk.bounded_training_sample(emb.repartition(7), 2)
+        s2 = lk.bounded_training_sample(emb.repartition(3), 2)
+    finally:
+        lk.TRAIN_POINTS_PER_CENTROID = old
+    assert s1.shape == (200, 2) and s1.dtype == np.float64
+    assert np.array_equal(s1, s2)  # partitioning-independent
+    # expected ids straight from the same hash, computed relationally
+    exp = (
+        emb.select("vec_id")
+        .orderBy(F.xxhash64("vec_id"), "vec_id")
+        .limit(200)
+        .toPandas()["vec_id"]
+        .to_numpy()
+        .astype(np.float64)
+    )
+    assert np.array_equal(s1[:, 0], exp)
+    assert not np.array_equal(np.sort(exp), np.arange(200.0))  # not a prefix
+
+
 def test_neardup_lsh_min_band_candidates_unique_and_complete(spark):
     """The r7 candidate stage emits each near-threshold pair from its
     LOWEST colliding band only, replacing the cross-bucket distinct()
     Exchange. Contract: the emitted set is duplicate-free AND equals
     the old emit-everywhere + distinct reference set."""
-    import numpy as np
     import pandas as pd
 
     from porcupine_spark.operators import similarity as S
@@ -440,8 +500,6 @@ def test_neardup_lsh_min_band_candidates_unique_and_complete(spark):
         )
 
     n_bands = S.LSH_PLANES // S.LSH_BAND_BITS
-    from pyspark.sql import functions as F
-
     be = sigs.select(
         "vec_id",
         "embedding",

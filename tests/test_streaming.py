@@ -93,21 +93,23 @@ def _drain_steps(tree: ast.AST):
             yield getattr(node, "lineno", 0)
 
 
-def _scan() -> dict[str, list[int]]:
+def package_lines(steps) -> dict[str, list[int]]:
+    """{module path under ``porcupine_spark/``: sorted lines} of every
+    module in which ``steps(tree)`` yields a line."""
     found = {}
     for dirpath, _dirs, files in os.walk(PKG):
         for name in files:
             if name.endswith(".py"):
                 path = os.path.join(dirpath, name)
                 with open(path) as fh:
-                    lines = sorted(set(_drain_steps(ast.parse(fh.read(), path))))
+                    lines = sorted(set(steps(ast.parse(fh.read(), path))))
                 if lines:
                     found[os.path.relpath(path, PKG)] = lines
     return found
 
 
 def test_streams_drain_only_through_drain_py():
-    found = _scan()
+    found = package_lines(_drain_steps)
     stray = {rel: lines for rel, lines in found.items() if rel != DRAIN}
     assert not stray, f"memory sink or processAllAvailable outside {DRAIN}: {stray}"
     # and the scan still sees the one real drain

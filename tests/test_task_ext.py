@@ -6,6 +6,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from porcupine_spark.bucketing import executed_plan
 from porcupine_spark.catalog import Catalog, Dataset
 from porcupine_spark.run import run_pipeline
 from porcupine_spark.task import arr, load
@@ -140,7 +141,7 @@ def test_write_partitioned_roundtrip(spark, tmp_path):
     back = run_pipeline(load_partitioned("bykey", "k", [1]), cat, spark, root=str(tmp_path))
     assert sorted(r.v for r in back.collect()) == ["a", "b"]
     # partition pruning visible in the plan
-    plan = back._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(back)
     assert "PartitionFilters" in plan
 
 
@@ -257,9 +258,9 @@ def test_bucketed_join_no_shuffle(spark, tmp_path):
     try:
         joined = bucketed_join(spark, "t_left", "t_right", "k")
         assert joined.count() == 1000
-        plan = joined._jdf.queryExecution().executedPlan().toString()
+        plan = executed_plan(joined)
         assert "SortMergeJoin" in plan
-        assert shuffle_exchanges_in_plan(joined) == 0
+        assert shuffle_exchanges_in_plan(plan) == 0
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         spark.sql("DROP TABLE IF EXISTS t_left")

@@ -19,6 +19,7 @@ sys.path.insert(
 )
 from plan_audit import has_global_window  # noqa: E402
 
+from porcupine_spark.bucketing import executed_plan
 from porcupine_spark.functions.topk import global_rank, ntile_from_rank, ranked_topk
 
 
@@ -45,12 +46,7 @@ def test_ranked_topk_matches_row_number(spark, scored):
 
 
 def test_ranked_topk_plan_has_no_window(spark, scored):
-    plan = (
-        ranked_topk(scored, "score", ["key"], 5)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    plan = executed_plan(ranked_topk(scored, "score", ["key"], 5))
     assert not has_global_window(plan)
     assert "Window" not in plan  # not even a partitioned one
     assert "TakeOrderedAndProject" in plan
@@ -78,7 +74,7 @@ def test_global_rank_matches_row_number_and_running_sum(spark, scored):
 
 def test_global_rank_plan_window_is_partitioned(spark, scored):
     got, _, _ = global_rank(scored, [F.asc("score"), F.asc("key")])
-    plan = got._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(got)
     assert not has_global_window(plan)
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
@@ -121,7 +117,7 @@ def test_corpus_grain_ranking_has_no_global_window(spark, sf_dir, name):
     from porcupine_spark.plans.registry import load_all_plans
 
     spec = load_all_plans()[name]
-    plan = spec.builder(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(spec.builder(spark, sf_dir))
     assert not has_global_window(plan), name
 
 
@@ -131,7 +127,7 @@ def test_sorted_neighborhood_sharded_rank_join(spark, sf_dir):
     from porcupine_spark.plans.registry import load_all_plans
 
     spec = load_all_plans()["sorted_neighborhood_pairs"]
-    plan = spec.builder(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    plan = executed_plan(spec.builder(spark, sf_dir))
     assert not has_global_window(plan)
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan

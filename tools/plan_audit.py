@@ -18,6 +18,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from porcupine_spark.bucketing import executed_plan, shuffle_exchanges_in_plan
 from porcupine_spark.plans.registry import load_all_plans
 from porcupine_spark.session import get_spark
 
@@ -158,18 +159,12 @@ def main() -> int:
             rows.append((name, None))
             continue
         try:
-            plan = (
-                spec.builder(spark, args.sf)
-                ._jdf.queryExecution()
-                .executedPlan()
-                .toString()
-            )
+            plan = executed_plan(spec.builder(spark, args.sf))
         except Exception as e:  # noqa: BLE001 — audit must cover the rest
             rows.append((name, f"ERROR: {type(e).__name__}: {e}"))
             continue
         stats = {
-            "shuffle": plan.count("Exchange hashpartitioning")
-            + plan.count("Exchange rangepartitioning"),
+            "shuffle": shuffle_exchanges_in_plan(plan),
             "bcast": plan.count("BroadcastHashJoin"),
             "smj": plan.count("SortMergeJoin"),
             "pandas": plan.count("MapInPandas") + plan.count("FlatMapGroupsInPandas"),
