@@ -31,6 +31,26 @@ _SQL_TOKS = (
 )
 
 
+def _pandas_frame(spark: SparkSession, schema: str, **cols) -> DataFrame:
+    """A driver-built frame of the columns ``cols`` through pandas and
+    Arrow. A frame built from a Python list plans a ``PythonRDD``, so
+    every job over it starts a Python worker."""
+    import pandas as pd
+
+    return spark.createDataFrame(pd.DataFrame(cols), schema)
+
+
+def _word_counts(docs: DataFrame, *keys: str) -> DataFrame:
+    """(*keys, word, freq): one explode of ``tokens(text)``, empty
+    tokens dropped, the occurrences of each word counted per key."""
+    return (
+        docs.select(*keys, F.explode(tokens(F.col("text"))).alias("word"))
+        .filter(F.col("word") != "")
+        .groupBy(*keys, "word")
+        .agg(F.count(F.lit(1)).alias("freq"))
+    )
+
+
 @query(
     "tfidf_top_terms",
     f"""
@@ -532,7 +552,7 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     top = ranked_topk(counts, "n", ["tok"], max(COVERAGE_KS))
     total = counts.agg(F.sum("n").cast("long").alias("total_n"))
-    ks = spark.createDataFrame([(k,) for k in COVERAGE_KS], "k long")
+    ks = _pandas_frame(spark, "k long", k=COVERAGE_KS)
     return (
         top.join(F.broadcast(ks), F.col("rk") <= F.col("k"))
         .groupBy(F.col("k").alias("vocab_size"))
@@ -913,14 +933,7 @@ BPE_TOP_PAIRS = 20  # report the top-k merge candidates
 def bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     from porcupine_spark.functions import seq1
 
-    docs = load_table(spark, sf_dir, "documents")
-    toks = tokens(F.col("text"))
-    words = (
-        docs.select(F.explode(toks).alias("word"))
-        .filter(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("freq"))
-    )
+    words = _word_counts(load_table(spark, sf_dir, "documents"))
     chars = F.filter(F.split(F.col("word"), ""), lambda c: c != F.lit(""))
     pairs = words.select(
         "freq",
@@ -957,6 +970,10 @@ BPE_TRAIN_ROUNDS = 8  # fixed merge budget (real trainers run to |vocab|)
 # 13.7 vs 54.9 s, 1M 32-37 vs 91-121 s. The driver won at every size
 # measured; the gate sits at the largest one, where its serial cost is
 # still half a minute and a cluster's distributed rounds start to pay.
+# The gate counts the collected rows: distinct words for the training
+# chain, (source, word) rows for the encode. Either count bounds the
+# distinct words, so the bound above holds for both; the encode's
+# per-source roll-up adds one dict update per collected row.
 BPE_DRIVER_MAX_WORDS = 1_000_000
 
 # Symbol sequences travel as SPACE-WRAPPED strings — every symbol is
@@ -1051,10 +1068,16 @@ def _bpe_train_oracle_sql(rounds: int = BPE_TRAIN_ROUNDS) -> str:
 )
 def bpe_merge_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges, _ = _bpe_train_chain(spark, sf_dir)
-    return spark.createDataFrame(
-        [(r, ls, rs, ls + rs, n) for r, ls, rs, n in merges],
+    rnd, ls, rs, n = zip(*merges) if merges else ((), (), (), ())
+    return _pandas_frame(
+        spark,
         "merge_round long, left_sym string, right_sym string, "
         "merged string, n_occurrences long",
+        merge_round=rnd,
+        left_sym=ls,
+        right_sym=rs,
+        merged=[a + b for a, b in zip(ls, rs)],
+        n_occurrences=n,
     )
 
 
@@ -1083,54 +1106,36 @@ def _bpe_merge_local(
     return merges, ws
 
 
-def _bpe_train_chain(
-    spark: SparkSession, sf_dir: str, rounds: int = BPE_TRAIN_ROUNDS
-) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
-    """Run the BPE merge chain; return (merges, final word table).
-
-    The returned DataFrame is (word, ws, freq) with ws the word's
-    space-wrapped symbol string AFTER all merges — bpe_merge_train
-    reports the merges, bpe_encode_tokens joins the final segmentation
-    back to documents. The `word` column rides along untouched so the
-    chain stays joinable (mirrored in the oracle's _bpe_chain_ctes).
-
-    Up to ``BPE_DRIVER_MAX_WORDS`` distinct words the chain runs on the
-    driver (``_bpe_merge_local``) over the collected word table; above
-    it, each round is one distributed pair count + argmax."""
-    import pandas as pd
-
-    from porcupine_spark.functions import seq1
+def _bpe_words(spark: SparkSession, sf_dir: str, *keys: str):
+    """``checkpoint_sized`` of the word counts of ``documents`` per
+    ``keys``, gated at ``BPE_DRIVER_MAX_WORDS`` rows: (checkpoint, rows,
+    Arrow table or None) of (*keys, word, ws, freq), ``ws`` the word's
+    space-wrapped symbol string. The wrap is a Spark expression in the
+    same projection, so both paths start from the symbols Java's regex
+    yields; ``(?s)`` lets its ``.`` wrap U+0085, U+2028 and U+2029 too,
+    as DuckDB's and Python's ``.`` do."""
     from porcupine_spark.functions.driverstate import checkpoint_sized
 
-    docs = load_table(spark, sf_dir, "documents")
-    toks = tokens(F.col("text"))
-    words = (
-        docs.select(F.explode(toks).alias("word"))
-        .filter(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("freq"))
-    )
-    # the initial wrap stays a Spark expression on both paths, so the
-    # driver loop starts from exactly the symbols Java's regex yields
-    cur, _, table = checkpoint_sized(
-        words.select("word", F.regexp_replace("word", "(.)", " $1 ").alias("ws"), "freq"),
+    words = _word_counts(load_table(spark, sf_dir, "documents"), *keys)
+    return checkpoint_sized(
+        words.select(
+            *keys,
+            "word",
+            F.regexp_replace("word", "(?s)(.)", " $1 ").alias("ws"),
+            "freq",
+        ),
         BPE_DRIVER_MAX_WORDS,
     )
-    if table is not None:
-        merges, ws = _bpe_merge_local(
-            table.column("ws").to_pylist(), table.column("freq").to_pylist(), rounds
-        )
-        final = spark.createDataFrame(
-            pd.DataFrame(
-                {
-                    "word": table.column("word").to_pylist(),
-                    "ws": ws,
-                    "freq": table.column("freq").to_numpy(),
-                }
-            ),
-            "word string, ws string, freq bigint",
-        )
-        return merges, final
+
+
+def _bpe_rounds(
+    cur: DataFrame, rounds: int
+) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
+    """The distributed merge chain over a (word, ws, freq) vocabulary:
+    each round is one pair count whose argmax is the one row the driver
+    sees. Returns (merges, final vocabulary)."""
+    from porcupine_spark.functions import seq1
+
     merges = []
     for rnd in range(1, rounds + 1):
         syms = F.split(F.trim(F.col("ws")), "  ")
@@ -1169,6 +1174,35 @@ def _bpe_train_chain(
             "freq",
         ).transform(materialize, eager=False)
     return merges, cur
+
+
+def _bpe_train_chain(
+    spark: SparkSession, sf_dir: str, rounds: int = BPE_TRAIN_ROUNDS
+) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
+    """Run the BPE merge chain; return (merges, final word table).
+
+    The returned DataFrame is (word, ws, freq) with ws the word's
+    space-wrapped symbol string AFTER all merges. The `word` column
+    rides along untouched so the chain stays joinable (mirrored in the
+    oracle's _bpe_chain_ctes).
+
+    Up to ``BPE_DRIVER_MAX_WORDS`` distinct words the chain runs on the
+    driver (``_bpe_merge_local``) over the collected word table; above
+    it, in ``_bpe_rounds``."""
+    cur, _, table = _bpe_words(spark, sf_dir)
+    if table is None:
+        return _bpe_rounds(cur, rounds)
+    merges, ws = _bpe_merge_local(
+        table.column("ws").to_pylist(), table.column("freq").to_pylist(), rounds
+    )
+    final = _pandas_frame(
+        spark,
+        "word string, ws string, freq bigint",
+        word=table.column("word").to_pylist(),
+        ws=ws,
+        freq=table.column("freq").to_numpy(),
+    )
+    return merges, final
 
 
 def _bpe_encode_oracle_sql(rounds: int = BPE_TRAIN_ROUNDS) -> str:
@@ -1213,28 +1247,40 @@ def _bpe_encode_oracle_sql(rounds: int = BPE_TRAIN_ROUNDS) -> str:
     f"exact milli). This is the token-budget accounting a pretraining "
     f"data plan runs after training a tokenizer — and the per-source "
     f"fertility spread shows which sources get expensive to encode. "
-    f"Scale shape: encoding happens ONCE per distinct word (Zipf-head "
-    f"collapse again; on the driver up to {BPE_DRIVER_MAX_WORDS:,} "
-    f"distinct words), then one vocab-keyed equi-join of occurrences "
-    f"against the encoded vocab (corpus-linear, AQE-planned) and a "
-    f"|sources|-row aggregate.",
+    f"Scale shape: documents are tokenized ONCE into one checkpointed "
+    f"(source, word, count) table; the merge chain runs on its "
+    f"vocabulary (summed counts, the Zipf-head collapse) and the "
+    f"roll-up weights each (source, word) row by its word's subword "
+    f"length, so no per-occurrence row is ever joined. Up to "
+    f"{BPE_DRIVER_MAX_WORDS:,} (source, word) rows the table is "
+    f"collected through Arrow and merges, lengths and the "
+    f"|sources|-row roll-up run exactly on the driver; above that "
+    f"gate the distributed merge rounds run on the vocabulary and one "
+    f"vocab-sized join against the (source, word) rows feeds the "
+    f"per-source aggregate.",
 )
 def bpe_encode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _, encoded = _bpe_train_chain(spark, sf_dir)
-    enc = encoded.select(
+    words, _, table = _bpe_words(spark, sf_dir, "source")
+    if table is not None:
+        return _bpe_encode_local(spark, table, BPE_TRAIN_ROUNDS)
+    vocab = (
+        words.groupBy("word", "ws")
+        .agg(F.sum("freq").alias("freq"))
+        .transform(materialize)
+    )
+    _, final = _bpe_rounds(vocab, BPE_TRAIN_ROUNDS)
+    enc = final.select(
         "word",
         F.size(F.split(F.trim(F.col("ws")), "  ")).cast("long").alias("n_sub"),
     )
-    docs = load_table(spark, sf_dir, "documents")
-    docw = docs.select(
-        "source", F.explode(tokens(F.col("text"))).alias("word")
-    ).filter(F.col("word") != "")
     return (
-        docw.join(enc, "word")
+        words.join(enc, "word")
         .groupBy("source")
         .agg(
-            F.count(F.lit(1)).cast("long").alias("n_words"),
-            F.sum("n_sub").cast("long").alias("n_subword_tokens"),
+            F.sum("freq").cast("long").alias("n_words"),
+            F.sum(F.col("freq") * F.col("n_sub"))
+            .cast("long")
+            .alias("n_subword_tokens"),
         )
         .select(
             "source",
@@ -1246,6 +1292,38 @@ def bpe_encode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("fertility_milli"),
         )
+    )
+
+
+def _bpe_encode_local(spark: SparkSession, table, rounds: int) -> DataFrame:
+    """bpe_encode_tokens on the driver over the collected (source, word,
+    ws, freq) rows: the merge chain on the vocabulary (``freq`` summed
+    per word), each word's subword count as Spark's
+    ``size(split(trim(ws), '  '))`` gives it, and the per-source roll-up
+    in Python integers."""
+    sources = table.column("source").to_pylist()
+    words = table.column("word").to_pylist()
+    freqs = table.column("freq").to_pylist()
+    vocab: dict[str, list] = {}  # word -> [ws, summed freq]
+    for w, s, f in zip(words, table.column("ws").to_pylist(), freqs):
+        vocab.setdefault(w, [s, 0])[1] += f
+    _, ws = _bpe_merge_local(
+        [s for s, _ in vocab.values()], [f for _, f in vocab.values()], rounds
+    )
+    n_sub = {w: len(s.strip(" ").split("  ")) for w, s in zip(vocab, ws)}
+    roll: dict[str | None, list[int]] = {}  # source -> [words, subwords]
+    for src, w, f in zip(sources, words, freqs):
+        acc = roll.setdefault(src, [0, 0])
+        acc[0] += f
+        acc[1] += f * n_sub[w]
+    return _pandas_frame(
+        spark,
+        "source string, n_words bigint, n_subword_tokens bigint, "
+        "fertility_milli bigint",
+        source=list(roll),
+        n_words=[n for n, _ in roll.values()],
+        n_subword_tokens=[t for _, t in roll.values()],
+        fertility_milli=[t * 1000 // n for n, t in roll.values()],
     )
 
 
@@ -1921,7 +1999,7 @@ def vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     m = docs.agg(F.max("doc_id").alias("mx"))
     grid = (
-        spark.createDataFrame([(f,) for f in GROWTH_OCTILES], "f int")
+        _pandas_frame(spark, "f int", f=GROWTH_OCTILES)
         .crossJoin(F.broadcast(m))
         .select("f", F.expr("mx * f div 8").alias("cutoff"))
     )

@@ -8,6 +8,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from porcupine_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
+# the sf0.01 tables beside SF_DIR, for tests that need more rows
+SF01_DIR = os.environ.get(
+    "SPARK_GRAFT_TEST_SF01", os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+)
 
 
 @pytest.fixture(scope="session")

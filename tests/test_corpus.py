@@ -110,3 +110,32 @@ def test_context_window_packing_semantics(spark):
     r = out["a"]
     assert (r.n_docs, r.total_tokens, r.n_windows, r.n_boundary_docs,
             r.tail_padding_tokens) == (4, 4000, 2, 1, 96)
+
+
+def test_driver_built_frames_start_no_python_worker(spark, sf_dir, monkeypatch):
+    """The constant tables and driver-built results of the corpus
+    builders come through pandas and Arrow: none plans a PythonRDD, so
+    no job over them starts a Python worker. A list-built frame does
+    plan one, which keeps the check able to fail."""
+    from porcupine_spark.plans.registry import load_all_plans
+
+    frames = []
+    real = spark.createDataFrame
+
+    def recording(*args, **kwargs):
+        frames.append(real(*args, **kwargs))
+        return frames[-1]
+
+    monkeypatch.setattr(spark, "createDataFrame", recording)
+    plans = load_all_plans()
+    names = ("vocab_coverage_curve", "vocab_growth_curve", "bpe_merge_train", "bpe_encode_tokens")
+    for name in names:
+        n = len(frames)
+        plans[name].builder(spark, sf_dir)
+        assert len(frames) > n, name
+
+    def rdd(df):
+        return df._jdf.queryExecution().toRdd().toDebugString()
+
+    assert "PythonRDD" in rdd(real([(1,)], "k long"))
+    assert [rdd(f) for f in frames if "PythonRDD" in rdd(f)] == []

@@ -5,7 +5,9 @@ below the ``driverstate`` gate and the distributed rounds above it
 ``kcore_peel_parts`` and ``pagerank_supplier_graph`` against their
 Spark twins and oracles; the stored-row-count memo that gates them;
 the triangle counts on planted graphs; the PageRank layouts and the
-co-purchase edge stage; and the one materialization path."""
+co-purchase edge stage; the BPE merge encoding, training invariants
+and the one-pass encode against its oracle; and the one
+materialization path."""
 
 import ast
 import os
@@ -57,6 +59,34 @@ def _planted_docs(tmp_path):
                 "lang": ["en"] * 3,
                 "source": ["a", "b", "a"],
                 "n_chars": pa.array([len(t) for t in text], pa.int64()),
+            }
+        ),
+        str(tmp_path / "documents.parquet"),
+    )
+    return str(tmp_path)
+
+
+def _planted_encode_docs(tmp_path):
+    """A corpus for the encode roll-up: a NULL source, a NULL text, a
+    whitespace-only text, U+00A0 and U+2028 inside tokens, a
+    supplementary-plane character, and "abab" in three sources."""
+    rows = [
+        ("a", "abab ab\u00a0ab aaaa x\u2028y zz"),
+        ("b", "abab baba\tzz  \n zz"),
+        (None, "abab x\u2028y \U0001F600\U0001F600a \U0001F600\U0001F600a"),
+        ("b", None),
+        ("c", " \t\n "),
+        ("a", "aaaa ab\u00a0ab"),
+    ]
+    text = [t for _, t in rows]
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array(range(1, len(rows) + 1), pa.int64()),
+                "text": pa.array(text, pa.string()),
+                "lang": ["en"] * len(rows),
+                "source": pa.array([s for s, _ in rows], pa.string()),
+                "n_chars": pa.array([len(t or "") for t in text], pa.int64()),
             }
         ),
         str(tmp_path / "documents.parquet"),
@@ -283,6 +313,9 @@ LOOPS = {
         spark, _symmetric(_planted_edges(spark))
     ),
     "bpe_planted": lambda spark, sf, tmp: _bpe_state(spark, _planted_docs(tmp)),
+    "bpe_encode_planted": lambda spark, sf, tmp: corpus.bpe_encode_tokens(
+        spark, _planted_encode_docs(tmp)
+    ),
 }
 
 
@@ -294,7 +327,7 @@ def test_driver_path_equals_distributed(spark, sf_dir, tmp_path, monkeypatch, lo
     def rows(result):
         if isinstance(result, tuple):  # BPE (merges, final words)
             return result
-        return sorted(tuple(r) for r in result.collect())
+        return sorted((tuple(r) for r in result.collect()), key=repr)
 
     local = rows(LOOPS[loop](spark, sf_dir, tmp_path))
     with monkeypatch.context() as m:
@@ -358,12 +391,273 @@ def test_bpe_corpus_without_pairs_has_no_merges(spark, tmp_path, monkeypatch, di
     assert sorted(r.ws for r in cur.collect()) == [" a ", " b ", " c ", " d "]
 
 
+def _encode_rows(rows):
+    return sorted(((s, int(n), int(t), int(f)) for s, n, t, f in rows), key=repr)
+
+
+def test_bpe_encode_planted_paths_and_oracle_agree(spark, tmp_path, monkeypatch):
+    """The driver path, the gate-0 rounds and the DuckDB oracle give the
+    same per-source roll-up of the planted corpus: the NULL source is
+    one group, a source whose only text is whitespace has no row, and
+    U+2028 is a symbol of its own on every path."""
+    import duckdb
+
+    sf = _planted_encode_docs(tmp_path)
+    local = _encode_rows(corpus.bpe_encode_tokens(spark, sf).collect())
+    with monkeypatch.context() as m:
+        _force_distributed(m)
+        distributed = _encode_rows(corpus.bpe_encode_tokens(spark, sf).collect())
+    con = duckdb.connect()
+    parquet = tmp_path / "documents.parquet"
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{parquet}')")
+    oracle = _encode_rows(con.sql(corpus._bpe_encode_oracle_sql()).fetchall())
+    assert local == distributed == oracle
+    assert [r[0] for r in local] == ["a", "b", None]
+    # U+2028 is wrapped as a symbol of its own, which a merge then joins
+    # to x (Java's `.` without (?s) leaves it unwrapped: " x \u2028 y ")
+    _, words = _bpe_state(spark, sf)
+    assert {w: s for w, s, _ in words}["x\u2028y"] == " x\u2028  y "
+
+
+def test_bpe_encode_scans_documents_once(spark, sf_dir, monkeypatch):
+    """Above the gate the encode tokenizes documents once: of the plans
+    it materializes and the plan it returns, exactly one scans
+    documents (the rounds and the roll-up read the checkpoint)."""
+    plans = []
+    real = driverstate.materialize
+
+    def recording(df, eager=True):
+        plans.append(executed_plan(df))
+        return real(df, eager)
+
+    monkeypatch.setattr(driverstate, "materialize", recording)
+    monkeypatch.setattr(corpus, "materialize", recording)
+    _force_distributed(monkeypatch)
+    plans.append(executed_plan(corpus.bpe_encode_tokens(spark, sf_dir)))
+    scans = [
+        line
+        for plan in plans
+        for line in plan.splitlines()
+        if "FileScan" in line and "documents" in line
+    ]
+    assert len(scans) == 1, scans
+
+
+def test_bpe_wrapped_replace_is_greedy_nonoverlapping(spark):
+    """The space-wrapped encoding + builtin replace must implement
+    BPE's greedy left-to-right NON-overlapping merge pass: [a,a,a,a]
+    with merge (a,a) becomes [aa,aa], and [a,a,a] becomes [aa,a] —
+    the cases a shared-separator encoding gets wrong."""
+    df = spark.createDataFrame(
+        [("aaaa",), ("aaa",), ("aba",)], "word string"
+    ).select(F.regexp_replace("word", "(.)", " $1 ").alias("ws"))
+    merged = df.select(
+        F.split(
+            F.trim(F.replace(F.col("ws"), F.lit(" a  a "), F.lit(" aa "))), "  "
+        ).alias("syms")
+    )
+    got = sorted(tuple(r.syms) for r in merged.collect())
+    assert got == sorted([("aa", "aa"), ("aa", "a"), ("a", "b", "a")])
+
+
+def test_bpe_merge_train_chains_merges(spark, sf_dir):
+    """Training must RE-SEGMENT between rounds: on a corpus dominated by
+    one repeated word, later rounds merge symbols that only exist
+    because earlier rounds created them."""
+    from porcupine_spark.operators.corpus import bpe_merge_train
+
+    rows = bpe_merge_train(spark, sf_dir).collect()
+    assert [r.merge_round for r in rows] == list(range(1, len(rows) + 1))
+    produced = set()
+    chained = 0
+    for r in rows:
+        if r.left_sym in produced or r.right_sym in produced:
+            chained += 1
+        produced.add(r.merged)
+        assert r.merged == r.left_sym + r.right_sym
+    # real text at any sf yields at least one chained merge in 8 rounds
+    assert chained >= 1, [tuple(r) for r in rows]
+    # counts are non-increasing is NOT guaranteed (re-segmentation can
+    # expose new pairs), but every count must be positive
+    assert all(r.n_occurrences > 0 for r in rows)
+
+
+def test_bpe_train_no_global_window(spark, sf_dir, monkeypatch):
+    """The per-round argmax must plan as TakeOrderedAndProject (limit 1),
+    never a partition-less window over the pair table."""
+    import io
+    import os
+    import sys
+
+    from porcupine_spark.operators import corpus
+
+    # the distributed merge rounds, not the driver path
+    monkeypatch.setattr(corpus, "BPE_DRIVER_MAX_WORDS", 0)
+
+    sys.path.insert(
+        0,
+        os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"
+        ),
+    )
+    from plan_audit import has_global_window
+
+    from porcupine_spark.plans.registry import load_all_plans
+
+    df = load_all_plans()["bpe_merge_train"].builder(spark, sf_dir)
+    # result is a driver-built literal table; the plan guard that matters
+    # is the per-round pair ranking, exercised inside the builder. Build
+    # the round-1 pair plan directly and check it.
+    from porcupine_spark.functions import seq1
+    from porcupine_spark.operators.text import tokens
+    from porcupine_spark.tables import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    words = (
+        docs.select(F.explode(tokens(F.col("text"))).alias("word"))
+        .filter(F.col("word") != "")
+        .groupBy("word")
+        .agg(F.count(F.lit(1)).alias("freq"))
+    )
+    cur = words.select(F.regexp_replace("word", "(.)", " $1 ").alias("ws"), "freq")
+    syms = F.split(F.trim(F.col("ws")), "  ")
+    pairs = cur.select(
+        "freq",
+        F.explode(
+            F.transform(
+                seq1(F.size(syms) - 1),
+                lambda i: F.struct(
+                    F.element_at(syms, i).alias("ls"),
+                    F.element_at(syms, i + 1).alias("rs"),
+                ),
+            )
+        ).alias("p"),
+    ).select("freq", "p.ls", "p.rs")
+    best = (
+        pairs.groupBy("ls", "rs")
+        .agg(F.sum("freq").alias("n"))
+        .orderBy(F.desc("n"), F.asc("ls"), F.asc("rs"))
+        .limit(1)
+    )
+    plan = executed_plan(best)
+    assert "TakeOrderedAndProject" in plan
+    assert not has_global_window(plan)
+
+
+def test_bpe_encode_fertility_bounds(spark, sf_dir):
+    """Encoding invariants: every word costs at least 1 subword and at
+    most its character count; 8 merges must compress SOMETHING, so
+    corpus fertility lands strictly between 1.0 and the char-level
+    ceiling."""
+    from porcupine_spark.operators.corpus import bpe_encode_tokens
+    from porcupine_spark.operators.text import tokens
+    from porcupine_spark.tables import load_table
+
+    rows = bpe_encode_tokens(spark, sf_dir).collect()
+    assert rows
+    total_words = sum(r.n_words for r in rows)
+    total_sub = sum(r.n_subword_tokens for r in rows)
+    docs = load_table(spark, sf_dir, "documents")
+    total_chars = (
+        docs.select(
+            F.explode(tokens(F.col("text"))).alias("w")
+        )
+        .filter(F.col("w") != "")
+        .agg(F.sum(F.length("w")))
+        .collect()[0][0]
+    )
+    assert total_words <= total_sub < total_chars
+    for r in rows:
+        assert r.fertility_milli >= 1000
+        assert r.fertility_milli == r.n_subword_tokens * 1000 // r.n_words
+
+
+def test_bpe_oracle_survives_empty_merge_round():
+    """When a merge round finds no pairs (corpus fully
+    merged inside the budget), the oracle's per-round CTE must pass the
+    word table through unchanged — a cross join with the empty best-pair
+    CTE would annihilate it and silently break bpe_encode_tokens parity."""
+    import duckdb
+
+    from porcupine_spark.operators.corpus import _bpe_encode_oracle_sql
+
+    con = duckdb.connect()
+    # one distinct 2-char word: exactly ONE merge is possible, then all
+    # later rounds are empty
+    con.execute(
+        "CREATE VIEW documents AS SELECT 1 AS doc_id, 'srcX' AS source,"
+        " 'ab ab ab' AS text"
+    )
+    df = con.sql(_bpe_encode_oracle_sql(4)).df()
+    assert len(df) == 1
+    assert int(df.n_words[0]) == 3
+    assert int(df.n_subword_tokens[0]) == 3  # 'ab' merged to one symbol
+    assert int(df.fertility_milli[0]) == 1000
+
+
+def test_bpe_wrapped_replace_property_vs_reference(spark):
+    """Property: one merge pass via the space-wrapped string replace ==
+    a pure-Python reference greedy left-to-right non-overlapping merger,
+    over random symbol sequences INCLUDING multi-char symbols that share
+    prefixes/suffixes with the merge pair (the class where a sloppy
+    string encoding would false-match across symbol boundaries)."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    symbols = st.sampled_from(["a", "b", "ab", "ba", "aa", "aab"])
+
+    def ref_merge(syms, ls, rs):
+        out, i = [], 0
+        while i < len(syms):
+            if i + 1 < len(syms) and syms[i] == ls and syms[i + 1] == rs:
+                out.append(ls + rs)
+                i += 2
+            else:
+                out.append(syms[i])
+                i += 1
+        return out
+
+    @settings(max_examples=10, deadline=None)
+    @given(
+        seqs=st.lists(
+            st.lists(symbols, min_size=1, max_size=12), min_size=1, max_size=8
+        ),
+        pair=st.tuples(symbols, symbols),
+    )
+    def prop(seqs, pair):
+        from pyspark.sql import functions as F
+
+        ls, rs = pair
+        df = spark.createDataFrame(
+            [(" " + "  ".join(s) + " ",) for s in seqs], "ws string"
+        )
+        got = [
+            tuple(r.syms)
+            for r in df.select(
+                F.split(
+                    F.trim(
+                        F.replace(
+                            F.col("ws"),
+                            F.lit(f" {ls}  {rs} "),
+                            F.lit(f" {ls}{rs} "),
+                        )
+                    ),
+                    "  ",
+                ).alias("syms")
+            ).collect()
+        ]
+        want = [tuple(ref_merge(s, ls, rs)) for s in seqs]
+        assert got == want, (pair, seqs)
+
+    prop()
+
+
 @pytest.mark.parametrize(
     "name, bound",
     [
         ("pagerank_supplier_graph", 2),
         ("kcore_peel_parts", 1),
-        ("bpe_encode_tokens", 8),
+        ("bpe_encode_tokens", 4),
         ("dedup_clusters", 2),
     ],
 )
@@ -378,6 +672,16 @@ def test_driver_loop_build_job_bounds(spark, sf_dir, jobs_so_far, name, bound):
     j0 = jobs_so_far()
     builder(spark, sf_dir)
     assert jobs_so_far() - j0 <= bound
+
+
+def test_bpe_encode_action_job_bound(spark, sf_dir, jobs_so_far):
+    """Below the gate the encode returns a driver-built |sources|-row
+    frame: an aggregate reading every column of it runs at most 2
+    jobs, with no per-occurrence join left in the action."""
+    df = corpus.bpe_encode_tokens(spark, sf_dir)
+    j0 = jobs_so_far()
+    df.agg(F.sum(F.xxhash64(*df.columns) % 1024)).collect()
+    assert jobs_so_far() - j0 <= 2
 
 
 def test_checkpoint_drops_hash_partitioning(spark):

@@ -15,6 +15,7 @@ from porcupine_spark.operators.sessionize import sessionize
 from porcupine_spark.operators.similarity import dot_exact
 from porcupine_spark.functions import seq1
 from porcupine_spark.tables import load_table
+from conftest import SF01_DIR
 
 
 def test_asof_join_basic(spark):
@@ -718,7 +719,7 @@ def test_ivf_kmeans_recall_query(spark):
     sf0.01 (VERDICT r2 item 4's bar)."""
     from porcupine_spark.plans.registry import load_all_plans
 
-    out = load_all_plans()["ivf_kmeans_recall"].builder(spark, "/root/testdata/sf0.01")
+    out = load_all_plans()["ivf_kmeans_recall"].builder(spark, SF01_DIR)
     rows = out.collect()
     assert {r.query_id for r in rows} == set(range(10))
     mean_recall = sum(r.recall_at_5 for r in rows) / len(rows)
@@ -1430,14 +1431,12 @@ def test_transitivity_planted_triangle(spark, tmp_path):
     assert got.transitivity_micro == 1000000
 
 
-def test_jl_distortion_concentrates(spark):
+def test_jl_distortion_concentrates(spark, sf_dir):
     """JL with m=16 keeps squared-distance ratios within a constant
     band of 1 (std ~ sqrt(2/m) ~ 0.35) — the audit's reason to exist."""
     from porcupine_spark.plans.registry import load_all_plans
 
-    rows = load_all_plans()["jl_distortion_audit"].builder(
-        spark, "/root/testdata/sf0.001"
-    ).collect()
+    rows = load_all_plans()["jl_distortion_audit"].builder(spark, sf_dir).collect()
     assert len(rows) >= 10
     ppm = [r.distortion_ppm for r in rows]
     assert all(100_000 < p < 4_000_000 for p in ppm)

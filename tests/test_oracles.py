@@ -20,6 +20,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
 from verify_oracles import canon  # noqa: E402
 
 from porcupine_spark.tables import TABLES, load_table, table_path  # noqa: E402
+from conftest import SF01_DIR  # noqa: E402
 
 # one per operator family, events-heavy on purpose (the round-1 killer
 # was an events physical-schema assumption)
@@ -185,18 +186,17 @@ def oracle_con(sf_dir):
     con.close()
 
 
-def test_events_ts_contract(spark):
+def test_events_ts_contract(spark, sf_dir):
     """events.ts must arrive as TimestampType regardless of the parquet
     physical encoding (NANOS-as-long, MICROS-as-NTZ, or plain)."""
     from pyspark.sql.types import TimestampType
 
-    for sf in ("sf0.001", "sf0.01"):
-        d = f"/root/testdata/{sf}"
+    for d in (sf_dir, SF01_DIR):
         if not os.path.isdir(d):
             continue
         df = load_table(spark, d, "events")
         assert isinstance(df.schema["ts"].dataType, TimestampType), (
-            sf,
+            d,
             df.schema["ts"].dataType,
         )
 

@@ -7,10 +7,15 @@ allowlist below, with its reason. A new direct read would bypass the
 serial layer's schema memo and its post-read hooks; a new direct write
 would bypass the serial's ``writable`` check, its pre-write transform
 and, for a catalog dataset, the accessors and the access log.
+
+The tests find their data the same way: only ``conftest.py`` names a
+test-data directory, so ``SPARK_GRAFT_TEST_SF`` and
+``SPARK_GRAFT_TEST_SF01`` move every test that reads one.
 """
 
 import ast
 import os
+import re
 
 PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "porcupine_spark")
 
@@ -116,3 +121,27 @@ def test_file_writes_go_through_the_serial_layer():
 def test_write_allowlist_has_no_stale_entries():
     assert set(ALLOWED_WRITES) <= set(_scan(_is_writer))
 
+
+
+TESTS = os.path.dirname(os.path.abspath(__file__))
+DATA_PATH = re.compile(r"(^|/)testdata(/|$)")
+
+
+def test_data_path_literals_only_in_conftest():
+    """No test module but ``conftest.py`` holds a string with a
+    ``testdata`` path component (f-string parts included)."""
+    stray = []
+    for name in sorted(os.listdir(TESTS)):
+        if not name.endswith(".py") or name == "conftest.py":
+            continue
+        path = os.path.join(TESTS, name)
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        stray += [
+            f"tests/{name}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and DATA_PATH.search(node.value)
+        ]
+    assert not stray, f"test-data path literals outside conftest.py: {stray}"

@@ -1,10 +1,12 @@
-"""Round-7 additions: multi-round BPE trainer, hashed linear classifier
-gate, streaming familiarity gate, convergence backstop.
+"""Round-7 additions: hashed linear classifier gate, streaming
+familiarity gate, product quantization, the local k-means trainer and
+the min-band candidate emission (the BPE tests are in
+``test_driver_loops.py``).
 
 The oracle sweep proves engine parity; these tests pin the SEMANTICS
-that parity alone wouldn't catch — greedy non-overlapping merge
-application, merge chaining across rounds, stream-vs-batch result
-parity, and plan shapes (broadcast weight table, no global window).
+that parity alone wouldn't catch — stream-vs-batch result parity,
+trainer contracts, duplicate-free candidates and plan shapes
+(broadcast weight table).
 """
 
 import numpy as np
@@ -12,55 +14,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from porcupine_spark.bucketing import executed_plan
+from conftest import SF01_DIR
 
 
-def test_bpe_wrapped_replace_is_greedy_nonoverlapping(spark):
-    """The space-wrapped encoding + builtin replace must implement
-    BPE's greedy left-to-right NON-overlapping merge pass: [a,a,a,a]
-    with merge (a,a) becomes [aa,aa], and [a,a,a] becomes [aa,a] —
-    the cases a shared-separator encoding gets wrong."""
-    df = spark.createDataFrame(
-        [("aaaa",), ("aaa",), ("aba",)], "word string"
-    ).select(F.regexp_replace("word", "(.)", " $1 ").alias("ws"))
-    merged = df.select(
-        F.split(
-            F.trim(F.replace(F.col("ws"), F.lit(" a  a "), F.lit(" aa "))), "  "
-        ).alias("syms")
-    )
-    got = sorted(tuple(r.syms) for r in merged.collect())
-    assert got == sorted([("aa", "aa"), ("aa", "a"), ("a", "b", "a")])
-
-
-def test_bpe_merge_train_chains_merges(spark):
-    """Training must RE-SEGMENT between rounds: on a corpus dominated by
-    one repeated word, later rounds merge symbols that only exist
-    because earlier rounds created them."""
-    from porcupine_spark.operators.corpus import bpe_merge_train
-
-    rows = bpe_merge_train(spark, "/root/testdata/sf0.001").collect()
-    assert [r.merge_round for r in rows] == list(range(1, len(rows) + 1))
-    produced = set()
-    chained = 0
-    for r in rows:
-        if r.left_sym in produced or r.right_sym in produced:
-            chained += 1
-        produced.add(r.merged)
-        assert r.merged == r.left_sym + r.right_sym
-    # real text at any sf yields at least one chained merge in 8 rounds
-    assert chained >= 1, [tuple(r) for r in rows]
-    # counts are non-increasing is NOT guaranteed (re-segmentation can
-    # expose new pairs), but every count must be positive
-    assert all(r.n_occurrences > 0 for r in rows)
-
-
-def test_classifier_gate_plan_broadcasts_weights_no_udf(spark):
+def test_classifier_gate_plan_broadcasts_weights_no_udf(spark, sf_dir):
     """The weight table is config-sized — the plan must broadcast it
     (never shuffle the corpus side for it) and stay UDF-free."""
     from porcupine_spark.plans.registry import load_all_plans
 
-    df = load_all_plans()["classifier_quality_gate"].builder(
-        spark, "/root/testdata/sf0.001"
-    )
+    df = load_all_plans()["classifier_quality_gate"].builder(spark, sf_dir)
     plan = executed_plan(df)
     assert "BroadcastHashJoin" in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
@@ -69,13 +31,13 @@ def test_classifier_gate_plan_broadcasts_weights_no_udf(spark):
     assert keeps == {True, False}, "gate must discriminate, not pass/fail all"
 
 
-def test_stream_familiarity_gate_matches_batch_rollup(spark):
+def test_stream_familiarity_gate_matches_batch_rollup(spark, sf_dir):
     """VERDICT r6 #8: the streaming gate must agree with the batch gate
     rolled up per source — same corpus, same index, same keep set."""
     from porcupine_spark.plans.registry import load_all_plans
 
     plans = load_all_plans()
-    sf = "/root/testdata/sf0.001"
+    sf = sf_dir
     got = {
         r.source: (r.n_docs, r.n_keep)
         for r in plans["stream_familiarity_gate"].builder(spark, sf).collect()
@@ -94,75 +56,13 @@ def test_stream_familiarity_gate_matches_batch_rollup(spark):
     assert sum(v[1] for v in want.values()) > 0  # the gate keeps something
 
 
-def test_bpe_train_no_global_window(spark, monkeypatch):
-    """The per-round argmax must plan as TakeOrderedAndProject (limit 1),
-    never a partition-less window over the pair table."""
-    import io
-    import os
-    import sys
-
-    from porcupine_spark.operators import corpus
-
-    # the distributed merge rounds, not the driver path
-    monkeypatch.setattr(corpus, "BPE_DRIVER_MAX_WORDS", 0)
-
-    sys.path.insert(
-        0,
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"
-        ),
-    )
-    from plan_audit import has_global_window
-
-    from porcupine_spark.plans.registry import load_all_plans
-
-    df = load_all_plans()["bpe_merge_train"].builder(spark, "/root/testdata/sf0.001")
-    # result is a driver-built literal table; the plan guard that matters
-    # is the per-round pair ranking, exercised inside the builder. Build
-    # the round-1 pair plan directly and check it.
-    from porcupine_spark.functions import seq1
-    from porcupine_spark.operators.text import tokens
-    from porcupine_spark.tables import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    words = (
-        docs.select(F.explode(tokens(F.col("text"))).alias("word"))
-        .filter(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("freq"))
-    )
-    cur = words.select(F.regexp_replace("word", "(.)", " $1 ").alias("ws"), "freq")
-    syms = F.split(F.trim(F.col("ws")), "  ")
-    pairs = cur.select(
-        "freq",
-        F.explode(
-            F.transform(
-                seq1(F.size(syms) - 1),
-                lambda i: F.struct(
-                    F.element_at(syms, i).alias("ls"),
-                    F.element_at(syms, i + 1).alias("rs"),
-                ),
-            )
-        ).alias("p"),
-    ).select("freq", "p.ls", "p.rs")
-    best = (
-        pairs.groupBy("ls", "rs")
-        .agg(F.sum("freq").alias("n"))
-        .orderBy(F.desc("n"), F.asc("ls"), F.asc("rs"))
-        .limit(1)
-    )
-    plan = executed_plan(best)
-    assert "TakeOrderedAndProject" in plan
-    assert not has_global_window(plan)
-
-
-def test_stream_classifier_gate_matches_batch_rollup(spark):
+def test_stream_classifier_gate_matches_batch_rollup(spark, sf_dir):
     """The literal-weight streaming scorer must agree with the batch
     broadcast-join scorer rolled up per source."""
     from porcupine_spark.plans.registry import load_all_plans
 
     plans = load_all_plans()
-    sf = "/root/testdata/sf0.001"
+    sf = sf_dir
     got = {
         r.source: (r.n_docs, r.n_keep)
         for r in plans["stream_classifier_gate"].builder(spark, sf).collect()
@@ -180,36 +80,7 @@ def test_stream_classifier_gate_matches_batch_rollup(spark):
     assert got == want
 
 
-def test_bpe_encode_fertility_bounds(spark):
-    """Encoding invariants: every word costs at least 1 subword and at
-    most its character count; 8 merges must compress SOMETHING, so
-    corpus fertility lands strictly between 1.0 and the char-level
-    ceiling."""
-    from porcupine_spark.operators.corpus import bpe_encode_tokens
-    from porcupine_spark.operators.text import tokens
-    from porcupine_spark.tables import load_table
-
-    sf = "/root/testdata/sf0.001"
-    rows = bpe_encode_tokens(spark, sf).collect()
-    assert rows
-    total_words = sum(r.n_words for r in rows)
-    total_sub = sum(r.n_subword_tokens for r in rows)
-    docs = load_table(spark, sf, "documents")
-    total_chars = (
-        docs.select(
-            F.explode(tokens(F.col("text"))).alias("w")
-        )
-        .filter(F.col("w") != "")
-        .agg(F.sum(F.length("w")))
-        .collect()[0][0]
-    )
-    assert total_words <= total_sub < total_chars
-    for r in rows:
-        assert r.fertility_milli >= 1000
-        assert r.fertility_milli == r.n_subword_tokens * 1000 // r.n_words
-
-
-def test_pq_encode_and_adc_invariants(spark):
+def test_pq_encode_and_adc_invariants(spark, sf_dir):
     """PQ structural invariants beyond oracle parity: the histogram
     covers the whole corpus with codes in [0, K); the ADC top-k is the
     head of the shortlist ranking; codebook vectors encode to
@@ -223,7 +94,7 @@ def test_pq_encode_and_adc_invariants(spark):
     )
     from porcupine_spark.tables import load_table
 
-    sf = "/root/testdata/sf0.001"
+    sf = sf_dir
     hist = pq_code_histogram(spark, sf).collect()
     n_vec = load_table(spark, sf, "embeddings").count()
     assert all(0 <= r.code < PQ_K and 0 <= r.m < PQ_M for r in hist)
@@ -243,29 +114,6 @@ def test_pq_encode_and_adc_invariants(spark):
     assert top5 <= short and len(top5) == 50  # 10 queries x 5
 
 
-def test_bpe_oracle_survives_empty_merge_round():
-    """Code-review r7: when a merge round finds no pairs (corpus fully
-    merged inside the budget), the oracle's per-round CTE must pass the
-    word table through unchanged — a cross join with the empty best-pair
-    CTE would annihilate it and silently break bpe_encode_tokens parity."""
-    import duckdb
-
-    from porcupine_spark.operators.corpus import _bpe_encode_oracle_sql
-
-    con = duckdb.connect()
-    # one distinct 2-char word: exactly ONE merge is possible, then all
-    # later rounds are empty
-    con.execute(
-        "CREATE VIEW documents AS SELECT 1 AS doc_id, 'srcX' AS source,"
-        " 'ab ab ab' AS text"
-    )
-    df = con.sql(_bpe_encode_oracle_sql(4)).df()
-    assert len(df) == 1
-    assert int(df.n_words[0]) == 3
-    assert int(df.n_subword_tokens[0]) == 3  # 'ab' merged to one symbol
-    assert int(df.fertility_milli[0]) == 1000
-
-
 def test_pq_kmeans_codebook_swap_is_real(spark):
     """The trained-codebook swap must be REAL: the k-means provider runs
     through the shared encode/ADC/rank machinery and lands in the same
@@ -277,7 +125,7 @@ def test_pq_kmeans_codebook_swap_is_real(spark):
     from porcupine_spark.plans.registry import load_all_plans
 
     plans = load_all_plans()
-    sf = "/root/testdata/sf0.01"
+    sf = SF01_DIR
     trained = {
         r.query_id: r.n_hits for r in plans["pq_kmeans_recall"].builder(spark, sf).collect()
     }
@@ -287,63 +135,6 @@ def test_pq_kmeans_codebook_swap_is_real(spark):
     assert set(trained) == set(untrained) == set(range(10))
     t, u = sum(trained.values()), sum(untrained.values())
     assert t > 0 and t >= 0.6 * u, (trained, untrained)
-
-
-def test_bpe_wrapped_replace_property_vs_reference(spark):
-    """Property: one merge pass via the space-wrapped string replace ==
-    a pure-Python reference greedy left-to-right non-overlapping merger,
-    over random symbol sequences INCLUDING multi-char symbols that share
-    prefixes/suffixes with the merge pair (the class where a sloppy
-    string encoding would false-match across symbol boundaries)."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    symbols = st.sampled_from(["a", "b", "ab", "ba", "aa", "aab"])
-
-    def ref_merge(syms, ls, rs):
-        out, i = [], 0
-        while i < len(syms):
-            if i + 1 < len(syms) and syms[i] == ls and syms[i + 1] == rs:
-                out.append(ls + rs)
-                i += 2
-            else:
-                out.append(syms[i])
-                i += 1
-        return out
-
-    @settings(max_examples=10, deadline=None)
-    @given(
-        seqs=st.lists(
-            st.lists(symbols, min_size=1, max_size=12), min_size=1, max_size=8
-        ),
-        pair=st.tuples(symbols, symbols),
-    )
-    def prop(seqs, pair):
-        from pyspark.sql import functions as F
-
-        ls, rs = pair
-        df = spark.createDataFrame(
-            [(" " + "  ".join(s) + " ",) for s in seqs], "ws string"
-        )
-        got = [
-            tuple(r.syms)
-            for r in df.select(
-                F.split(
-                    F.trim(
-                        F.replace(
-                            F.col("ws"),
-                            F.lit(f" {ls}  {rs} "),
-                            F.lit(f" {ls}{rs} "),
-                        )
-                    ),
-                    "  ",
-                ).alias("syms")
-            ).collect()
-        ]
-        want = [tuple(ref_merge(s, ls, rs)) for s in seqs]
-        assert got == want, (pair, seqs)
-
-    prop()
 
 
 def test_local_kmeans_trainer_contract():
@@ -475,7 +266,7 @@ def test_neardup_lsh_min_band_candidates_unique_and_complete(spark):
     from porcupine_spark.operators import similarity as S
     from porcupine_spark.tables import load_table
 
-    sf = "/root/testdata/sf0.01"
+    sf = SF01_DIR
     emb = load_table(spark, sf, "embeddings", widen=False).select(
         "vec_id", "embedding"
     )
@@ -531,7 +322,7 @@ def test_minhash_simhash_pairs_duplicate_free_without_distinct(spark):
     from porcupine_spark.operators.multimodal import media_ahash_pairs, media_table
     from porcupine_spark.tables import load_table
 
-    sf = "/root/testdata/sf0.01"
+    sf = SF01_DIR
     docs = load_table(spark, sf, "documents")
 
     mh = [(r.doc_a, r.doc_b) for r in D.minhash_lsh_pairs(docs).collect()]
@@ -563,7 +354,7 @@ def test_ivf_candidates_unique_without_distinct(spark):
     )
     from porcupine_spark.tables import load_table
 
-    emb = load_table(spark, "/root/testdata/sf0.01", "embeddings", widen=False)
+    emb = load_table(spark, SF01_DIR, "embeddings", widen=False)
     cents = ivf_centroids(emb, k=8, mode="first")
     out = ivf_topk_generic(emb, cents, query_ids=range(10), k=50, probes=3).collect()
     keys = [(r.query_id, r.neighbor_id) for r in out]

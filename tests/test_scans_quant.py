@@ -244,14 +244,12 @@ class TestAnisotropyProbe:
         assert _tdiv(7, -2) == -3 and _tdiv(-7, -2) == 3
 
 
-def test_zorder_layout_audit_tile_spans(spark):
+def test_zorder_layout_audit_tile_spans(spark, sf_dir):
     """Every tile's value span is <= 16 in BOTH dimensions — the
     data-skipping property the write path depends on."""
     from porcupine_spark.plans.registry import load_all_plans
 
-    out = load_all_plans()["zorder_layout_audit"].builder(
-        spark, "/root/testdata/sf0.001"
-    ).collect()
+    out = load_all_plans()["zorder_layout_audit"].builder(spark, sf_dir).collect()
     assert len(out) > 0
     for r in out:
         assert r.max_x - r.min_x <= 15
