@@ -1116,7 +1116,9 @@ def _bpe_words(spark: SparkSession, sf_dir: str, *keys: str):
     as DuckDB's and Python's ``.`` do."""
     from porcupine_spark.functions.driverstate import checkpoint_sized
 
-    words = _word_counts(load_table(spark, sf_dir, "documents"), *keys)
+    # unwidened: the checkpoint is the only consumer, so a round-robin
+    # shuffle in front of it would only add a job
+    words = _word_counts(load_table(spark, sf_dir, "documents", widen=False), *keys)
     return checkpoint_sized(
         words.select(
             *keys,

@@ -16,6 +16,23 @@ cluster's own slots. Caveat: under dynamic allocation
 ``defaultParallelism`` can be small at startup, before executors
 arrive, which narrows the listing to those first slots; pass the conf
 explicitly to ``get_spark`` there.
+
+Local file system. Without libhadoop, Hadoop's local file system starts
+a ``chmod`` process for every file and directory a write creates, and a
+``readlink`` process for every FileContext rename (streaming checkpoints
+and state stores). ``jvm/LocalFileSystem.java`` does both in-process:
+``setPermission`` sets the nine rwx bits through java.nio, and
+``getFileLinkStatus`` sends only a real symlink to Hadoop's own path.
+It keeps the stock semantics: the same permission bits (a sticky or
+setuid request, or a directory holding setuid/setgid, takes Hadoop's
+``chmod``), the same ``.crc`` checksum files (both views are
+checksummed, as Hadoop's ``LocalFileSystem`` and ``LocalFs``), and the
+same link status. It is installed for ``file:`` only, as the FileSystem
+(``fs.file.impl``) and as the FileContext ``AbstractFileSystem``;
+``hdfs:`` and object stores are untouched. The committed ``localfs.jar``
+(rebuilt by ``tools/build_jvm.py``) goes on the driver class path and
+ships to executors with ``spark.jars``, appended to any value the
+caller passes.
 """
 
 from __future__ import annotations
@@ -61,7 +78,14 @@ _DEFAULTS = {
     # (measured: 5-20x slowdowns on whichever queries run late in a
     # long session). Size the code cache to the corpus.
     "spark.driver.extraJavaOptions": "-XX:ReservedCodeCacheSize=1g",
+    # the in-process local file system (see the module docstring)
+    "spark.hadoop.fs.file.impl": "porcupine_spark.jvm.LocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl": "porcupine_spark.jvm.LocalFileSystem$Fs",
 }
+
+_LOCALFS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "localfs.jar")
+# conf keys that carry the jar, with their list separators
+_JAR_PATHS = {"spark.driver.extraClassPath": os.pathsep, "spark.jars": ","}
 
 
 LISTING_PARALLELISM = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
@@ -95,6 +119,8 @@ def get_spark(app_name: str = "porcupine_spark", **overrides: str) -> SparkSessi
         "SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"
     )
     conf.update({k: str(v) for k, v in overrides.items()})
+    for key, sep in _JAR_PATHS.items():
+        conf[key] = sep.join(filter(None, [conf.get(key), _LOCALFS_JAR]))
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

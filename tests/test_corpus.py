@@ -139,3 +139,28 @@ def test_driver_built_frames_start_no_python_worker(spark, sf_dir, monkeypatch):
 
     assert "PythonRDD" in rdd(real([(1,)], "k long"))
     assert [rdd(f) for f in frames if "PythonRDD" in rdd(f)] == []
+
+
+def test_verbatim_contamination_is_substring(spark, sf_dir):
+    from porcupine_spark.operators.text import verbatim_contamination
+    from porcupine_spark.tables import load_table
+
+    rows = verbatim_contamination(spark, sf_dir).collect()
+    texts = {
+        r.doc_id: r.text
+        for r in load_table(spark, sf_dir, "documents").collect()
+    }
+    for r in rows:
+        assert r.doc_id >= 10 and r.bench_id < 10
+        assert r.probe in texts[r.doc_id]
+        assert texts[r.bench_id].startswith(r.probe)
+
+
+def test_length_variance_decomposition_identities(spark, sf_dir):
+    from porcupine_spark.operators.vocabstats import (
+        length_variance_decomposition)
+
+    r = length_variance_decomposition(spark, sf_dir).first()
+    assert 0 <= r.eta2_ppm <= 1_000_000
+    # eta2 + within = 1e6 up to the per-group truncation slack
+    assert 1_000_000 - r.n_sources <= r.eta2_ppm + r.within_ppm <= 1_000_000

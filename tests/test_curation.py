@@ -217,3 +217,26 @@ def test_dsir_lean_scores_planted_signal(spark):
     assert out[2].lean_ppm == 1_000_000 and out[2].keep
     assert out[3].lean_ppm == 0 and not out[3].keep
     assert out[4].lean_ppm == 0 and not out[4].keep
+
+
+def test_quality_gate_kappa_identities(spark, sf_dir):
+    from porcupine_spark.operators.curation import quality_gate_kappa
+
+    r = quality_gate_kappa(spark, sf_dir).first()
+    assert 0 <= r.n_agree <= r.n_docs
+    assert 0 <= r.po_micro <= 1_000_000
+    assert 0 <= r.pe_micro <= 1_000_000
+    assert -1_000_000 <= r.kappa_micro <= 1_000_000
+    # kappa's sign agrees with po vs pe
+    assert (r.kappa_micro >= 0) == (r.po_micro >= r.pe_micro)
+
+
+def test_dedup_source_shift_shares_balance(spark, sf_dir):
+    from porcupine_spark.operators.dedup import dedup_source_shift
+
+    rows = dedup_source_shift(spark, sf_dir).collect()
+    for r in rows:
+        assert 0 <= r.n_after <= r.n_before
+    tot_shift = sum(r.shift_ppm for r in rows)
+    # shifts are zero-sum up to per-source truncation slack
+    assert abs(tot_shift) <= 2 * len(rows)

@@ -657,7 +657,7 @@ def test_bpe_wrapped_replace_property_vs_reference(spark):
     [
         ("pagerank_supplier_graph", 2),
         ("kcore_peel_parts", 1),
-        ("bpe_encode_tokens", 4),
+        ("bpe_encode_tokens", 3),
         ("dedup_clusters", 2),
     ],
 )

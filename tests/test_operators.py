@@ -1526,3 +1526,51 @@ def test_minhash_carry_rejects_bad_names(spark, carry, match):
     docs = spark.createDataFrame([], ", ".join(f"{c} string" for c in sorted(cols)))
     with pytest.raises(ValueError, match=match):
         minhash_lsh_pairs(docs, carry=carry)
+
+
+def test_priority_drift_grid_consistency(spark, sf_dir):
+    from porcupine_spark.operators.quality import priority_mix_drift_chi2
+    from porcupine_spark.tables import load_table
+
+    rows = priority_mix_drift_chi2(spark, sf_dir).collect()
+    orders = load_table(spark, sf_dir, "orders").count()
+    assert sum(r.n_orders for r in rows) == orders
+    prios = {
+        r.o_orderpriority
+        for r in load_table(spark, sf_dir, "orders")
+        .select("o_orderpriority").distinct().collect()
+    }
+    for r in rows:
+        assert r.chi2_micro >= 0
+        assert r.top_drifted_priority in prios
+
+
+def test_dup_embedding_consistency_bounds(spark, sf_dir):
+    from porcupine_spark.operators.dedup import (
+        DEDUP_CANON_T, dup_embedding_consistency)
+
+    rows = dup_embedding_consistency(spark, sf_dir).collect()
+    for r in rows:
+        assert r.jaccard >= DEDUP_CANON_T
+        assert -1.0 - 1e-9 <= r.cosine <= 1.0 + 1e-9
+        assert r.suspect == (1 if r.cosine < 0.5 else 0)
+
+
+def test_dim_scaling_plan_matches_numpy(spark, sf_dir):
+    import math
+    import numpy as np
+    from porcupine_spark.operators.linalg import embedding_dim_scaling_plan
+    from porcupine_spark.tables import load_table
+
+    rows = {r.dim: r for r in embedding_dim_scaling_plan(spark, sf_dir).collect()}
+    emb = np.stack([np.array(r.embedding) for r in
+                    load_table(spark, sf_dir, "embeddings").collect()])
+    xi = (emb.astype(np.float64) * 1e6).astype(np.int64)
+    n = len(xi)
+    for d in (0, 13, 63):
+        sx = int(xi[:, d].astype(object).sum())
+        sxx = int((xi[:, d].astype(object) ** 2).sum())
+        var = (n * sxx - sx * sx) // (n * (n - 1))  # positive: floor==trunc
+        assert rows[d].var_micro2 == var
+        assert rows[d].std_micro == math.isqrt(var)
+        assert rows[d].inv_scale_micro == 10**12 // math.isqrt(var)

@@ -114,3 +114,47 @@ def test_streams_drain_only_through_drain_py():
     assert not stray, f"memory sink or processAllAvailable outside {DRAIN}: {stray}"
     # and the scan still sees the one real drain
     assert DRAIN in found
+
+
+def test_stream_incident_matches_batch_islands(spark, sf_dir):
+    from porcupine_spark.streaming.windows import stream_incident_detect
+
+    rows = stream_incident_detect(spark, sf_dir).collect()
+    for r in rows:
+        assert r.n_errors >= 5
+        assert r.incident_end > r.incident_start
+
+
+def test_stream_hll_bounds(spark, sf_dir):
+    from porcupine_spark.operators.sketches import HLL_M
+    from porcupine_spark.streaming.windows import stream_hourly_hll_users
+
+    rows = stream_hourly_hll_users(spark, sf_dir).collect()
+    assert len(rows) > 0
+    for r in rows:
+        assert 1 <= r.n_buckets_hit <= HLL_M
+        assert r.hll_estimate_raw > 0
+        # raw HLL (no small-range correction) is within its coarse
+        # error envelope for these cardinalities
+        assert r.hll_estimate_raw <= 4 * r.n_exact + 200
+
+
+def test_stream_scd2_versions_partition_history(spark, sf_dir):
+    from porcupine_spark.streaming.stateful import stream_scd2_apply
+    from porcupine_spark.tables import load_table
+
+    rows = stream_scd2_apply(spark, sf_dir).collect()
+    by_user = {}
+    for r in rows:
+        assert r.valid_from_us < r.valid_to_us
+        assert r.n_events >= 1
+        by_user.setdefault(r.user_id, []).append(r)
+    for u, vs in by_user.items():
+        vs.sort(key=lambda r: r.valid_from_us)
+        for a, b in zip(vs, vs[1:]):
+            assert a.valid_to_us == b.valid_from_us  # contiguous history
+            assert a.attr != b.attr  # each version is a real change
+    # closed-version event counts + each user's open version = all events
+    n_events = load_table(spark, sf_dir, "events").count()
+    closed = sum(r.n_events for r in rows)
+    assert closed < n_events
