@@ -13,6 +13,8 @@ Bucketed tables must go through the session catalog (``saveAsTable``);
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import DataFrame, SparkSession
 
 from porcupine_spark.serials import parquet_serial
@@ -46,6 +48,29 @@ def bucketed_join(
 def executed_plan(df: DataFrame) -> str:
     """The executed physical plan of ``df`` as a string."""
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def plan_node_counts(df: DataFrame) -> Counter:
+    """Physical operators of ``df``'s executed plan, counted by class
+    name (``FileSourceScanExec``, ``ShuffleExchangeExec``,
+    ``GenerateExec``, ...). The walk sees what the plan string shows:
+    children, subqueries and cached plans, the current plan under
+    adaptive execution, and the plan inside each query stage; a reused
+    exchange counts once, as ``ReusedExchangeExec``."""
+    counts: Counter = Counter()
+    todo = [df._jdf.queryExecution().executedPlan()]
+    while todo:
+        node = todo.pop()
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            todo.append(node.executedPlan())
+            continue
+        counts[name] += 1
+        if name.endswith("QueryStageExec"):
+            todo.append(node.plan())
+        for seq in (node.children(), node.innerChildren()):
+            todo.extend(seq.apply(i) for i in range(seq.size()))
+    return counts
 
 
 def shuffle_exchanges_in_plan(plan: str) -> int:

@@ -22,13 +22,10 @@ from pyspark.sql import functions as F
 
 from porcupine_spark.functions.driverstate import materialize
 from porcupine_spark.functions.topk import ranked_topk
-from porcupine_spark.operators.text import tokens
+from porcupine_spark.operators.text import sql_tokens, tokens
 from porcupine_spark.plans.registry import query
 from porcupine_spark.tables import load_table
 
-_SQL_TOKS = (
-    "string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')"
-)
 
 
 def _pandas_frame(spark: SparkSession, schema: str, **cols) -> DataFrame:
@@ -55,7 +52,7 @@ def _word_counts(docs: DataFrame, *keys: str) -> DataFrame:
     "tfidf_top_terms",
     f"""
     WITH t AS (
-      SELECT doc_id, {_SQL_TOKS} AS toks FROM documents
+      SELECT doc_id, {sql_tokens()} AS toks FROM documents
     ),
     tf AS (
       SELECT doc_id, tok, COUNT(*) AS cnt
@@ -161,7 +158,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     "vocab_top_tokens",
     f"""
     WITH t AS (
-      SELECT doc_id, {_SQL_TOKS} AS toks FROM documents
+      SELECT doc_id, {sql_tokens()} AS toks FROM documents
     ),
     counts AS (
       SELECT tok, COUNT(*) AS n_occurrences, COUNT(DISTINCT doc_id) AS n_docs
@@ -242,7 +239,7 @@ CHUNK_TOKENS = 50
     "doc_chunking",
     f"""
     WITH t AS (
-      SELECT doc_id, {_SQL_TOKS} AS toks FROM documents
+      SELECT doc_id, {sql_tokens()} AS toks FROM documents
     )
     SELECT doc_id,
            CAST(i - 1 AS BIGINT) AS chunk_id,
@@ -348,7 +345,7 @@ def dataset_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     "source_unigram_l1",
     f"""
     WITH t AS (
-      SELECT source, UNNEST({_SQL_TOKS}) AS tok FROM documents
+      SELECT source, UNNEST({sql_tokens()}) AS tok FROM documents
     ),
     cnt AS (SELECT source, tok, COUNT(*) AS c FROM t GROUP BY source, tok),
     tot AS (SELECT source, SUM(c) AS n FROM cnt GROUP BY source),
@@ -440,7 +437,7 @@ LM_TOPK = 5  # bigrams kept per source
     f"""
     WITH t AS (
       SELECT source,
-             string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ') AS ws
+             {sql_tokens()} AS ws
       FROM documents
     ),
     b AS (
@@ -511,7 +508,7 @@ COVERAGE_KS = (10, 50, 100, 500)
     WITH counts AS (
       SELECT tok, COUNT(*) AS n
       FROM (
-        SELECT UNNEST(string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')) AS tok
+        SELECT UNNEST({sql_tokens()}) AS tok
         FROM documents
       ) GROUP BY tok
     ),
@@ -719,7 +716,7 @@ BM25_SCALE = 1_000_000
     "bm25_topk",
     f"""
     WITH toks AS (
-      SELECT doc_id, {_SQL_TOKS} AS toks FROM documents
+      SELECT doc_id, {sql_tokens()} AS toks FROM documents
     ),
     dl AS (SELECT doc_id, len(toks) AS dl FROM toks),
     stats AS (
@@ -826,10 +823,10 @@ def _bm25_scored(base: DataFrame) -> DataFrame:
 
 @query(
     "source_novelty_rate",
-    """
+    f"""
     WITH t AS (
       SELECT doc_id, source,
-             string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ') AS toks
+             {sql_tokens()} AS toks
       FROM documents
     ),
     grams AS (
@@ -899,7 +896,7 @@ BPE_TOP_PAIRS = 20  # report the top-k merge candidates
     f"""
     WITH words AS (
       SELECT tok AS word, COUNT(*) AS freq
-      FROM (SELECT {_SQL_TOKS} AS toks FROM documents),
+      FROM (SELECT {sql_tokens()} AS toks FROM documents),
            LATERAL (SELECT UNNEST(toks) AS tok) u
       WHERE tok <> ''
       GROUP BY tok
@@ -996,7 +993,7 @@ def _bpe_chain_ctes(rounds: int = BPE_TRAIN_ROUNDS) -> list[str]:
         f"""w0 AS MATERIALIZED (
       SELECT word, regexp_replace(word, '(.)', ' \\1 ', 'g') AS ws, freq FROM (
         SELECT tok AS word, COUNT(*) AS freq
-        FROM (SELECT {_SQL_TOKS} AS toks FROM documents),
+        FROM (SELECT {sql_tokens()} AS toks FROM documents),
              LATERAL (SELECT UNNEST(toks) AS tok) u
         WHERE tok <> ''
         GROUP BY tok))"""
@@ -1006,7 +1003,7 @@ def _bpe_chain_ctes(rounds: int = BPE_TRAIN_ROUNDS) -> list[str]:
         ctes.append(
             f"""p{r} AS MATERIALIZED (
       SELECT s[i] AS ls, s[i + 1] AS rs, CAST(SUM(freq) AS BIGINT) AS n
-      FROM (SELECT string_split(trim(ws), '  ') AS s, freq FROM w{prev}),
+      FROM (SELECT string_split(trim(ws, ' '), '  ') AS s, freq FROM w{prev}),
            LATERAL (SELECT UNNEST(generate_series(1, len(s) - 1)) AS i) g
       GROUP BY 1, 2)"""
         )
@@ -1213,13 +1210,13 @@ def _bpe_encode_oracle_sql(rounds: int = BPE_TRAIN_ROUNDS) -> str:
     ctes = _bpe_chain_ctes(rounds)
     ctes.append(
         f"""enc AS MATERIALIZED (
-      SELECT word, freq, CAST(len(string_split(trim(ws), '  ')) AS BIGINT) AS n_sub
+      SELECT word, freq, CAST(len(string_split(trim(ws, ' '), '  ')) AS BIGINT) AS n_sub
       FROM w{rounds})"""
     )
     ctes.append(
         f"""docw AS (
       SELECT source, tok AS word
-      FROM (SELECT source, {_SQL_TOKS} AS toks FROM documents),
+      FROM (SELECT source, {sql_tokens()} AS toks FROM documents),
            LATERAL (SELECT UNNEST(toks) AS tok) u
       WHERE tok <> '')"""
     )
@@ -1337,7 +1334,7 @@ SPAN_RATE_PCT = 15  # corruption budget: % of tokens masked
     "span_corruption_plan",
     f"""
     WITH t AS (
-      SELECT doc_id, {_SQL_TOKS} AS toks FROM documents
+      SELECT doc_id, {sql_tokens()} AS toks FROM documents
     ),
     sized AS (
       SELECT doc_id, toks, len(toks) AS nt,
@@ -1427,7 +1424,7 @@ CAP_MILLI = 400  # per-source repetition ceiling, 0.4 epochs: weight
 # relation. epoch_expansion_plan composes these verbatim, so the
 # manifest can never drift from the planner.
 _WATERFILL_CTES = f"""t AS (
-      SELECT source, lang, len({_SQL_TOKS}) AS nt FROM documents
+      SELECT source, lang, len({sql_tokens()}) AS nt FROM documents
     ),
     per_src AS (
       SELECT source, CAST(SUM(nt) AS BIGINT) AS n_tokens,
@@ -1629,7 +1626,7 @@ UNIMAX_BUDGET_MILLI = 1500  # total budget = 1.5 epochs of the whole corpus
     f"""
     WITH per_lang AS (
       SELECT lang,
-             CAST(SUM(len({_SQL_TOKS})) AS BIGINT) AS lt
+             CAST(SUM(len({sql_tokens()})) AS BIGINT) AS lt
       FROM documents GROUP BY lang
     ),
     g AS (SELECT CAST(SUM(lt) AS BIGINT) AS tot, COUNT(*) AS n FROM per_lang),
@@ -1759,7 +1756,7 @@ _EXPANSION_CTES = f"""{_WATERFILL_CTES},
       FROM alloc
     ),
     d AS (
-      SELECT doc_id, source, CAST(len({_SQL_TOKS}) AS BIGINT) AS doc_tokens,
+      SELECT doc_id, source, CAST(len({sql_tokens()}) AS BIGINT) AS doc_tokens,
              CAST(concat('0x', substr(md5(concat('rep:', CAST(doc_id AS VARCHAR))), 1, 15))
                   AS BIGINT) AS h
       FROM documents
@@ -1958,7 +1955,7 @@ GROWTH_OCTILES = (1, 2, 4, 8)  # corpus prefixes: 1/8, 1/4, 1/2, all
     f"""
     WITH fd AS (
       SELECT tok, MIN(doc_id) AS first_doc
-      FROM (SELECT doc_id, UNNEST({{toks}}) AS tok FROM documents)
+      FROM (SELECT doc_id, UNNEST({sql_tokens()}) AS tok FROM documents)
       WHERE tok <> '' GROUP BY tok
     ),
     m AS (SELECT MAX(doc_id) AS mx FROM documents),
@@ -1977,9 +1974,7 @@ GROWTH_OCTILES = (1, 2, 4, 8)  # corpus prefixes: 1/8, 1/4, 1/2, all
     )
     SELECT nd.f AS octile, nd.cutoff AS max_doc_id, nd.n_docs_prefix, vs.vocab_size
     FROM nd JOIN vs ON vs.f = nd.f
-    """.replace(
-        "{toks}", "string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')"
-    ),
+    """,
     tags=("corpus", "vocab", "monitoring"),
     doc="Heaps-law vocabulary growth: distinct-token count after the "
     "first 1/8, 1/4, 1/2 and all of the corpus (doc_id = ingest "
@@ -2125,9 +2120,9 @@ COLLOC_TOPK = 20
 
 @query(
     "bigram_collocations",
-    rf"""
+    f"""
     WITH t AS (
-      SELECT string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' ') AS ws
+      SELECT {sql_tokens()} AS ws
       FROM documents
     ),
     b AS (
@@ -2315,7 +2310,7 @@ _REG["rrf_fusion_topk"].oracle = f"""
       SELECT doc_id, len(toks) AS dl,
              len(list_filter(toks, t -> t IN ('join', 'hash', 'scan'))) AS tf
       FROM (SELECT doc_id,
-                   string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ') AS toks
+                   {sql_tokens()} AS toks
             FROM documents)
     ),
     b AS (
@@ -2443,7 +2438,7 @@ PACK_WINDOW = 2048  # context-window length in tokens
     "context_window_packing",
     f"""
     WITH lens AS (
-      SELECT source, doc_id, CAST(len({_SQL_TOKS}) AS BIGINT) AS nt
+      SELECT source, doc_id, CAST(len({sql_tokens()}) AS BIGINT) AS nt
       FROM documents
     ),
     packed AS (

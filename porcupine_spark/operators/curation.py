@@ -21,16 +21,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from porcupine_spark.functions import word_ngrams
+from porcupine_spark.operators.text import (
+    normalized,
+    quality_score,
+    sql_normalized,
+    sql_tokens,
+    tokens,
+)
 from porcupine_spark.plans.registry import query
 from porcupine_spark.tables import load_table
-
-#: normalized single-spaced text — shared by every op in this module so
-#: token counts agree across operators (and with text.tokens()).
-def _norm(col):
-    return F.trim(F.regexp_replace(col, r"\s+", " "))
-
-
-_NORM_SQL = "trim(regexp_replace(text, '\\s+', ' ', 'g'))"
 
 GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with", "a")
 _GSTOP_SQL = "(" + ", ".join(f"'{w}'" for w in GOPHER_STOPWORDS) + ")"
@@ -41,8 +40,8 @@ _GSTOP_SQL = "(" + ", ".join(f"'{w}'" for w in GOPHER_STOPWORDS) + ")"
     f"""
     WITH t AS (
       SELECT doc_id,
-             {_NORM_SQL} AS norm,
-             string_split({_NORM_SQL}, ' ') AS toks
+             {sql_normalized()} AS norm,
+             {sql_tokens()} AS toks
       FROM documents
     ),
     feat AS (
@@ -84,8 +83,8 @@ def gopher_flags(docs: DataFrame, keep_cols: tuple[str, ...] = ()) -> DataFrame:
     """Gopher rule features + per-rule flags + combined keep gate for
     any (doc_id, text) DataFrame; ``keep_cols`` pass through (so a
     single stream branch can carry grouping columns)."""
-    norm = _norm(F.col("text"))
-    toks = F.split(norm, " ")
+    norm = normalized(F.col("text"))
+    toks = tokens(F.col("text"))
     nw = F.size(toks)
     # sum(len(word)) == len(norm) - (n_words - 1): norm is single-spaced
     mwl = (F.length(norm) - (nw - F.lit(1))).cast("double") / nw
@@ -135,7 +134,7 @@ PACK_BUDGET = 512  # tokens per packed training sequence
     f"""
     WITH t AS (
       SELECT source, doc_id,
-             len(string_split({_NORM_SQL}, ' ')) AS toks
+             len({sql_tokens()}) AS toks
       FROM documents
     ),
     placed AS (
@@ -173,7 +172,7 @@ def pack_docs(docs: DataFrame, budget: int) -> DataFrame:
     """Contiguous token-budget packing of (doc_id, source, text) rows;
     see the pack_sequences query doc for the discipline."""
     t = docs.select(
-        "source", "doc_id", F.size(F.split(_norm(F.col("text")), " ")).alias("toks")
+        "source", "doc_id", F.size(tokens(F.col("text"))).alias("toks")
     )
     w = (
         Window.partitionBy("source")
@@ -200,7 +199,7 @@ SPAN_K = 8  # words per duplicated-span gram (Lee et al. 2021 use 50 BPE tokens)
     "duplicate_ngram_spans",
     f"""
     WITH t AS (
-      SELECT doc_id, string_split({_NORM_SQL}, ' ') AS ws
+      SELECT doc_id, {sql_tokens()} AS ws
       FROM documents
     ),
     g AS (
@@ -238,7 +237,7 @@ def duplicate_ngram_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 def span_dup_stats(docs: DataFrame, k: int) -> DataFrame:
     """Per-doc duplicated k-gram span stats for any (doc_id, text)
     DataFrame; see the duplicate_ngram_spans query doc."""
-    ws = F.split(_norm(F.col("text")), " ")
+    ws = tokens(F.col("text"))
     grams = docs.select(
         "doc_id", F.explode(word_ngrams(ws, k)).alias("gram")
     ).select("doc_id", F.xxhash64("gram").alias("h"))
@@ -271,8 +270,6 @@ def span_dup_stats(docs: DataFrame, k: int) -> DataFrame:
     "passes + one 2x2 cell count.",
 )
 def quality_gate_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from porcupine_spark.operators.text import quality_score
-
     q = quality_score(spark, sf_dir).select(
         "doc_id", F.col("keep").alias("y")
     )
@@ -317,7 +314,6 @@ def quality_gate_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-import porcupine_spark.operators.text  # noqa: E402,F401 — registers quality_score
 from porcupine_spark.plans.registry import REGISTRY as _R  # noqa: E402
 
 _R["quality_gate_kappa"].oracle = f"""
@@ -422,7 +418,7 @@ def dsir_lean_scores(docs: DataFrame, is_target: F.Column, buckets: int = DSIR_B
     toks = docs.select(
         "doc_id",
         is_target.alias("is_t"),
-        F.explode(F.split(_norm(F.col("text")), " ")).alias("tok"),
+        F.explode(tokens(F.col("text"))).alias("tok"),
     )
     occ = toks.select(
         "doc_id",
@@ -461,7 +457,7 @@ def dsir_lean_scores(docs: DataFrame, is_target: F.Column, buckets: int = DSIR_B
              (lang = '{DSIR_TARGET_LANG}') AS is_t,
              CAST(concat('0x', substr(md5(tok), 1, 15)) AS BIGINT) % {DSIR_BUCKETS} AS b
       FROM (SELECT doc_id, lang,
-                   UNNEST(string_split({_NORM_SQL}, ' ')) AS tok
+                   UNNEST({sql_tokens()}) AS tok
             FROM documents)
     ),
     pdb AS (
@@ -522,7 +518,7 @@ FAMIL_SCALE = 1_000_000
     f"""
     WITH t AS (
       SELECT doc_id, source,
-             string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ') AS ws
+             {sql_tokens()} AS ws
       FROM documents
     ),
     occ AS (
@@ -565,7 +561,7 @@ FAMIL_SCALE = 1_000_000
 )
 def bigram_familiarity_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    ws = F.split(_norm(F.col("text")), " ")
+    ws = tokens(F.col("text"))
     occ = (
         docs.filter(F.size(ws) >= 2)
         .select("doc_id", "source", F.explode(word_ngrams(ws, 2)).alias("gram"))
@@ -628,7 +624,7 @@ def cls_weight(b) -> F.Column:
       FROM range({CLS_BUCKETS}) t(b)
     ),
     t AS (
-      SELECT doc_id, source, string_split({_NORM_SQL}, ' ') AS ws
+      SELECT doc_id, source, {sql_tokens()} AS ws
       FROM documents
     ),
     occ AS (
@@ -671,7 +667,7 @@ def classifier_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from porcupine_spark.functions import word_ngrams
 
     docs = load_table(spark, sf_dir, "documents")
-    ws = F.split(_norm(F.col("text")), " ")
+    ws = tokens(F.col("text"))
     occ = (
         docs.filter(F.size(ws) >= 2)
         .select("doc_id", "source", F.explode(word_ngrams(ws, 2)).alias("gram"))

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from porcupine_spark.functions import seq1, word_ngrams
 from porcupine_spark.functions.driverstate import materialize
 from porcupine_spark.operators.corpus import SQL_SPLIT_CTE, split_col
+from porcupine_spark.operators.text import sql_tokens, tokens
 from porcupine_spark.plans.registry import REGISTRY, query
 from porcupine_spark.tables import load_table, stored_rows
 
@@ -36,7 +37,7 @@ N_BANDS = 4  # LSH bands (2 rows each)
 
 def word_shingles(text: Column, n: int = 3) -> Column:
     """Distinct word n-gram shingles of a whitespace-tokenized text."""
-    toks = F.split(F.trim(text), r"\s+")
+    toks = tokens(text)
     return F.array_distinct(word_ngrams(toks, n))
 
 
@@ -68,7 +69,7 @@ def hashed_shingle_arrays(
     """(doc_id, [keep...,] arr) with arr = distinct xxhash64'd n-gram
     shingles as a long array (see hashed_shingle_table for the hashing
     scheme). ``keep`` carries extra doc columns through unchanged."""
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = tokens(F.col("text"))
     with_th = docs.select(
         "doc_id", *keep, F.transform(toks, lambda t: F.xxhash64(t)).alias("th")
     )
@@ -79,16 +80,20 @@ def hashed_shingle_arrays(
     return with_th.select("doc_id", *keep, F.array_distinct(hashes).alias("arr"))
 
 
-# SQL mirror: DuckDB shingle CTE (distinct word n-grams, n=3)
-SQL_SHINGLES = """
-  shingles AS (
+def _sql_shingles(name: str, source: str) -> str:
+    """SQL mirror: DuckDB CTE ``name`` of the distinct word 3-gram
+    shingles (doc_id, shingle) of the ``source`` table."""
+    return f"""
+  {name} AS (
     SELECT DISTINCT doc_id,
            concat_ws(' ', toks[i], toks[i+1], toks[i+2]) AS shingle
-    FROM (SELECT doc_id, string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ') AS toks
-          FROM documents),
+    FROM (SELECT doc_id, {sql_tokens()} AS toks
+          FROM {source}),
          LATERAL (SELECT UNNEST(GENERATE_SERIES(1, GREATEST(len(toks) - 2, 0))) AS i) t
-  )
-"""
+  )"""
+
+
+SQL_SHINGLES = _sql_shingles("shingles", "documents")
 
 
 @query(
@@ -592,12 +597,10 @@ SIMHASH_BITS = 32  # one bit per md5 hex digit
 SIMHASH_BAND_BITS = 8  # 4 bands; hamming<=3 pairs must share >=1 band
 
 
-@query(
-    "simhash_signatures",
-    f"""
-    WITH toks AS (
+_SQL_SIMHASH_CTE = f"""
+    toks AS (
       SELECT doc_id, concat_ws(' ', t[i], t[i+1], t[i+2]) AS tok
-      FROM (SELECT doc_id, string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ') AS t
+      FROM (SELECT doc_id, {sql_tokens()} AS t
             FROM documents) d,
            LATERAL (SELECT UNNEST(GENERATE_SERIES(1, GREATEST(len(t) - 2, 0))) AS i) s
     ),
@@ -607,11 +610,18 @@ SIMHASH_BAND_BITS = 8  # 4 bands; hamming<=3 pairs must share >=1 band
                       THEN 1 ELSE -1 END) AS s
       FROM toks, LATERAL (SELECT UNNEST(GENERATE_SERIES(1, {SIMHASH_BITS})) AS pos) p
       GROUP BY doc_id, p.pos
+    ),
+    sigs AS (
+      SELECT doc_id,
+             string_agg(CASE WHEN s > 0 THEN '1' ELSE '0' END, '' ORDER BY pos) AS simhash
+      FROM bits GROUP BY doc_id
     )
-    SELECT doc_id,
-           string_agg(CASE WHEN s > 0 THEN '1' ELSE '0' END, '' ORDER BY pos) AS simhash
-    FROM bits GROUP BY doc_id
-    """,
+"""
+
+
+@query(
+    "simhash_signatures",
+    f"WITH {_SQL_SIMHASH_CTE} SELECT doc_id, simhash FROM sigs",
     tags=("dedup", "simhash"),
     doc=f"SimHash ({SIMHASH_BITS}-bit hex-digit-projection variant): token "
     "md5 hex digit at position p contributes +1 if >=8 else -1; "
@@ -621,7 +631,7 @@ SIMHASH_BAND_BITS = 8  # 4 bands; hamming<=3 pairs must share >=1 band
 )
 def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    words = F.split(F.trim(F.regexp_replace("text", r"\s+", " ")), " ")
+    words = tokens(F.col("text"))
     grams = word_ngrams(words, 3)
     # PER-ROW signature (same zero-shuffle insight as minhash): one
     # aggregate() pass over the gram-md5 array with a 32-long count
@@ -673,26 +683,6 @@ def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SQL_SIMHASH_CTE = f"""
-    toks AS (
-      SELECT doc_id, concat_ws(' ', t[i], t[i+1], t[i+2]) AS tok
-      FROM (SELECT doc_id, string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ') AS t
-            FROM documents) d,
-           LATERAL (SELECT UNNEST(GENERATE_SERIES(1, GREATEST(len(t) - 2, 0))) AS i) s
-    ),
-    bits AS (
-      SELECT doc_id, p.pos,
-             SUM(CASE WHEN strpos('89abcdef', substr(md5(tok), p.pos, 1)) > 0
-                      THEN 1 ELSE -1 END) AS s
-      FROM toks, LATERAL (SELECT UNNEST(GENERATE_SERIES(1, {SIMHASH_BITS})) AS pos) p
-      GROUP BY doc_id, p.pos
-    ),
-    sigs AS (
-      SELECT doc_id,
-             string_agg(CASE WHEN s > 0 THEN '1' ELSE '0' END, '' ORDER BY pos) AS simhash
-      FROM bits GROUP BY doc_id
-    )
-"""
 
 
 @query(
@@ -888,14 +878,7 @@ def _sql_side_ctes(side: str, pred: str) -> str:
     """Shingle + minhash + band CTEs for one split of documents."""
     return f"""
     {side} AS (SELECT * FROM documents WHERE {pred}),
-    shingles_{side} AS (
-      SELECT DISTINCT doc_id,
-             concat_ws(' ', toks[i], toks[i+1], toks[i+2]) AS shingle
-      FROM (SELECT doc_id,
-                   string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ') AS toks
-            FROM {side}),
-           LATERAL (SELECT UNNEST(GENERATE_SERIES(1, GREATEST(len(toks) - 2, 0))) AS i) t
-    ),
+    {_sql_shingles(f"shingles_{side}", side)},
     sigs_{side} AS (
       SELECT doc_id,
            {", ".join(
@@ -1023,7 +1006,7 @@ WINNOW_MIN_SHARED = 2  # dup-pair threshold on shared fingerprints
     f"""
     WITH toks AS (
       SELECT doc_id,
-             string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ') AS t
+             {sql_tokens()} AS t
       FROM documents
     ),
     grams AS (
@@ -1089,7 +1072,7 @@ def winnow_pairs(docs: DataFrame, fp_cutoff: int | None = None) -> DataFrame:
 
     if fp_cutoff is None:
         fp_cutoff = hot_df_cutoff(docs.count())
-    toks = F.split(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")), " ")
+    toks = tokens(F.col("text"))
     with_t = docs.select("doc_id", toks.alias("t"))
     grams = with_t.select(
         "doc_id",
@@ -1507,7 +1490,7 @@ PREFIX_MIN = 10  # ignore docs too short for a meaningful prefix
     f"""
     WITH t AS (
       SELECT doc_id, md5(trim(text)) AS full_h,
-             string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ') AS toks
+             {sql_tokens()} AS toks
       FROM documents
     ),
     keyed AS (
@@ -1536,8 +1519,6 @@ PREFIX_MIN = 10  # ignore docs too short for a meaningful prefix
     f"as dedup_exact.",
 )
 def prefix_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from porcupine_spark.operators.text import tokens
-
     docs = load_table(spark, sf_dir, "documents")
     toks = tokens(F.col("text"))
     keyed = docs.select(
@@ -1971,7 +1952,7 @@ def _df_band_sql(col: str) -> str:
         SELECT doc_id,
                UNNEST([array_to_string(toks[i:i+2], ' ')
                        FOR i IN range(1, len(toks) - 1)]) AS shingle
-        FROM (SELECT doc_id, string_split(trim(text), ' ') AS toks
+        FROM (SELECT doc_id, {sql_tokens()} AS toks
               FROM documents)
       )
     ),
@@ -2222,7 +2203,7 @@ def verbatim_window_table(docs: DataFrame, k: int = VSPAN_K) -> DataFrame:
     token position (1-based), empty for docs shorter than k tokens."""
     from porcupine_spark.functions.hashing import md5_long60
 
-    toks = F.split(F.trim(F.col("text")), r"\s+")
+    toks = tokens(F.col("text"))
     wins = F.transform(
         seq1(F.size(toks) - (k - 1)),
         lambda i: F.struct(
@@ -2239,7 +2220,7 @@ _VSPAN_WIN_COLS = ", ".join(f"t[i+{j}]" for j in range(VSPAN_K))
 
 _SQL_VSPAN_CTES = f"""
   vtoks AS (
-    SELECT doc_id, string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ') AS t
+    SELECT doc_id, {sql_tokens()} AS t
     FROM documents
   ),
   vwins AS (
@@ -2461,7 +2442,7 @@ _IREP_WIN_COLS = ", ".join(f"t[i+{j}]" for j in range(VSPAN_K))
       FROM documents
     ),
     itoks AS (
-      SELECT doc_id, string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ') AS t
+      SELECT doc_id, {sql_tokens()} AS t
       FROM pdocs
     ),
     iwins AS (

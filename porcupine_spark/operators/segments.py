@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from porcupine_spark.functions import seq1
 from porcupine_spark.functions.hashing import md5_long60
+from porcupine_spark.operators.text import sql_tokens, tokens
 from porcupine_spark.plans.registry import query
 from porcupine_spark.tables import load_table
 
@@ -30,8 +31,6 @@ SEG_TOKENS = 8
 # A doc keeps its place in the corpus when at most half of its segments
 # are corpus-duplicated (the CCNet paragraph-dedup keep rule shape).
 DUP_FRAC_KEEP_PPM = 500_000
-
-_SQL_TOKS = "string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')"
 
 # Shared CTE: one row per (doc_id, source, seg_idx, 60-bit segment
 # hash). seg_idx is 0-based. Mirrors _segments() below exactly.
@@ -41,7 +40,7 @@ _SQL_SEGS = f"""segs AS (
              CAST(concat('0x', substr(md5(concat('seg:',
                array_to_string(toks[(i-1)*{SEG_TOKENS}+1 : i*{SEG_TOKENS}], ' '))), 1, 15))
                AS BIGINT) AS seg_hash
-      FROM (SELECT doc_id, source, {_SQL_TOKS} AS toks FROM documents) t,
+      FROM (SELECT doc_id, source, {sql_tokens()} AS toks FROM documents) t,
       LATERAL (
         SELECT UNNEST(GENERATE_SERIES(1,
           CAST(CEIL(CAST(len(toks) AS DOUBLE) / {SEG_TOKENS}) AS BIGINT))) AS i
@@ -53,7 +52,7 @@ def _segments(docs: DataFrame) -> DataFrame:
     """One row per (doc_id, source, seg_idx, seg_hash): non-overlapping
     SEG_TOKENS-token windows, hashed to 60-bit longs. Segment text is
     dropped inside this projection — nothing downstream shuffles it."""
-    toks = F.split(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")), " ")
+    toks = tokens(F.col("text"))
     n_segs = F.ceil(F.size(toks).cast("double") / SEG_TOKENS).cast("int")
     seg_texts = F.transform(
         seq1(n_segs),

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from porcupine_spark.functions.driverstate import materialize
 from porcupine_spark.functions.hashing import md5_bucket, md5_long60
 from porcupine_spark.functions.topk import ranked_topk
-from porcupine_spark.operators.text import tokens
+from porcupine_spark.operators.text import sql_tokens, tokens
 from porcupine_spark.plans.registry import query
 from porcupine_spark.tables import load_table
 
@@ -43,7 +43,7 @@ KMV_M = 1 << 60  # hash domain: 60-bit md5 prefix (both engines exact)
       SELECT DISTINCT source,
              CAST(concat('0x', substr(md5(tok), 1, 15)) AS BIGINT) AS h
       FROM (SELECT source,
-                   UNNEST(string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')) AS tok
+                   UNNEST({sql_tokens()}) AS tok
             FROM documents)
       WHERE tok <> ''
     ),
@@ -194,7 +194,7 @@ def _hll_est_expr():
       SELECT DISTINCT source,
              CAST(concat('0x', substr(md5(tok), 1, 15)) AS BIGINT) AS h
       FROM (SELECT source,
-                   UNNEST(string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')) AS tok
+                   UNNEST({sql_tokens()}) AS tok
             FROM documents)
       WHERE tok <> ''
     ),
@@ -277,9 +277,9 @@ def mg_summarize(counts: dict, cap: int) -> dict:
 
 @query(
     "frequent_tokens_mg",
-    rf"""
+    f"""
     WITH toks AS (
-      SELECT tok FROM (SELECT string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' ') AS toks FROM documents),
+      SELECT tok FROM (SELECT {sql_tokens()} AS toks FROM documents),
            LATERAL (SELECT UNNEST(toks) AS tok)
       WHERE tok <> ''
     ),
@@ -353,11 +353,11 @@ def frequent_tokens_mg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "vocab_chao1_richness",
-    r"""
+    f"""
     WITH counts AS (
       SELECT source, tok, COUNT(*) AS n
       FROM (SELECT source,
-                   UNNEST(string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' ')) AS tok
+                   UNNEST({sql_tokens()}) AS tok
             FROM documents)
       WHERE tok <> ''
       GROUP BY source, tok
@@ -418,10 +418,10 @@ OVL_K = 256  # pair-overlap sketch size
 
 @query(
     "kmv_overlap_estimate",
-    rf"""
+    f"""
     WITH t AS (
       SELECT source,
-             string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' ') AS ws
+             {sql_tokens()} AS ws
       FROM documents
     ),
     toks AS (
@@ -597,9 +597,9 @@ _CMS_SALTS = tuple(f"s{i}" for i in range(CMS_D))
 
 @query(
     "cms_frequency_estimate",
-    rf"""
+    f"""
     WITH toks AS (
-      SELECT UNNEST(string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' ')) AS tok
+      SELECT UNNEST({sql_tokens()}) AS tok
       FROM documents
     ),
     clean AS (SELECT tok FROM toks WHERE tok <> ''),
@@ -921,10 +921,10 @@ def bloom_fpr_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "hll_union_estimate",
-    rf"""
+    f"""
     WITH t AS (
       SELECT source,
-             string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' ') AS ws
+             {sql_tokens()} AS ws
       FROM documents
     ),
     toks AS (

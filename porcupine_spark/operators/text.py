@@ -4,6 +4,14 @@ scores, language-ID heuristic, document fingerprints.
 All pure column expressions (JVM-side, whole-stage-codegen'd); nothing
 leaves the executor. Every op has an exact DuckDB oracle — per-row IEEE
 arithmetic on identical inputs is bit-identical across engines.
+
+Word splitting for the whole package lives here, for both engines:
+``normalized`` / ``tokens`` (Spark) and ``sql_normalized`` /
+``sql_tokens`` (DuckDB). Words are split on ``_WS``, the class
+``[\\t\\n\\f\\r ]``, written out because RE2's ``\\s`` is exactly
+this class while Java's also holds U+000B. Every other character
+(U+000B, U+00A0 and U+2028 included) belongs to a word, and the regex
+tokenizer ``_RE_TOKEN`` excludes the same class.
 """
 
 from __future__ import annotations
@@ -19,8 +27,31 @@ STOPWORDS = ("the", "a", "of", "and", "to", "in")
 _STOP_SQL = "(" + ", ".join(f"'{w}'" for w in STOPWORDS) + ")"
 
 
+_WS = r"\t\n\f\r "
+# BPE-style pre-tokens: letter runs | digit runs | one other non-space char
+_RE_TOKEN = rf"[a-z]+|[0-9]+|[^a-z0-9{_WS}]"
+
+
+def normalized(text: Column) -> Column:
+    """``text`` with every run of ``_WS`` one space, trimmed."""
+    return F.trim(F.regexp_replace(text, f"[{_WS}]+", " "))
+
+
 def tokens(text: Column) -> Column:
-    return F.split(F.trim(F.regexp_replace(text, r"\s+", " ")), " ")
+    """The whitespace words of ``text``; ``[""]`` for a blank text."""
+    return F.split(normalized(text), " ")
+
+
+def sql_normalized(expr: str = "text") -> str:
+    """DuckDB twin of ``normalized``. DuckDB's one-argument ``trim``
+    also strips Unicode spaces such as U+00A0; Spark's strips only
+    ``' '``, so the space is named."""
+    return f"trim(regexp_replace({expr}, '[{_WS}]+', ' ', 'g'), ' ')"
+
+
+def sql_tokens(expr: str = "text") -> str:
+    """DuckDB twin of ``tokens``."""
+    return f"string_split({sql_normalized(expr)}, ' ')"
 
 
 @query(
@@ -28,7 +59,7 @@ def tokens(text: Column) -> Column:
     f"""
     WITH t AS (
       SELECT doc_id, n_chars,
-             string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ') AS toks,
+             {sql_tokens()} AS toks,
              length(text) AS len_raw
       FROM documents
     ),
@@ -72,11 +103,11 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "quality_score",
-    """
+    f"""
     WITH t AS (
       SELECT doc_id,
              length(text) AS n,
-             len(string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')) AS nt,
+             len({sql_tokens()}) AS nt,
              length(text) - length(regexp_replace(text, '[^a-z]', '', 'g')) AS n_nonalpha
       FROM documents
     )
@@ -113,10 +144,10 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "lang_id",
-    """
+    f"""
     WITH t AS (
       SELECT doc_id, lang AS lang_label,
-             string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ') AS toks
+             {sql_tokens()} AS toks
       FROM documents
     ),
     scores AS (
@@ -169,10 +200,10 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "doc_fingerprint",
-    """
+    f"""
     WITH t AS (
       SELECT doc_id,
-             string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ') AS toks
+             {sql_tokens()} AS toks
       FROM documents
     ),
     grams AS (
@@ -202,13 +233,12 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "token_count_bpe",
-    r"""
+    f"""
     SELECT doc_id,
-           len(string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' '))
-             AS n_tokens_ws,
-           len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9\s]')) AS n_tokens_re,
+           len({sql_tokens()}) AS n_tokens_ws,
+           len(regexp_extract_all(text, '{_RE_TOKEN}')) AS n_tokens_re,
            CAST(length(text) AS DOUBLE)
-             / len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9\s]'))
+             / len(regexp_extract_all(text, '{_RE_TOKEN}'))
              AS chars_per_token
     FROM documents
     """,
@@ -221,7 +251,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 def token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     n_ws = F.size(tokens(F.col("text")))
-    n_re = F.size(F.regexp_extract_all("text", F.lit(r"[a-z]+|[0-9]+|[^a-z0-9\s]"), 0))
+    n_re = F.size(F.regexp_extract_all("text", F.lit(_RE_TOKEN), 0))
     return docs.select(
         "doc_id",
         n_ws.cast("long").alias("n_tokens_ws"),
@@ -269,10 +299,10 @@ def pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "repetition_ratio",
-    """
+    f"""
     WITH t AS (
       SELECT doc_id,
-             string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ') AS toks
+             {sql_tokens()} AS toks
       FROM documents
     ),
     tok_counts AS (
@@ -367,10 +397,10 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "contamination_check",
-    """
+    f"""
     WITH t AS (
       SELECT doc_id,
-             string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ') AS toks
+             {sql_tokens()} AS toks
       FROM documents
     ),
     grams AS (
@@ -420,7 +450,7 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     "token_diversity",
     f"""
     WITH t AS (
-      SELECT doc_id, {{toks}} AS toks FROM documents
+      SELECT doc_id, {sql_tokens()} AS toks FROM documents
     ),
     tf AS (
       SELECT doc_id, tok, COUNT(*) AS cnt
@@ -434,9 +464,7 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
                  / (CAST(SUM(cnt) AS DOUBLE) * CAST(SUM(cnt) AS DOUBLE))
              AS simpson_diversity
     FROM tf GROUP BY doc_id
-    """.replace(
-        "{toks}", "string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')"
-    ),
+    """,
     tags=("text", "quality"),
     doc="Token diversity (Simpson index 1 - sum(cnt^2)/n^2): a "
     "log-free concentration metric for repetition filtering (entropy "
@@ -788,12 +816,11 @@ _REG["lang_id_kappa"].oracle = f"""
 
 @query(
     "tokenizer_fertility",
-    r"""
+    f"""
     WITH t AS (
       SELECT lang,
-             len(string_split(trim(regexp_replace(text, '\s+', ' ', 'g')), ' '))
-               AS n_ws,
-             len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9\s]')) AS n_re,
+             len({sql_tokens()}) AS n_ws,
+             len(regexp_extract_all(text, '{_RE_TOKEN}')) AS n_re,
              length(text) AS n_chars
       FROM documents
     )
@@ -821,7 +848,7 @@ _REG["lang_id_kappa"].oracle = f"""
 def tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     n_ws = F.size(tokens(F.col("text")))
-    n_re = F.size(F.regexp_extract_all("text", F.lit(r"[a-z]+|[0-9]+|[^a-z0-9\s]"), 0))
+    n_re = F.size(F.regexp_extract_all("text", F.lit(_RE_TOKEN), 0))
     t = docs.select(
         "lang",
         n_ws.alias("n_ws"),
@@ -946,7 +973,7 @@ VERBATIM_PROBE_TOKENS = 5
     WITH bench AS (
       SELECT doc_id AS bench_id,
              array_to_string(
-               (string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' '))
+               ({sql_tokens()})
                  [1:{VERBATIM_PROBE_TOKENS}], ' ') AS probe
       FROM documents WHERE doc_id < 10
     )

@@ -24,11 +24,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from porcupine_spark.operators.text import sql_tokens, tokens
 from porcupine_spark.plans.registry import query
 from porcupine_spark.tables import load_table
-
-_SQL_TOKS = "string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')"
-
 
 @query(
     "hapax_rate_by_source",
@@ -36,7 +34,7 @@ _SQL_TOKS = "string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')"
     WITH tf AS (
       SELECT source, tok, COUNT(*) AS c
       FROM (
-        SELECT source, UNNEST({_SQL_TOKS}) AS tok FROM documents
+        SELECT source, UNNEST({sql_tokens()}) AS tok FROM documents
       ) GROUP BY source, tok
     )
     SELECT source,
@@ -59,7 +57,7 @@ _SQL_TOKS = "string_split(trim(regexp_replace(text, '\\s+', ' ', 'g')), ' ')"
 )
 def hapax_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")), " ")
+    toks = tokens(F.col("text"))
     tf = (
         docs.select("source", F.explode(toks).alias("tok"))
         .groupBy("source", "tok")
@@ -88,7 +86,7 @@ ZIPF_TOPK = 30
     f"""
     WITH tf AS (
       SELECT tok, COUNT(*) AS freq
-      FROM (SELECT UNNEST({_SQL_TOKS}) AS tok FROM documents)
+      FROM (SELECT UNNEST({sql_tokens()}) AS tok FROM documents)
       GROUP BY tok
     ),
     top AS (
@@ -114,7 +112,7 @@ ZIPF_TOPK = 30
 )
 def zipf_rank_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")), " ")
+    toks = tokens(F.col("text"))
     tf = (
         docs.select(F.explode(toks).alias("tok"))
         .groupBy("tok")
@@ -155,8 +153,8 @@ def _midrank2_by_value(perdoc: DataFrame, metric: str) -> DataFrame:
 
 _SQL_SPEARMAN_PERDOC = f"""perdoc AS (
       SELECT doc_id,
-             len({_SQL_TOKS}) AS n_tokens,
-             len(list_distinct({_SQL_TOKS})) AS n_distinct
+             len({sql_tokens()}) AS n_tokens,
+             len(list_distinct({sql_tokens()})) AS n_distinct
       FROM documents
     )"""
 
@@ -213,7 +211,7 @@ def _sql_midrank2(metric: str) -> str:
 )
 def rank_corr_tokens_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")), " ")
+    toks = tokens(F.col("text"))
     perdoc = docs.select(
         "doc_id",
         F.size(toks).cast("long").alias("n_tokens"),
@@ -295,7 +293,7 @@ def lang_diversity_simpson(spark: SparkSession, sf_dir: str) -> DataFrame:
 # medium (4-6), long (>=7) — coarse enough that synonym swaps inside a
 # template map to the same class sequence.
 _LEN_CLASS_SQL = (
-    "list_transform({toks}, t -> CASE WHEN length(t) <= 3 THEN 's' "
+    f"list_transform({sql_tokens()}, t -> CASE WHEN length(t) <= 3 THEN 's' "
     "WHEN length(t) <= 6 THEN 'm' ELSE 'l' END)"
 )
 
@@ -306,7 +304,7 @@ _LEN_CLASS_SQL = (
     WITH fp AS (
       SELECT doc_id, source,
              CAST(concat('0x', substr(md5(concat('tpl:',
-               array_to_string({_LEN_CLASS_SQL.format(toks=_SQL_TOKS)}, ''))), 1, 15))
+               array_to_string({_LEN_CLASS_SQL}, ''))), 1, 15))
                AS BIGINT) AS fingerprint
       FROM documents
     )
@@ -330,7 +328,7 @@ _LEN_CLASS_SQL = (
 )
 def template_fingerprint_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.trim(F.regexp_replace(F.col("text"), r"\s+", " ")), " ")
+    toks = tokens(F.col("text"))
     classes = F.transform(
         toks,
         lambda t: F.when(F.length(t) <= 3, "s")

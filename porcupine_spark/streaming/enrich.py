@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from porcupine_spark.functions.driverstate import materialize
+from porcupine_spark.operators.text import tokens
 from porcupine_spark.plans.registry import query
 from porcupine_spark.streaming.drain import drain, state_sized_session
 from porcupine_spark.tables import load_events_stream, load_table
@@ -281,7 +282,6 @@ def stream_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         DSIR_KEEP_PPM,
         DSIR_SCALE,
         DSIR_TARGET_LANG,
-        _norm,
         dsir_bucket,
         dsir_lean_index,
     )
@@ -289,14 +289,14 @@ def stream_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ns = state_sized_session(spark)
     # batch phase: the 1024-bucket lean index — built through the SAME
-    # shared helpers the batch scorer uses (curation._norm / dsir_bucket /
+    # shared helpers the batch scorer uses (tokens / dsir_bucket /
     # dsir_lean_index), so the gate cannot drift from dsir_proxy_selection
     # or the oracle by a stale expression copy
     docs = load_table(ns, sf_dir, "documents")
     is_t = F.col("lang") == DSIR_TARGET_LANG
     occ = docs.select(
         is_t.alias("is_t"),
-        F.explode(F.split(_norm(F.col("text")), " ")).alias("tok"),
+        F.explode(tokens(F.col("text"))).alias("tok"),
     ).select("is_t", dsir_bucket(F.col("tok"), DSIR_BUCKETS).alias("b"))
     dist = dsir_lean_index(occ, DSIR_BUCKETS)
     # the whole feature space is DSIR_BUCKETS bools — collect once and
@@ -308,7 +308,7 @@ def stream_dsir_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     lean_lit = F.array(*[F.lit(x) for x in lean])
 
     stream = load_docs_stream(ns, sf_dir)
-    toks_col = F.split(_norm(F.col("text")), " ")
+    toks_col = tokens(F.col("text"))
     bucket = lambda t: dsir_bucket(t, DSIR_BUCKETS)  # noqa: E731
     scored = stream.select(
         "source",
@@ -371,16 +371,15 @@ def stream_familiarity_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         FAMIL_KEEP_PPM,
         FAMIL_MIN_N,
         FAMIL_SCALE,
-        _norm,
     )
     from porcupine_spark.tables import load_docs_stream
 
     ns = state_sized_session(spark)
     # batch phase: train the familiar-bigram table with the SAME shared
-    # expressions the batch gate uses (curation._norm + word_ngrams), so
+    # expressions the batch gate uses (tokens + word_ngrams), so
     # the gate cannot drift from bigram_familiarity_gate by a stale copy
     docs = load_table(ns, sf_dir, "documents")
-    ws = F.split(_norm(F.col("text")), " ")
+    ws = tokens(F.col("text"))
     familiar = (
         docs.filter(F.size(ws) >= 2)
         .select(F.explode(word_ngrams(ws, 2)).alias("gram"))
@@ -450,7 +449,6 @@ def stream_classifier_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from porcupine_spark.operators.curation import (
         CLS_BUCKETS,
         CLS_KEEP_MILLI,
-        _norm,
         cls_weight,
         dsir_bucket,
     )
@@ -471,7 +469,7 @@ def stream_classifier_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     wt_lit = F.array(*[F.lit(x).cast("long") for x in wts])
 
     stream = load_docs_stream(ns, sf_dir)
-    ws = F.split(_norm(F.col("text")), " ")
+    ws = tokens(F.col("text"))
     grams = word_ngrams(ws, 2)
     w_sum = F.aggregate(
         grams,

@@ -1,9 +1,11 @@
 """Edge-case units for the curation operators (Gopher filter, sequence
-packing, duplicated-span stats, DSIR lean scores); oracle parity for
-the full queries is covered by tools/verify_oracles.py."""
+packing, duplicated-span stats, DSIR lean scores, the classifier gate's
+plan); oracle parity for the full queries is covered by
+tools/verify_oracles.py."""
 
 from __future__ import annotations
 
+from porcupine_spark.bucketing import executed_plan
 from porcupine_spark.operators.curation import (
     PACK_BUDGET,
     gopher_flags,
@@ -240,3 +242,17 @@ def test_dedup_source_shift_shares_balance(spark, sf_dir):
     tot_shift = sum(r.shift_ppm for r in rows)
     # shifts are zero-sum up to per-source truncation slack
     assert abs(tot_shift) <= 2 * len(rows)
+
+
+def test_classifier_gate_plan_broadcasts_weights_no_udf(spark, sf_dir):
+    """The weight table is config-sized — the plan must broadcast it
+    (never shuffle the corpus side for it) and stay UDF-free."""
+    from porcupine_spark.plans.registry import load_all_plans
+
+    df = load_all_plans()["classifier_quality_gate"].builder(spark, sf_dir)
+    plan = executed_plan(df)
+    assert "BroadcastHashJoin" in plan
+    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+    rows = df.collect()
+    keeps = {r.keep for r in rows}
+    assert keeps == {True, False}, "gate must discriminate, not pass/fail all"

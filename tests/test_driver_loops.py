@@ -18,7 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from porcupine_spark import serials, tables
-from porcupine_spark.bucketing import executed_plan
+from porcupine_spark.bucketing import executed_plan, plan_node_counts
 from porcupine_spark.functions import driverstate
 from porcupine_spark.operators import components, corpus, dedup
 from test_streaming import package_lines
@@ -423,24 +423,18 @@ def test_bpe_encode_scans_documents_once(spark, sf_dir, monkeypatch):
     """Above the gate the encode tokenizes documents once: of the plans
     it materializes and the plan it returns, exactly one scans
     documents (the rounds and the roll-up read the checkpoint)."""
-    plans = []
+    censuses = []
     real = driverstate.materialize
 
     def recording(df, eager=True):
-        plans.append(executed_plan(df))
+        censuses.append(plan_node_counts(df))
         return real(df, eager)
 
     monkeypatch.setattr(driverstate, "materialize", recording)
     monkeypatch.setattr(corpus, "materialize", recording)
     _force_distributed(monkeypatch)
-    plans.append(executed_plan(corpus.bpe_encode_tokens(spark, sf_dir)))
-    scans = [
-        line
-        for plan in plans
-        for line in plan.splitlines()
-        if "FileScan" in line and "documents" in line
-    ]
-    assert len(scans) == 1, scans
+    censuses.append(plan_node_counts(corpus.bpe_encode_tokens(spark, sf_dir)))
+    assert sum(c["FileSourceScanExec"] for c in censuses) == 1, censuses
 
 
 def test_bpe_wrapped_replace_is_greedy_nonoverlapping(spark):
@@ -698,10 +692,10 @@ def test_checkpoint_drops_hash_partitioning(spark):
         )
         ck = edges.repartition(F.col("src")).transform(driverstate.materialize)
         rd = spark.range(7).select(F.col("id").alias("src"), F.lit(1).alias("c"))
-        plan = executed_plan(components._pregel_contrib(ck, rd, False))
+        census = plan_node_counts(components._pregel_contrib(ck, rd, False))
     finally:
         spark.conf.set(key, old)
-    assert plan.count("Exchange hashpartitioning(src") == 2
+    assert census["ShuffleExchangeExec"] == 2
 
 
 MATERIALIZE = os.path.join("functions", "driverstate.py")

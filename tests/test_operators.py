@@ -1528,6 +1528,39 @@ def test_minhash_carry_rejects_bad_names(spark, carry, match):
         minhash_lsh_pairs(docs, carry=carry)
 
 
+def test_minhash_simhash_pairs_duplicate_free_without_distinct(spark):
+    """The r7 min-band emission replaced the candidate distinct() in
+    the banded pair generators (minhash, and the banded-Hamming core of
+    simhash and media aHash): a pair colliding in several bands must
+    still appear exactly once in the output (the oracle hash-compare in
+    test_oracles also pins the exact sets; this pins the uniqueness
+    mechanism on its own)."""
+    from porcupine_spark.operators import dedup as D
+    from porcupine_spark.operators.multimodal import media_ahash_pairs, media_table
+    from porcupine_spark.tables import load_table
+
+    sf = SF01_DIR
+    docs = load_table(spark, sf, "documents")
+
+    mh = [(r.doc_a, r.doc_b) for r in D.minhash_lsh_pairs(docs).collect()]
+    assert len(mh) == len(set(mh)) and len(mh) > 0
+
+    sh = [
+        (r.doc_a, r.doc_b)
+        for r in D.simhash_pairs(spark, sf).collect()
+    ]
+    assert len(sh) == len(set(sh)) and len(sh) > 0
+
+    # the corpus has no near-identical payloads: plant copies of five
+    # under new ids, each colliding with its original in all 4 bands
+    media = media_table(spark, sf)
+    copies = media.orderBy("doc_id").limit(5).select(
+        (F.col("doc_id") + 10**9).alias("doc_id"), "payload"
+    )
+    md = [(r.doc_a, r.doc_b) for r in media_ahash_pairs(media.unionByName(copies)).collect()]
+    assert len(md) == len(set(md)) and len(md) >= 5
+
+
 def test_priority_drift_grid_consistency(spark, sf_dir):
     from porcupine_spark.operators.quality import priority_mix_drift_chi2
     from porcupine_spark.tables import load_table

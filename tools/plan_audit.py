@@ -18,7 +18,11 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from porcupine_spark.bucketing import executed_plan, shuffle_exchanges_in_plan
+from porcupine_spark.bucketing import (
+    executed_plan,
+    plan_node_counts,
+    shuffle_exchanges_in_plan,
+)
 from porcupine_spark.plans.registry import load_all_plans
 from porcupine_spark.session import get_spark
 
@@ -159,7 +163,8 @@ def main() -> int:
             rows.append((name, None))
             continue
         try:
-            plan = executed_plan(spec.builder(spark, args.sf))
+            df = spec.builder(spark, args.sf)
+            plan = executed_plan(df)
         except Exception as e:  # noqa: BLE001 — audit must cover the rest
             rows.append((name, f"ERROR: {type(e).__name__}: {e}"))
             continue
@@ -168,7 +173,7 @@ def main() -> int:
             "bcast": plan.count("BroadcastHashJoin"),
             "smj": plan.count("SortMergeJoin"),
             "pandas": plan.count("MapInPandas") + plan.count("FlatMapGroupsInPandas"),
-            "scans": plan.count("FileScan"),
+            "scans": plan_node_counts(df)["FileSourceScanExec"],
             "flags": "".join(
                 f
                 for f, marker in (
