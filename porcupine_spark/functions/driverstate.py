@@ -3,22 +3,32 @@
 The iterative operators (connected components, k-core, PageRank, BPE)
 loop on the driver, and each distributed round costs a join, an
 aggregate and a blocking job of fixed overhead. When the loop's input
-state is small, none of that is needed: the state is checkpointed
-once, sized by an ``Observation`` riding that same job, collected
-through Arrow, iterated exactly on the driver, and handed back with
-``createDataFrame``. Above the gate the caller keeps the checkpoint and
-runs its distributed loop unchanged.
+state is small, none of that is needed: the state is iterated exactly
+on the driver and handed back with ``createDataFrame``.
 
-A loop whose state derives from small base tables goes one step
-further: ``collect_small_table`` decides from the rows stored in the
-table's parquet footers, before any Spark job, and collects the base
-columns through Arrow, so the caller derives the state in numpy with
-no shuffle at all.
+Where the state derives from a test table, it is derived on the driver
+too, from the table's own parquet files and with no Spark job:
 
-The gate is compared with the observed (or stored) row count, never
-set by a conf or env var, so a query's plan depends only on its input.
-A gate of 0 disables the driver path entirely (tests use it to force
-the distributed loop, empty inputs included).
+- ``collect_small_table`` decides from the rows stored in the table's
+  parquet footers, then reads the base columns straight from its files
+  (``Serial.local_columns``); k-core and PageRank derive their edges
+  from them in numpy.
+- ``local_batches`` hands a caller the same direct read batch by batch,
+  so a derivation whose size the footers cannot bound (the shingles of
+  ``dedup_clusters``, the BPE word counts) checks its gate exactly as it
+  reads and stops as soon as the state passes it.
+
+Where the direct read is unavailable (a remote or partitioned table,
+read options, a post-read transform, a timestamp column), the state is
+derived in Spark and ``checkpoint_sized`` checkpoints it once, sized by
+an ``Observation`` riding that same job, and collects it through Arrow
+when it is within the gate. Above the gate the caller keeps the
+checkpoint and runs its distributed loop unchanged.
+
+The gate is compared with the observed (or stored, or counted) size,
+never set by a conf or env var, so a query's plan depends only on its
+input. A gate of 0 disables the driver path entirely (tests use it to
+force the distributed loop, empty inputs included).
 
 ``materialize`` is the package's one way to keep an intermediate.
 """
@@ -69,11 +79,26 @@ def checkpoint_sized(df: DataFrame, max_rows: int | None = None, size=None):
     return ck, n, ck.toArrow()
 
 
+def local_batches(spark, sf_dir: str, name: str, cols, max_rows: int | None = None):
+    """Columns ``cols`` of test table ``name`` read on the driver straight
+    from its parquet files, as a ``pyarrow.RecordBatchReader``; None
+    when the gate ``max_rows`` is 0 or only a Spark read can give them.
+    No Spark job either way. ``max_rows=None`` reads
+    ``DRIVER_STATE_MAX_ROWS`` at call time."""
+    from porcupine_spark.tables import local_columns
+
+    if max_rows is None:
+        max_rows = DRIVER_STATE_MAX_ROWS
+    return local_columns(spark, sf_dir, name, cols) if max_rows > 0 else None
+
+
 def collect_small_table(spark, sf_dir: str, name: str, cols, max_rows: int | None = None):
     """Columns ``cols`` of test table ``name`` as a ``pyarrow.Table``
-    (one Arrow collect) when its stored rows are known and at most
-    ``max_rows``, else None, decided before any Spark job.
-    ``max_rows=None`` reads ``DRIVER_STATE_MAX_ROWS`` at call time."""
+    when its stored rows are known and at most ``max_rows``, else None,
+    decided before any Spark job. The columns are read straight from
+    the files (``local_batches``), or in one Arrow collect where that
+    read is unavailable. ``max_rows=None`` reads
+    ``DRIVER_STATE_MAX_ROWS`` at call time."""
     from porcupine_spark.tables import load_table, stored_rows
 
     if max_rows is None:
@@ -81,6 +106,9 @@ def collect_small_table(spark, sf_dir: str, name: str, cols, max_rows: int | Non
     n = stored_rows(sf_dir, name) if max_rows > 0 else None
     if n is None or n > max_rows:
         return None
+    reader = local_batches(spark, sf_dir, name, cols, max_rows)
+    if reader is not None:
+        return reader.read_all()
     return load_table(spark, sf_dir, name, widen=False).select(*cols).toArrow()
 
 

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from porcupine_spark.functions import driverstate
 from porcupine_spark.operators import dedup
 from porcupine_spark.operators.dedup import SQL_SHINGLE_OVERLAP
+from porcupine_spark.operators.text import py_tokens
 from porcupine_spark.plans.registry import query
 
 MAX_ROUNDS = 50  # backstop far above any real near-dup graph diameter
@@ -203,15 +204,19 @@ def connected_components(
     """,
     tags=("dedup", "graph", "iterative"),
     doc="Near-dup cluster assignment: word-3-gram Jaccard>=0.05 pairs "
-    "as edges, connected components. The hashed shingle arrays of "
-    "the documents scan (not repartitioned) are checkpointed once, "
-    "sized by their total shingle count; up to "
-    f"{driverstate.DRIVER_STATE_MAX_ROWS:,} shingles they are collected "
-    "through Arrow, and if the candidate pair count sum C(df_h, 2) "
-    "over the informative shingles is also within that gate, overlap, "
-    "Jaccard and an exact union-find run in numpy on the driver (one "
-    "createDataFrame back). Past either gate the Spark path runs off "
-    "the same checkpoint, repartitioned to the session's parallelism: "
+    "as edges, connected components. Each doc's distinct shingles are "
+    "derived on the driver from the documents parquet files, read "
+    "batch by batch with no Spark job, and the read stops once they "
+    f"pass {driverstate.DRIVER_STATE_MAX_ROWS:,}; a shingle is its "
+    "exact token triple. Where the files cannot be read directly, the "
+    "hashed shingle arrays of the documents scan are checkpointed once, "
+    "sized by their total shingle count, and collected within the same "
+    "gate. If the candidate pair count sum C(df_h, 2) over the "
+    "informative shingles is also within that gate, overlap, Jaccard "
+    "and an exact union-find run in numpy on the driver (one "
+    "createDataFrame back). Past either gate the Spark path runs on "
+    "the hashed arrays (the checkpoint where there is one), "
+    "repartitioned to the session's parallelism: "
     "inverted-index self-join, then components "
     "by union-find (edges within the gate) or min-label propagation. "
     "Oracle = recursive-CTE transitive closure, an independent "
@@ -220,29 +225,72 @@ def connected_components(
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(node, component) over dedup_ngram_jaccard's edges. Below the
     gates (see the query doc) the whole step runs on the driver, where
-    one machine beats the cluster's per-job fixed cost; the Spark
-    fallback reuses the checkpointed arrays, so ``documents`` is read
-    once either way."""
+    one machine beats the cluster's per-job fixed cost; past the pair
+    gate the Spark overlap runs on the hashed shingle arrays (the
+    checkpointed ones where the Spark path derived them)."""
+    from pyspark.sql.pandas.types import from_arrow_type
+
     from porcupine_spark.tables import load_table
 
-    docs = load_table(spark, sf_dir, "documents", widen=False)
+    def spark_arrays():
+        return dedup.hashed_shingle_arrays(load_table(spark, sf_dir, "documents", widen=False))
+
     cutoff = dedup.hot_df_cutoff(dedup.corpus_n_docs(spark, sf_dir))
-    arrays, _, table = driverstate.checkpoint_sized(
-        dedup.hashed_shingle_arrays(docs), size=F.sum(F.size("arr"))
-    )
-    node_type = arrays.schema["doc_id"].dataType.simpleString()
+    arrays = None
+    table = _doc_shingles_local(spark, sf_dir, driverstate.DRIVER_STATE_MAX_ROWS)
+    if table is None:
+        arrays, _, table = driverstate.checkpoint_sized(spark_arrays(), size=F.sum(F.size("arr")))
     if table is not None:
         overlap = dedup.shingle_overlap_local(
             table, cutoff, max_pairs=driverstate.DRIVER_STATE_MAX_ROWS
         )
         if overlap is not None:
+            node_type = from_arrow_type(table.schema.field("doc_id").type).simpleString()
             return _near_dup_components_local(spark, overlap, node_type)
     # the unwidened scan may be one split: spread the explode and the
     # self-join over the session's cores (load_table's widening, paid
     # only past the gates)
-    arrays = arrays.repartition(spark.sparkContext.defaultParallelism)
+    arrays = (spark_arrays() if arrays is None else arrays).repartition(
+        spark.sparkContext.defaultParallelism
+    )
     edges = dedup.overlap_jaccard(dedup.shingle_overlap(arrays, cutoff))
     return connected_components(edges, "doc_a", "doc_b").select("node", "component")
+
+
+def _doc_shingles_local(spark: SparkSession, sf_dir: str, max_rows: int):
+    """``hashed_shingle_arrays`` of ``documents`` derived on the driver
+    from the direct read (``driverstate.local_batches``): an Arrow
+    ``(doc_id, arr)`` table, ``arr`` the ids of each row's distinct
+    word 3-grams of ``py_tokens`` (empty for a NULL, blank or 1-2-token
+    text). A shingle's id stands for its exact token triple, as the
+    oracle's string shingles do; Spark's xxhash64 of the triple differs
+    only on a 64-bit collision. None when the direct read is
+    unavailable or the shingles pass ``max_rows``; the read stops there,
+    so at most one record batch past the gate is ever held."""
+    from array import array
+
+    import numpy as np
+    import pyarrow as pa
+
+    reader = driverstate.local_batches(spark, sf_dir, "documents", ("doc_id", "text"), max_rows)
+    if reader is None:
+        return None
+    ids: dict[tuple[str, str, str], int] = {}
+    doc_ids, flat, offsets = [], array("q"), array("i", [0])
+    with reader:
+        for batch in reader:
+            for toks in map(py_tokens, batch.column("text").to_pylist()):
+                grams = set(zip(toks, toks[1:], toks[2:])) if toks else ()
+                flat.extend(ids.setdefault(g, len(ids)) for g in grams)
+                if len(flat) > max_rows:
+                    return None
+                offsets.append(len(flat))
+            doc_ids.append(batch.column("doc_id"))
+    arr = pa.ListArray.from_arrays(
+        np.frombuffer(offsets, np.int32), np.frombuffer(flat, np.int64)
+    )
+    doc_id = pa.chunked_array(doc_ids, reader.schema.field("doc_id").type)
+    return pa.table({"doc_id": doc_id, "arr": arr})
 
 
 def _near_dup_components_local(spark: SparkSession, overlap, node_type: str) -> DataFrame:
@@ -586,8 +634,9 @@ def _supplier_graph_ranks_local(spark: SparkSession, sf_dir: str):
     f"gets a full hash oracle (unrolled-CTE formulation) instead of "
     f"the usual rows-only check. When lineitem and orders each store "
     f"at most {driverstate.DRIVER_STATE_MAX_ROWS:,} rows (read from the "
-    f"parquet footers before any job), their key columns come back in "
-    f"one Arrow collect each and the whole query runs on the driver: a "
+    f"parquet footers before any job), their key columns are read "
+    f"straight from the parquet files (one Arrow collect each where "
+    f"that read is unavailable) and the whole query runs on the driver: a "
     f"numpy searchsorted join on orderkey (its size also within that "
     f"gate), a sort-based distinct, packed int64 ids and the "
     f"iterations in exact int64 (the same truncating divisions). "
@@ -1151,7 +1200,8 @@ def _kcore_oracle_sql(k: int = KCORE_K, rounds: int = KCORE_ROUNDS) -> str:
     f"the result IS the true k-core on real inputs. When lineitem "
     f"stores at most {driverstate.DRIVER_STATE_MAX_ROWS:,} rows (read "
     f"from the parquet footers before any job), its (orderkey, "
-    f"partkey) columns come back in one Arrow collect and the edges "
+    f"partkey) columns are read straight from the parquet file (one "
+    f"Arrow collect where that read is unavailable) and the edges "
     f"are derived in numpy (distinct items, the u < v pairs of each "
     f"order when their count sum C(k, 2) is within that gate, a "
     f"sort-based support count), then peeled on the driver (numpy "

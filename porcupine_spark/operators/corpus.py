@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from porcupine_spark.functions.driverstate import materialize
 from porcupine_spark.functions.topk import ranked_topk
-from porcupine_spark.operators.text import sql_tokens, tokens
+from porcupine_spark.operators.text import py_tokens, sql_tokens, tokens
 from porcupine_spark.plans.registry import query
 from porcupine_spark.tables import load_table
 
@@ -1055,8 +1055,11 @@ def _bpe_train_oracle_sql(rounds: int = BPE_TRAIN_ROUNDS) -> str:
     f"a space-wrapped symbol encoding (greedy left-to-right non-"
     f"overlapping — exactly BPE's merge-application order). Up to "
     f"{BPE_DRIVER_MAX_WORDS:,} distinct words the word table is "
-    f"checkpointed once, collected through Arrow and merged on the "
-    f"driver (same trim/split, argmax order and replace); above that "
+    f"counted on the driver from the documents parquet files (no Spark "
+    f"job; the read stops once the words pass the gate) and merged on "
+    f"the driver (same trim/split, argmax order and replace); where "
+    f"the files cannot be read directly the Spark word table is "
+    f"checkpointed once and collected through Arrow; above that "
     f"gate each round is a distributed pair count whose argmax is the "
     f"one row the driver sees, lineage truncated with a "
     f"localCheckpoint so round R never replays rounds 1..R-1. Fixed "
@@ -1104,19 +1107,24 @@ def _bpe_merge_local(
 
 
 def _bpe_words(spark: SparkSession, sf_dir: str, *keys: str):
-    """``checkpoint_sized`` of the word counts of ``documents`` per
-    ``keys``, gated at ``BPE_DRIVER_MAX_WORDS`` rows: (checkpoint, rows,
-    Arrow table or None) of (*keys, word, ws, freq), ``ws`` the word's
-    space-wrapped symbol string. The wrap is a Spark expression in the
-    same projection, so both paths start from the symbols Java's regex
-    yields; ``(?s)`` lets its ``.`` wrap U+0085, U+2028 and U+2029 too,
-    as DuckDB's and Python's ``.`` do."""
+    """The word counts of ``documents`` per ``keys``, gated at
+    ``BPE_DRIVER_MAX_WORDS`` rows: (checkpoint or None, Arrow table or
+    None) of (*keys, word, ws, freq), ``ws`` the word's space-wrapped
+    symbol string. Below the gate the table is derived on the driver
+    (``_bpe_words_local``) and no checkpoint is made; otherwise it is
+    ``checkpoint_sized`` of the Spark derivation, the table present only
+    within the gate. The Spark wrap rides the same projection; ``(?s)``
+    lets its ``.`` wrap U+0085, U+2028 and U+2029 too, as DuckDB's and
+    Python's ``.`` do."""
     from porcupine_spark.functions.driverstate import checkpoint_sized
 
+    table = _bpe_words_local(spark, sf_dir, keys, BPE_DRIVER_MAX_WORDS)
+    if table is not None:
+        return None, table
     # unwidened: the checkpoint is the only consumer, so a round-robin
     # shuffle in front of it would only add a job
     words = _word_counts(load_table(spark, sf_dir, "documents", widen=False), *keys)
-    return checkpoint_sized(
+    ck, _, table = checkpoint_sized(
         words.select(
             *keys,
             "word",
@@ -1124,6 +1132,55 @@ def _bpe_words(spark: SparkSession, sf_dir: str, *keys: str):
             "freq",
         ),
         BPE_DRIVER_MAX_WORDS,
+    )
+    return ck, table
+
+
+def _bpe_words_local(spark: SparkSession, sf_dir: str, keys: tuple[str, ...], max_words: int):
+    """``_bpe_words``' table derived on the driver from the direct read
+    (``driverstate.local_batches``): ``py_tokens`` of the texts (none
+    for a NULL text), empty words dropped, occurrences counted per
+    (*keys, word) with NULL keys a group of their own, and each word
+    wrapped per code point. None when the direct read is unavailable or
+    the rows pass ``max_words``; the read stops there."""
+    from collections import Counter
+
+    import pyarrow as pa
+
+    from porcupine_spark.functions.driverstate import local_batches
+
+    reader = local_batches(spark, sf_dir, "documents", (*keys, "text"), max_words)
+    if reader is None:
+        return None
+    counts: dict[tuple, Counter] = {}
+    n_rows = 0
+    with reader:
+        for batch in reader:
+            groups: dict[tuple, list[str]] = {}
+            for *key, text in zip(*(batch.column(c).to_pylist() for c in (*keys, "text"))):
+                if text is not None:
+                    groups.setdefault(tuple(key), []).append(text)
+            for key, texts in groups.items():
+                words = counts.setdefault(key, Counter())
+                n_rows -= len(words)
+                # one tokenization per key and batch: a space, being a
+                # word separator, joins texts without joining words
+                words.update(filter(None, py_tokens(" ".join(texts))))
+                n_rows += len(words)
+                if n_rows > max_words:
+                    return None
+    rows = [(key, w, f) for key, words in counts.items() for w, f in words.items()]
+    words = [w for _, w, _ in rows]
+    return pa.table(
+        {
+            **{
+                k: pa.array([key[i] for key, _, _ in rows], reader.schema.field(k).type)
+                for i, k in enumerate(keys)
+            },
+            "word": pa.array(words, pa.string()),
+            "ws": pa.array([" " + "  ".join(w) + " " for w in words], pa.string()),
+            "freq": pa.array([f for _, _, f in rows], pa.int64()),
+        }
     )
 
 
@@ -1188,7 +1245,7 @@ def _bpe_train_chain(
     Up to ``BPE_DRIVER_MAX_WORDS`` distinct words the chain runs on the
     driver (``_bpe_merge_local``) over the collected word table; above
     it, in ``_bpe_rounds``."""
-    cur, _, table = _bpe_words(spark, sf_dir)
+    cur, table = _bpe_words(spark, sf_dir)
     if table is None:
         return _bpe_rounds(cur, rounds)
     merges, ws = _bpe_merge_local(
@@ -1252,14 +1309,16 @@ def _bpe_encode_oracle_sql(rounds: int = BPE_TRAIN_ROUNDS) -> str:
     f"roll-up weights each (source, word) row by its word's subword "
     f"length, so no per-occurrence row is ever joined. Up to "
     f"{BPE_DRIVER_MAX_WORDS:,} (source, word) rows the table is "
-    f"collected through Arrow and merges, lengths and the "
+    f"counted on the driver from the documents parquet files (or, "
+    f"where they cannot be read directly, collected through Arrow from "
+    f"the checkpoint) and merges, lengths and the "
     f"|sources|-row roll-up run exactly on the driver; above that "
     f"gate the distributed merge rounds run on the vocabulary and one "
     f"vocab-sized join against the (source, word) rows feeds the "
     f"per-source aggregate.",
 )
 def bpe_encode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    words, _, table = _bpe_words(spark, sf_dir, "source")
+    words, table = _bpe_words(spark, sf_dir, "source")
     if table is not None:
         return _bpe_encode_local(spark, table, BPE_TRAIN_ROUNDS)
     vocab = (

@@ -267,7 +267,9 @@ def span_dup_stats(docs: DataFrame, k: int) -> DataFrame:
     "the chance floor). Same cross-multiplied integer kappa recipe as "
     "lang_id_kappa; composes both gates' oracles verbatim so the "
     "audit can't drift from the gates it compares. Two per-row gate "
-    "passes + one 2x2 cell count.",
+    "passes + one 2x2 cell count. kappa_micro is NULL where chance "
+    "agreement is total (both gates put every doc in one class), as "
+    "the oracle's division by zero gives it.",
 )
 def quality_gate_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = quality_score(spark, sf_dir).select(
@@ -304,11 +306,11 @@ def quality_gate_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
             "     + sum(CASE WHEN y = 0 THEN n ELSE 0 END)"
             "       * CAST(sum(CASE WHEN p = 0 THEN n ELSE 0 END) AS DECIMAL(38,0))))"
             " * 1000000"
-            " div (CAST(sum(n) AS DECIMAL(38,0)) * sum(n)"
+            " div nullif(CAST(sum(n) AS DECIMAL(38,0)) * sum(n)"
             "    - (sum(CASE WHEN y = 1 THEN n ELSE 0 END)"
             "       * CAST(sum(CASE WHEN p = 1 THEN n ELSE 0 END) AS DECIMAL(38,0))"
             "     + sum(CASE WHEN y = 0 THEN n ELSE 0 END)"
-            "       * CAST(sum(CASE WHEN p = 0 THEN n ELSE 0 END) AS DECIMAL(38,0))))"
+            "       * CAST(sum(CASE WHEN p = 0 THEN n ELSE 0 END) AS DECIMAL(38,0))), 0)"
             " AS BIGINT)"
         ).alias("kappa_micro"),
     )

@@ -99,11 +99,11 @@ SQL_SHINGLES = _sql_shingles("shingles", "documents")
 @query(
     "dedup_exact",
     """
-    SELECT md5(trim(text)) AS text_hash,
+    SELECT md5(trim(text, ' ')) AS text_hash,
            MIN(doc_id) AS keep_id,
            COUNT(*) AS n_copies
     FROM documents
-    GROUP BY md5(trim(text))
+    GROUP BY md5(trim(text, ' '))
     """,
     tags=("dedup",),
     doc="Exact dedup: hash-groupBy on normalized text, keep lowest id. "
@@ -901,14 +901,14 @@ def _sql_side_ctes(side: str, pred: str) -> str:
     f"""
     WITH {_sql_side_ctes("base", f"doc_id % {NEW_BATCH_MOD} <> 0")},
     {_sql_side_ctes("newb", f"doc_id % {NEW_BATCH_MOD} = 0")},
-    bh AS (SELECT DISTINCT md5(trim(text)) AS h FROM base),
+    bh AS (SELECT DISTINCT md5(trim(text, ' ')) AS h FROM base),
     near AS (
       SELECT DISTINCT nb.doc_id
       FROM bands_newb nb JOIN bands_base bb
         ON bb.band = nb.band AND bb.sig = nb.sig
     )
     SELECT n.doc_id,
-           (md5(trim(n.text)) IN (SELECT h FROM bh)) AS exact_dup,
+           (md5(trim(n.text, ' ')) IN (SELECT h FROM bh)) AS exact_dup,
            (n.doc_id IN (SELECT doc_id FROM near)) AS near_dup
     FROM newb n
     """,
@@ -1489,7 +1489,7 @@ PREFIX_MIN = 10  # ignore docs too short for a meaningful prefix
     "prefix_dup_clusters",
     f"""
     WITH t AS (
-      SELECT doc_id, md5(trim(text)) AS full_h,
+      SELECT doc_id, md5(trim(text, ' ')) AS full_h,
              {sql_tokens()} AS toks
       FROM documents
     ),

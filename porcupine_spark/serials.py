@@ -38,6 +38,13 @@ dataset stores, summed from its file footers (no Spark job, no data
 page read), memoized the same way under (path, ``source_stamp``).
 Callers decide on it before any job whether a table is small enough
 to collect whole.
+
+Direct read. ``Serial.local_columns`` reads columns of a flat local
+parquet dataset on the driver, file by file and record batch by record
+batch, typed as Spark's ``toArrow`` of the same read would type them.
+It answers only where the Spark read cannot differ (see its docstring);
+elsewhere it gives None and the caller reads through Spark. Like the
+footer sums, it lists the files a Spark listing keeps.
 """
 
 from __future__ import annotations
@@ -131,10 +138,62 @@ class Serial:
         key = (path, stamp)
         n = _ROWS_MEMO.get(key)
         if n is None:
-            n = _parquet_footer_rows(path[7:] if path.startswith("file://") else path)
+            n = _parquet_footer_rows(_local(path))
             if n is not None:
                 _ROWS_MEMO.put(key, n)
         return n
+
+    def local_columns(self, spark: SparkSession, path: str, cols):
+        """Columns ``cols`` of the parquet dataset ``path``, read on the
+        driver straight from its files (no Spark job), as a
+        ``pyarrow.RecordBatchReader`` whose schema and values are those
+        of Spark's ``read(...).select(*cols).toArrow()``; every field is
+        nullable, as Spark's file scans make it. Files are read in name
+        order, batch by batch, so a caller can stop part way.
+
+        None wherever the Spark read could give something else: the
+        ``stored_rows`` cases (no stat-able path, another format, read
+        options, a ``post_read`` transform), a listing that is empty or
+        holds partition directories (their columns come from the path),
+        a column missing from a file or typed differently across files,
+        and a type outside integer, floating, decimal, string, binary,
+        boolean and date (timestamps are typed by session confs; binary
+        is None too under ``binaryAsString``)."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        if self.format != "parquet" or self.options or self.post_read is not None:
+            return None
+        if source_stamp(path) is None:
+            return None
+        listing = _parquet_listing(_local(path))
+        if listing is None or listing[1] or not listing[0]:
+            return None
+        files = sorted(listing[0])
+        try:
+            schemas = [pq.read_schema(f) for f in files]
+        except (OSError, pa.ArrowException):
+            return None
+        large = spark.conf.get("spark.sql.execution.arrow.useLargeVarTypes", "false") == "true"
+        as_string = spark.conf.get("spark.sql.parquet.binaryAsString", "false") == "true"
+        fields = []
+        for c in cols:
+            idx = [s.get_field_index(c) for s in schemas]
+            if min(idx) < 0 or len({s.field(i).type for s, i in zip(schemas, idx)}) > 1:
+                return None
+            t = _spark_arrow_type(schemas[0].field(idx[0]).type, large, as_string)
+            if t is None:
+                return None
+            fields.append(pa.field(c, t))
+        target = pa.schema(fields)
+
+        def batches():
+            for f in files:
+                with pq.ParquetFile(f) as pf:
+                    for batch in pf.iter_batches(columns=list(cols)):
+                        yield batch.cast(target)
+
+        return pa.RecordBatchReader.from_batches(target, batches())
 
     def write(
         self, df: DataFrame, path: str, mode: str = "overwrite", partition_by: str | None = None
@@ -179,11 +238,16 @@ class LRUMemo:
         return len(self._entries)
 
 
+def _local(path: str) -> str:
+    """``path`` without a ``file://`` scheme."""
+    return path[7:] if path.startswith("file://") else path
+
+
 def source_stamp(path: str) -> tuple[int, int] | None:
     """(newest mtime_ns, total bytes) of a local file or of every file
     under a directory; None when it cannot be stat'ed (remote URI,
     glob, missing)."""
-    p = path[7:] if path.startswith("file://") else path
+    p = _local(path)
     try:
         st = os.stat(p)
     except OSError:
@@ -228,33 +292,67 @@ def _listed(name: str) -> bool:
     )
 
 
-def _parquet_footer_rows(path: str) -> int | None:
-    """Sum of the footer row counts of the parquet file ``path`` or of
-    every listed file under the directory ``path``. None when a footer
-    cannot be read, or when the files do not all sit at one depth of
-    ``<col>=<v>`` partition directories: what the read makes of such a
+def _parquet_listing(path: str) -> tuple[list[str], int] | None:
+    """The files a Spark listing of the local ``path`` keeps, with the
+    depth of ``<col>=<v>`` partition directories they sit at (0 for a
+    file or a flat directory). None when the files do not all sit at
+    one depth of partition directories: what the read makes of such a
     layout is the Spark read's to decide."""
+    if not os.path.isdir(path):
+        return [path], 0
+    files, depths = [], set()
+    for dirpath, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if _listed(d)]
+        listed = [os.path.join(dirpath, f) for f in names if _listed(f)]
+        if listed:
+            parts = [] if dirpath == path else os.path.relpath(dirpath, path).split(os.sep)
+            if not all("=" in p for p in parts):
+                return None
+            depths.add(len(parts))
+            files += listed
+    if len(depths) > 1:
+        return None
+    return files, depths.pop() if depths else 0
+
+
+def _parquet_footer_rows(path: str) -> int | None:
+    """Sum of the footer row counts of the files ``_parquet_listing``
+    keeps; None when it keeps no layout or a footer cannot be read."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    files = [path]
-    if os.path.isdir(path):
-        files, depths = [], set()
-        for dirpath, dirs, names in os.walk(path):
-            dirs[:] = [d for d in dirs if _listed(d)]
-            listed = [os.path.join(dirpath, f) for f in names if _listed(f)]
-            if listed:
-                parts = [] if dirpath == path else os.path.relpath(dirpath, path).split(os.sep)
-                if not all("=" in p for p in parts):
-                    return None
-                depths.add(len(parts))
-                files += listed
-        if len(depths) > 1:
-            return None
+    listing = _parquet_listing(path)
+    if listing is None:
+        return None
     try:
-        return sum(pq.read_metadata(f).num_rows for f in files)
+        return sum(pq.read_metadata(f).num_rows for f in listing[0])
     except (OSError, pa.ArrowException):
         return None
+
+
+def _spark_arrow_type(t, large: bool, binary_as_string: bool):
+    """The Arrow type Spark's ``toArrow`` gives a parquet column that
+    pyarrow reads as ``t``, for the types ``Serial.local_columns``
+    reads; None for any other. Unsigned integers widen in Spark, and
+    ``large`` is ``spark.sql.execution.arrow.useLargeVarTypes``."""
+    import pyarrow as pa
+
+    if pa.types.is_dictionary(t):
+        t = t.value_type
+    if (
+        pa.types.is_signed_integer(t)
+        or pa.types.is_float32(t)
+        or pa.types.is_float64(t)
+        or pa.types.is_decimal128(t)
+        or pa.types.is_boolean(t)
+        or pa.types.is_date32(t)
+    ):
+        return t
+    if pa.types.is_string(t) or pa.types.is_large_string(t):
+        return pa.large_string() if large else pa.string()
+    if (pa.types.is_binary(t) or pa.types.is_large_binary(t)) and not binary_as_string:
+        return pa.large_binary() if large else pa.binary()
+    return None
 
 
 # the built-in serial constructors (reference: SerializationMethod.hs)

@@ -87,6 +87,13 @@ def stored_rows(sf_dir: str, name: str) -> int | None:
     return _table_serial(name).stored_rows(table_path(sf_dir, name))
 
 
+def local_columns(spark: SparkSession, sf_dir: str, name: str, cols):
+    """Columns ``cols`` of a test table read on the driver straight from
+    its parquet files (``Serial.local_columns``): a record batch reader,
+    or None where only a Spark read can give them."""
+    return _table_serial(name).local_columns(spark, table_path(sf_dir, name), cols)
+
+
 # sessions already confed, by JVM session UUID: a new session can
 # reuse a stopped one's id(), never its UUID
 _CONFED_SESSIONS: set = set()

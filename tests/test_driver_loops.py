@@ -95,16 +95,18 @@ def _planted_encode_docs(tmp_path):
 
 
 def _write_docs(tmp_path, rows):
-    """A documents table of ``(doc_id, text)`` rows (either may be None)."""
-    text = [t for _, t in rows]
+    """A documents table of ``(doc_id, text[, source])`` rows (any may be
+    None; the source defaults to "a")."""
+    rows = [(*r, "a")[:3] for r in rows]
+    text = [t for _, t, _ in rows]
     tmp_path.mkdir(exist_ok=True)
     pq.write_table(
         pa.table(
             {
-                "doc_id": pa.array([d for d, _ in rows], pa.int64()),
+                "doc_id": pa.array([d for d, _, _ in rows], pa.int64()),
                 "text": pa.array(text, pa.string()),
                 "lang": ["en"] * len(rows),
-                "source": ["a"] * len(rows),
+                "source": pa.array([s for _, _, s in rows], pa.string()),
                 "n_chars": pa.array([len(t or "") for t in text], pa.int64()),
             }
         ),
@@ -184,34 +186,46 @@ def test_dedup_clusters_zero_denominator_raises(spark, tmp_path, monkeypatch, di
         components.dedup_clusters(spark, sf)
 
 
+def _spark_text_derivation(monkeypatch):
+    """Take the text state from the Spark derivation: the direct read of
+    ``documents`` is made unavailable."""
+    monkeypatch.setattr(driverstate, "local_batches", lambda *args, **kwargs: None)
+
+
 def test_dedup_clusters_pair_gate_falls_back_after_collect(spark, tmp_path, monkeypatch):
     """Ten copies of a 4-shingle text: 40 shingles, 180 candidate
-    pairs. A gate of 100 collects the arrays, then the pair count sends
-    the overlap to Spark on the checkpointed arrays; the rowset is the
-    gate-0 one."""
+    pairs. A gate of 100 takes the arrays, derived on the driver or
+    collected from the Spark derivation's checkpoint, then the pair
+    count sends the overlap to Spark; the rowset is the gate-0 one on
+    both derivations."""
     sf = _write_docs(tmp_path, [(i, "one two three four five six") for i in range(10)])
     with monkeypatch.context() as m:
         _force_distributed(m)
         expected = _clusters(spark, sf)
-    collected, spark_overlaps = [], []
     real_ck, real_overlap = driverstate.checkpoint_sized, dedup.shingle_overlap
+    for derivation, arrays in (("driver", []), ("spark", [(40, 10)])):
+        collected, spark_overlaps = [], []
 
-    def ck(*args, **kwargs):
-        out = real_ck(*args, **kwargs)
-        collected.append(out[1:] if out[2] is None else (out[1], out[2].num_rows))
-        return out
+        def ck(*args, **kwargs):
+            out = real_ck(*args, **kwargs)
+            collected.append(out[1:] if out[2] is None else (out[1], out[2].num_rows))
+            return out
 
-    def overlap(arrays, cutoff):
-        spark_overlaps.append(cutoff)
-        return real_overlap(arrays, cutoff)
+        def overlap(arrays, cutoff):
+            spark_overlaps.append(cutoff)
+            return real_overlap(arrays, cutoff)
 
-    monkeypatch.setattr(driverstate, "DRIVER_STATE_MAX_ROWS", 100)
-    monkeypatch.setattr(driverstate, "checkpoint_sized", ck)
-    monkeypatch.setattr(dedup, "shingle_overlap", overlap)
-    assert _clusters(spark, sf) == expected == [(i, 0) for i in range(10)]
-    # the arrays (40 shingles, 10 rows) came back, then the edges (45)
-    assert collected == [(40, 10), (45, 45)]
-    assert spark_overlaps == [25]
+        with monkeypatch.context() as m:
+            if derivation == "spark":
+                _spark_text_derivation(m)
+            m.setattr(driverstate, "DRIVER_STATE_MAX_ROWS", 100)
+            m.setattr(driverstate, "checkpoint_sized", ck)
+            m.setattr(dedup, "shingle_overlap", overlap)
+            assert _clusters(spark, sf) == expected == [(i, 0) for i in range(10)]
+        # the arrays (40 shingles, 10 rows) came back from the Spark
+        # derivation only, then the edges (45) on both
+        assert collected == arrays + [(45, 45)], derivation
+        assert spark_overlaps == [25], derivation
 
 
 def test_shingle_overlap_local_pair_gate():
@@ -417,6 +431,149 @@ def test_bpe_encode_planted_paths_and_oracle_agree(spark, tmp_path, monkeypatch)
     # to x (Java's `.` without (?s) leaves it unwrapped: " x \u2028 y ")
     _, words = _bpe_state(spark, sf)
     assert {w: s for w, s, _ in words}["x\u2028y"] == " x\u2028  y "
+
+
+_ODD = "the qu\x0bick br\u00a0own fox ju\u2028mps over the \U0001F600lazy dog \U0001D518"
+_ODD2 = "the qu\x0bick br\u00a0own fox ju\u2028mps over the \U0001F600lazy cat \U0001D518"
+
+# planted documents tables for the text state of dedup_clusters and BPE
+TEXT_TABLES = {
+    "nulls": [
+        (None, _FOX, "a"),
+        (1, _FOX2, None),
+        (2, None, "b"),
+        (3, _FOX, None),
+        (None, _LOREM, "b"),
+        (4, _LOREM2, "a"),
+        (5, None, None),
+    ],
+    "duplicate_ids": [
+        (1, _FOX, "a"),
+        (1, _LOREM, "b"),
+        (2, _FOX2, "a"),
+        (3, _LOREM2, "b"),
+        (3, _LOREM2 + " extra words here", "a"),
+    ],
+    "empty_blank_short": [
+        (1, "", "a"),
+        (2, " \t\n ", "b"),
+        (3, "ab", "a"),
+        (4, "ab cd", "b"),
+        (5, "\tab  cd\n", "a"),
+        (6, _FOX, "b"),
+        (7, _FOX2, "a"),
+    ],
+    "unicode_in_words": [
+        (1, _ODD, "a"),
+        (2, _ODD2, "b"),
+        (3, _ODD.replace("\x0b", " "), "a"),
+        (4, "\U0001F600\U0001F600a \U0001F600\U0001F600a x\u2028y \u00a0", "c"),
+        (5, _LOREM, "c"),
+    ],
+    "empty": [],
+}
+
+
+def _text_rows(spark, sf):
+    """dedup_clusters, bpe_encode_tokens and bpe_merge_train rowsets."""
+    clusters = sorted(tuple(r) for r in components.dedup_clusters(spark, sf).collect())
+    encode = _encode_rows(corpus.bpe_encode_tokens(spark, sf).collect())
+    merges = sorted(tuple(r) for r in corpus.bpe_merge_train(spark, sf).collect())
+    return clusters, encode, merges
+
+
+def _text_oracle_rows(sf):
+    """``_text_rows`` from the three queries' DuckDB oracles."""
+    import duckdb
+
+    from porcupine_spark.plans.registry import REGISTRY
+
+    con = duckdb.connect()
+    path = tables.table_path(sf, "documents")
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}')")
+    try:
+        clusters, encode, merges = (
+            con.sql(REGISTRY[q].oracle).fetchall()
+            for q in ("dedup_clusters", "bpe_encode_tokens", "bpe_merge_train")
+        )
+        return sorted(clusters), _encode_rows(encode), sorted(merges)
+    finally:
+        con.close()
+
+
+@pytest.mark.parametrize("case", sorted(TEXT_TABLES))
+def test_text_state_planted_paths_agree(spark, tmp_path, monkeypatch, case):
+    """dedup_clusters, bpe_encode_tokens and bpe_merge_train give their
+    oracles' rowsets from the state derived on the driver, from the
+    Spark derivation and from the gate-0 distributed rounds, for NULL
+    text, doc_id and source, duplicate doc ids, empty, blank and 1-2
+    token texts, U+000B, U+00A0 and U+2028 inside words, and
+    supplementary-plane characters."""
+    sf = _write_docs(tmp_path, TEXT_TABLES[case])
+    sized = []
+    real_ck = driverstate.checkpoint_sized
+
+    def ck(*args, **kwargs):
+        sized.append(1)
+        return real_ck(*args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(driverstate, "checkpoint_sized", ck)
+        local = _text_rows(spark, sf)
+        assert sized == []
+        _spark_text_derivation(m)
+        assert _text_rows(spark, sf) == local
+        assert len(sized) == 3
+    with monkeypatch.context() as m:
+        _force_distributed(m)
+        assert _text_rows(spark, sf) == local
+    assert _text_oracle_rows(sf) == local
+    if case == "empty":
+        assert local == ([], [], [])
+    else:
+        assert all(local)
+
+
+def test_text_state_read_stops_at_the_gate(spark, tmp_path, monkeypatch):
+    """A documents table of three part files: once the state passes the
+    gate, the direct read stops after that file's batch and the Spark
+    derivation gives the gate-0 rowsets."""
+    d = tmp_path / "documents.parquet"
+    parts = [[(1, _FOX, "a"), (2, _FOX2, "b")], [(3, _LOREM, "a")], [(4, _LOREM2, "c")]]
+    for i, rows in enumerate(parts):
+        _write_docs(tmp_path / f"p{i}", rows)
+        d.mkdir(exist_ok=True)
+        os.replace(tmp_path / f"p{i}" / "documents.parquet", d / f"part-{i}.parquet")
+    sf = str(tmp_path)
+    with monkeypatch.context() as m:
+        _force_distributed(m)
+        expected = _text_rows(spark, sf)
+    batches = []
+    real = tables.local_columns
+
+    def counting(*args):
+        reader = real(*args)
+
+        def spy():
+            for batch in reader:
+                batches.append(batch.num_rows)
+                yield batch
+
+        return pa.RecordBatchReader.from_batches(reader.schema, spy())
+
+    monkeypatch.setattr(tables, "local_columns", counting)
+    # the first file holds 14 shingles (dedup) and 16 (source, word)
+    # rows (encode) but 9 distinct words: training passes 10 only in
+    # the second file
+    monkeypatch.setattr(driverstate, "DRIVER_STATE_MAX_ROWS", 10)
+    monkeypatch.setattr(corpus, "BPE_DRIVER_MAX_WORDS", 10)
+    assert _text_rows(spark, sf) == expected
+    assert batches == [2, 2, 2, 1]
+    batches.clear()
+    monkeypatch.setattr(driverstate, "DRIVER_STATE_MAX_ROWS", 100)
+    monkeypatch.setattr(corpus, "BPE_DRIVER_MAX_WORDS", 100)
+    assert _text_rows(spark, sf) == expected
+    assert batches == [2, 1, 1] * 3
 
 
 def test_bpe_encode_scans_documents_once(spark, sf_dir, monkeypatch):
@@ -666,6 +823,34 @@ def test_driver_loop_build_job_bounds(spark, sf_dir, jobs_so_far, name, bound):
     j0 = jobs_so_far()
     builder(spark, sf_dir)
     assert jobs_so_far() - j0 <= bound
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "pagerank_supplier_graph",
+        "kcore_peel_parts",
+        "dedup_clusters",
+        "bpe_encode_tokens",
+        "bpe_merge_train",
+    ],
+)
+def test_driver_loop_builders_submit_no_jobs(spark, sf_dir, tmp_path, jobs_so_far, name):
+    """Below the gates a driver-loop builder reads its base columns
+    straight from the parquet files and derives its state on the
+    driver: no Spark job, on a first call over tables no memo has seen
+    (a copy of the test tables) and on a second."""
+    import shutil
+
+    from porcupine_spark.plans.registry import load_all_plans
+
+    for t in ("documents", "lineitem", "orders"):
+        shutil.copyfile(tables.table_path(sf_dir, t), tables.table_path(str(tmp_path), t))
+    builder = load_all_plans()[name].builder
+    for _ in range(2):
+        j0 = jobs_so_far()
+        builder(spark, str(tmp_path))
+        assert jobs_so_far() == j0
 
 
 def test_bpe_encode_action_job_bound(spark, sf_dir, jobs_so_far):

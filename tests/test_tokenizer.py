@@ -2,11 +2,12 @@
 
 ``operators/text.py`` decides which characters split words: ``tokens``
 and ``normalized`` render the decision for Spark, ``sql_tokens`` and
-``sql_normalized`` for DuckDB, and the regex tokenizer excludes the same
-class. These tests pin that the two renderings agree code point by code
-point, that the registered queries still agree with their oracles on a
-corpus full of planted whitespace, and that no module splits words its
-own way.
+``sql_normalized`` for DuckDB, ``py_tokens`` and ``py_normalized`` for
+state derived on the driver, and the regex tokenizer excludes the same
+class. These tests pin that the three renderings agree code point by
+code point, that the registered queries still agree with their oracles
+on a corpus full of planted whitespace, and that no module splits words
+its own way, in Spark, SQL or Python.
 """
 
 import ast
@@ -43,10 +44,10 @@ def _probe_texts():
 
 
 def test_tokens_match_duckdb_per_code_point(spark):
-    """Spark ``tokens`` == DuckDB ``sql_tokens`` (and likewise for the
-    normalized text and the regex tokenizer) for every space-like code
-    point inside, before and after a word, and for empty, blank, NULL
-    and tab-framed texts."""
+    """Python ``py_tokens`` == Spark ``tokens`` == DuckDB ``sql_tokens``
+    (and likewise for the normalized text; Spark == DuckDB for the regex
+    tokenizer) for every space-like code point inside, before and after
+    a word, and for empty, blank, NULL and tab-framed texts."""
     rows = _probe_texts()
     sdf = spark.createDataFrame(rows, "id long, text string").select(
         "id",
@@ -65,6 +66,9 @@ def test_tokens_match_duckdb_per_code_point(spark):
     bad = {
         f"{rows[i][1]!r}": (got[i], want[i]) for i in got if got[i] != want[i]
     }
+    assert not bad, bad
+    py = {i: (text.py_tokens(t), text.py_normalized(t)) for i, t in rows}
+    bad = {f"{rows[i][1]!r}": (py[i], got[i][:2]) for i in got if py[i] != got[i][:2]}
     assert not bad, bad
     # the decision itself: U+000B, U+00A0 and U+2028 sit inside words
     assert got[SPACE_LIKE.index(0x0B)][0] == ["ab\x0bcd", "\x0bef\x0b"]
@@ -160,7 +164,14 @@ def test_planted_whitespace_queries_match_oracles(spark, planted_sf):
 # --- one definition: no module splits words its own way ---
 
 TEXT_PY = os.path.join("operators", "text.py")
-DEFINITIONS = ("normalized", "tokens", "sql_normalized", "sql_tokens")
+DEFINITIONS = (
+    "normalized",
+    "tokens",
+    "sql_normalized",
+    "sql_tokens",
+    "py_normalized",
+    "py_tokens",
+)
 _SPLIT_SQL = re.compile(r"string_split\(([^,]*)")
 _WORDY = re.compile(r"\btext\b|normalized|regexp_replace")
 
@@ -175,10 +186,10 @@ def _rendered(node):
     )
 
 
-def _exempt_lines(tree, rel):
+def _exempt_lines(tree, rel, python=False):
     """Lines of text.py's own tokenizer definitions, of docstrings, and
-    of arguments to Python ``re`` calls (driver-side parsing that never
-    sees a document)."""
+    (for the Spark and SQL scan, ``python=False``) of arguments to
+    Python ``re`` calls, which ``_py_splits`` checks instead."""
     lines = set()
     for node in ast.walk(tree):
         if (
@@ -188,7 +199,8 @@ def _exempt_lines(tree, rel):
         ) or (
             rel == TEXT_PY and isinstance(node, ast.FunctionDef) and node.name in DEFINITIONS
         ) or (
-            isinstance(node, ast.Call)
+            not python
+            and isinstance(node, ast.Call)
             and isinstance(node.func, ast.Attribute)
             and getattr(node.func.value, "id", None) == "re"
         ):
@@ -196,10 +208,62 @@ def _exempt_lines(tree, rel):
     return lines
 
 
+_PY_WS = " \t\n\f\r\x0b"
+# a Python regex matching a run of whitespace or of non-whitespace:
+# ``\s+`` or ``\S+``, a bracketed class holding a space or a ``\s``-like
+# escape and repeated with ``+``, or ``_WS``
+_WS_RUN = re.compile(r"\\[sS]\+|\[[^\]]*(\\[stnfrv]|\s)[^\]]*\]\+|_WS")
+
+
+def _source(node):
+    """A string literal's text (f-string fields as ``{src}``), or any
+    other expression's source."""
+    if isinstance(node, ast.JoinedStr) or (
+        isinstance(node, ast.Constant) and isinstance(node.value, str)
+    ):
+        return _rendered(node)
+    return ast.unparse(node)
+
+
+def _py_splits(tree, exempt):
+    """Line of every Python word split outside ``exempt``: ``re.split``,
+    any ``re`` call whose pattern matches a whitespace run, ``str.split``,
+    and a ``split()`` or ``split(<one whitespace character>)`` call on
+    anything but a string literal. BPE's ``"  "`` symbol split is not a
+    word split."""
+    for node in ast.walk(tree):
+        if (
+            not isinstance(node, ast.Call)
+            or not isinstance(node.func, ast.Attribute)
+            or node.lineno in exempt
+        ):
+            continue
+        attr, owner = node.func.attr, getattr(node.func.value, "id", None)
+        if owner == "re" and node.args:
+            if attr == "split" or _WS_RUN.search(_source(node.args[0])):
+                yield node.lineno
+        elif attr in ("split", "rsplit") and owner != "F":
+            sep = node.args[0] if node.args else None
+            on_literal = isinstance(node.func.value, ast.Constant)
+            if (
+                owner == "str"
+                or (sep is None and not node.keywords and not on_literal)
+                or (
+                    isinstance(sep, ast.Constant)
+                    and isinstance(sep.value, str)
+                    and len(sep.value) == 1
+                    and sep.value in _PY_WS
+                )
+            ):
+                yield node.lineno
+
+
 def _stray_splits(tree, rel=None):
     """Line of every word split outside text.py's definitions: a ``\\s``
-    regex, a ``string_split(`` over text, or an ``F.split`` over text or
-    a normalized text (one assignment deep)."""
+    regex, a ``string_split(`` over text, an ``F.split`` over text or
+    a normalized text (one assignment deep), or a Python split
+    (``_py_splits``)."""
+    yield from _py_splits(tree, _exempt_lines(tree, rel, python=True))
     exempt = _exempt_lines(tree, rel)
     bound = {
         t.id: node.value
@@ -232,9 +296,10 @@ def _stray_splits(tree, rel=None):
 
 def test_words_split_only_in_text_py():
     """Which characters split words is decided once, in text.py: no
-    module pastes a ``\\s`` regex, a ``string_split`` over text or an
-    ``F.split`` over text. BPE's ``'  '`` symbol splits over ``ws`` are
-    not word splits."""
+    module pastes a ``\\s`` regex, a ``string_split`` over text, an
+    ``F.split`` over text or a Python split of text (``re.split``,
+    ``str.split``, a whitespace-run regex). BPE's ``'  '`` symbol splits
+    over ``ws`` are not word splits."""
     found = {}
     for dirpath, _dirs, files in os.walk(PKG):
         for name in files:
@@ -246,6 +311,74 @@ def test_words_split_only_in_text_py():
                 if lines:
                     found[rel] = lines
     assert not found, f"word splits outside text.py's tokenizer: {found}"
-    # and the scan does see a split: text.py's own, once un-exempted
+    # and the scan does see a split: text.py's own, once un-exempted,
+    # the Python ones among them
     with open(os.path.join(PKG, TEXT_PY)) as fh:
-        assert list(_stray_splits(ast.parse(fh.read())))
+        tree = ast.parse(fh.read())
+    assert list(_stray_splits(tree))
+    assert list(_py_splits(tree, set()))
+
+
+# --- planted edge texts: trims and empty texts on both engines ---
+
+
+def _planted_docs_mismatches(spark, tmp_path, texts, names):
+    """{query: (builder rows, oracle rows)} for each of ``names`` that
+    disagrees on a documents table of ``texts`` (doc ids 1, 2, ...)."""
+    from porcupine_spark.plans.registry import load_all_plans
+
+    path = table_path(str(tmp_path), "documents")
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array(range(1, len(texts) + 1), pa.int64()),
+                "text": pa.array(texts, pa.string()),
+                "lang": ["en"] * len(texts),
+                "source": [("a", "b")[i % 2] for i in range(len(texts))],
+                "n_chars": pa.array([len(t) for t in texts], pa.int64()),
+            }
+        ),
+        path,
+    )
+    specs = load_all_plans()
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}')")
+    bad = {}
+    for name in names:
+        got = canon(specs[name].builder(spark, str(tmp_path)).toPandas(), 0.0)
+        want = canon(con.sql(specs[name].oracle).df(), 0.0)
+        if got != want:
+            bad[name] = (sorted(got), sorted(want))
+    return bad
+
+
+def test_exact_dup_hashes_trim_only_spaces(spark, tmp_path):
+    """The exact-dup digests trim only ``' '`` on both engines: a text
+    ending in U+00A0 is not a copy of the text without it (DuckDB's
+    one-argument ``trim`` would strip it), while one framed in spaces
+    is."""
+    body = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda"
+    texts = [body, "x y", f"  {body} ", "lorem ipsum", f"{body} "]
+    texts += ["x y ", "z", "x y ", "q", f" {body}"]
+    bad = _planted_docs_mismatches(
+        spark,
+        tmp_path,
+        texts,
+        ("dedup_exact", "incremental_dedup", "prefix_dup_clusters", "stream_near_dedup"),
+    )
+    assert not bad, bad
+
+
+def test_empty_and_blank_texts_divide_to_null(spark, tmp_path):
+    """An empty text (no characters) and a blank one (no regex tokens)
+    give a NULL ratio where the divisor is 0, as DuckDB's division does,
+    instead of failing the query; so does a kappa whose two raters put
+    every doc in one class (total chance agreement)."""
+    texts = ["", " \t\n ", "the quick brown fox", "a", "   ", "ok 12 ok"]
+    bad = _planted_docs_mismatches(
+        spark,
+        tmp_path,
+        texts,
+        ("quality_score", "quality_gate_kappa", "token_count_bpe", "lang_id_kappa"),
+    )
+    assert not bad, bad
